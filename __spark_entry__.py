@@ -1227,16 +1227,14 @@ def _ddp_index_dedup(spark, sf_dir):
     smallest matching corpus id (dedupe.minhash_band_index /
     dedupe_against_index).
 
-    ROUND-11 NEGATIVE RESULT: an xxhash64 gram-hash variant
-    (hash_family parameter, output proven row-identical at
-    sf0.001/0.01/0.1 — scripts/ab_index_hash.py) measured NEUTRAL
-    (0.87-1.05x across idle-host A/Bs), as did a fused one-pass
-    signature build: at this SF the operator is bound by interpreted
+    ROUND-11 NEGATIVE RESULT: an xxhash64 gram hash (output
+    row-identical at sf0.001/0.01/0.1) measured NEUTRAL (0.87-1.05x
+    across idle-host A/Bs), as did a fused one-pass signature build:
+    at this SF the operator is bound by interpreted
     higher-order-function overhead in the shingle construction
     (phase bisect: shingle strings 0.85 s of the 1.76 s floor), not
-    by the hash.  md5 stays — uniform oracle portability at zero
-    measured cost; the parameter remains for scale deployments where
-    md5's per-byte CPU actually shows."""
+    by the hash (OPTIMIZATION_r11.md, item 4).  md5 stays — uniform
+    oracle portability at zero measured cost."""
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     index = D.minhash_band_index(docs)
     shard = docs.filter("doc_id % 10 = 0").withColumn(

@@ -95,7 +95,11 @@ def validate_config(config: Mapping[str, Any]) -> None:
     """Fail fast on unusable configs (reference ``eggv/cli.py:43-77``
     validates species + cluster mode; here the cluster mode is just
     the Spark master string, so only species and master shape need
-    checking)."""
+    checking).  A top-level key the defaults do not name is an error,
+    not a silently ignored setting."""
+    unknown = sorted(set(config) - set(default_config()))
+    if unknown:
+        raise ValueError(f"unknown config key(s): {', '.join(unknown)}")
     if not config.get("species"):
         raise ValueError("a species is required (-s/--species or config key 'species')")
     if config["species"] not in ("hg38", "mm10"):

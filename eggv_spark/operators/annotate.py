@@ -95,20 +95,16 @@ def isolate_intragenic_variants(df: DataFrame) -> DataFrame:
     )
 
 
-def run_annotation(
-    variants: DataFrame, genes: DataFrame, persist: bool = True
-) -> dict[str, DataFrame]:
-    """Full annotation stage: join once, persist the shared
-    intermediate (two consumers — reference persists at the same DAG
-    point, ``eggv/annotate.py:219-220``), split.
+def run_annotation(variants: DataFrame, genes: DataFrame) -> dict[str, DataFrame]:
+    """Full annotation stage: the variant-gene join, split into the
+    intergenic and intragenic sinks.
 
-    ``persist=False`` lets large-batch callers (the GB-scale
-    pipeline) skip the cache: with the gene side broadcast, re-running
-    the column-pruned join per sink is cheaper than materializing the
-    wide annotated frame into memory."""
+    The reference persists the joined frame before the split
+    (``eggv/annotate.py:219-220``).  Here nothing is cached: with the
+    gene side broadcast, re-running the column-pruned join per sink
+    costs no extra shuffle and is cheaper than materializing the wide
+    annotated frame into memory."""
     annotated = annotate_variants(variants, genes)
-    if persist:
-        annotated = annotated.persist()
     return {
         "annotated": annotated,
         "intergenic": isolate_intergenic_variants(annotated),

@@ -51,28 +51,6 @@ def base_hash(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
 
 
-def _gram_hash(col: Column, hash_family: str) -> Column:
-    """Shingle -> [0, MINHASH_PRIME) hash under the chosen family.
-
-    - ``md5`` (default everywhere): oracle-portable — DuckDB
-      recomputes the identical value, so operators whose OUTPUT
-      exposes hash-derived numbers (band stats, jaccard estimates
-      between near-dup pairs) stay bit-reproducible in the oracle.
-    - ``xxhash64``: JVM-native 64-bit hash, no hex-string
-      materialization — only usable on paths whose OUTPUT is
-      hash-independent (e.g. the index-probe dedup, whose matches are
-      exact copies: agreement 1.0 under any family, proven
-      row-identical at sf0.001/0.01/0.1 — scripts/ab_index_hash.py).
-      Round-11 measurement: NEUTRAL at bench scale (0.87-1.05x across
-      idle-host A/Bs — the minhash operators are bound by interpreted
-      higher-order-function overhead, not the gram hash), so no
-      registry entry uses it; the option exists for deployments at a
-      scale where md5's ~10x per-byte CPU actually surfaces."""
-    if hash_family == "xxhash64":
-        return F.pmod(F.xxhash64(col), F.lit(MINHASH_PRIME))
-    return base_hash(col) % MINHASH_PRIME
-
-
 # ---------------------------------------------------------------------------
 # exact dedup
 # ---------------------------------------------------------------------------
@@ -103,9 +81,10 @@ def with_shingle_hashes(
     df: DataFrame,
     text_col: str = "text",
     shingle_size: int = 3,
-    hash_family: str = "md5",
 ) -> DataFrame:
-    """Distinct word-shingle set and its 32-bit hashes per document.
+    """Distinct word-shingle set and its 32-bit hashes per document
+    (``base_hash(shingle) % MINHASH_PRIME`` — the md5 hash DuckDB
+    recomputes, so every hash-derived output stays oracle-portable).
 
     The token array is STAGED as its own column before shingling
     (round 11): ``shingles_col`` references its tokens argument ~5x
@@ -121,7 +100,7 @@ def with_shingle_hashes(
     return df.withColumn("shingles", shingles).withColumn(
         "shingle_hashes",
         F.array_distinct(
-            F.transform(F.col("shingles"), lambda s: _gram_hash(s, hash_family))
+            F.transform(F.col("shingles"), lambda s: base_hash(s) % MINHASH_PRIME)
         ),
     ).drop("_toks")
 
@@ -297,7 +276,6 @@ def minhash_band_index(
     text_col: str = "text",
     id_col: str = "doc_id",
     shingle_size: int = 3,
-    hash_family: str = "md5",
 ) -> DataFrame:
     """Persistable MinHash band index of a corpus: one row per
     (doc, band) carrying (id, band, band_key, minhash_sig).
@@ -311,7 +289,7 @@ def minhash_band_index(
     verification is signature agreement — no corpus text re-read.
     """
     sigs = with_minhash_signature(
-        with_shingle_hashes(df, text_col, shingle_size, hash_family)
+        with_shingle_hashes(df, text_col, shingle_size)
     )
     return _band_rows(sigs, id_col, extra=("minhash_sig",))
 
@@ -323,7 +301,6 @@ def dedupe_against_index(
     id_col: str = "doc_id",
     threshold: float = 0.7,
     shingle_size: int = 3,
-    hash_family: str = "md5",
 ) -> DataFrame:
     """Incremental near-dup: probe a NEW shard against a persisted
     :func:`minhash_band_index` of the existing corpus — the
@@ -346,7 +323,7 @@ def dedupe_against_index(
     """
     matches = index_probe_matches(
         new_docs, index, text_col=text_col, id_col=id_col,
-        shingle_size=shingle_size, hash_family=hash_family,
+        shingle_size=shingle_size,
     )
     return collapse_index_matches(
         matches, new_docs.select(F.col(id_col)), id_col, threshold
@@ -373,7 +350,6 @@ def index_probe_matches(
     text_col: str = "text",
     id_col: str = "doc_id",
     shingle_size: int = 3,
-    hash_family: str = "md5",
 ) -> DataFrame:
     """Band-probe stage shared by batch and streaming index dedup:
     shingle + sign the new docs, equi-join their band rows to the
@@ -381,7 +357,7 @@ def index_probe_matches(
     (id, old_id, est_jaccard).  Stateless — safe as the map side of
     a stream-static join."""
     sigs_new = with_minhash_signature(
-        with_shingle_hashes(new_docs, text_col, shingle_size, hash_family)
+        with_shingle_hashes(new_docs, text_col, shingle_size)
     )
     probe = _band_rows(sigs_new, id_col, extra=("minhash_sig",)).select(
         F.col(id_col),

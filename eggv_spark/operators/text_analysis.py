@@ -1278,10 +1278,15 @@ def bpe_train_merges(
     argmax row and the fold input), so the printed plan grows
     ~2^steps and AQE's explainString overflows the JVM string limit
     by step 6 of the composed train+apply query.  localCheckpoint
-    solves both: flat leaf plans, one tiny vocabulary-sized job per
-    merge, and the ContextCleaner reclaims abandoned step RDDs.  At
-    tokenizer scale (30k+ merges) the same call doubles as the
-    every-few-hundred-rounds lineage cut."""
+    solves both: flat leaf plans and one tiny vocabulary-sized job
+    per merge.  The abandoned step RDDs stay persisted until the
+    ContextCleaner sees their JVM objects collected, which is not
+    guaranteed: the benchmark's traced run
+    (``perfbench/run.py --trace 1``) still counts persisted RDDs after
+    a Python and JVM GC (``materialize.persisted_rdds_after`` is 2 on
+    gvf_annotate and 9 on registry_mix).  At tokenizer scale (30k+
+    merges) the same call doubles as the every-few-hundred-rounds
+    lineage cut."""
     words = (
         df.select(F.explode(tokens_col(text_col)).alias("_w"))
         .groupBy("_w")
@@ -1296,8 +1301,9 @@ def bpe_train_merges(
         # and the fold input), so the printed plan grows ~2^k and
         # AQE's explainString overflows the JVM string limit by step
         # 6 of the composed train+apply query; checkpointed frames
-        # are flat leaves.  The abandoned step RDDs are reclaimed by
-        # the ContextCleaner when the frames go out of scope.
+        # are flat leaves.  The abandoned step RDDs are released only
+        # if the ContextCleaner sees them collected (not guaranteed;
+        # see the docstring).
         words = words.transform(materialize)
         n1 = F.greatest(F.size("_s") - 1, F.lit(0))
         pair_counts = (
@@ -1704,9 +1710,9 @@ def bpe_word_sizes(
         # eager localCheckpoint: materializes the step (firing the
         # step guard early and loudly), truncates the lineage (the
         # composed train+apply plan tree otherwise grows ~2^steps in
-        # print size — see bpe_train_merges), and leaves the
-        # abandoned step RDDs to the ContextCleaner instead of
-        # accumulating cached copies across invocations
+        # print size — see bpe_train_merges).  The abandoned step
+        # RDDs are released only if the ContextCleaner sees them
+        # collected, which is not guaranteed (see bpe_train_merges)
         ).transform(materialize)
     # hand back the SMALL (word, count) map as a flat leaf — the
     # heavy symbol-array frame goes out of scope with the loop

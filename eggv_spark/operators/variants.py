@@ -44,24 +44,8 @@ def extract_variant_fields(
     :func:`process_gvf` EXCEPT the per-effect explode.  Shared by the
     effect path (explodes next) and the metadata path (which must NOT
     pay the explode: metadata is constant across a variant's effects,
-    so deduping post-explode rows is pure inflation —
-    :func:`process_gvf_metadata`)."""
+    so deduping post-explode rows is pure inflation)."""
     return _extract_typed(df, repartition_to)
-
-
-def process_gvf_metadata(
-    df: DataFrame, repartition_to: int | None = None
-) -> DataFrame:
-    """Raw GVF rows -> one metadata row per rsid WITHOUT the effect
-    explode.  Value-identical to
-    ``isolate_variant_metadata(process_gvf(df))`` (every exploded
-    effect row carries the same metadata) but the rsid dedup shuffles
-    the un-inflated row count."""
-    return (
-        extract_variant_fields(df, repartition_to)
-        .select("chromosome", "start", "end", "rsid", "observed", "maf")
-        .dropDuplicates(["rsid"])
-    )
 
 
 def process_gvf(df: DataFrame, repartition_to: int | None = None) -> DataFrame:
@@ -130,8 +114,8 @@ def _extract_typed(df: DataFrame, repartition_to: int | None = None) -> DataFram
     # pair-anchored locate/substring parse (split the attr once, regex
     # only the short values) was built, proven bit-identical on a
     # 5000-attr adversarial corpus, and measured 2.5-4.5x SLOWER than
-    # this five-regex shape (scripts/ab_attr_parse.py; per-expression
-    # bisect in OPTIMIZATION_r11.md).  Two causes: (a) Java's regex
+    # this five-regex shape (per-expression bisect in
+    # OPTIMIZATION_r11.md).  Two causes: (a) Java's regex
     # engine runs literal-prefix patterns at optimized-search speed
     # (~1 s for all four extracts over the 5.6 GB corpus), while
     # Spark's locate/instr are naive byte loops (4 locates alone cost

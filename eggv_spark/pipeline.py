@@ -9,14 +9,14 @@ simplifies:
   splits every file into input partitions and schedules them across
   executors, so per-file futures add nothing but driver complexity.
 * IO/compute overlap (reference ``eggv/pipeline.py:177-225``) is
-  replaced by ``persist()`` at the two shared-intermediate DAG points
-  (processed variants feed effects+metadata; the annotated join feeds
-  the intergenic/intragenic splits — same points the reference pins,
-  ``eggv/process.py:341`` and ``eggv/annotate.py:219-220``) and an
-  optional driver thread pool for concurrent sink jobs (Spark actions
-  from separate threads schedule concurrently).
+  replaced by one materialized intermediate where two sinks share
+  expensive work (the typed variant frame feeds effects+metadata;
+  the gene frame feeds the gene sinks) and a driver thread pool for
+  concurrent sink jobs (Spark actions from separate threads schedule
+  concurrently).  The annotate split re-runs the broadcast join per
+  sink instead of caching the wide joined frame.
 * Async TSV save + consolidation (``eggv/dfio.py``) is the native
-  partitioned sink; ``single_file=True`` exports one file.
+  partitioned sink.
 
 Every stage takes explicit (spark, layout) arguments — no singletons —
 so the same code runs local[N] tests and cluster jobs unchanged.
@@ -42,9 +42,7 @@ from eggv_spark.session import get_session
 from eggv_spark.sources import readers, writers
 
 
-def _save_concurrently(
-    jobs: list[tuple[DataFrame, str]], single_file: bool, fmt: str = "tsv"
-) -> None:
+def _save_concurrently(jobs: list[tuple[DataFrame, str]], fmt: str = "tsv") -> None:
     """Run several sink actions at once from driver threads (the
     Spark analog of the reference's async ``to_csv`` futures,
     ``eggv/dfio.py:63-100``)."""
@@ -53,7 +51,7 @@ def _save_concurrently(
         if fmt == "parquet":
             writers.write_parquet(df, path)
         else:
-            writers.write_tsv(df, path, single_file)
+            writers.write_tsv(df, path)
 
     with ThreadPoolExecutor(max_workers=max(len(jobs), 1)) as pool:
         futures = [pool.submit(_write, df, path) for df, path in jobs]
@@ -83,32 +81,20 @@ def _read_stage(spark: SparkSession, path: str, schema, fmt: str) -> DataFrame:
 
 
 def run_variant_processing(
-    spark: SparkSession, layout: DataLayout, single_file: bool = False,
-    fmt: str = "tsv", gvf_parser: str = "split", share_scan: bool = True,
+    spark: SparkSession, layout: DataLayout, fmt: str = "tsv"
 ) -> dict[str, DataFrame]:
     """GVF glob -> process -> {effects, metadata} outputs
     (reference ``eggv/process.py:318-424``).
 
-    ``gvf_parser``: ``"split"`` (default) uses the spec parser
-    (:func:`readers.read_gvf_split`) — the raw drops here come from
-    the retrieve stage's Ensembl exports, which are spec-conformant
-    tab-separated GVF with no quoting grammar, so paying univocity's
-    per-char quote/escape handling buys nothing (measured −38% on the
-    scan pass; identical rows, pinned by tests/test_round10_opt.py).
-    Pass ``"csv"`` for the PERMISSIVE CSV reader when ingesting
-    untrusted/dirty drops.
-
-    ``share_scan``: ``True`` (default) runs the raw scan + typed
-    extraction ONCE, materializes the narrow typed frame
-    (localCheckpoint), and derives both sinks from it.  ``False``
-    keeps the two-scan shape (each sink recomputes its pruned
-    lineage) — the right trade when the typed frame cannot be held
-    (see the comment at the call site).
+    The raw drops come from the retrieve stage's Ensembl exports,
+    which are spec-conformant tab-separated GVF with no quoting
+    grammar, so the spec parser (:func:`readers.read_gvf_split`)
+    reads them: univocity's per-char quote/escape handling buys
+    nothing there (measured −38% on the scan pass; identical rows).
+    Untrusted drops go through :func:`readers.read_gvf` with
+    ``capture_corrupt=True`` instead.
     """
-    if gvf_parser == "split":
-        raw = readers.read_gvf_split(spark, layout.variant_gvf_glob())
-    else:
-        raw = readers.read_gvf(spark, layout.variant_gvf_glob())
+    raw = readers.read_gvf_split(spark, layout.variant_gvf_glob())
     # .gz raw drops are non-splittable — a scan of N files runs
     # N-wide forever, so redistributing before the regex chain is
     # mandatory there.  But when the scan is already wide (splittable
@@ -118,57 +104,39 @@ def run_variant_processing(
     # width instead of assuming the worst.
     par = spark.sparkContext.defaultParallelism
     width = par * 2 if raw.rdd.getNumPartitions() < par else None
-    if share_scan:
-        # ONE pass over the raw text: the two sinks' pruned lineages
-        # each re-pay the text scan + line split + rsid regex (the
-        # branches are CPU-bound in exactly that work and run on the
-        # same cores, so the thread-pool overlap buys no throughput).
-        # Materializing the TYPED frame — post-regex, post-rsid-filter,
-        # ~30x narrower than the raw lines, NOT the exploded/wide frame
-        # the round-3 measurement rejected — costs one extra regex
-        # (5 vs the 6 the two branches pay combined) and removes a
-        # whole 5 GB scan+parse pass.  Measured (interleaved paired
-        # A/B, 5.6 GB corpus, scripts/ab_share_scan_lowcore.py): at
-        # local[8] — the scan serializes when cores are scarce, i.e.
-        # the driver's low-core scaling leg and the I/O-bound cluster
-        # shape — 67.9 s -> 58.1 s (−14%); at saturated local[32] the
-        # two branches' recompute overlaps and the shapes tie (17.1
-        # vs 17.2 s floors).  Outputs byte-identical both ways (row
-        # count + order-insensitive hash, scripts/ab_share_scan.py).
-        # localCheckpoint (MEMORY_AND_DISK) lives inside this one
-        # invocation — nothing persists across runs.
-        typed = V.extract_variant_fields(raw, repartition_to=width)
-        typed = typed.transform(materialize)
-        effects = V.isolate_variant_effects(V.explode_effects(typed))
-        meta = (
-            typed.select("chromosome", "start", "end", "rsid", "observed", "maf")
-            .dropDuplicates(["rsid"])
-        )
-    else:
-        # Two-scan shape: the effects sink needs only the rsid+effect
-        # regexes and the meta sink only rsid+alleles+MAF — column
-        # pruning gives each write a lineage that recomputes from the
-        # raw text.  This is the fallback when one full typed frame
-        # cannot be materialized per-executor (the checkpoint above is
-        # cluster-sharded, so that bar is "cluster working set", not
-        # one host); pruned recompute is then the scale answer.
-        processed = V.process_gvf(raw, repartition_to=width)
-        effects = V.isolate_variant_effects(processed)
-        # Metadata takes the PRE-explode path: same values, but the
-        # rsid dedup shuffles the un-inflated row count (effects
-        # multiply rows ~1.6x and metadata is constant across a
-        # variant's effects).
-        meta = V.process_gvf_metadata(raw, repartition_to=width)
+    # ONE pass over the raw text: the two sinks' pruned lineages
+    # would each re-pay the text scan + line split + rsid regex (the
+    # branches are CPU-bound in exactly that work and run on the
+    # same cores, so the thread-pool overlap buys no throughput).
+    # Materializing the TYPED frame — post-regex, post-rsid-filter,
+    # ~30x narrower than the raw lines, NOT the exploded/wide frame
+    # the round-3 measurement rejected — costs one extra regex
+    # (5 vs the 6 the two branches pay combined) and removes a
+    # whole 5 GB scan+parse pass.  Measured against the two-scan
+    # shape (interleaved paired A/B, 5.6 GB corpus, OPTIMIZATION_r10.md
+    # item 10): at local[8] — the scan serializes when cores are
+    # scarce, i.e. the driver's low-core scaling leg and the
+    # I/O-bound cluster shape — 67.9 s -> 58.1 s (−14%); at saturated
+    # local[32] the two branches' recompute overlaps and the shapes
+    # tie (17.1 vs 17.2 s floors).  Outputs byte-identical both ways
+    # (row count + order-insensitive hash).  localCheckpoint
+    # (MEMORY_AND_DISK) lives inside this one invocation — nothing
+    # persists across runs.
+    typed = V.extract_variant_fields(raw, repartition_to=width)
+    typed = typed.transform(materialize)
+    effects = V.isolate_variant_effects(V.explode_effects(typed))
+    # Metadata skips the explode: it is constant across a variant's
+    # effects, so the rsid dedup shuffles the un-inflated row count.
+    meta = V.isolate_variant_metadata(typed)
     _save_concurrently(
         [(effects, layout.variant_effects()), (meta, layout.variant_meta())],
-        single_file, fmt,
+        fmt,
     )
     return {"effects": effects, "metadata": meta}
 
 
 def run_gene_processing(
-    spark: SparkSession, layout: DataLayout, single_file: bool = False,
-    fmt: str = "tsv",
+    spark: SparkSession, layout: DataLayout, fmt: str = "tsv"
 ) -> dict[str, DataFrame]:
     """GTF -> transcript-level genes + gene-deduped copy
     (reference ``eggv/process.py:427-534``)."""
@@ -178,15 +146,14 @@ def run_gene_processing(
     deduped = G.dedupe_genes(processed)
     _save_concurrently(
         [(processed, layout.gene_meta()), (deduped, layout.gene_dedup())],
-        single_file, fmt,
+        fmt,
     )
     processed.unpersist()
     return {"genes": processed, "genes_dedup": deduped}
 
 
 def run_annotation(
-    spark: SparkSession, layout: DataLayout, single_file: bool = False,
-    fmt: str = "tsv",
+    spark: SparkSession, layout: DataLayout, fmt: str = "tsv"
 ) -> dict[str, DataFrame]:
     """effects ⟕ genes -> intergenic/intragenic outputs
     (reference ``eggv/annotate.py:145-235``)."""
@@ -194,20 +161,14 @@ def run_annotation(
         spark, layout.variant_effects(), VARIANT_EFFECTS_SCHEMA, fmt
     )
     genes = _read_stage(spark, layout.gene_meta(), GENES_SCHEMA, fmt)
-    # persist=False: the two sinks re-run the broadcast join with
-    # pruned columns — cheaper than building an in-memory cache of
-    # the wide annotated frame (same measured trade-off as the
-    # variant stage; the gene side is broadcast so recompute costs no
-    # extra shuffle).
-    result = A.run_annotation(effects, genes, persist=False)
+    result = A.run_annotation(effects, genes)
     _save_concurrently(
         [
             (result["intergenic"], layout.annotated_intergenic()),
             (result["intragenic"], layout.annotated_intragenic()),
         ],
-        single_file, fmt,
+        fmt,
     )
-    result["annotated"].unpersist()
     return result
 
 
@@ -232,10 +193,7 @@ def run_process_step(
     layout = DataLayout(config["directories"]["data"], config["species"])
     fmt = config.get("format", "tsv")
     out = run_gene_processing(spark, layout, fmt=fmt)
-    out |= run_variant_processing(
-        spark, layout, fmt=fmt,
-        gvf_parser=config.get("gvf_parser", "split"),
-    )
+    out |= run_variant_processing(spark, layout, fmt=fmt)
     return out
 
 

@@ -197,26 +197,21 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     under ``path`` are rewritten/compacted mid-session, later reads
     see the first read's file listing (stale rows or
     FileNotFoundException).  For mutable paths call
-    :func:`refresh_table` after writing, or disable the memo with
-    ``EGGV_TABLE_MEMO=0``.
+    :func:`refresh_table` after writing.
     """
     from pyspark.sql import functions as F
     from pyspark.sql.types import TimestampNTZType
 
     path = f"{sf_dir}/{name}.parquet"
-    # EGGV_TABLE_MEMO=0 restores list-per-call (interleaved A/B runs).
-    if os.environ.get("EGGV_TABLE_MEMO", "1") == "0":
-        per_session = None
-    else:
-        per_session = _table_memo(spark)
-        hit = per_session.get(path)
-        if hit is not None:
-            df, needs_nanos = hit
-            if needs_nanos:
-                # the memoized plan reads raw nanos longs; re-assert
-                # the conf in case something reset it between calls
-                spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            return df
+    per_session = _table_memo(spark)
+    hit = per_session.get(path)
+    if hit is not None:
+        df, needs_nanos = hit
+        if needs_nanos:
+            # the memoized plan reads raw nanos longs; re-assert
+            # the conf in case something reset it between calls
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        return df
     nanos_cols = _nanos_timestamp_columns(path)
     if nanos_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -232,8 +227,7 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ]
     if ntz_cols:
         df = df.withColumns({c: F.col(c).cast("timestamp") for c in ntz_cols})
-    if per_session is not None:
-        per_session[path] = (df, bool(nanos_cols))
+    per_session[path] = (df, bool(nanos_cols))
     return df
 
 

@@ -563,7 +563,6 @@ def streaming_index_dedupe(
     docs_stream: DataFrame,
     index: DataFrame,
     id_col: str = "doc_id",
-    hash_family: str = "md5",
 ) -> DataFrame:
     """Streaming half of incremental corpus dedup: each micro-batch
     of newly crawled docs is shingled, MinHash-signed, banded, and
@@ -586,9 +585,7 @@ def streaming_index_dedupe(
     """
     from eggv_spark.operators.dedupe import index_probe_matches
 
-    return index_probe_matches(
-        docs_stream, index, id_col=id_col, hash_family=hash_family
-    )
+    return index_probe_matches(docs_stream, index, id_col=id_col)
 
 
 def streaming_user_profile_tws(events: DataFrame) -> DataFrame:

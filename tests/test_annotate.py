@@ -82,4 +82,3 @@ def test_run_annotation_end_to_end(annotated, spark, tmp_path_factory):
     assert out["intergenic"].count() == 1
     assert out["intragenic"].count() == 4
     assert out["annotated"].count() == 5
-    out["annotated"].unpersist()

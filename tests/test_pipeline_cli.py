@@ -102,6 +102,8 @@ def test_config_precedence_and_validation(tmp_path):
         validate_config(load_config())
     with pytest.raises(ValueError, match="unknown species"):
         validate_config(load_config(None, {"species": "hg19"}))
+    with pytest.raises(ValueError, match="unknown config key.*: reader"):
+        validate_config(load_config(None, {"species": "hg38", "reader": "csv"}))
 
 
 def test_cli_complete_pipeline_offline(spark, tmp_path):

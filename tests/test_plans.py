@@ -223,7 +223,7 @@ def test_gvf_regex_extracts_are_staged_single_eval(spark):
     # na.drop Filter — that pushdown prunes rsid-less rows before the
     # other four extracts run, which is the right trade.)  A round-11
     # locate/substring rewrite of this block measured 2.5-4.5x SLOWER
-    # (scripts/ab_attr_parse.py — Java regex literal search beats
+    # (OPTIMIZATION_r11.md, item 2 — Java regex literal search beats
     # Spark's naive locate/instr byte loops) and was reverted; this
     # pin guards the five-regex shape.
     for pattern in ("Variant_seq=", "Reference_seq=",

@@ -208,7 +208,7 @@ def test_staged_rsid_drop_equals_na_drop(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# 6. shared-scan variant stage (share_scan=True) vs the two-scan shape
+# 6. the one-scan variant stage vs the reference composition
 # ---------------------------------------------------------------------------
 
 _SHARE_GVF = (
@@ -225,54 +225,54 @@ _SHARE_GVF = (
 )
 
 
-def test_share_scan_outputs_identical(spark, tmp_path):
-    """run_variant_processing(share_scan=True) — one materialized
-    typed frame feeding both sinks — writes exactly what the two-scan
-    shape writes, including the duplicate-rsid dedup and the no-rsid
-    drop."""
+def test_variant_stage_matches_reference_composition(spark, tmp_path):
+    """run_variant_processing — one materialized typed frame feeding
+    both sinks — writes exactly what the reference composition
+    isolate_variant_{effects,metadata}(process_gvf(read_gvf(..)))
+    yields, including the duplicate-rsid dedup and the no-rsid drop."""
     import gzip
 
     from eggv_spark import pipeline as P
     from eggv_spark.layout import DataLayout
+    from eggv_spark.operators import variants as V
+    from eggv_spark.sources.readers import read_gvf
 
-    outs = {}
-    for flag in (False, True):
-        lay = DataLayout(str(tmp_path / f"data_{flag}"), "mm10")
-        lay.create()
-        with gzip.open(lay.variant_gvf(), "wt") as fh:
-            fh.write(_SHARE_GVF)
-        P.run_variant_processing(spark, lay, fmt="parquet", share_scan=flag)
-        eff = sorted(map(tuple, spark.read.parquet(lay.variant_effects()).collect()))
-        meta = sorted(map(tuple, spark.read.parquet(lay.variant_meta()).collect()))
-        outs[flag] = (eff, meta)
-    assert outs[True] == outs[False]
-    eff, meta = outs[True]
+    lay = DataLayout(str(tmp_path / "data"), "mm10")
+    lay.create()
+    with gzip.open(lay.variant_gvf(), "wt") as fh:
+        fh.write(_SHARE_GVF)
+    P.run_variant_processing(spark, lay, fmt="parquet")
+    eff = sorted(map(tuple, spark.read.parquet(lay.variant_effects()).collect()))
+    meta = sorted(map(tuple, spark.read.parquet(lay.variant_meta()).collect()))
+
+    processed = V.process_gvf(read_gvf(spark, lay.variant_gvf_glob()))
+    ref_eff = V.isolate_variant_effects(processed)
+    ref_meta = V.isolate_variant_metadata(processed)
+    assert eff == sorted(map(tuple, ref_eff.collect()))
+    assert meta == sorted(map(tuple, ref_meta.collect()))
     assert len(eff) == 3  # rs1 dedups its doubled effects; rs2 intergenic
     assert [m[3] for m in meta] == [1, 2]
 
 
-
-
-def test_read_table_session_memo(spark, monkeypatch):
+def test_read_table_session_memo(spark):
     """read_table memoizes the lazy table frame per (session, path):
-    repeat reads return the SAME DataFrame object (no re-listing), the
-    EGGV_TABLE_MEMO=0 escape hatch restores list-per-call, and results
-    are unchanged either way (the memo holds metadata, never rows)."""
+    repeat reads return the SAME DataFrame object (no re-listing),
+    refresh_table drops the entry so the next read re-lists, and
+    results are unchanged either way (the memo holds metadata, never
+    rows)."""
     from eggv_spark.sources import readers
 
     SF_DIR = "/root/testdata/sf0.001"
 
-    monkeypatch.delenv("EGGV_TABLE_MEMO", raising=False)
     a = readers.read_table(spark, SF_DIR, "nation")
     b = readers.read_table(spark, SF_DIR, "nation")
     assert a is b
 
-    monkeypatch.setenv("EGGV_TABLE_MEMO", "0")
+    readers.refresh_table(spark, SF_DIR, "nation")
     c = readers.read_table(spark, SF_DIR, "nation")
     assert c is not a
     assert sorted(map(tuple, c.collect())) == sorted(map(tuple, a.collect()))
 
     # distinct paths never collide in the memo
-    monkeypatch.delenv("EGGV_TABLE_MEMO", raising=False)
     d = readers.read_table(spark, SF_DIR, "region")
-    assert d is not a and d.columns != a.columns
+    assert d is not c and d.columns != c.columns
