@@ -38,9 +38,7 @@ from eggv_spark.operators import graph as G
 from eggv_spark.operators.events import (
     funnel_counts,
     gapfill_hourly,
-    page_hinkley,
     retention_cohorts,
-    retention_matrix,
     rfm_segments,
     sessionize,
     sliding_window_counts,
@@ -5583,648 +5581,15 @@ def _txt_vocab_coverage(spark, sf_dir):
     return T.vocab_coverage(_t(spark, sf_dir, "documents"))
 
 
-# ---------------------------------------------------------------------------
-# ROUND-11 STAGED REGISTRATIONS — NOT in queries()/oracle_sql().
-#
-# The registry is frozen at 445 through round 10 (round-9 verdict
-# item 2).  These fixtures + oracles make the round-11 registration
-# purely mechanical (verdict item 3): when a window has room, append
-# the R11_STAGED_QUERIES items to the ``reg`` dict and the
-# R11_STAGED_ORACLES items to ``oracle_sql()`` — nothing else.
-# Fixture parameters are pinned per ROUND10_QUEUE.md's recipe table;
-# the oracle bodies were validated against pure-Python references in
-# tests/test_round10_staged_oracles.py, and the PAIRED Spark-vs-DuckDB
-# cross-check runs every session in tests/test_round11_registration.py.
-# fe_quantile_binning's plan_lint BNLJ allowlist entry is pre-added
-# (bounded literal n_bins spine, the evt_qte class).
-# ---------------------------------------------------------------------------
-
-
-def _ml_ridge_fit(spark, sf_dir):
-    """Closed-form 2-feature ridge regression on integer-quantized
-    orders features (ml.ridge_fit): one corpus pass folds the exact
-    DECIMAL(38,0) moment matrix; the λ-damped normal-equation solve
-    is a fixed-order float expression on the 1-row aggregate."""
-    u = _t(spark, sf_dir, "orders").select(
-        (F.col("o_custkey") % 100).cast("bigint").alias("x1"),
-        (F.col("o_orderkey") % 97).cast("bigint").alias("x2"),
-        F.round("o_totalprice").cast("bigint").alias("y"),
-    )
-    return ML.ridge_fit(u, "x1", "x2", "y", lam=1000.0)
-
-
-_R11_RIDGE_SQL = """
-WITH u AS (
-  SELECT CAST(o_custkey % 100 AS BIGINT) AS x1,
-         CAST(o_orderkey % 97 AS BIGINT) AS x2,
-         CAST(round(o_totalprice) AS BIGINT) AS y
-  FROM orders
-), m AS (
-  SELECT CAST(count(*) AS BIGINT) AS n,
-         sum(x1) AS s1, sum(x2) AS s2, sum(y) AS sy,
-         sum(x1 * x1) AS s11, sum(x2 * x2) AS s22,
-         sum(x1 * x2) AS s12, sum(x1 * y) AS s1y,
-         sum(x2 * y) AS s2y, sum(y * y) AS syy
-  FROM u
-), c AS (
-  SELECT n,
-         CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE) AS mx1,
-         CAST(s2 AS DOUBLE) / CAST(n AS DOUBLE) AS mx2,
-         CAST(sy AS DOUBLE) / CAST(n AS DOUBLE) AS my,
-         CAST(s11 AS DOUBLE) AS d11, CAST(s22 AS DOUBLE) AS d22,
-         CAST(s12 AS DOUBLE) AS d12, CAST(s1y AS DOUBLE) AS d1y,
-         CAST(s2y AS DOUBLE) AS d2y, CAST(syy AS DOUBLE) AS dyy
-  FROM m
-), k AS (
-  SELECT n, mx1, mx2, my,
-         d11 - CAST(n AS DOUBLE) * mx1 * mx1 AS c11,
-         d22 - CAST(n AS DOUBLE) * mx2 * mx2 AS c22,
-         d12 - CAST(n AS DOUBLE) * mx1 * mx2 AS c12,
-         d1y - CAST(n AS DOUBLE) * mx1 * my AS c1y,
-         d2y - CAST(n AS DOUBLE) * mx2 * my AS c2y,
-         dyy - CAST(n AS DOUBLE) * my * my AS cyy
-  FROM c
-), b AS (
-  SELECT n, mx1, mx2, my, c11, c22, c12, c1y, c2y, cyy,
-         (c1y * (c22 + 1000.0) - c12 * c2y)
-           / ((c11 + 1000.0) * (c22 + 1000.0) - c12 * c12) AS b1,
-         ((c11 + 1000.0) * c2y - c12 * c1y)
-           / ((c11 + 1000.0) * (c22 + 1000.0) - c12 * c12) AS b2
-  FROM k
-)
-SELECT n,
-       round(b1, 6) AS b1,
-       round(b2, 6) AS b2,
-       round(my - b1 * mx1 - b2 * mx2, 6) AS intercept,
-       round((cyy - 2.0 * b1 * c1y - 2.0 * b2 * c2y
-              + b1 * b1 * c11 + 2.0 * b1 * b2 * c12
-              + b2 * b2 * c22) / CAST(n AS DOUBLE), 6) AS mse,
-       CAST(1000.0 AS DOUBLE) AS lambda
-FROM b
-"""
-
-
-def _fe_quantile_binning(spark, sf_dir):
-    """Equal-frequency binning of rounded order totals into 8 bins
-    (relational.quantile_binning) — integer-rational type-1 edges on
-    the evt_qte spine-join kernel.  plan_lint: 4 bounded BNLJs from
-    the 8-row literal bin spine (allowlisted, the evt_qte class)."""
-    v = _t(spark, sf_dir, "orders").select(
-        F.round("o_totalprice").cast("bigint").alias("v")
-    )
-    return R.quantile_binning(v, "v", n_bins=8)
-
-
-_R11_QBIN_SQL = """
-WITH base AS (
-  SELECT CAST(round(o_totalprice) AS BIGINT) AS v FROM orders
-  WHERE o_totalprice IS NOT NULL
-), ranked AS (
-  SELECT v, row_number() OVER (ORDER BY v) AS rn,
-         count(*) OVER () AS n
-  FROM base
-), spine AS (
-  SELECT CAST(j AS BIGINT) AS j FROM generate_series(1, 8) t(j)
-), edges AS (
-  SELECT spine.j, max(ranked.v) AS edge
-  FROM ranked JOIN spine
-    ON (ranked.rn - 1) * 8 < spine.j * ranked.n
-   AND spine.j * ranked.n <= ranked.rn * 8
-  GROUP BY spine.j
-), assigned AS (
-  SELECT (SELECT min(j) FROM edges WHERE edge >= base.v) AS bin
-  FROM base
-), counts AS (
-  SELECT bin, CAST(count(*) AS BIGINT) AS n_rows FROM assigned GROUP BY bin
-)
-SELECT e.j AS bin, e.edge AS upper_edge,
-       coalesce(c.n_rows, 0) AS n_rows
-FROM edges e LEFT JOIN counts c ON c.bin = e.j
-"""
-
-
-def _evt_retention_matrix(spark, sf_dir):
-    """Weekly cohort retention triangle over events
-    (events.retention_matrix): cohort = each user's first 7-day
-    period, DISTINCT-user counts at (cohort, offset) grain."""
-    return retention_matrix(_t(spark, sf_dir, "events"), period_days=7)
-
-
-_R11_RETENTION_SQL = """
-WITH up AS (
-  SELECT DISTINCT user_id AS u,
-         CAST(floor(epoch(ts) / (86400 * 7)) AS BIGINT) AS p
-  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
-), cohorts AS (
-  SELECT u, min(p) AS c FROM up GROUP BY u
-), sizes AS (
-  SELECT c, CAST(count(*) AS BIGINT) AS n_cohort FROM cohorts GROUP BY c
-), active AS (
-  SELECT cohorts.c, up.p - cohorts.c AS "offset",
-         CAST(count(*) AS BIGINT) AS n_active
-  FROM up JOIN cohorts USING (u)
-  GROUP BY cohorts.c, up.p - cohorts.c
-)
-SELECT active.c AS cohort_period, "offset", n_cohort, n_active,
-       round(CAST(n_active AS DOUBLE) / CAST(n_cohort AS DOUBLE), 6)
-         AS retention
-FROM active JOIN sizes ON sizes.c = active.c
-"""
-
-
-def _txt_winnowing(spark, sf_dir):
-    """Winnowing (MOSS) document fingerprints, k=5 w=4
-    (text_analysis.winnowing_fingerprints): local-minimum k-gram
-    selection with the rightmost-tie rule; one per-doc window is the
-    only exchange."""
-    return T.winnowing_fingerprints(
-        _t(spark, sf_dir, "documents"), k=5, w=4
-    )
-
-
-_R11_WINNOW_BODY = f"""
-WITH d AS (
-  SELECT doc_id, regexp_replace(lower(text), '[^a-z0-9]', '', 'g') AS t
-  FROM documents WHERE text IS NOT NULL
-), gi AS (
-  SELECT doc_id, t,
-         unnest(generate_series(1, len(t) - 5 + 1)) AS i
-  FROM d WHERE len(t) >= 5
-), g AS (
-  SELECT doc_id, CAST(i AS BIGINT) AS pos,
-         {_BASEHASH_SQL.format(x='substr(t, i, 5)')} AS h
-  FROM gi
-), n AS (
-  SELECT doc_id, count(*) AS ng FROM g GROUP BY doc_id
-), sel AS (
-  SELECT doc_id, pos,
-         min(struct_pack(h := h, np := -pos)) OVER (
-           PARTITION BY doc_id ORDER BY pos
-           ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING
-         ) AS pick
-  FROM g
-)
-SELECT DISTINCT sel.doc_id, -(pick.np) AS pos, pick.h AS gram_hash
-FROM sel JOIN n USING (doc_id)
-WHERE sel.pos <= n.ng - 3
-"""
-
-_R11_WINNOW_SQL = _R11_WINNOW_BODY
-
-
-def _ddp_winnow_neardup(spark, sf_dir):
-    """Winnowing near-dup pair audit, rolled up by shared-fingerprint
-    count (text_analysis.winnow_neardup_pairs + an integer-exact
-    rollup): the raw pair set is too wide for a driver row at sf0.1
-    (ROUND10_QUEUE.md), so the registry form reports, per ``shared``
-    level, the pair count and the exact integer sum of the smaller
-    fingerprint set — mean_fp_min is the only float, derived from
-    two exact integers in fixed order."""
-    pairs = T.winnow_neardup_pairs(
-        _t(spark, sf_dir, "documents"), k=5, w=4,
-        min_shared=2, max_hash_docs=64,
-    )
-    return pairs.groupBy("shared").agg(
-        F.count("*").alias("n_pairs"),
-        F.sum(F.least("fp_a", "fp_b")).alias("sum_fp_min"),
-    ).select(
-        "shared", "n_pairs", "sum_fp_min",
-        F.round(
-            F.col("sum_fp_min").cast("double")
-            / F.col("n_pairs").cast("double"), 6
-        ).alias("mean_fp_min"),
-    )
-
-
-_R11_WINNOW_PAIRS_SQL = f"""
-WITH fp0 AS ({_R11_WINNOW_BODY}),
-fps AS (SELECT DISTINCT doc_id, gram_hash FROM fp0),
-per_doc AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS fp
-            FROM fps GROUP BY doc_id),
-hd AS (SELECT gram_hash FROM fps GROUP BY gram_hash
-       HAVING count(*) <= 64),
-kept AS (SELECT fps.doc_id, fps.gram_hash FROM fps JOIN hd USING (gram_hash)),
-pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         CAST(count(*) AS BIGINT) AS shared
-  FROM kept a JOIN kept b
-    ON a.gram_hash = b.gram_hash AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-  HAVING count(*) >= 2
-)
-SELECT shared, CAST(count(*) AS BIGINT) AS n_pairs,
-       CAST(sum(least(pa.fp, pb.fp)) AS BIGINT) AS sum_fp_min,
-       round(CAST(sum(least(pa.fp, pb.fp)) AS DOUBLE)
-             / CAST(count(*) AS DOUBLE), 6) AS mean_fp_min
-FROM pairs
-JOIN per_doc pa ON pa.doc_id = doc_a
-JOIN per_doc pb ON pb.doc_id = doc_b
-GROUP BY shared
-"""
-
-
-def _sim_rank_metrics(spark, sf_dir):
-    """Pooled retrieval scoreboard (similarity.rank_metrics): MRR@5 +
-    macro recall/precision@5 + hit-rate@5 of the IVF probe against
-    the exact brute-force top-5 — the one-row summary on the same
-    validated chains sim_recall_eval compares per-query."""
-    emb = _t(spark, sf_dir, "embeddings")
-    q = emb.filter("vec_id % 50 = 0")
-    ranked = S.ivf_topk(emb, q, k=5, n_probe=10)
-    truth = S.brute_force_topk(emb, q, k=5).select(
-        "query_id", "neighbor_id"
-    )
-    return S.rank_metrics(ranked, truth, k=5)
-
-
-def _r11_rank_metrics_sql() -> str:
-    return f"""
-WITH truth0 AS ({_cosine_topk_oracle()}),
-ranked0 AS ({_ivf_topk_oracle()}),
-hits AS (
-  SELECT r.query_id AS q, CAST(min(r.rank) AS BIGINT) AS first,
-         CAST(count(*) AS BIGINT) AS hits
-  FROM ranked0 r JOIN truth0 t
-    ON r.query_id = t.query_id AND r.neighbor_id = t.neighbor_id
-  WHERE r.rank <= 5
-  GROUP BY r.query_id
-),
-per_q AS (
-  SELECT t.q,
-         coalesce(1.0 / CAST(h.first AS DOUBLE), 0.0) AS rr,
-         coalesce(CAST(h.hits AS DOUBLE)
-                  / CAST(n_rel AS DOUBLE), 0.0) AS rec,
-         coalesce(CAST(h.hits AS DOUBLE) / 5.0, 0.0) AS prec,
-         CAST(coalesce(h.hits > 0, FALSE) AS BIGINT) AS hit
-  FROM (SELECT query_id AS q, CAST(count(*) AS BIGINT) AS n_rel
-        FROM truth0 GROUP BY query_id) t
-  LEFT JOIN hits h ON h.q = t.q
-),
-pooled AS (
-  SELECT q,
-         count(*) OVER w AS nq,
-         sum(rr) OVER w AS srr,
-         sum(rec) OVER w AS srec,
-         sum(prec) OVER w AS sprec,
-         sum(hit) OVER w AS shit
-  FROM per_q
-  WINDOW w AS (ORDER BY q ROWS BETWEEN UNBOUNDED PRECEDING
-               AND CURRENT ROW)
-)
-SELECT CAST(nq AS BIGINT) AS n_queries,
-       round(srr / nq, 6) AS mrr,
-       round(srec / nq, 6) AS recall_at_k,
-       round(sprec / nq, 6) AS precision_at_k,
-       round(CAST(shit AS DOUBLE) / nq, 6) AS hit_rate,
-       5 AS k
-FROM pooled ORDER BY q DESC LIMIT 1
-"""
-
-
-def _evt_page_hinkley(spark, sf_dir):
-    """Page–Hinkley drift detector over the daily event-value series,
-    delta=50 lambda=400 cents (events.page_hinkley); day crosses the
-    oracle boundary as epoch-day BIGINT per the driver convention."""
-    out = page_hinkley(
-        _t(spark, sf_dir, "events"), delta_cents=50, lambda_cents=400
-    )
-    return out.select(
-        F.datediff(F.col("day"), F.lit("1970-01-01"))
-        .cast("bigint").alias("day_num"),
-        "x_cents", "ph", "alarm",
-    )
-
-
-_R11_PH_SQL = """
-WITH daily AS (
-  SELECT CAST(ts AS DATE) AS day,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-           AS x_cents
-  FROM events GROUP BY CAST(ts AS DATE)
-), staged AS (
-  SELECT day, x_cents,
-         CAST(x_cents AS DOUBLE)
-           - sum(CAST(x_cents AS DOUBLE)) OVER w / count(*) OVER w
-           - 50.0 AS dev
-  FROM daily
-  WINDOW w AS (ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING
-               AND CURRENT ROW)
-), m AS (
-  SELECT day, x_cents, sum(dev) OVER w AS m
-  FROM staged
-  WINDOW w AS (ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING
-               AND CURRENT ROW)
-)
-SELECT CAST(day - DATE '1970-01-01' AS BIGINT) AS day_num, x_cents,
-       round(m - min(m) OVER w, 6) AS ph,
-       round(m - min(m) OVER w, 6) > 400.0 AS alarm
-FROM m
-WINDOW w AS (ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING
-             AND CURRENT ROW)
-"""
-
-
-def _agg_cronbach_alpha(spark, sf_dir):
-    """Cronbach's alpha over a 3-item integer panel derived from
-    orders (aggregates.cronbach_alpha): exact DECIMAL(38,0) moments,
-    fixed-order α assembly; NULL items are refused in-plan."""
-    u = _t(spark, sf_dir, "orders").select(
-        (F.col("o_custkey") % 7).cast("bigint").alias("i1"),
-        (F.col("o_orderkey") % 5).cast("bigint").alias("i2"),
-        (F.round("o_totalprice").cast("bigint") % 9).alias("i3"),
-    )
-    return AG.cronbach_alpha(u, ["i1", "i2", "i3"])
-
-
-_R11_ALPHA_SQL = """
-WITH u AS (
-  SELECT CAST(o_custkey % 7 AS BIGINT) AS i1,
-         CAST(o_orderkey % 5 AS BIGINT) AS i2,
-         CAST(round(o_totalprice) % 9 AS BIGINT) AS i3
-  FROM orders
-), m AS (
-  SELECT CAST(count(*) AS BIGINT) AS n,
-         sum(i1) AS s1, sum(i1 * i1) AS q1,
-         sum(i2) AS s2, sum(i2 * i2) AS q2,
-         sum(i3) AS s3, sum(i3 * i3) AS q3,
-         sum(i1 + i2 + i3) AS st,
-         sum((i1 + i2 + i3) * (i1 + i2 + i3)) AS qt
-  FROM u
-), v AS (
-  SELECT n,
-         (CAST(q1 AS DOUBLE) - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE)
-            / CAST(n AS DOUBLE)) / (CAST(n AS DOUBLE) - 1.0)
-         + (CAST(q2 AS DOUBLE) - CAST(s2 AS DOUBLE) * CAST(s2 AS DOUBLE)
-            / CAST(n AS DOUBLE)) / (CAST(n AS DOUBLE) - 1.0)
-         + (CAST(q3 AS DOUBLE) - CAST(s3 AS DOUBLE) * CAST(s3 AS DOUBLE)
-            / CAST(n AS DOUBLE)) / (CAST(n AS DOUBLE) - 1.0) AS siv,
-         (CAST(qt AS DOUBLE) - CAST(st AS DOUBLE) * CAST(st AS DOUBLE)
-            / CAST(n AS DOUBLE)) / (CAST(n AS DOUBLE) - 1.0) AS tv
-  FROM m
-)
-SELECT n AS n_subjects, 3 AS k_items,
-       round(siv, 6) AS sum_item_var,
-       round(tv, 6) AS total_var,
-       round(1.5 * (1.0 - siv / tv), 6) AS alpha
-FROM v
-"""
-
-
-def _tbl_txn_time_travel(spark, sf_dir):
-    """Transactional-table time travel (operators/txnlog.py, the
-    round-9 verdict item 5 driver query): create v1 from a keyed
-    orders slice (with zone-map stats), MERGE v2 (keyed patch + one
-    new row, file-level pruned), DELETE v3 — then read VERSION 2,
-    proving the snapshot is immune to the later delete.  The oracle
-    reproduces v2 purely relationally: v1 with the %3-keyed patch
-    applied, plus the inserted row."""
-    base = _t(spark, sf_dir, "orders").filter("o_orderkey % 10 = 0").select(
-        F.col("o_orderkey").cast("bigint").alias("k"),
-        F.round("o_totalprice").cast("bigint").alias("cents"),
-    )
-    tbl = _scratch_dir("txn_tt_") + "/t"
-    from eggv_spark.operators import txnlog as TX
-
-    TX.create(base, tbl, stats_cols=["k"])
-    updates = base.filter("k % 3 = 0").select(
-        "k", (F.col("cents") + 1000).alias("cents")
-    ).unionByName(
-        spark.createDataFrame([(-42, 123)], "k bigint, cents bigint")
-    )
-    TX.merge_upsert(spark, updates, tbl, ["k"])
-    TX.delete_rows(spark, tbl, "k % 7 = 0")  # v3: invisible at v2
-    return TX.read(spark, tbl, version=2).select("k", "cents")
-
-
-_R11_TXN_TT_SQL = """
-WITH base AS (
-  SELECT CAST(o_orderkey AS BIGINT) AS k,
-         CAST(round(o_totalprice) AS BIGINT) AS cents
-  FROM orders WHERE o_orderkey % 10 = 0
-)
-SELECT k,
-       CASE WHEN k % 3 = 0 THEN cents + 1000 ELSE cents END AS cents
-FROM base
-UNION ALL
-SELECT CAST(-42 AS BIGINT) AS k, CAST(123 AS BIGINT) AS cents
-"""
-
-
-R11_STAGED_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "ml_ridge_fit": _ml_ridge_fit,
-    "fe_quantile_binning": _fe_quantile_binning,
-    "evt_retention_matrix": _evt_retention_matrix,
-    "txt_winnowing": _txt_winnowing,
-    "ddp_winnow_neardup": _ddp_winnow_neardup,
-    "sim_rank_metrics": _sim_rank_metrics,
-    "evt_page_hinkley": _evt_page_hinkley,
-    "agg_cronbach_alpha": _agg_cronbach_alpha,
-    "tbl_txn_time_travel": _tbl_txn_time_travel,
-}
-
-
-def r11_staged_oracles() -> dict[str, str]:
-    return {
-        "ml_ridge_fit": _R11_RIDGE_SQL,
-        "fe_quantile_binning": _R11_QBIN_SQL,
-        "evt_retention_matrix": _R11_RETENTION_SQL,
-        "txt_winnowing": _R11_WINNOW_SQL,
-        "ddp_winnow_neardup": _R11_WINNOW_PAIRS_SQL,
-        "sim_rank_metrics": _r11_rank_metrics_sql(),
-        "evt_page_hinkley": _R11_PH_SQL,
-        "agg_cronbach_alpha": _R11_ALPHA_SQL,
-        "tbl_txn_time_travel": _R11_TXN_TT_SQL,
-    }
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """All implemented queries, in VERIFICATION-ROTATION order.
+    """Every registered query, keyed by name, in a fixed order.
 
-    The external driver oracle-checks the first 50 entries of this dict
-    each round.  Rounds 1-5 verified 50 entries each (CORRECTNESS_r01
-    .. _r05 — 247 green, ``agg_approx`` rows-only by design,
-    ``agg_hll_rollup`` rows-only in r05 pre-exact-twin,
-    ``txt_hashed_features`` erred in r03 on its then-ArrayType output
-    and passed in r04 re-emitted as a scalar); the verified blocks sit
-    behind the window, regression-guarded by
-    tests/test_reference_parity.py and scripts/check_correctness.py
-    which runs ALL entries locally at two scales.
-
-    Round-10 window (the first 50 of the returned dict — see the
-    ``_r10_window`` list at the bottom of this function): round 9 ran
-    50/50 green with zero flags, so per the rotation doctrine the
-    window is the 11 last never-driver-verified entries (waves 22-26,
-    ``graph_path_stats`` … ``fe_rare_category_collapse``) — a green
-    round 10 closes CUMULATIVE driver coverage at 445/445 — followed
-    by 39 r01-block §2 parity pads, oldest-first (their only driver
-    rows date to round 1).  The registry stays FROZEN at 445 through
-    round 10 (round-9 verdict item 2); the staged operators'
-    registration recipe for round 11 is in ROUND10_QUEUE.md /
-    ROUND11_QUEUE.md.
-
-    Round-9 window (verified 50/50 green in CORRECTNESS_r09.json):
-    the entire
-    never-driver-verified backlog, i.e. the round-8 waves 11-21 that
-    registered behind the full round-8 window, in oldest-wave-first
-    order (``sim_kcenter_coreset`` … ``composite_ann_health``), per
-    the round-8 verdict.  The registry was FROZEN at 445 that round.
-
-    Round-8 window (verified 50/50 green in CORRECTNESS_r08.json):
-    the THIRTEEN
-    round-7-staged operators registered this round per ROUND8_QUEUE.md
-    (CUPED adjusted lift, DAU/WAU/MAU actives, funnel paths, HHI
-    concentration, MCC confusion, Brier decomposition, PPS systematic
-    + stratified sampling, compaction planning, graph modularity,
-    perplexity quality bins, BPE merge application, ViT image
-    patches), the new composite_tokenizer_pipeline (BPE apply →
-    budget select → sequence pack in one two-shuffle plan, VERDICT
-    r07 item 6), the FIVE operators staged-and-registered within the
-    same round once their oracles validated (in-plan logistic GD and
-    PCA power iteration over embeddings, readability scores,
-    contamination report, DSIR importance weights), the
-    composite_importance_mixture (DSIR score → integer PPS weight →
-    per-source stratified fill as one plan), a THIRD same-round wave
-    (BM25 retrieval, Kneser–Ney bigram LM, two-sample energy
-    distance, per-channel image histograms, and the hashed-BoW →
-    logistic classifier composite), a FOURTH wave (multinomial Naive
-    Bayes with the dense doc×class grid, 1-D Wasserstein transport
-    cost, per-doc token entropy/evenness, distinct-n diversity per
-    source, and the WAV silence audit), a FIFTH wave (multi-step
-    Lloyd k-means with DECIMAL(38,18)-exact centroid feedback,
-    PAV-on-bins isotonic calibration, daily-count ACF, image
-    intensity entropy, embedding coherence, and the coherence-gate
-    composite), a SIXTH wave (fixed-grid decision stump,
-    integer-exact HITS hubs/authorities, MMR diversified retrieval,
-    RAKE keywords), a SEVENTH wave (the Johnson-Lindenstrauss
-    sign-projection distortion audit and the MMR->doc-join->budget
-    RAG context-assembly composite), an EIGHTH wave
-    (difference-in-differences and the IVF-kNN label-learnability
-    eval composite), a NINTH (top-2 PCA by deflation — the
-    spectral-gap probe), and a TENTH (Mann–Whitney rank-sum, LOO
-    target encoding, propensity-matched ATT, Monroe log-odds, MaxSim
-    late-interaction re-rank) — exactly 50 never-driver-verified
-    entries, so no re-verification pads this round (rotation
-    doctrine: new registrations claim the window first; round 7
-    closed driver coverage of all 334 prior entries, and the five
-    r01 pads the tenth wave displaced rejoin the round-9 queue).
-
-    Round-7 window (per the round-6 verdict items 1-4):
-    the 23 never-driver-checked wave-2/3/4 entries, agg_approx +
-    agg_hll_rollup (their only driver rows predate the round-6
-    exact-twin rework), ddp_containment re-verified with the
-    frequent-bucket ceiling live, the TWELVE round-6-staged operators
-    registered this round (c4_line_filters, vocab_jsd,
-    bpe_train_merges, embedding_drift, epoch_shuffle, srm_check,
-    multiplicative_means, join_cardinality_estimate,
-    prefix_dim_recall, label_chi2_terms, uplift_by_segment,
-    schema_drift_audit), the new win_rolling_corr_supplier headline,
-    and 11 high-complexity r01/r02 re-verification picks.  A green
-    round 7 closes driver coverage of all 334 entries.
-
-    Round-6 window: the 18 remaining round-4 additions
-    + the 32 round-5 wave-1 additions — exactly the never-driver-
-    verified block the round-5 verdict ordered front-swapped
-    (VERDICT.md item 1); CORRECTNESS_r06.json records 50/50 green.
-
-    Round-5 window (verified 49/50 green in CORRECTNESS_r05.json):
-    the 49-entry block staged at the
-    end of round 4 — ``txt_lang_confusion`` plus IVF+PQ, incremental
-    agg (batch + streaming twin), weighted sampling, Pareto, quantile
-    normalization, q-gram fuzzy, co-purchase/association rules,
-    FK audit, conversion/rate/seasonal analytics, A/B readout, Benford
-    (``agg_hll_rollup`` is rows-only: sketch estimates are not
-    value-reproducible in DuckDB), the TPC-H-analog completion
-    (``olap_q2/q4/q11/q12/q16/q20/q21``), triangle census, rank-sum
-    ROC AUC, Welch t-test, class-balanced downsampling, vocabulary
-    coverage, SemDeDup, calibration bins, the corpus-cleaning funnel,
-    k-fold assignment, drawdown, PSI drift, the ORC/JSON/TSV roundtrip
-    gate, neighbor-overlap Jaccard, the interpolated bigram LM, the
-    Theil index, and the order-insensitive table checksum — plus
-    ``mm_bmp_decode`` promoted from the round-4-additions queue as
-    slot 50.
-
-    Round-4 additions (dict tail, the round-6 queue together with the
-    round-5 additions, all dual-scale green on arrival):
-    incremental shard-vs-corpus dedup against a
-    persisted MinHash band index in batch (``ddp_index_dedup``) AND
-    streaming (``stream_index_dedup``, stateless stream-static band
-    probe, same oracle); unaligned sliding-window exact-substring
-    dedup (``ddp_window_dedup``); the Poisson-bootstrap family
-    (``agg_bootstrap_ci``, ``agg_bootstrap_ab``) plus experiment
-    power analysis (``agg_power_analysis``); Neyman-allocation
-    stratified sampling (``smp_neyman``); dynamic partition
-    overwrite for idempotent backfills (``tbl_partition_overwrite``);
-    single-changepoint CUSUM detection (``evt_changepoint``);
-    Theil–Sen robust trend + its Mann–Kendall hypothesis companion
-    (``agg_theilsen``/``agg_mann_kendall``); additive schema
-    evolution on read (``src_schema_evolution``); NDCG@k ranking
-    eval (``sim_ndcg``); weakly-connected components by
-    large-star/small-star over the rank-thresholded trade graph
-    (``graph_wcc``, recursive-CTE oracle); and watermark late-data
-    drop semantics over a deterministic three-micro-batch feed
-    (``stream_late_data``, engine drop/finalization contract pinned
-    by tests/test_skew_sliding_stateful.py); PERMISSIVE-mode
-    malformed-row accounting (``src_corrupt_records``: a 1%-corrupted
-    synthesized feed whose corrupt-column routing must exactly match
-    the oracle's intended split); soft dedup by duplicate-group
-    downweighting (``ddp_soft_dedup``, the keep-but-reweight curation
-    alternative to hard removal); and TOST mean-equivalence readout
-    (``agg_tost``, the non-inferiority complement to ``agg_welch``).
-
-    Round-5 additions (32 entries, dict tail, all dual-scale green on
-    arrival — together with the 18 remaining round-4 additions they
-    form EXACTLY the final 50-entry round-6 window, closing driver
-    coverage of the whole registry): the statistics family
-    (Spearman, Cramér's V with empty-cell correction, Cohen's d,
-    mutual information/NMI, rank-based trimmed mean, Lorenz deciles,
-    fixed-probe ECDF, runs test, randomization test + BH-FDR,
-    Fisher's method, Ljung–Box, delta-method ratio CI, digit-count
-    histogram), EWMA + rolling skewness windows, Kaplan–Meier
-    survival + cohort LTV, k-core/Adamic–Adar/BFS graph queries,
-    code-detect/markdown-strip/unicode-profile curation, asymmetric
-    containment dedup, PNG header parse, DELETE WHERE audit +
-    write-audit-publish, coverage-floor + Horvitz–Thompson sampling,
-    as-of tolerance join, pair-cosine histogram, and geo grid
-    density.
-
-    Round-5 wave 2 (11 entries, dict tail — the round-7 queue, all
-    dual-scale green on arrival): the k-sample test family (one-way
-    ANOVA, tie-corrected Kruskal–Wallis with even-dof closed-form
-    tail, Levene's W, Mood's median test), temporal structure
-    (burstiness/CV/Fano, discrete periodogram, gaps-and-islands
-    streak histogram), content-defined chunk dedup, IDF novelty,
-    bigram PMI collocations, and Y4M scene-cut detection.
-
-    Round-5 wave 3 (7 entries, dict tail, dual-scale green):
-    Friedman blocked-rank test, power-law tail MLE, Bollinger bands,
-    RSI (SMA variant), Markov-chain entropy rate, hapax/type-token
-    vocabulary profile, and adaptive grid-density hotspot clustering
-    (large-star/small-star components over dense cells).
-
-    Round-5 wave 4 (5 entries, dict tail, dual-scale green): the ML
-    evaluation family (average precision, decile lift/gain chart,
-    Cohen's kappa, McNemar's paired test) and GVF as a registered
-    PySpark-4 Python DataSource (``spark.read.format("gvf")``, one
-    InputPartition per file).  ``transformWithStateInPandas`` is
-    implemented (streaming.streaming_user_profile_tws) but carried
-    by a skip-gated test only: this container ships no
-    ``google.protobuf`` at all, so the TWS driver-worker channel
-    cannot start.
-
-    REGISTRY FREEZE, LIFTED ROUND 7: the registry held at 321 entries
-    through round 6 (round-4 verdict decision) so driver coverage
-    could close mechanically; the round-6 verdict ordered the freeze
-    lifted once the 23 wave-2/3/4 entries entered the window — the 12
-    round-6-staged operators plus win_rolling_corr_supplier brought
-    the registry to 334 in round 7, and the 13 round-7-staged
-    operators bring it to 347 in round 8.  The
-    rotation doctrine stands: never-driver-verified entries always
-    claim the window first.  Every entry is dual-scale oracle-green
-    (CORRECTNESS_LOCAL_r0*.json), plan-pinned
-    (PLAN_FINGERPRINTS.json), and cross-config partition-invariant
-    (scripts/determinism_sweep.py; since round 6 with ZERO
-    exceptions — the sketch queries' gradeable exact-twin forms are
-    hash-invariant and fully value-oracled).
+    The external driver oracle-checks the first 50 entries of the
+    returned dict against ``oracle_sql()``, so the key order is part
+    of the contract: the ``_window`` list at the bottom of this
+    function pins those 50, and every other entry follows in ``reg``
+    order.  ``scripts/check_correctness.py`` checks all entries
+    locally, and ``PLAN_FINGERPRINTS.json`` pins each plan.
     """
     reg = {
         # --- round-7 verification window (50), per the round-6
@@ -6585,8 +5950,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "evt_tumbling_window": _evt_tumbling_window,
         "evt_sliding_window": _evt_sliding_window,
         "evt_gapfill": _evt_gapfill,
-        # --- round-8 registrations: the thirteen ROUND8_QUEUE.md
-        # operators, staged in round 7 (implemented, property-tested,
+        # --- round-8 registrations: thirteen operators, staged in
+        # round 7 (implemented, property-tested,
         # oracle-validated in tests/test_round7_staged_oracles.py),
         # registered here with their registry fixtures ---
         "cuped_adjusted_lift": _cuped_adjusted_lift,
@@ -6604,7 +5969,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "image_patches": _image_patches,
         "composite_tokenizer_pipeline": _composite_tokenizer_pipeline,
         # --- round-8 second wave: the five operators staged earlier
-        # this round (ROUND9_QUEUE.md, pulled forward once their
+        # this round (pulled forward once their
         # oracles validated in tests/test_round8_staged_oracles.py)
         # plus the DSIR -> stratified-PPS selection composite ---
         "logistic_regression_gd": _logistic_regression_gd,
@@ -6803,20 +6168,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sim_vector_quality_audit": _sim_vector_quality_audit,
         "fe_rare_category_collapse": _fe_rare_category_collapse,
     }
-    # --- round-10 verification window (the first 50 of the returned
-    # dict), per the round-9 verdict item 1 / ROUND10_QUEUE.md: the
-    # round-9 driver run was 50/50 green (zero flags), so the window
-    # is (a) the 11 remaining never-driver-verified entries — waves
-    # 22-26, oldest wave first — which closes CUMULATIVE driver
-    # coverage at 445/445, then (b) the displaced r01-block §2 parity
-    # pads, oldest-first (no driver row since r01, four rounds of
-    # displacement), filling the remaining 39 slots.  The registry
-    # stays FROZEN at 445 through round 10 (verdict item 2); the
-    # staged round-9/10 operators register in round 11 per the
-    # mechanical recipe in ROUND10_QUEUE.md / ROUND11_QUEUE.md.
-    # Every window entry is dual-scale oracle-green locally
-    # (CORRECTNESS_LOCAL_r09.json). ---
-    _r10_window = [
+    # --- the driver's window: the first 50 entries of the returned
+    # dict.  Changing this list changes which entries the driver
+    # checks. ---
+    _window = [
         # (a) waves 22-26 — the last never-driver-verified entries
         # wave 22 (tests/test_round9u_staged.py)
         "graph_path_stats",
@@ -6877,7 +6232,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ddp_dedup_all",
         "ddp_dedup_keys",
     ]
-    out = {k: reg[k] for k in _r10_window}
+    out = {k: reg[k] for k in _window}
     out.update((k, v) for k, v in reg.items() if k not in out)
     return out
 
@@ -12521,7 +11876,7 @@ FROM po FULL OUTER JOIN pn ON po.col = pn.col
 
 
 # ---------------------------------------------------------------------------
-# round-8 registrations (the ROUND8_QUEUE.md thirteen: staged, property-
+# round-8 registrations (thirteen operators: staged, property-
 # tested and oracle-validated in tests/test_round7_staged_oracles.py,
 # registered into the round-8 verification window)
 # ---------------------------------------------------------------------------
@@ -12852,7 +12207,7 @@ _TRADE_TOPK_SQL = (
 
 def _r8_oracles() -> dict[str, str]:
     """Oracle SQL for the round-8 registrations (the thirteen
-    ROUND8_QUEUE.md operators; every template pre-validated
+    operators; every template pre-validated
     engine-vs-DuckDB in tests/test_round7_staged_oracles.py with the
     registry fixtures substituted here)."""
     cuped = f"""
@@ -13222,7 +12577,7 @@ FROM cum WHERE cum_tokens <= {budget}
 
 # ---------------------------------------------------------------------------
 # round-8 registrations, second wave: the five round-8-staged operators
-# (ROUND9_QUEUE.md, pulled forward into the round-8 window once their
+# (pulled forward into the round-8 window once their
 # oracles validated) plus the dsir -> pps_stratified composite
 # ---------------------------------------------------------------------------
 
@@ -13284,11 +12639,11 @@ def _dsir_log_weights(spark, sf_dir):
 
 
 def _composite_importance_mixture(spark, sf_dir):
-    """The DSIR selection axis composed end-to-end (ROUND9_QUEUE.md
-    suggestion): score every raw document by its hashed-bigram
-    importance log-weight against the target slice, convert the 4dp
-    log-weight to a positive integer PPS weight (1e4-scaled, clamped
-    >= 1 so anti-target docs keep a minimal draw probability), and
+    """The DSIR selection axis composed end-to-end: score every raw
+    document by its hashed-bigram importance log-weight against the
+    target slice, convert the 4dp log-weight to a positive integer
+    PPS weight (1e4-scaled, clamped >= 1 so anti-target docs keep a
+    minimal draw probability), and
     fill an 8-unit per-source budget by stratified PPS systematic
     sampling — score -> weight -> per-stratum fill as ONE plan, the
     importance-resampling mirror of composite_training_mixture.

@@ -24,17 +24,20 @@ def register_tables(
 ) -> list[str]:
     """Create a temp view per parquet table under ``sf_dir`` and
     register the SQL UDTF; returns the view names registered.
-    Missing tables are skipped (a data dir need not carry all ten)."""
+    Missing tables are skipped (a data dir need not carry all ten).
+    Each view is built by :func:`readers.read_table`, so SQL users see
+    the same normalized timestamp types as every registry operator."""
     import os
 
     from eggv_spark.functions.scalars import register_udtfs
+    from eggv_spark.sources.readers import read_table
 
     registered = []
     for name in tables or TABLES:
         path = os.path.join(sf_dir, f"{name}.parquet")
         if not os.path.exists(path):
             continue
-        spark.read.parquet(path).createOrReplaceTempView(name)
+        read_table(spark, sf_dir, name).createOrReplaceTempView(name)
         registered.append(name)
     register_udtfs(spark)
     return registered

@@ -112,9 +112,10 @@ def run_query(name: str, sf_dir: str, output: str | None, show_n: int,
               master: str) -> None:
     """Run one named analytics query from the registry.
 
-    The registry is the engine's query library — the same 200+
-    named, oracle-verified queries the correctness gate exercises —
-    so any of them is runnable as a product command:
+    The registry is the engine's query library — every named,
+    oracle-verified query the correctness gate exercises, as listed
+    by ``eggv-spark queries`` — so any of them is runnable as a
+    product command:
     ``eggv-spark query olap_q5_local_supplier --sf-dir data/``.
     """
     from eggv_spark.catalog import run_named_query

@@ -31,13 +31,6 @@ def _agg_exprs(aggs: Mapping[str, Column]) -> list[Column]:
     return [expr.alias(name) for name, expr in aggs.items()]
 
 
-def grouped_agg(
-    df: DataFrame, keys: Sequence[str], aggs: Mapping[str, Column]
-) -> DataFrame:
-    """Plain GROUP BY: one shuffle, partial aggregation map-side."""
-    return df.groupBy(*keys).agg(*_agg_exprs(aggs))
-
-
 def rollup_agg(
     df: DataFrame, keys: Sequence[str], aggs: Mapping[str, Column]
 ) -> DataFrame:
@@ -3798,526 +3791,4 @@ def partial_corr(
         F.round(rxz, 6).alias("r_xz"),
         F.round(ryz, 6).alias("r_yz"),
         F.round(partial, 6).alias("partial_r"),
-    )
-
-
-def cronbach_alpha(
-    df: DataFrame,
-    item_cols: Sequence[str],
-) -> DataFrame:
-    """Cronbach's alpha — internal-consistency reliability of a
-    multi-item panel (the "do my k model judges measure the same
-    construct" QA, completing the agreement family: cohen_kappa is
-    2-rater categorical, fleiss_kappa is n-rater categorical, alpha
-    is k-item CONTINUOUS/ordinal):
-
-        α = k/(k−1) · (1 − Σ_j var_j / var_total)
-
-    with var_j the sample variance of item j over subjects and
-    var_total the sample variance of per-subject TOTAL scores.
-    Scores must be integer-quantized by the caller (the smd_balance
-    contract).
-
-    Determinism: one keys=[] pass folds Σx_j, Σx_j² (DECIMAL(38,0) —
-    the measured bigint-overflow lesson), Σtot, Σtot², and n as
-    exact integers; the α assembly is one fixed-order float
-    expression, 6dp.  Degenerate inputs (n < 2, zero total variance)
-    yield NULL via try_divide, never a raw /0.
-
-    NULL items are REFUSED in-plan (round-9 advice, the fleiss_kappa
-    ragged-panel pattern): F.sum would skip a row's NULL for that
-    item's Σx/Σx² while the row total goes NULL and drops the whole
-    row from Σtot/Σtot² — item and total variances over DIFFERENT
-    effective populations, a silently biased α.  The caller decides
-    whether to drop or impute incomplete subjects; this operator
-    will not decide silently.
-
-    Output: one row (n_subjects, k_items, sum_item_var, total_var,
-    alpha)."""
-    item_cols = list(item_cols)
-    k = len(item_cols)
-    if k < 2:
-        raise ValueError("cronbach_alpha: need >= 2 item columns")
-    d0 = F.lit(0).cast("decimal(38,0)")
-    cols = [F.col(c).cast("decimal(38,0)") for c in item_cols]
-    tot = sum(cols[1:], cols[0])
-    any_null = F.col(item_cols[0]).isNull()
-    for c in item_cols[1:]:
-        any_null = any_null | F.col(c).isNull()
-    aggs = [
-        F.count("*").alias("_n"),
-        F.coalesce(
-            F.sum(F.when(any_null, 1).otherwise(0)), F.lit(0)
-        ).alias("_n_null"),
-    ]
-    for i, c in enumerate(cols):
-        aggs.append(F.coalesce(F.sum(c), d0).alias(f"_s{i}"))
-        aggs.append(F.coalesce(F.sum(c * c), d0).alias(f"_q{i}"))
-    aggs.append(F.coalesce(F.sum(tot), d0).alias("_st"))
-    aggs.append(F.coalesce(F.sum(tot * tot), d0).alias("_qt"))
-    m = df.agg(*aggs)
-    # raise-on-dirty-input, evaluated in-plan on the 1-row aggregate
-    m = m.select(
-        F.when(
-            F.col("_n_null") == 0, F.col("_n")
-        ).otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit("cronbach_alpha: "),
-                    F.col("_n_null").cast("string"),
-                    F.lit(
-                        " subject row(s) have NULL item values; drop"
-                        " or impute incomplete subjects first"
-                    ),
-                )
-            )
-        ).alias("_n"),
-        *[c for c in m.columns if c != "_n"],
-    )
-    n = F.col("_n").cast("double")
-
-    def _var(s: str, q: str):
-        return F.try_divide(
-            F.col(q).cast("double")
-            - F.try_divide(
-                F.col(s).cast("double") * F.col(s).cast("double"), n
-            ),
-            n - F.lit(1.0),
-        )
-
-    sum_item_var = _var("_s0", "_q0")
-    for i in range(1, k):
-        sum_item_var = sum_item_var + _var(f"_s{i}", f"_q{i}")
-    total_var = _var("_st", "_qt")
-    alpha = (
-        F.lit(float(k) / (k - 1.0))
-        * (F.lit(1.0) - F.try_divide(sum_item_var, total_var))
-    )
-    return m.select(
-        F.col("_n").alias("n_subjects"),
-        F.lit(k).alias("k_items"),
-        F.round(sum_item_var, 6).alias("sum_item_var"),
-        F.round(total_var, 6).alias("total_var"),
-        F.round(alpha, 6).alias("alpha"),
-    )
-
-
-def jarque_bera(df: DataFrame, value_col: str) -> DataFrame:
-    """Jarque–Bera normality test — the residual-QA member of the
-    distribution-test family (agg_ks_test compares two samples,
-    agg_runs_test checks sequence randomness, agg_ljung_box checks
-    autocorrelation; JB asks "is this sample plausibly Gaussian" from
-    its skewness and excess kurtosis):
-
-        JB = n/6 · (g1² + g2²/4),   g1 = m3/m2^1.5,  g2 = m4/m2² − 3
-
-    Input must be INTEGER-quantized (the smd_balance contract): one
-    keys=[] pass folds n and the exact raw power sums Σx, Σx², Σx³,
-    Σx⁴, ALL in DECIMAL(38,0) (the measured bigint-overflow lesson);
-    central moments and the JB stat
-    assemble in ONE fixed-order float expression, 6dp.  NULLs are
-    dropped first.  The 5% decision threshold is the χ²₂ quantile
-    written as the same literal on both engine sides (the z² lesson).
-
-    Magnitude contract (honest bound, not "unbounded"): Σx⁴ must fit
-    38 digits — |x| ≤ 1e5 (typical cents-scale scores) is safe to
-    ~1e17 rows, |x| ≤ 1e7 to ~1e9 rows; beyond that the decimal sum
-    overflows to NULL (non-ANSI) and the readout goes NULL rather
-    than silently wrapping — quantize coarser first.
-
-    Plan: single aggregate, no shuffle beyond the final fold.
-
-    Output: one row (n, skewness, kurtosis_excess, jb, reject_5pct).
-    """
-    base = df.select(F.col(value_col).cast("bigint").alias("_x")).filter(
-        F.col("_x").isNotNull()
-    )
-
-    def _dec(c) -> Column:
-        return c.cast("decimal(38,0)")
-
-    x = F.col("_x")
-    m = base.agg(
-        F.count("*").alias("_n"),
-        F.sum(_dec(x)).alias("_s1"),
-        F.sum(_dec(x) * x).alias("_s2"),
-        F.sum(_dec(x) * x * x).alias("_s3"),
-        F.sum((_dec(x) * x) * (_dec(x) * x)).alias("_s4"),
-    )
-    n = F.col("_n").cast("double")
-    s1 = F.col("_s1").cast("double")
-    s2 = F.col("_s2").cast("double")
-    s3 = F.col("_s3").cast("double")
-    s4 = F.col("_s4").cast("double")
-    mu = s1 / n
-    m2 = s2 / n - mu * mu
-    m3 = s3 / n - 3.0 * mu * (s2 / n) + 2.0 * mu * mu * mu
-    m4 = (
-        s4 / n
-        - 4.0 * mu * (s3 / n)
-        + 6.0 * mu * mu * (s2 / n)
-        - 3.0 * mu * mu * mu * mu
-    )
-    g1 = F.try_divide(m3, F.sqrt(m2 * m2 * m2))
-    g2 = F.try_divide(m4, m2 * m2) - F.lit(3.0)
-    jb = n / F.lit(6.0) * (g1 * g1 + g2 * g2 / F.lit(4.0))
-    return m.select(
-        F.col("_n").alias("n"),
-        F.round(g1, 6).alias("skewness"),
-        F.round(g2, 6).alias("kurtosis_excess"),
-        F.round(jb, 6).alias("jb"),
-        (F.round(jb, 6) > F.lit(5.991465)).alias("reject_5pct"),
-    )
-
-
-def macd(
-    df: DataFrame,
-    keys: Sequence[str],
-    order_col: str,
-    value_col: str,
-    fast: int = 12,
-    slow: int = 26,
-    signal: int = 9,
-    max_lags: int = 60,
-) -> DataFrame:
-    """MACD — the trend-momentum companion of win_bollinger / win_rsi:
-    macd = EMA(fast) − EMA(slow), signal_line = EMA(signal) of macd,
-    histogram = macd − signal_line, with every EMA the same
-    FINITE-MEMORY truncated form as :func:`with_ewma` (α = 2/(n+1),
-    lags capped at ``max_lags`` where the dropped tail weight is
-    (1−α)^K — ~0.8% for the slow line at the default 60).  The
-    textbook recursion is inherently sequential; truncation turns all
-    three lines into bounded window expressions sharing ONE sort
-    shuffle on the group key (signal needs a second pass over the
-    derived macd column, same partitioning, no extra exchange).
-    ``order_col`` must be unique per group; 6dp rounding on output so
-    the summation-order-free lag sums hash identically cross-engine.
-
-    Output: df + (macd, signal_line, histogram)."""
-    keys = list(keys)
-    w = Window.partitionBy(*keys).orderBy(order_col)
-
-    def _ema(col: Column, n_periods: int) -> Column:
-        a = 2.0 / (n_periods + 1.0)
-        num = F.lit(0.0)
-        den = F.lit(0.0)
-        for j in range(max_lags + 1):
-            lagged = F.lag(col, j).over(w) if j else col
-            wt = F.lit(a * (1.0 - a) ** j)
-            num = num + F.coalesce(lagged * wt, F.lit(0.0))
-            den = den + F.when(lagged.isNotNull(), wt).otherwise(F.lit(0.0))
-        return F.try_divide(num, den)
-
-    v = F.col(value_col).cast("double")
-    macd_raw = F.round(_ema(v, fast) - _ema(v, slow), 6)
-    out = df.withColumn("macd", macd_raw)
-    sig = F.round(_ema(F.col("macd"), signal), 6)
-    out = out.withColumn("signal_line", sig)
-    return out.withColumn(
-        "histogram", F.round(F.col("macd") - F.col("signal_line"), 6)
-    )
-
-
-def durbin_watson(
-    df: DataFrame,
-    order_col: str,
-    y_col: str,
-    x_col: str,
-) -> DataFrame:
-    """Durbin–Watson residual-autocorrelation test — the third leg of
-    the regression-diagnostics family (agg_linreg fits, jarque_bera
-    checks residual normality, DW checks residual INDEPENDENCE over
-    the sequence order: DW ≈ 2(1−ρ), ≈2 means uncorrelated, →0
-    positive serial correlation, →4 negative):
-
-        DW = Σ_{t≥2} (e_t − e_{t−1})² / Σ_t e_t²
-
-    with e the OLS residuals of y on x.  Inputs must be
-    INTEGER-quantized (the smd_balance contract) and ``order_col``
-    unique (the sequence).  Slope/intercept come from one exact-sum
-    aggregate (DECIMAL(38,0) second moments) assembled in a fixed
-    float order; residuals are then a per-row pure expression of
-    (a, b, x, y), BIT-identical across engines, and both quadratic
-    sums pool through ONE ordered prefix-sum window with the final
-    row read back (the logrank free-order-float lesson: a plain
-    F.sum over doubles hashes differently run-to-run; a sequential
-    prefix fold does not).
-
-    Plan: one keys=[] aggregate + one global-ordered window (the
-    sequence is one series by definition — same class as the other
-    single-series readouts) + a 1-row filter.  Output: one row
-    (n, slope, intercept, dw, rho_approx), 6dp."""
-    base = df.select(
-        F.col(order_col).alias("_t"),
-        F.col(y_col).cast("bigint").alias("_y"),
-        F.col(x_col).cast("bigint").alias("_x"),
-    ).filter(F.col("_y").isNotNull() & F.col("_x").isNotNull())
-
-    def _dec(c) -> Column:
-        return c.cast("decimal(38,0)")
-
-    x, y = F.col("_x"), F.col("_y")
-    sums = base.agg(
-        F.count("*").alias("_n"),
-        F.sum(_dec(x)).alias("_sx"),
-        F.sum(_dec(y)).alias("_sy"),
-        F.sum(_dec(x) * x).alias("_sxx"),
-        F.sum(_dec(x) * y).alias("_sxy"),
-    )
-    nf = F.col("_n").cast("double")
-    b = F.try_divide(
-        nf * F.col("_sxy").cast("double")
-        - F.col("_sx").cast("double") * F.col("_sy").cast("double"),
-        nf * F.col("_sxx").cast("double")
-        - F.col("_sx").cast("double") * F.col("_sx").cast("double"),
-    )
-    ab = sums.select(
-        F.col("_n"),
-        b.alias("_b"),
-        ((F.col("_sy").cast("double") - b * F.col("_sx").cast("double"))
-         / nf).alias("_a"),
-    )
-    e = (
-        F.col("_y").cast("double")
-        - F.col("_a")
-        - F.col("_b") * F.col("_x").cast("double")
-    )
-    w = Window.orderBy("_t")
-    wcum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    # carry (_a, _b) as constant columns through every stage: the
-    # 1-row aggregate is broadcast ONCE, not recomputed by a second
-    # crossJoin subtree (that would re-scan the corpus per call)
-    staged = base.crossJoin(F.broadcast(ab)).select(
-        "_t", "_n", "_a", "_b",
-        e.alias("_e"),
-    )
-    # layered windows (nested window calls are illegal in ANSI/DuckDB;
-    # keep both engines on the identical two-step shape): first the
-    # lag + row number, then the prefix folds over the derived columns
-    staged = staged.select(
-        "_t", "_n", "_a", "_b", "_e",
-        F.lag("_e", 1).over(w).alias("_ep"),
-        F.row_number().over(w).alias("_rn"),
-    )
-    staged = staged.select(
-        "_t", "_n", "_a", "_b", "_rn",
-        F.sum(F.col("_e") * F.col("_e")).over(wcum).alias("_sse"),
-        F.sum(
-            F.coalesce(
-                (F.col("_e") - F.col("_ep"))
-                * (F.col("_e") - F.col("_ep")),
-                F.lit(0.0),
-            )
-        ).over(wcum).alias("_sd2"),
-    )
-    last = staged.filter(F.col("_rn") == F.col("_n"))
-    dw = F.try_divide(F.col("_sd2"), F.col("_sse"))
-    return last.select(
-        F.col("_n").alias("n"),
-        F.round(F.col("_b"), 6).alias("slope"),
-        F.round(F.col("_a"), 6).alias("intercept"),
-        F.round(dw, 6).alias("dw"),
-        F.round(F.lit(1.0) - dw / F.lit(2.0), 6).alias("rho_approx"),
-    )
-
-
-def stochastic_oscillator(
-    df: DataFrame,
-    keys: Sequence[str],
-    order_col: str,
-    high_col: str,
-    low_col: str,
-    close_col: str,
-    n_periods: int = 14,
-    d_periods: int = 3,
-) -> DataFrame:
-    """Stochastic oscillator — %K/%D momentum, completing the
-    technical-window family (win_bollinger = volatility bands,
-    win_rsi = gain/loss ratio, macd = EMA spread; %K locates the
-    close inside the trailing n-period high/low RANGE):
-
-        %K = 100·(close − min(low, n)) / (max(high, n) − min(low, n))
-        %D = SMA(d) of %K
-
-    Rolling extrema are exact integer window aggregates (inputs must
-    be integer-quantized); %K is one fixed-order float expression per
-    row; %D averages the trailing d %K values in frame order (a
-    sequential fold, deterministic both engines).  Flat windows
-    (max = min) yield NULL %K via try_divide — the caller's signal
-    the range is degenerate, never a /0.  Partial head windows use
-    the rows present (min_periods = 1 semantics, documented).
-
-    Plan: one sort shuffle on the group key; every aggregate rides
-    the same window spec.  Output: df + (pct_k, pct_d), 6dp."""
-    keys = list(keys)
-    wn = (
-        Window.partitionBy(*keys).orderBy(order_col)
-        .rowsBetween(-(n_periods - 1), 0)
-    )
-    lo = F.min(F.col(low_col).cast("bigint")).over(wn)
-    hi = F.max(F.col(high_col).cast("bigint")).over(wn)
-    k = F.round(
-        F.lit(100.0)
-        * F.try_divide(
-            (F.col(close_col).cast("bigint") - lo).cast("double"),
-            (hi - lo).cast("double"),
-        ),
-        6,
-    )
-    out = df.withColumn("pct_k", k)
-    wd = (
-        Window.partitionBy(*keys).orderBy(order_col)
-        .rowsBetween(-(d_periods - 1), 0)
-    )
-    return out.withColumn("pct_d", F.round(F.avg("pct_k").over(wd), 6))
-
-
-def hosmer_lemeshow(
-    df: DataFrame,
-    score_col: str,
-    label_col: str,
-    n_bins: int = 10,
-    scale: int = 1000,
-) -> DataFrame:
-    """Hosmer–Lemeshow goodness-of-fit — the hypothesis-test member
-    of the calibration family (agg_calibration shows the reliability
-    curve, isotonic_fit repairs it; HL asks "is the miscalibration
-    larger than chance", χ² with n_bins−2 df):
-
-        HL = Σ_g (O_g − E_g)² / (E_g · (1 − p̄_g))
-
-    over fixed-width risk bins of an INTEGER-quantized score in
-    [0, scale] (milli-probabilities; the caller quantizes — fixed
-    edges rather than risk deciles is the documented deterministic
-    variant: quantile edges over heavily-tied hash scores are
-    tie-broken arbitrarily, fixed edges are not).  Per bin, n, O = Σy
-    and Σs are EXACT integers; E = Σs/scale and the χ² contribution
-    assemble in one fixed float order.  Degenerate bins (p̄ = 0 or 1,
-    or empty) contribute NULL and are EXCLUDED, with the readout
-    reporting how many bins actually entered the statistic — silent
-    df shrinkage is the classic HL implementation bug.  The bin
-    contributions pool through an ordered prefix-sum window over the
-    bin index (the free-order-float lesson), and the 5% threshold for
-    the default 10−2 df is the same literal on both engine sides.
-
-    Plan: one grouped aggregate (n_bins rows) + one tiny ordered
-    window + a 1-row filter.  Output: one row (n, n_bins_used, hl,
-    reject_5pct)."""
-    if not 2 < n_bins <= scale:
-        raise ValueError("hosmer_lemeshow: need 2 < n_bins <= scale")
-    base = df.select(
-        F.col(score_col).cast("bigint").alias("_s"),
-        F.col(label_col).cast("int").alias("_y"),
-    ).filter(F.col("_s").isNotNull() & F.col("_y").isNotNull())
-    b = F.least(
-        F.floor(F.col("_s") * n_bins / scale).cast("bigint"),
-        F.lit(n_bins - 1).cast("bigint"),
-    )
-    per = base.select(b.alias("_b"), "_y", "_s").groupBy("_b").agg(
-        F.count("*").alias("_n"),
-        F.sum("_y").cast("bigint").alias("_o"),
-        F.sum("_s").cast("bigint").alias("_ss"),
-    )
-    nf = F.col("_n").cast("double")
-    pbar = F.col("_ss").cast("double") / (nf * F.lit(float(scale)))
-    e = F.col("_ss").cast("double") / F.lit(float(scale))
-    contrib = F.try_divide(
-        (F.col("_o").cast("double") - e) * (F.col("_o").cast("double") - e),
-        e * (F.lit(1.0) - pbar),
-    )
-    staged = per.select(
-        "_b", "_n",
-        contrib.alias("_c"),
-    )
-    w = Window.orderBy("_b")
-    wcum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    wall = w.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    staged = staged.select(
-        "_b",
-        F.row_number().over(w).alias("_rn"),
-        F.count("*").over(wall).alias("_nb"),
-        F.sum("_n").over(wcum).alias("_ntot"),
-        F.sum(F.when(F.col("_c").isNotNull(), 1).otherwise(0))
-        .over(wcum).alias("_used"),
-        F.sum(F.coalesce(F.col("_c"), F.lit(0.0))).over(wcum).alias("_hl"),
-    )
-    last = staged.filter(F.col("_rn") == F.col("_nb"))
-    return last.select(
-        F.col("_ntot").alias("n"),
-        F.col("_used").cast("bigint").alias("n_bins_used"),
-        F.round(F.col("_hl"), 6).alias("hl"),
-        (F.round(F.col("_hl"), 6) > F.lit(15.507313)).alias("reject_5pct"),
-    )
-
-
-def effective_sample_size(
-    df: DataFrame,
-    weight_col: str,
-    keys: Sequence[str] = (),
-) -> DataFrame:
-    """Kish effective sample size — the did-my-weights-destroy-the-
-    sample readout the weighting family (raking, Horvitz–Thompson,
-    importance/DSIR weights) hands its output to:
-
-        ESS = (Σw)² / Σw²,   deff = n / ESS  (≥ 1; 1 = unweighted)
-
-    Weights must be INTEGER-quantized (milli-weights — the
-    smd_balance contract): Σw and Σw² fold as exact DECIMAL(38,0)
-    integers, so the only floats are the final two ratios, assembled
-    in one fixed order, 6dp.  Zero/negative weights are REFUSED
-    in-plan (the fleiss raise pattern): a zero-weight row silently
-    deflates ESS's denominator semantics, and negative weights make
-    Kish's formula meaningless — the caller decides whether to drop
-    or re-derive.  NULL weights are dropped (consistent with every
-    weighted aggregate here).
-
-    Plan: one grouped aggregate per key set — no shuffle beyond the
-    group-by; at keys=() a single fold.  Output per group: (keys...,
-    n, sum_w_milli, ess, deff, ess_ratio)."""
-    keys = list(keys)
-    base = df.select(
-        *keys, F.col(weight_col).cast("bigint").alias("_w")
-    ).filter(F.col("_w").isNotNull())
-
-    def _dec(c) -> Column:
-        return c.cast("decimal(38,0)")
-
-    w = F.col("_w")
-    agged = base.groupBy(*keys).agg(
-        F.count("*").alias("_n"),
-        F.coalesce(
-            F.sum(F.when(w <= 0, 1).otherwise(0)), F.lit(0)
-        ).alias("_n_bad"),
-        F.sum(_dec(w)).alias("_sw"),
-        F.sum(_dec(w) * w).alias("_sw2"),
-    )
-    agged = agged.select(
-        *keys,
-        F.when(F.col("_n_bad") == 0, F.col("_n")).otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit("effective_sample_size: "),
-                    F.col("_n_bad").cast("string"),
-                    F.lit(
-                        " row(s) have non-positive weights; drop or"
-                        " re-derive the weights first"
-                    ),
-                )
-            )
-        ).alias("_n"),
-        "_sw", "_sw2",
-    )
-    sw = F.col("_sw").cast("double")
-    sw2 = F.col("_sw2").cast("double")
-    ess = F.try_divide(sw * sw, sw2)
-    nf = F.col("_n").cast("double")
-    return agged.select(
-        *keys,
-        F.col("_n").alias("n"),
-        F.col("_sw").cast("bigint").alias("sum_w_milli"),
-        F.round(ess, 6).alias("ess"),
-        F.round(F.try_divide(nf, ess), 6).alias("deff"),
-        F.round(F.try_divide(ess, nf), 6).alias("ess_ratio"),
     )

@@ -21,9 +21,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from eggv_spark.materialize import materialize, materialize_lazy
+from eggv_spark.materialize import materialize
 
-from eggv_spark.operators.text_analysis import shingles_col, tokens_col
+from eggv_spark.operators.text_analysis import (
+    _reject_temp_clash,
+    shingles_col,
+    tokens_col,
+)
 
 #: MinHash parameters: 16 permutations = 4 bands x 4 rows
 #: (LSH threshold ~ (1/b)^(1/r) = 0.71 jaccard).
@@ -95,6 +99,7 @@ def with_shingle_hashes(
     shingle pass (0.79 -> 0.55 s over sf0.1 documents, 4-round
     interleaved min) and propagates to every minhash/containment
     consumer.  Same values, column set unchanged."""
+    _reject_temp_clash(df, "with_shingle_hashes", "_toks")
     df = df.withColumn("_toks", tokens_col(text_col))
     shingles = shingles_col(F.col("_toks"), shingle_size)
     return df.withColumn("shingles", shingles).withColumn(
@@ -658,97 +663,8 @@ def embedding_neardup_pairs(
 
 
 # ---------------------------------------------------------------------------
-# Duplicate-cluster resolution (iterative connected components)
+# Duplicate-cluster resolution (large-star/small-star connected components)
 # ---------------------------------------------------------------------------
-
-def connected_components(
-    pairs: DataFrame,
-    max_iterations: int = 10,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-) -> DataFrame:
-    """Resolve near-dup PAIRS into CLUSTERS: connected components by
-    iterative min-label propagation.  Output: (node, component) with
-    ``component`` = the smallest node id reachable from ``node`` —
-    i.e. the canonical keeper of each duplicate cluster.
-
-    Each iteration joins every node's label against its neighbors'
-    and takes the min — labels converge in O(component diameter)
-    rounds (near-dup clusters are shallow: usually 2-3).  The label
-    frame is re-persisted per round and the loop exits early when a
-    round changes nothing (one lightweight count action per round).
-    At web scale this is the standard large-star/small-star regime;
-    diameter-bounded dedup graphs converge in a handful of rounds.
-
-    If ``max_iterations`` rounds pass without convergence (a graph
-    with diameter > max_iterations — e.g. a long chain of pairwise
-    near-dups), the PARTIAL labels are still returned (every label is
-    a valid cluster member id, just possibly not yet the global min)
-    and a ``RuntimeWarning`` is emitted so callers can raise the
-    budget or switch to large-star/small-star.
-    """
-    import warnings
-    edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .unionByName(
-            pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
-        )
-        .dropDuplicates()
-        .persist()
-    )
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .dropDuplicates()
-        .withColumn("component", F.col("node"))
-        .persist()
-    )
-
-    converged = False
-    for i in range(max_iterations):
-        neighbor_min = (
-            edges.join(labels, edges["dst"] == labels["node"])
-            .groupBy("src")
-            .agg(F.min("component").alias("nbr_component"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels["node"] == neighbor_min["src"], "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"), F.coalesce("nbr_component", "component")
-                ).alias("component"),
-            )
-            .persist()
-        )
-        # persist caches DATA but the logical plan still nests one
-        # level per round; truncate lineage periodically so planning
-        # cost stays flat and a late-stage executor loss doesn't
-        # recompute the whole iteration chain.
-        if i % 3 == 2:
-            new_labels = new_labels.transform(materialize_lazy)
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .count()
-        )
-        labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    edges.unpersist()
-    if not converged:
-        warnings.warn(
-            f"connected_components did not converge in {max_iterations} "
-            "iterations; returning partial labels (graph diameter exceeds "
-            "the iteration budget — raise max_iterations or use a "
-            "large-star/small-star decomposition)",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    return labels
-
 
 def _large_star(edges: DataFrame) -> DataFrame:
     """Large-star round: symmetrize, then for every node ``u`` attach
@@ -798,13 +714,16 @@ def connected_components_star(
     Beyond", SoCC'14): each round hooks whole star subtrees onto
     smaller ids, so label information travels exponentially —
     convergence in O(log² n) rounds REGARDLESS of graph diameter,
-    where :func:`connected_components`' min-label propagation needs
-    O(diameter) rounds (a 1000-link chain of near-identical docs
-    never finishes there).  This is the 100 TB default; propagation
-    remains for shallow graphs where its cheaper rounds win.
+    where min-label propagation needs O(diameter) rounds (a
+    1000-link chain of near-identical docs never finishes there).
+    This is the one connected-components path in the library.
 
-    Output contract matches :func:`connected_components`: (node,
-    component) with ``component`` the smallest reachable id.
+    Output: (node, component) with ``component`` the smallest
+    reachable id — the canonical keeper of each duplicate cluster.
+    If ``max_iterations`` rounds pass without convergence, the labels
+    of the last round are returned (each one a member id of the
+    node's component, not necessarily the minimum) and a
+    ``RuntimeWarning`` is emitted.
 
     Lineage policy: every round ends in an EAGER ``localCheckpoint``.
     A star round references its input ~4 times (symmetrize + the

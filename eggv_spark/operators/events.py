@@ -132,19 +132,6 @@ def sessionize(
     )
 
 
-def session_stats(df: DataFrame, user_col: str = "user_id") -> DataFrame:
-    """Per-session aggregates over a sessionized frame."""
-    return (
-        sessionize(df, user_col=user_col)
-        .groupBy(user_col, "session_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.min("ts").alias("session_start"),
-            F.max("ts").alias("session_end"),
-        )
-    )
-
-
 def funnel_counts(
     df: DataFrame,
     steps: tuple[str, ...] = ("view", "click", "purchase"),
@@ -2433,130 +2420,4 @@ def quantile_treatment_effects(
     return per_arm.select(
         "p", "n_treated", "n_control", "q_treated", "q_control",
         (F.col("q_treated") - F.col("q_control")).alias("qte"),
-    )
-
-
-def retention_matrix(
-    df: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    period_days: int = 7,
-) -> DataFrame:
-    """Cohort retention triangle — the product-analytics companion of
-    :func:`growth_accounting` (that is a per-day class mix; this is
-    per-COHORT decay: of the users who first appeared in period p,
-    what fraction was active again p+o?).
-
-    Cohort = each user's first active period (floor of days-since-
-    epoch / ``period_days`` — whole-integer calendar math, no
-    timezone or DST hazards); a user is "active at offset o" when
-    they have ANY event in cohort+o.  Counts are DISTINCT users at
-    (cohort, offset) grain; retention = n_active / n_cohort, 6dp —
-    the only float, derived from two exact integers.  Offset 0 is
-    kept (retention 1.0 by construction — its absence is the classic
-    off-by-one audit signal).
-
-    Plan: one per-user min (cohort assignment), one distinct on
-    (user, period) BEFORE the cohort join collapses the frame to
-    user-period grain, a broadcast-joined cohort-size rollup, one
-    grouped count.  Nothing wider than user-period grain ever
-    shuffles.  Output: (cohort_period, offset, n_cohort, n_active,
-    retention)."""
-    period = F.floor(
-        F.unix_timestamp(F.col(ts_col)) / F.lit(86400 * period_days)
-    ).cast("bigint")
-    user_periods = (
-        df.select(F.col(user_col).alias("_u"), period.alias("_p"))
-        .filter(F.col("_u").isNotNull() & F.col("_p").isNotNull())
-        .distinct()
-    )
-    cohorts = user_periods.groupBy("_u").agg(F.min("_p").alias("_c"))
-    sizes = cohorts.groupBy("_c").agg(F.count("*").alias("n_cohort"))
-    active = (
-        user_periods.join(cohorts, "_u")
-        .groupBy("_c", (F.col("_p") - F.col("_c")).alias("offset"))
-        .agg(F.count("*").alias("n_active"))
-    )
-    return (
-        active.join(F.broadcast(sizes), "_c")
-        .select(
-            F.col("_c").alias("cohort_period"),
-            "offset",
-            "n_cohort",
-            "n_active",
-            F.round(
-                F.col("n_active") / F.col("n_cohort").cast("double"), 6
-            ).alias("retention"),
-        )
-    )
-
-
-def page_hinkley(
-    df: DataFrame,
-    ts_col: str = "ts",
-    value_col: str = "value",
-    delta_cents: int = 0,
-    lambda_cents: int = 0,
-    keys: Sequence[str] = (),
-) -> DataFrame:
-    """Page–Hinkley drift detector over a daily-aggregated series —
-    the RUNNING-MEAN sibling of :func:`cusum_chart`: CUSUM needs a
-    known target level T, Page–Hinkley self-references (deviation
-    from the series' own expanding mean), which is what a data-quality
-    monitor wants when the "normal" level is not known a priori
-    (e.g. mean document quality score of each incoming shard).
-
-        m_t  = Σ_{i≤t} (x_i − x̄_i − δ)     x̄_i = mean(x_1..x_i)
-        PH_t = m_t − min_{s≤t} m_s          alarm when PH_t > λ
-
-    Determinism: per-day x quantizes to integer cents before any
-    accumulation; x̄_i is a ratio of two exact integers evaluated
-    identically per row; m is an ORDERED prefix sum over the day
-    spine (the logrank fold discipline — one partition per series,
-    never a free-order float aggregate), the running minimum is a
-    window min of those prefixes.  PH reported 6dp.
-
-    Scale: one shuffle to the (keys…, day) grain, then window ops on
-    the day spine — one partition PER SERIES; pass ``keys`` to shard
-    a fleet of independent monitors (per-source, per-pipeline), the
-    unkeyed call is the single-series small-grain form like the
-    other calendar-spine ops.
-
-    Output per (keys…, day): x_cents, ph (6dp), alarm."""
-    keys = list(keys)
-    daily = (
-        df.select(
-            *keys,
-            F.to_date(F.col(ts_col)).alias("day"),
-            F.round(F.col(value_col) * 100).cast("bigint").alias("_cents"),
-        )
-        .groupBy(*keys, "day")
-        .agg(F.sum("_cents").alias("x_cents"))
-    )
-    w = Window.partitionBy(*keys).orderBy("day").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    staged = daily.select(
-        *keys,
-        "day",
-        "x_cents",
-        (
-            F.col("x_cents").cast("double")
-            - F.sum("x_cents").over(w).cast("double")
-            / F.count("*").over(w)
-            - F.lit(float(delta_cents))
-        ).alias("_dev"),
-    )
-    with_m = staged.select(
-        *keys, "day", "x_cents", F.sum("_dev").over(w).alias("_m")
-    )
-    return with_m.select(
-        *keys,
-        "day",
-        "x_cents",
-        F.round(F.col("_m") - F.min("_m").over(w), 6).alias("ph"),
-        (
-            F.round(F.col("_m") - F.min("_m").over(w), 6)
-            > F.lit(float(lambda_cents))
-        ).alias("alarm"),
     )

@@ -1493,98 +1493,3 @@ def perceptron_fit(
             F.array_max(F.transform("_w", lambda wd: F.abs(wd)))
         ).alias("w_abs_max"),
     )
-
-
-def ridge_fit(
-    df: DataFrame,
-    x1_col: str,
-    x2_col: str,
-    y_col: str,
-    lam: float = 1.0,
-) -> DataFrame:
-    """Closed-form ridge regression on two INTEGER-quantized features
-    — the regularized member of the in-plan linear-fit family
-    (perceptron_fit is the classification sibling; the curation use
-    is tiny interpretable quality models, e.g. predicting a judge
-    score from two cheap text statistics, where a full GD fit is
-    overkill and an unregularized OLS blows up on collinear
-    features).
-
-    Normal equations on CENTERED moments: with S_ij = Σx_ix_j −
-    n·x̄_ix̄_j and S_iy likewise,
-
-        [S11+λ  S12 ] [b1]   [S1y]
-        [S12    S22+λ] [b2] = [S2y]     (Cramer's rule, 2×2)
-
-        intercept = ȳ − b1·x̄1 − b2·x̄2
-        SSE = Syy − 2b1·S1y − 2b2·S2y + b1²·S11 + 2b1b2·S12 + b2²·S22
-              + λ(b1² + b2²) excluded — SSE reports FIT error only
-
-    Determinism (the smd_balance discipline): every raw moment
-    (Σx, Σx², Σxy — six sums + n) is an exact DECIMAL(38,0) integer
-    aggregate, so no float ever participates in a free-order sum;
-    the centered moments, Cramer solve, and SSE are ONE fixed-order
-    double expression evaluated identically in any engine, rounded
-    6dp.  λ ≤ 0 raises (λ=0 would reintroduce the singular-matrix
-    /0 this operator exists to avoid; use a tiny λ for near-OLS).
-    Degenerate inputs (n = 0, or zero centered variance in both
-    features with λ canceling nothing) yield NULL coefficients via
-    try_divide, never a raw /0.
-
-    Plan: ONE corpus pass (seven map-side-combinable aggregates),
-    1-row output — nothing data-sized reaches the driver and there
-    is no iteration.  At 100 TB this is a single scan + 1-row
-    shuffle.  Output: (n, b1, b2, intercept, mse, lambda)."""
-    if lam <= 0:
-        raise ValueError("ridge_fit: lam must be > 0")
-    d0 = F.lit(0).cast("decimal(38,0)")
-
-    def _i(c: str) -> Column:
-        return F.col(c).cast("decimal(38,0)")
-
-    m = df.select(
-        _i(x1_col).alias("_x1"), _i(x2_col).alias("_x2"),
-        _i(y_col).alias("_y"),
-    ).agg(
-        F.count("*").alias("_n"),
-        F.coalesce(F.sum("_x1"), d0).alias("_s1"),
-        F.coalesce(F.sum("_x2"), d0).alias("_s2"),
-        F.coalesce(F.sum("_y"), d0).alias("_sy"),
-        F.coalesce(F.sum(F.col("_x1") * F.col("_x1")), d0).alias("_s11"),
-        F.coalesce(F.sum(F.col("_x2") * F.col("_x2")), d0).alias("_s22"),
-        F.coalesce(F.sum(F.col("_x1") * F.col("_x2")), d0).alias("_s12"),
-        F.coalesce(F.sum(F.col("_x1") * F.col("_y")), d0).alias("_s1y"),
-        F.coalesce(F.sum(F.col("_x2") * F.col("_y")), d0).alias("_s2y"),
-        F.coalesce(F.sum(F.col("_y") * F.col("_y")), d0).alias("_syy"),
-    )
-    n = F.col("_n").cast("double")
-    mx1 = F.try_divide(F.col("_s1").cast("double"), n)
-    mx2 = F.try_divide(F.col("_s2").cast("double"), n)
-    my = F.try_divide(F.col("_sy").cast("double"), n)
-    c11 = F.col("_s11").cast("double") - n * mx1 * mx1
-    c22 = F.col("_s22").cast("double") - n * mx2 * mx2
-    c12 = F.col("_s12").cast("double") - n * mx1 * mx2
-    c1y = F.col("_s1y").cast("double") - n * mx1 * my
-    c2y = F.col("_s2y").cast("double") - n * mx2 * my
-    cyy = F.col("_syy").cast("double") - n * my * my
-    a11 = c11 + F.lit(float(lam))
-    a22 = c22 + F.lit(float(lam))
-    det = a11 * a22 - c12 * c12
-    b1 = F.try_divide(c1y * a22 - c12 * c2y, det)
-    b2 = F.try_divide(a11 * c2y - c12 * c1y, det)
-    sse = (
-        cyy
-        - F.lit(2.0) * b1 * c1y
-        - F.lit(2.0) * b2 * c2y
-        + b1 * b1 * c11
-        + F.lit(2.0) * b1 * b2 * c12
-        + b2 * b2 * c22
-    )
-    return m.select(
-        F.col("_n").alias("n"),
-        F.round(b1, 6).alias("b1"),
-        F.round(b2, 6).alias("b2"),
-        F.round(my - b1 * mx1 - b2 * mx2, 6).alias("intercept"),
-        F.round(F.try_divide(sse, n), 6).alias("mse"),
-        F.lit(float(lam)).alias("lambda"),
-    )

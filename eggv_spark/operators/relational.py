@@ -1298,191 +1298,3 @@ def rare_category_collapse(
         F.count("*").alias("n_source_categories"),
         F.max(F.col("category") == other_label).alias("is_collapsed"),
     )
-
-
-def _quantile_edge_array(base: DataFrame, n_bins: int):
-    """(spine, edge_arr) for type-1 quantile edges of ``base._v`` —
-    the integer-rational edge kernel shared by quantile_binning and
-    binned_target_rate.  ``edge_arr`` is a 1-row frame whose
-    ``_edges`` array holds edge_1..edge_n_bins in order."""
-    w = Window.orderBy("_v")
-    ranked = base.select(
-        "_v",
-        F.row_number().over(w).alias("_rn"),
-        F.count("*").over(
-            Window.rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        ).alias("_n"),
-    )
-    spine = base.sparkSession.range(1, n_bins + 1).select(
-        F.col("id").cast("bigint").alias("_j")
-    )
-    edges = (
-        ranked.join(
-            F.broadcast(spine),
-            (
-                (ranked["_rn"] - F.lit(1)) * F.lit(n_bins)
-                < F.col("_j") * ranked["_n"]
-            )
-            & (F.col("_j") * ranked["_n"] <= ranked["_rn"] * F.lit(n_bins)),
-        )
-        .groupBy("_j")
-        .agg(F.max("_v").alias("_edge"))
-    )
-    edge_arr = edges.agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("_j", "_edge"))),
-            lambda s: s["_edge"],
-        ).alias("_edges")
-    )
-    return spine, edge_arr
-
-
-def _bin_of(value_col: str, n_bins: int):
-    """Smallest bin j with edge_j >= value; the last edge is the
-    exact max so the fallback never fires on real rows — kept as a
-    loud invariant rather than a silent overflow bin."""
-    return F.coalesce(
-        F.array_position(
-            F.transform("_edges", lambda e: F.col(value_col) <= e),
-            F.lit(True),
-        ),
-        F.lit(n_bins).cast("bigint"),
-    )
-
-
-def quantile_binning(
-    df: DataFrame,
-    value_col: str,
-    n_bins: int = 4,
-) -> DataFrame:
-    """Equal-frequency (quantile) binning of an INTEGER-quantized
-    feature — the discretizer feeding WOE/target encoders and
-    monotone-binned quality scores (rare_category_collapse's numeric
-    sibling: that guards categorical cardinality, this turns a
-    continuous column into a bounded categorical).
-
-    Bin edges are TYPE-1 order statistics at p = j/n_bins: edge_j =
-    value at sorted rank ceil(j·n/n_bins), selected with pure
-    INTEGER arithmetic ((rn−1)·n_bins < j·n ≤ rn·n_bins — the
-    quantile_treatment_effects discipline, immune to IEEE p·n
-    boundary rounding).  Row r lands in the SMALLEST bin j whose
-    edge_j ≥ its value — with duplicate-heavy data adjacent edges
-    can collide, in which case the colliding UPPER bins report zero
-    rows rather than the edges re-spreading (the deterministic
-    convention; a zero-row bin is the caller's signal the feature
-    has too few distinct values for n_bins).
-
-    Plan: one rank window over the value (single corpus shuffle),
-    the n_bins-row edge spine folded in a broadcast, one grouped
-    count.  The spine join is a BroadcastNestedLoopJoin BY CONTRACT
-    (the evt_qte literal-spine class: the broadcast side is exactly
-    n_bins rows, so the loop is n_bins comparisons per input row —
-    bounded by construction; registration needs the matching
-    plan_lint allowlist entry).  Output: n_bins rows (bin,
-    upper_edge, n_rows) — exact integers only, no rounding contract
-    needed."""
-    if n_bins < 2:
-        raise ValueError("quantile_binning: n_bins must be >= 2")
-    base = df.select(F.col(value_col).cast("bigint").alias("_v")).filter(
-        F.col("_v").isNotNull()
-    )
-    spine, edge_arr = _quantile_edge_array(base, n_bins)
-    assigned = base.crossJoin(F.broadcast(edge_arr)).select(
-        _bin_of("_v", n_bins).alias("bin"),
-    )
-    counts = assigned.groupBy("bin").agg(F.count("*").alias("n_rows"))
-    spine_all = edge_arr.crossJoin(F.broadcast(spine)).select(
-        F.col("_j").alias("bin"),
-        F.element_at("_edges", F.col("_j").cast("int")).alias(
-            "upper_edge"
-        ),
-    )
-    return spine_all.join(counts, "bin", "left").select(
-        "bin",
-        "upper_edge",
-        F.coalesce(F.col("n_rows"), F.lit(0).cast("bigint")).alias(
-            "n_rows"
-        ),
-    )
-
-
-def binned_target_rate(
-    df: DataFrame,
-    value_col: str,
-    label_col: str,
-    n_bins: int = 4,
-) -> DataFrame:
-    """Per-quantile-bin event rate with a Wilson 95% CI — the
-    monotone-risk readout that connects the discretizer to the
-    calibration family: quantile_binning turns a continuous feature
-    into equal-frequency bins; this asks, PER BIN, how often the
-    binary label fires and how sure we are (agg_calibration bins a
-    SCORE by fixed-width probability; this bins a raw FEATURE by its
-    own quantiles — the "does risk move monotonically with the
-    feature" screen run before trusting an encoder or a gate).
-
-    Input contract: ``value_col`` INTEGER-quantized (the qte edge
-    discipline), ``label_col`` binary 0/1 (cast to int; NULL rows in
-    either column dropped first).  Edges are the same type-1
-    integer-rational order statistics as quantile_binning — the two
-    operators share the `_quantile_edge_array` kernel, so a bin here
-    IS the bin there.  The Wilson interval assembles from exact
-    per-bin integers (n, events) in one fixed-order float expression
-    with z = 1.96 written as z·z on both engine sides (the z²
-    cross-engine lesson); empty bins report NULL rate/CI via
-    try_divide, never /0.
-
-    Plan: one rank window (single corpus shuffle) for edges, one
-    broadcast edge-array join, one grouped aggregate — the
-    quantile_binning plan plus a two-integer-column fold; same
-    bounded BNLJ contract (plan_lint allowlist class).
-
-    Output: n_bins rows (bin, upper_edge, n_rows, n_events, rate,
-    ci_lo, ci_hi), rates 6dp."""
-    if n_bins < 2:
-        raise ValueError("binned_target_rate: n_bins must be >= 2")
-    base = df.select(
-        F.col(value_col).cast("bigint").alias("_v"),
-        F.col(label_col).cast("int").alias("_y"),
-    ).filter(F.col("_v").isNotNull() & F.col("_y").isNotNull())
-    spine, edge_arr = _quantile_edge_array(base.select("_v"), n_bins)
-    assigned = base.crossJoin(F.broadcast(edge_arr)).select(
-        _bin_of("_v", n_bins).alias("bin"), "_y",
-    )
-    per_bin = assigned.groupBy("bin").agg(
-        F.count("*").alias("n_rows"),
-        F.sum("_y").cast("bigint").alias("n_events"),
-    )
-    spine_all = edge_arr.crossJoin(F.broadcast(spine)).select(
-        F.col("_j").alias("bin"),
-        F.element_at("_edges", F.col("_j").cast("int")).alias("upper_edge"),
-    )
-    z2 = F.lit(1.96) * F.lit(1.96)
-    n = F.col("n_rows").cast("double")
-    p = F.try_divide(F.col("n_events").cast("double"), n)
-    denom = F.lit(1.0) + z2 / n
-    center = (p + z2 / (F.lit(2.0) * n)) / denom
-    half = (
-        F.lit(1.96)
-        * F.sqrt(
-            F.try_divide(p * (F.lit(1.0) - p), n)
-            + z2 / (F.lit(4.0) * n * n)
-        )
-        / denom
-    )
-    return (
-        spine_all.join(per_bin, "bin", "left")
-        .select(
-            "bin",
-            "upper_edge",
-            F.coalesce(F.col("n_rows"), F.lit(0).cast("bigint"))
-            .alias("n_rows"),
-            F.coalesce(F.col("n_events"), F.lit(0).cast("bigint"))
-            .alias("n_events"),
-            F.round(p, 6).alias("rate"),
-            F.round(center - half, 6).alias("ci_lo"),
-            F.round(center + half, 6).alias("ci_hi"),
-        )
-    )

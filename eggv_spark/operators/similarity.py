@@ -1892,96 +1892,3 @@ def vector_quality_audit(
         F.round(F.max("_norm"), 6).alias("max_norm"),
         F.round(F.avg("_norm"), 4).alias("mean_norm"),
     )
-
-
-def rank_metrics(
-    ranked: DataFrame,
-    truth: DataFrame,
-    query_col: str = "query_id",
-    item_col: str = "neighbor_id",
-    rank_col: str = "rank",
-    k: int = 10,
-) -> DataFrame:
-    """MRR@k + macro recall/precision@k + hit-rate@k in ONE readout —
-    the binary-relevance summary completing the retrieval-eval
-    family (:func:`ann_recall` is per-config recall only,
-    :func:`ranking_ndcg` is per-query graded order quality; this is
-    the one-row scoreboard a retrieval A/B reads).
-
-    ``ranked`` is system output in the (query, item, rank) top-k
-    shape; ``truth`` is the binary-relevance set (query, item).
-    Queries are driven from the TRUTH side, so a query the system
-    returned nothing for still scores 0 (dropping it would inflate
-    every macro metric).  Per query: rr = 1/rank of the first
-    relevant item within the top-k (0 if none), recall@k =
-    hits/n_rel, precision@k = hits/k, hit = any relevant in top-k.
-
-    Determinism: hits, first-rank, and n_rel are exact integers;
-    the across-query macro means are ORDERED prefix sums over the
-    query id (the logrank discipline — never a free-order float
-    aggregate), read off the max-key row, 6dp.  The global ordered
-    window runs on the QUERY-GRAIN frame (|queries| rows, one per
-    query), which is ≪ corpus by the query-batch contract — the
-    same documented price ann_recall pays for hash-stable pooling.
-
-    Output: one row (n_queries, mrr, recall_at_k, precision_at_k,
-    hit_rate, k)."""
-    r = ranked.filter(F.col(rank_col) <= k).select(
-        F.col(query_col).alias("_q"),
-        F.col(item_col).alias("_i"),
-        F.col(rank_col).cast("bigint").alias("_rk"),
-    )
-    t = truth.select(
-        F.col(query_col).alias("_q"), F.col(item_col).alias("_i")
-    )
-    hits = (
-        r.join(t, ["_q", "_i"])
-        .groupBy("_q")
-        .agg(
-            F.min("_rk").alias("_first"),
-            F.count("*").alias("_hits"),
-        )
-    )
-    per_q = (
-        t.groupBy("_q")
-        .agg(F.count("*").alias("_n_rel"))
-        .join(hits, "_q", "left")
-        .select(
-            "_q",
-            F.coalesce(
-                F.try_divide(F.lit(1.0), F.col("_first")), F.lit(0.0)
-            ).alias("_rr"),
-            F.coalesce(
-                F.try_divide(
-                    F.col("_hits").cast("double"), F.col("_n_rel")
-                ),
-                F.lit(0.0),
-            ).alias("_rec"),
-            F.coalesce(
-                F.col("_hits").cast("double") / F.lit(float(k)), F.lit(0.0)
-            ).alias("_prec"),
-            F.coalesce(F.col("_hits") > 0, F.lit(False))
-            .cast("bigint")
-            .alias("_hit"),
-        )
-    )
-    w = Window.orderBy("_q").rowsBetween(Window.unboundedPreceding, 0)
-    pooled = per_q.select(
-        "_q",
-        F.count("*").over(w).alias("_nq"),
-        F.sum("_rr").over(w).alias("_srr"),
-        F.sum("_rec").over(w).alias("_srec"),
-        F.sum("_prec").over(w).alias("_sprec"),
-        F.sum("_hit").over(w).alias("_shit"),
-    )
-    last = pooled.orderBy(F.col("_q").desc()).limit(1)
-    return last.select(
-        F.col("_nq").alias("n_queries"),
-        F.round(F.col("_srr") / F.col("_nq"), 6).alias("mrr"),
-        F.round(F.col("_srec") / F.col("_nq"), 6).alias("recall_at_k"),
-        F.round(F.col("_sprec") / F.col("_nq"), 6).alias("precision_at_k"),
-        F.round(
-            F.col("_shit").cast("double") / F.col("_nq"), 6
-        ).alias("hit_rate"),
-        F.lit(k).alias("k"),
-    )

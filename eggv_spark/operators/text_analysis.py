@@ -45,6 +45,21 @@ def word_tokens_col(text_col: str | Column) -> Column:
     return F.filter(raw, lambda t: t != "")
 
 
+def _reject_temp_clash(df: DataFrame, fn: str, *temps: str) -> None:
+    """Raise if ``df`` already has a column that ``fn`` stages under a
+    temporary name and drops again: ``withColumn`` would overwrite the
+    caller's column and the final ``drop`` would lose it.  Spark
+    resolves names case-insensitively, so the check does too.  A
+    driver-side look at ``df.columns``; the plan is unchanged."""
+    lowered = {t.lower() for t in temps}
+    clash = [c for c in df.columns if c.lower() in lowered]
+    if clash:
+        raise ValueError(
+            f"{fn}: input column(s) {clash} collide with its temporary "
+            "column names; rename them before calling"
+        )
+
+
 def with_token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Token counting: whitespace tokens + regex word tokens +
     distinct-token count.
@@ -53,6 +68,7 @@ def with_token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     otherwise each re-run the regex split+filter per row — HOFs are
     interpreted with no common-subexpression elimination (the same
     finding as dedupe.with_shingle_hashes, −30% there)."""
+    _reject_temp_clash(df, "with_token_counts", "_toks")
     df = df.withColumn("_toks", tokens_col(text_col))
     toks = F.col("_toks")
     words = word_tokens_col(text_col)
@@ -77,6 +93,7 @@ def with_quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     stopword filter, the mean-length aggregate) — HOFs are
     interpreted with no common-subexpression elimination.
     """
+    _reject_temp_clash(df, "with_quality_score", "_toks")
     df = df.withColumn("_toks", tokens_col(text_col))
     toks = F.col("_toks")
     n_tokens = F.size(toks)
@@ -149,6 +166,7 @@ def with_fingerprint(
 
     Tokens staged (round 11): shingles_col references its tokens
     argument ~5x and HOFs get no subexpression elimination."""
+    _reject_temp_clash(df, "with_fingerprint", "_toks")
     normalized = F.lower(F.regexp_replace(F.col(text_col), r"\s+", " "))
     df = df.withColumn("_toks", tokens_col(text_col))
     shingles = shingles_col(F.col("_toks"), shingle_size)
@@ -239,6 +257,7 @@ def with_repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     # nested references — because HOFs are interpreted with no
     # common-subexpression elimination.  Same expressions, same
     # values; the staged columns are dropped.
+    _reject_temp_clash(df, "with_repetition_stats", "_toks", "_th", "_bh")
     df = df.withColumn("_toks", tokens_col(text_col))
     df = df.withColumn(
         "_th", F.transform(F.col("_toks"), lambda s: F.xxhash64(s))
@@ -2630,169 +2649,4 @@ def hash_collision_audit(
             6,
         ).alias("collision_frac"),
         F.max("_n").alias("max_bucket_terms"),
-    )
-
-
-def winnowing_fingerprints(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 5,
-    w: int = 4,
-) -> DataFrame:
-    """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
-    the MOSS algorithm): the local-minimum k-gram selection that
-    guarantees any shared substring of length >= w+k-1 contributes at
-    least one COMMON fingerprint to both documents — the
-    position-aware plagiarism/clone detector that MinHash (a global
-    sketch) cannot provide.
-
-    Per document: normalize (lowercase, strip non-alphanumerics —
-    whitespace/punctuation never perturb fingerprints), slide char
-    k-grams, hash each (base_hash — the portable md5-prefix hash),
-    then over every window of ``w`` consecutive gram hashes select
-    the minimum, breaking ties by RIGHTMOST position (the paper's
-    rule — it maximizes window overlap so consecutive windows
-    usually re-select the same gram), and emit the distinct
-    (position, hash) selections.
-
-    Determinism: positions and hashes are exact integers; min-of-
-    struct((hash, −pos)) makes the rightmost-tie rule a total order.
-    No floats anywhere.
-
-    Scale: the k-gram explode is ~|text| rows per doc — the
-    tokenizer-family shape (bpe_apply_merges explodes the same way);
-    the selection window partitions BY DOCUMENT (one shuffle on the
-    doc id, each partition a private sequential scan), and the
-    distinct collapses in-partition before exchange.  Fingerprint
-    density is ~2/(w+1) of grams, so the output is a small fraction
-    of the exploded frame.  Near-dup detection then equi-joins
-    fingerprint hashes — the banded-LSH posture, never all-pairs.
-
-    Output: (doc_id, pos, gram_hash) — one row per selected
-    fingerprint, pos is the 1-based char offset of the selected
-    k-gram in the NORMALIZED text."""
-    if k < 1 or w < 1:
-        raise ValueError("winnowing_fingerprints: k and w must be >= 1")
-    from eggv_spark.operators.dedupe import base_hash
-
-    norm = F.regexp_replace(F.lower(F.col(text_col)), "[^a-z0-9]", "")
-    grams = (
-        docs.select(F.col(id_col).alias("_doc"), norm.alias("_t"))
-        .filter(F.length("_t") >= k)
-        .select(
-            "_doc",
-            F.explode(
-                F.sequence(F.lit(1), F.length("_t") - F.lit(k - 1))
-            ).alias("pos"),
-            "_t",
-        )
-        .select(
-            "_doc",
-            "pos",
-            base_hash(F.substring(F.col("_t"), F.col("pos"), k)).alias(
-                "_h"
-            ),
-        )
-    )
-    sel_w = (
-        Window.partitionBy("_doc")
-        .orderBy("pos")
-        .rowsBetween(0, w - 1)
-    )
-    n_w = Window.partitionBy("_doc")
-    picked = (
-        grams.select(
-            "_doc",
-            "pos",
-            F.count("*").over(n_w).alias("_n_grams"),
-            F.min(F.struct(F.col("_h"), (-F.col("pos")).alias("_np")))
-            .over(sel_w)
-            .alias("_sel"),
-        )
-        # a window STARTS at every pos <= n_grams - w + 1; later
-        # starts see a short frame and would duplicate the tail
-        .filter(F.col("pos") <= F.col("_n_grams") - F.lit(w - 1))
-        .select(
-            F.col("_doc"),
-            (-F.col("_sel._np")).alias("pos"),
-            F.col("_sel._h").alias("gram_hash"),
-        )
-        .distinct()
-    )
-    return picked.select(
-        F.col("_doc").alias(id_col), "pos", "gram_hash"
-    )
-
-
-def winnow_neardup_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 5,
-    w: int = 4,
-    min_shared: int = 2,
-    max_hash_docs: int = 64,
-) -> DataFrame:
-    """Near-duplicate / clone-pair detection over winnowing
-    fingerprints — the position-aware sibling of MinHash banding:
-    two documents pair when they share >= ``min_shared`` selected
-    fingerprint HASHES, which by the winnowing guarantee captures
-    any shared run of >= w+k-1 normalized characters (the
-    contiguous-plagiarism case Jaccard-of-shingles dilutes on long
-    documents).
-
-    Candidate generation is a fingerprint-hash EQUI-JOIN — the
-    banded-LSH posture, never an all-pairs product: fingerprints
-    collapse to DISTINCT (doc, hash) first, hashes seen in more than
-    ``max_hash_docs`` documents are dropped as boilerplate BEFORE
-    pairing (the containment_pairs frequent-bucket cap — one ubiquitous
-    license-header gram would otherwise contribute n² pair rows), and
-    pair credit is counted per shared hash with a < ordering so each
-    pair appears once.
-
-    Output: (doc_a, doc_b, shared, fp_a, fp_b, overlap) where
-    overlap = shared / min(fp_a, fp_b) on distinct-hash counts, 6dp
-    — exact integers everywhere else."""
-    fps = (
-        winnowing_fingerprints(docs, text_col, id_col, k, w)
-        .select(F.col(id_col).alias("_doc"), "gram_hash")
-        .distinct()
-    )
-    per_doc = fps.groupBy("_doc").agg(F.count("*").alias("_fp"))
-    hash_docs = fps.groupBy("gram_hash").agg(F.count("*").alias("_nd"))
-    kept = fps.join(
-        hash_docs.filter(F.col("_nd") <= max_hash_docs).select("gram_hash"),
-        "gram_hash",
-    )
-    left = kept.select(F.col("_doc").alias("_a"), "gram_hash")
-    right = kept.select(F.col("_doc").alias("_b"), "gram_hash")
-    pairs = (
-        left.join(right, "gram_hash")
-        .filter(F.col("_a") < F.col("_b"))
-        .groupBy("_a", "_b")
-        .agg(F.count("*").alias("shared"))
-        .filter(F.col("shared") >= min_shared)
-    )
-    return (
-        pairs.join(
-            per_doc.select(F.col("_doc").alias("_a"), F.col("_fp").alias("fp_a")),
-            "_a",
-        )
-        .join(
-            per_doc.select(F.col("_doc").alias("_b"), F.col("_fp").alias("fp_b")),
-            "_b",
-        )
-        .select(
-            F.col("_a").alias("doc_a"),
-            F.col("_b").alias("doc_b"),
-            "shared",
-            "fp_a",
-            "fp_b",
-            F.round(
-                F.col("shared")
-                / F.least("fp_a", "fp_b").cast("double"),
-                6,
-            ).alias("overlap"),
-        )
     )

@@ -188,11 +188,6 @@ BNLJ_ALLOWLIST: dict[str, str] = {
                "construction — a LocalTableScan of the requested "
                "p values); the rn = ceil(p*n) position condition "
                "is inherently non-equi",
-    "fe_quantile_binning": "pre-added for the round-11 registration "
-                           "(ROUND10_QUEUE.md): 4 bounded BNLJs from "
-                           "the 8-row literal n_bins spine + 1-row "
-                           "edge-array broadcasts — the evt_qte "
-                           "bounded-literal-spine class",
     "sim_rrf_fusion": "build is the lexical stage's query-token "
                       "batch (every 50th doc, the sim_cosine_topk "
                       "|queries| << corpus contract); the <> join "

@@ -152,8 +152,15 @@ def test_cli_help_lists_subcommands():
 def test_catalog_register_and_sql(spark):
     from eggv_spark.catalog import register_tables
 
+    from eggv_spark.sources.readers import read_table
+
     views = register_tables(spark, "/root/testdata/sf0.001")
     assert "lineitem" in views and "documents" in views
+    # SQL users see the same (timestamp-normalized) schema as operators
+    for v in views:
+        assert spark.table(v).schema == read_table(
+            spark, "/root/testdata/sf0.001", v
+        ).schema, v
     n = spark.sql(
         "SELECT count(*) AS n FROM lineitem WHERE l_quantity > 25"
     ).collect()[0]["n"]

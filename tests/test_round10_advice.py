@@ -10,9 +10,6 @@
 3. jpegcodec.decode_jpeg: a non-interleaved baseline scan was decoded
    as if interleaved (silently wrong raster) instead of raising; the
    4:2:2 chroma path had no fixture coverage.
-4. aggregates.cronbach_alpha: NULL item values put item sums and
-   total sums on different effective populations, silently biasing
-   alpha.
 """
 
 from __future__ import annotations
@@ -55,49 +52,6 @@ def test_qte_stated_decimal_is_exact_at_overflow_scale(spark):
     assert rank == 1000
     assert (r["q_treated"], r["q_control"], r["qte"]) == (rank, rank, 0)
     assert (r["n_treated"], r["n_control"]) == (3000, 3000)
-
-
-# ---------------------------------------------------------------------------
-# 4. cronbach_alpha refuses NULL items in-plan
-# ---------------------------------------------------------------------------
-
-
-def test_cronbach_alpha_null_items_raise_in_plan(spark):
-    """A NULL item used to put item sums and total sums on different
-    effective populations (F.sum skips the item's NULL, but the row
-    total goes NULL and drops the row from Σtot) — silently biased
-    alpha.  Now it raises, the fleiss ragged-panel pattern."""
-    from pyspark.errors.exceptions.base import SparkRuntimeException
-
-    from eggv_spark.operators.aggregates import cronbach_alpha
-
-    rows = [(2, 3, 3), (4, None, 5), (6, 5, 6)]
-    df = spark.createDataFrame(rows, "i1 long, i2 long, i3 long")
-    # raise_error fires at EXECUTION (runtime error class only — a
-    # plan-build AnalysisException regression must NOT pass this test)
-    with pytest.raises(SparkRuntimeException, match="cronbach_alpha"):
-        cronbach_alpha(df, ["i1", "i2", "i3"]).collect()
-
-
-def test_cronbach_alpha_clean_and_empty_inputs_unchanged(spark):
-    """The guard must not disturb clean-input results (hand value)
-    nor turn the empty input into a misleading raise (the fleiss
-    empty-case lesson): zero rows -> n_subjects 0, NULL alpha."""
-    import statistics
-
-    from eggv_spark.operators.aggregates import cronbach_alpha
-
-    rows = [(2, 3, 3), (4, 4, 5), (6, 5, 6), (8, 8, 8)]
-    df = spark.createDataFrame(rows, "i1 long, i2 long, i3 long")
-    r = cronbach_alpha(df, ["i1", "i2", "i3"]).collect()[0]
-    v = sum(statistics.variance(x) for x in
-            ([2, 4, 6, 8], [3, 4, 5, 8], [3, 5, 6, 8]))
-    vt = statistics.variance([8, 13, 17, 24])
-    assert r["alpha"] == pytest.approx(round(1.5 * (1 - v / vt), 6),
-                                       abs=1e-6)
-    empty = spark.createDataFrame([], "i1 long, i2 long")
-    r0 = cronbach_alpha(empty, ["i1", "i2"]).collect()[0]
-    assert r0["n_subjects"] == 0 and r0["alpha"] is None
 
 
 def test_qte_standard_quantiles_unchanged(spark):

@@ -172,13 +172,19 @@ def test_gini_udaf(spark):
 
 
 def test_connected_components_and_keepers(spark):
-    from eggv_spark.operators.dedupe import connected_components, dedup_keepers
+    from eggv_spark.operators.dedupe import (
+        connected_components_star,
+        dedup_keepers,
+    )
 
     # Components: {1,2,3,4} (chain), {10,11}, singleton 99 unpaired.
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11)], ["id_a", "id_b"]
     )
-    comps = {r.node: r.component for r in connected_components(pairs).collect()}
+    comps = {
+        r.node: r.component
+        for r in connected_components_star(pairs).collect()
+    }
     assert comps == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
 
     all_ids = spark.createDataFrame(

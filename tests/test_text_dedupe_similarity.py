@@ -31,6 +31,25 @@ def test_token_counts(docs):
     assert rows[3].n_tokens == 6
 
 
+@pytest.mark.parametrize(
+    "fn, temp",
+    [
+        (D.with_shingle_hashes, "_toks"),
+        (T.with_token_counts, "_toks"),
+        (T.with_quality_score, "_toks"),
+        (T.with_fingerprint, "_toks"),
+        (T.with_repetition_stats, "_BH"),
+    ],
+    ids=lambda v: getattr(v, "__name__", v),
+)
+def test_temp_column_clash_raises(docs, fn, temp):
+    # a caller column named like an internal temp column would be
+    # overwritten and then dropped: refuse instead
+    clashing = docs.withColumn(temp, F.lit("keep me"))
+    with pytest.raises(ValueError, match=temp):
+        fn(clashing)
+
+
 def test_quality_score(docs):
     rows = {r.doc_id: r for r in T.with_quality_score(docs).collect()}
     assert rows[1].text_len == 43
@@ -185,21 +204,22 @@ def test_ivf_topk_finds_identical_vector(vectors):
 def test_connected_components_warns_without_convergence(spark):
     import warnings
 
-    # a 6-node chain has diameter 5: 1 iteration cannot finish
+    # a 6-node chain is not a star: 1 round cannot reach the fixpoint
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 6)], "id_a long, id_b long"
     )
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
-        partial = D.connected_components(pairs, max_iterations=1)
-        labels = {r.node: r.component for r in partial.collect()}
+        partial = D.connected_components_star(pairs, max_iterations=1)
+        labels = [(r.node, r.component) for r in partial.collect()]
     assert any(issubclass(w.category, RuntimeWarning) for w in caught)
     # partial labels are still valid member ids, not yet the global min
-    assert all(comp <= node for node, comp in labels.items())
+    assert {n for n, _ in labels} == set(range(1, 7))
+    assert all(comp in range(1, 7) and comp <= node for node, comp in labels)
 
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
-        full = D.connected_components(pairs, max_iterations=10)
+        full = D.connected_components_star(pairs, max_iterations=10)
         labels = {r.node: r.component for r in full.collect()}
     assert not [w for w in caught if issubclass(w.category, RuntimeWarning)]
     assert set(labels.values()) == {1}
@@ -235,31 +255,14 @@ def test_pq_encode_is_deterministic_and_compact(vectors):
     assert a[1] == a[4]  # identical vectors share codes
 
 
-def test_star_cc_matches_propagation_and_handles_long_chains(spark):
+def test_star_cc_handles_long_chains(spark):
     import warnings
 
-    from eggv_spark.operators.dedupe import (
-        connected_components,
-        connected_components_star,
-    )
+    from eggv_spark.operators.dedupe import connected_components_star
 
-    # random-ish multi-component graph: star result == propagation result
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11), (11, 12), (12, 10), (20, 21), (5, 5)],
-        "id_a long, id_b long",
-    )
-    star = {(r.node, r.component)
-            for r in connected_components_star(pairs).collect()}
-    prop = {(r.node, r.component)
-            for r in connected_components(pairs).collect()}
-    # the propagation contract covers every node incl. self-loops;
-    # star drops pure self-loops (5,5) as non-edges — compare on the
-    # shared node set
-    star_nodes = {n for n, _ in star}
-    assert {(n, c) for n, c in prop if n in star_nodes} == star
-
-    # 40-link chain: diameter >> propagation's default budget, star
-    # converges without warning in O(log^2 n) rounds
+    # 40-link chain: diameter 40, far beyond the default 20-round
+    # budget of a label propagation; star converges without warning
+    # in O(log^2 n) rounds
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(40)], "id_a long, id_b long"
     )
@@ -268,10 +271,6 @@ def test_star_cc_matches_propagation_and_handles_long_chains(spark):
         labels = {r.node: r.component
                   for r in connected_components_star(chain).collect()}
     assert set(labels.values()) == {0} and len(labels) == 41
-
-    # propagation DOES warn on the same chain (documents the contrast)
-    with pytest.warns(RuntimeWarning):
-        connected_components(chain, max_iterations=5)
 
 
 def test_ivf_range_search_finds_identical_vector(vectors):
