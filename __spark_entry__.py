@@ -27,6 +27,7 @@ from eggv_spark.functions.extract import (
     strip_prefix_cast_long,
 )
 from eggv_spark.functions import scalars as SC
+from eggv_spark.materialize import materialize_lazy
 from eggv_spark.operators import aggregates as AG
 from eggv_spark.operators import dedupe as D
 from eggv_spark.operators import ml as ML
@@ -1265,29 +1266,27 @@ def _stream_index_dedup(spark, sf_dir):
     from eggv_spark.streaming import events_stream as ES
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    # persist: the static side of a stream-static join re-evaluates
-    # every micro-batch — unpersisted, the whole corpus would
-    # re-shingle per batch.  hash family mirrors the batch twin
-    # (_ddp_index_dedup): md5 — see its round-11 negative result.
-    index = D.minhash_band_index(docs).persist()
+    # materialized: the static side of a stream-static join
+    # re-evaluates every micro-batch — without the cut, the whole
+    # corpus would re-shingle per batch.  hash family mirrors the
+    # batch twin (_ddp_index_dedup): md5 — see its round-11 negative
+    # result.
+    index = D.minhash_band_index(docs).transform(materialize_lazy)
     shard_stream = (
         ES.read_documents_stream(spark, sf_dir)
         .select("doc_id", "text")
         .filter("doc_id % 10 = 0")
         .withColumn("doc_id", F.col("doc_id") + F.lit(1000000))
     )
-    try:
-        matches = ES.run_available_now(
-            ES.streaming_index_dedupe(shard_stream, index)
-        )
-        shard_ids = docs.filter("doc_id % 10 = 0").select(
-            (F.col("doc_id") + F.lit(1000000)).alias("doc_id")
-        )
-        return D.collapse_index_matches(
-            matches, shard_ids, "doc_id", threshold=0.7
-        )
-    finally:
-        index.unpersist()
+    matches = ES.run_available_now(
+        ES.streaming_index_dedupe(shard_stream, index)
+    )
+    shard_ids = docs.filter("doc_id % 10 = 0").select(
+        (F.col("doc_id") + F.lit(1000000)).alias("doc_id")
+    )
+    return D.collapse_index_matches(
+        matches, shard_ids, "doc_id", threshold=0.7
+    )
 
 
 def _ddp_ngram_jaccard(spark, sf_dir):

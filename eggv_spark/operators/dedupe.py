@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from eggv_spark.materialize import materialize
+from eggv_spark.materialize import materialize, materialize_lazy
 
 from eggv_spark.operators.text_analysis import (
     _reject_temp_clash,
@@ -268,10 +268,10 @@ def minhash_neardup_pairs(
 ) -> DataFrame:
     """Full MinHash+LSH near-dup pipeline: shingle -> minhash ->
     band-bucket join -> exact Jaccard verify.  The shingled frame is
-    persisted (two consumers: candidate generation + verification)."""
+    cut (two consumers: candidate generation + verification)."""
     shingled = with_minhash_signature(
         with_shingle_hashes(df, text_col, shingle_size)
-    ).persist()
+    ).transform(materialize_lazy)
     pairs = lsh_candidate_pairs(shingled, id_col)
     return jaccard_verify_pairs(pairs, shingled, threshold, id_col)
 
@@ -629,12 +629,13 @@ def embedding_neardup_pairs(
     ``dim`` must match the embedding width (no ``.first()`` probe —
     planning stays job-free on the driver).
     """
-    # Persisted: the self-join consumes it twice — without this the
+    # Materialized: the self-join consumes it twice — without this the
     # n_tables × n_planes dot products per row run once per join
     # side.  The L2 norm rides along so the pair verify is one dot
     # product, not three (bit-identical value, not recomputed per
     # pair).
-    bucketed = signlsh_buckets(df, vec_col, id_col, dim, n_planes, n_tables).persist()
+    bucketed = signlsh_buckets(df, vec_col, id_col, dim, n_planes, n_tables)
+    bucketed = bucketed.transform(materialize_lazy)
 
     left, right = bucketed.alias("l"), bucketed.alias("r")
     cands = (

@@ -12,8 +12,9 @@ the physical plan).
 
 Scale notes (100 TB / 1000 executors):
 - the edge list is the big table and is traversed once per iteration;
-  it is cached once and re-used, and every iteration's shuffle keys on
-  ``dst`` so AQE can coalesce/skew-split independently per round;
+  it is materialized once and re-used, and every iteration's shuffle
+  keys on ``dst`` so AQE can coalesce/skew-split independently per
+  round;
 - ranks are O(|V|) — for web-scale graphs that still shuffles, but the
   per-iteration plan is join + partial-agg (never a cross product);
 - a FIXED iteration count keeps lineage bounded (no unbounded loop on
@@ -25,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from eggv_spark.materialize import materialize_lazy
+from eggv_spark.materialize import materialize, materialize_lazy
 
 
 def _cap_neighborhoods(neigh: DataFrame, node_col: str, nbr_col: str,
@@ -85,27 +86,28 @@ def pagerank(
     loop over data, only over iteration count.
     """
     # The edge list feeds nodes (twice), the out-weight totals, and
-    # the per-iteration contribution joins — cache it once rather than
-    # re-deriving its (possibly join-heavy) lineage per consumer.
-    edges = edges.cache()
+    # the per-iteration contribution joins — materialize it once rather
+    # than re-deriving its (possibly join-heavy) lineage per consumer.
+    edges = edges.transform(materialize_lazy)
     nodes = (
         edges.select(F.col(src).alias("node"))
         .union(edges.select(F.col(dst).alias("node")))
         .distinct()
-        .cache()
+        .transform(materialize)
     )
     n_nodes = nodes.count()  # scalar, needed to seed ranks
-    probs = out_weights(edges, src, dst, weight).cache()
-    src_nodes = probs.select(F.col(src).alias("node")).distinct().cache()
+    probs = out_weights(edges, src, dst, weight).transform(materialize_lazy)
+    src_nodes = probs.select(F.col(src).alias("node")).distinct()
+    src_nodes = src_nodes.transform(materialize_lazy)
 
     ranks = nodes.withColumn("rank", F.lit(1.0 / n_nodes))
     for _ in range(iterations):
         # Each round reads the previous ranks THREE times (dangling
-        # mass, contributions, rebuild); without a cache boundary the
-        # lineage re-derives the whole prefix per use — ~3^k plan
-        # growth.  Caching pins each round to one computation and
-        # keeps the physical plan per-iteration-sized.
-        ranks = ranks.cache()
+        # mass, contributions, rebuild); without a lineage cut the
+        # plan re-derives the whole prefix per use — ~3^k plan
+        # growth.  Materializing pins each round to one computation
+        # and keeps the physical plan per-iteration-sized.
+        ranks = ranks.transform(materialize_lazy)
         # rank mass sitting on dangling nodes this round
         dangling = (
             ranks.join(src_nodes, "node", "left_anti")
@@ -168,7 +170,7 @@ def label_propagation(
     is one join (labels onto the edge list), one (node, label) weight
     fold, and one per-node argmax window over the candidate-label
     table — the same bounded per-iteration plan discipline as
-    :func:`pagerank`, with per-round caching to stop lineage growth.
+    :func:`pagerank`, with a per-round lineage cut (materialize_lazy).
     Isolated nodes keep their own label forever.
 
     Known synchronous-update artifact (standard LPA caveat): a bare
@@ -184,12 +186,13 @@ def label_propagation(
         )
         .groupBy("a", "b")
         .agg(F.sum("w").alias("w"))
-        .cache()
+        .transform(materialize_lazy)
     )
-    nodes = sym.select(F.col("a").alias("node")).distinct().cache()
+    nodes = sym.select(F.col("a").alias("node")).distinct()
+    nodes = nodes.transform(materialize_lazy)
     labels = nodes.withColumn("label", F.col("node"))
     for _ in range(iterations):
-        labels = labels.cache()
+        labels = labels.transform(materialize_lazy)
         neigh = (
             sym.join(labels.withColumnRenamed("node", "b"), "b")
             .groupBy(F.col("a").alias("node"), "label")
@@ -240,7 +243,7 @@ def triangle_count(
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .cache()
+        .transform(materialize_lazy)
     )
     deg = (
         canon.select(F.col("a").alias("node"))
@@ -307,7 +310,7 @@ def neighbor_jaccard(
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .cache()
+        .transform(materialize_lazy)
     )
     neigh = (
         canon.select(F.col("a").alias("node"), F.col("b").alias("w"))
@@ -376,7 +379,7 @@ def kcore_prune(
 
     At 100 TB the edge list dominates: the per-round semi-join keys
     on the node id both ways, so AQE handles skewed hubs; survivors
-    shrink monotonically, and caching the current edge frame bounds
+    shrink monotonically, and materializing the current edge frame bounds
     lineage."""
     # LAZY localCheckpoint per round (same lineage policy as
     # dedupe.connected_components_star): without it every prune
@@ -693,8 +696,10 @@ def hits_scores(
     is near-converged by then.
 
     Shape per round: two edge-shuffles (group by dst, then by src) —
-    the pagerank posture; node scores persist per round (flat
-    lineage).  Nodes with no in-edges (or out-edges) hold score 0.
+    the pagerank posture; node scores are materialized per round
+    (flat lineage), and every round's cut stays stored until GC
+    reaches its frame: up to 2·n_rounds·|V| rows per query.  Nodes
+    with no in-edges (or out-edges) hold score 0.
     Output: one row per node — node, authority, hub (each
     max-normalized, 6dp)."""
     dec = "decimal(38,0)"
@@ -730,7 +735,6 @@ def hits_scores(
     )
     h = nodes.select("_v", F.lit(1).cast(dec).alias("_h"))
     a = None
-    prev_h = prev_a = None
     for _ in range(n_rounds):
         a_in = (
             e.join(h.withColumnRenamed("_v", "_s"), "_s")
@@ -742,11 +746,7 @@ def hits_scores(
         ).select(
             "_v", F.coalesce("_a", F.lit(0).cast(dec)).alias("_a")
         )
-        a = a.persist()
-        a.count()
-        if prev_a is not None:
-            prev_a.unpersist()
-        prev_a = a
+        a = a.transform(materialize)
         h_out = (
             e.join(a.withColumnRenamed("_v", "_d"), "_d")
             .groupBy("_s")
@@ -757,11 +757,7 @@ def hits_scores(
         ).select(
             "_v", F.coalesce("_h", F.lit(0).cast(dec)).alias("_h")
         )
-        h = h.persist()
-        h.count()
-        if prev_h is not None:
-            prev_h.unpersist()
-        prev_h = h
+        h = h.transform(materialize)
     amax = a.agg(F.max("_a").alias("_amax"))
     hmax = h.agg(F.max("_h").alias("_hmax"))
     return (
@@ -808,27 +804,26 @@ def personalized_pagerank(
 
     Same execution discipline as pagerank: per-iteration broadcast
     of the O(|V|) rank table, map-side-combined contribution sums,
-    per-round cache, driver loops only over the iteration count.
+    per-round lineage cut, driver loops only over the iteration count.
     Output: (node, rank) — mass sums to 1 over reachable nodes."""
-    edges = edges.cache()
+    edges = edges.transform(materialize_lazy)
     nodes = (
         edges.select(F.col(src).alias("node"))
         .union(edges.select(F.col(dst).alias("node")))
         .distinct()
-        .cache()
     )
-    probs = out_weights(edges, src, dst, weight).cache()
+    probs = out_weights(edges, src, dst, weight).transform(materialize_lazy)
     seed_share = 1.0 / len(seeds)
     seed_col = F.when(
         F.col("node").isin(list(seeds)), F.lit(seed_share)
     ).otherwise(F.lit(0.0))
-    with_seed = nodes.withColumn("_s", seed_col).cache()
-    with_seed.count()
+    with_seed = nodes.withColumn("_s", seed_col).transform(materialize)
 
     ranks = with_seed.select("node", F.col("_s").alias("rank"))
-    src_nodes = probs.select(F.col(src).alias("node")).distinct().cache()
+    src_nodes = probs.select(F.col(src).alias("node")).distinct()
+    src_nodes = src_nodes.transform(materialize_lazy)
     for _ in range(iterations):
-        ranks = ranks.cache()
+        ranks = ranks.transform(materialize_lazy)
         dangling = (
             ranks.join(src_nodes, "node", "left_anti")
             .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_m"))
@@ -1028,7 +1023,7 @@ def reciprocity(
         edges.select(F.col(src).alias("_a"), F.col(dst).alias("_b"))
         .filter(F.col("_a") != F.col("_b"))
         .distinct()
-        .cache()
+        .transform(materialize_lazy)
     )
     rev = e.select(F.col("_b").alias("_a"), F.col("_a").alias("_b"))
     recip = e.join(rev, ["_a", "_b"], "left_semi").agg(
@@ -1070,7 +1065,7 @@ def local_clustering(
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .cache()
+        .transform(materialize_lazy)
     )
     deg = (
         canon.select(F.col("a").alias("node"))

@@ -14,9 +14,11 @@ work on Spark:
 * each step is ONE corpus pass — a map-side-combinable per-dimension
   aggregation (posexplode → groupBy(dim)) whose shuffle carries
   ``dim`` rows per map partition, never the data;
-* each step's state frame is persisted and materialized so lineage
-  stays flat (without it, step k's plan nests k corpus scans), and
-  the previous step's cache is dropped — one live copy;
+* each step's state frame is eagerly materialized so lineage stays
+  flat (without it, step k's plan nests k corpus scans); the cut is
+  taken where Catalyst proves the state's row count (a global
+  aggregate, or a no-op ``limit(1)`` after a cross join), which the
+  checkpoint leaf keeps for the nested-loop joins that read it;
 * NOTHING data-sized ever reaches the driver: the only driver-side
   loop is over the fixed step count.
 
@@ -32,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from eggv_spark.materialize import materialize
+from eggv_spark.materialize import materialize, materialize_lazy
 
 
 def _as_double_vec(col: str, dim: int) -> Column:
@@ -53,16 +55,6 @@ def guarded_vec(vec_col: str, dim: int, op: str) -> Column:
             )
         )
     )
-
-
-def _step_state(state: DataFrame, prev: DataFrame | None) -> DataFrame:
-    """Materialize one step's 1-row model-state frame and drop the
-    previous step's cache (flat lineage, one live copy)."""
-    state = state.persist()
-    state.count()
-    if prev is not None:
-        prev.unpersist()
-    return state
 
 
 def logistic_regression_gd(
@@ -112,7 +104,6 @@ def logistic_regression_gd(
         F.array_repeat(F.lit(0.0), dim).alias("_w"),
         F.lit(0.0).alias("_b"),
     )
-    prev = None
     for _ in range(n_steps):
         scored = data.crossJoin(F.broadcast(w)).select(
             "_x", "_y",
@@ -164,8 +155,7 @@ def logistic_regression_gd(
                 (F.col("_b") - F.lit(lr) * F.col("_gb")).alias("_b"),
             )
         )
-        w = _step_state(w, prev)
-        prev = w
+        w = w.limit(1).transform(materialize)
     p = F.col("_p")
     p_safe = F.least(
         F.greatest(p, F.lit(1e-12)), F.lit(1.0 - 1e-12)
@@ -256,7 +246,6 @@ def pca_power_iteration(
         F.array_repeat(F.lit(inv_sqrt_dim), dim).alias("_v"),
         F.lit(0.0).alias("_lambda"),
     )
-    prev = None
     for _ in range(n_steps):
         proj = centered.crossJoin(F.broadcast(v)).select(
             "_c",
@@ -278,6 +267,7 @@ def pca_power_iteration(
                     lambda s: s["_u"],
                 ).alias("_uvec")
             )
+            .transform(materialize)
         )
         v = u.select(
             F.sqrt(
@@ -294,8 +284,6 @@ def pca_power_iteration(
             ).alias("_v"),
             "_lambda",
         )
-        v = _step_state(v, prev)
-        prev = v
     # trace of the covariance = Σ_rows Σ_d c_d² / n; the exploded
     # frame has n·dim rows, so trace = sum·dim/count
     total_var = centered.select(
@@ -355,8 +343,8 @@ def kmeans_lloyd(
     is a k-row centroid frame broadcast into each step; assignment is
     a broadcast product against k rows (k× row expansion, never
     data×data); the update shuffles k·dim per-dimension partial sums,
-    map-side combined; each step's state is persisted so lineage
-    stays flat, and the previous step's cache is dropped.
+    map-side combined; each step's state is eagerly materialized so
+    lineage stays flat.
 
     Determinism across engines AND partitionings — the feedback loop
     is where naive float use diverges, so every step is pinned:
@@ -415,7 +403,6 @@ def kmeans_lloyd(
             )
         )
 
-    prev = None
     for _ in range(n_steps):
         assigned = _assign(cent)
         means = (
@@ -446,8 +433,7 @@ def kmeans_lloyd(
             )
             .limit(k)
         )
-        cent_next = _step_state(cent_next, prev)
-        prev = cent_next
+        cent_next = cent_next.transform(materialize)
         cent = cent_next
     final = _assign(cent)
     members = final.groupBy("_cid").agg(
@@ -542,18 +528,20 @@ def isotonic_calibration(
             )
         )
         .select("_b", "_n", "_pos")
-        .limit(max_bins)
     )
     from pyspark.sql import Window
 
     cum = Window.orderBy("_b").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
+    # the limit is a no-op behind the max_bins guard; applied after the
+    # cut it stays visible to the nested-loop build sides below, which
+    # a checkpoint leaf alone would hide
     pre = bins.select(
         "_b", "_n", "_pos",
         F.sum("_n").over(cum).alias("_cn"),
         F.sum("_pos").over(cum).alias("_cp"),
-    ).persist()
+    ).transform(materialize_lazy).limit(max_bins)
     lo = pre.select(
         F.col("_b").alias("_i"), F.col("_n").alias("_ni"),
         F.col("_pos").alias("_pi"), F.col("_cn").alias("_cni"),
@@ -894,7 +882,7 @@ def pca_top2_deflation(
             )
         )
 
-    centered = centered.persist()
+    centered = centered.transform(materialize_lazy)
     inv = 1.0 / (dim ** 0.5)
     v = centered.sparkSession.range(1).select(
         F.array_repeat(F.lit(inv), dim).alias("_v"),
@@ -1394,8 +1382,8 @@ def perceptron_fit(
     posexplode of ALL rows, so the zero-misclassified epoch still
     yields a dim-row frame (an empty-delta epoch is a fixed point,
     not a crash).  One corpus pass per epoch; each epoch's 1-row
-    model state is materialized (_step_state) so step k's plan does
-    not nest k corpus scans.
+    model state is eagerly materialized so step k's plan does not
+    nest k corpus scans.
 
     Output: one diagnostics row — n, errors (final misclassified
     count), accuracy (4dp), bias, w_l1 = Σ|w_d|, w_abs_max (all
@@ -1439,7 +1427,6 @@ def perceptron_fit(
     w = data.sparkSession.range(1).select(
         F.array_repeat(zero, dim).alias("_w"), zero.alias("_b")
     )
-    prev = None
     for _ in range(n_epochs):
         scored = data.crossJoin(F.broadcast(w)).select(
             "_x", "_y", (_margin("_w", "_b") <= 0).alias("_mis")
@@ -1470,8 +1457,7 @@ def perceptron_fit(
                 (F.col("_b") + F.col("_db")).alias("_b"),
             )
         )
-        w = _step_state(w, prev)
-        prev = w
+        w = w.limit(1).transform(materialize)
     final = data.crossJoin(F.broadcast(w)).select(
         (_margin("_w", "_b") <= 0).alias("_mis"), "_w", "_b"
     )

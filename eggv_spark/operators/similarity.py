@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from eggv_spark.materialize import materialize
+from eggv_spark.materialize import materialize, materialize_lazy
 
 from eggv_spark.operators.dedupe import base_hash, cosine_col, dot_col, norm_col
 
@@ -145,7 +145,7 @@ def ivf_index(
     ``dim`` must match the embedding width (no ``.first()`` probe —
     index planning stays job-free on the driver).
 
-    The result is the INDEX: at scale, persist it or write it
+    The result is the INDEX: at scale, materialize it or write it
     bucketed/partitioned by ``cell`` once and serve many query
     batches off it (cell pruning ≈ partition pruning).  Re-deriving
     it per query batch would recompute n_centroids cosines per corpus
@@ -222,12 +222,13 @@ def ivf_topk(
     id_col: str = "vec_id",
     dim: int = 64,
 ) -> DataFrame:
-    """One-shot IVF ANN: build the index, persist it (it feeds every
-    downstream query stage — without the persist, Spark re-derives
+    """One-shot IVF ANN: build the index, materialize it (it feeds
+    every downstream query stage — without the cut, Spark re-derives
     the full assignment inside each query stage of the plan, turning
     the amortized index build into per-stage work), then probe.
     ``dim`` must match the embedding width (no ``.first()`` probe)."""
-    index = ivf_index(corpus, n_centroids, vec_col, id_col, dim=dim).persist()
+    index = ivf_index(corpus, n_centroids, vec_col, id_col, dim=dim)
+    index = index.transform(materialize_lazy)
     return ivf_query(
         index, queries, k, n_centroids, n_probe, vec_col, id_col, dim=dim
     )
@@ -461,7 +462,8 @@ def ivf_range_search(
     boundary decision is engine-portable (same policy as
     events.zscore_anomalies).
     """
-    index = ivf_index(corpus, n_centroids, vec_col, id_col, dim=dim).persist()
+    index = ivf_index(corpus, n_centroids, vec_col, id_col, dim=dim)
+    index = index.transform(materialize_lazy)
     centroid_array = F.lit([_centroid_values(c, dim) for c in range(n_centroids)])
     q = F.broadcast(
         queries.select(
@@ -664,7 +666,7 @@ def ivf_pq_topk(
 
     The serving index is (neighbor_id, cell, codes) ONLY — m small
     ints per vector, no full vectors — so at 10⁹ vectors it is tens
-    of GB instead of TBs; it is persisted once and every query batch
+    of GB instead of TBs; it is materialized once and every query batch
     joins broadcast probes against it on the cell key.  Ranking uses
     the PQ asymmetric distance (query-side exact LUT per subspace).
     Fully deterministic (md5 centroids + codebooks, 6dp rounds,
@@ -682,7 +684,7 @@ def ivf_pq_topk(
         )
         .withColumn("codes", pq_codes_col(F.col("c_vec"), m, k, dim))
         .select("neighbor_id", "cell", "codes")
-        .persist()
+        .transform(materialize_lazy)
     )
     # LUT entries as exact integer micro-units (floor-scale of the
     # 6dp-rounded subspace distance): per-query distance sums then
@@ -769,7 +771,7 @@ def semantic_dedupe(
     ).select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v"),
         "cluster_id",
-    ).cache()
+    ).transform(materialize_lazy)
     a = assigned.select(
         F.col("cluster_id"),
         F.col(id_col).alias("_ida"), F.col("_v").alias("_va"),
@@ -1203,7 +1205,7 @@ def mmr_diversify(
         )
         .orderBy(F.col("_rel").desc(), F.col("_id"))
         .limit(n_candidates)
-        .persist()
+        .transform(materialize)
     )
     pool = cand.select("_id", "_rel").collect()
     if not pool:
@@ -1228,7 +1230,6 @@ def mmr_diversify(
         )
         .collect()
     )
-    cand.unpersist()
 
     # Spark's round(double, 6) is BigDecimal.valueOf(d) (shortest
     # decimal repr, same as Python repr) + HALF_UP — replicate it

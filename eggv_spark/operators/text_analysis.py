@@ -211,22 +211,6 @@ def _max_multiplicity(arr: Column, dtype: str = "string") -> Column:
     return F.aggregate(sorted_, init, step, lambda acc: acc["best"])
 
 
-def bigrams_col(tokens: Column) -> Column:
-    """Adjacent word-pair array ('a b c' -> ['a b', 'b c']); empty
-    for documents with fewer than two tokens.
-
-    Built as zip_with over two shifted slices — NOT a transform with
-    a per-index ``slice(tokens, i, 2)``, which re-evaluates the whole
-    ``tokens`` expression (a regex split) per ELEMENT: O(n²) splits
-    per row, measured 25× slower on the documents table."""
-    n1 = F.greatest(F.size(tokens) - 1, F.lit(0))
-    return F.zip_with(
-        F.slice(tokens, 1, n1),
-        F.slice(tokens, 2, n1),
-        lambda x, y: F.concat_ws(" ", x, y),
-    )
-
-
 def with_repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Gopher-style repetition filters (Rae et al. 2021 §A1.1):
     documents dominated by repeated words/phrases are low-quality
@@ -349,7 +333,7 @@ def shingles_col(tokens: Column, n: int = 3) -> Column:
     evaluation of ``tokens`` per slice per ROW).  The obvious
     ``transform(sequence(...), i -> slice(tokens, i, n))`` form
     re-evaluates ``tokens`` — a regex split — per ELEMENT: O(n²)
-    splits per row, measured 25× slower (see bigrams_col)."""
+    splits per row, measured 25× slower (see ngrams_col)."""
     length = F.greatest(F.size(tokens) - (n - 1), F.lit(1))
     zipped = F.arrays_zip(*[F.slice(tokens, k, length) for k in range(1, n + 1)])
     ngrams = F.transform(
@@ -541,10 +525,13 @@ def pack_sequences(
 
 def ngrams_col(tokens: Column, n: int) -> Column:
     """Adjacent word n-gram array built from ``n`` shifted slices
-    folded with zip_with — same O(tokens)-per-row discipline as
-    :func:`bigrams_col` (a per-index ``slice`` transform would
-    re-evaluate the token expression per ELEMENT, measured 25x
-    slower there)."""
+    folded with zip_with ('a b c', n=2 -> ['a b', 'b c']); empty for
+    documents with fewer than ``n`` tokens.
+
+    NOT a transform with a per-index ``slice(tokens, i, n)``, which
+    re-evaluates the whole ``tokens`` expression (a regex split) per
+    ELEMENT: O(n²) splits per row, measured 25× slower on the
+    documents table."""
     if n < 2:
         raise ValueError("ngrams need n >= 2")
     m = F.greatest(F.size(tokens) - (n - 1), F.lit(0))
@@ -1107,7 +1094,7 @@ def bigram_pmi(
     )
     n_uni = uni.agg(F.sum("_cw").alias("_n"))
     bi_all = (
-        toks.select(F.explode(bigrams_col(F.col("_t"))).alias("_bg"))
+        toks.select(F.explode(ngrams_col(F.col("_t"), 2)).alias("_bg"))
         .groupBy("_bg")
         .agg(F.count("*").alias("_cbg"))
     )
@@ -2461,7 +2448,7 @@ def textrank_keywords(
 
     The graph is vocabulary-sized, so the expensive step — the
     per-document pair extraction — is one explode over the
-    ``bigrams_col`` kernel on the STOPWORD-FILTERED token sequence
+    ``ngrams_col(…, 2)`` kernel on the STOPWORD-FILTERED token sequence
     (adjacency after filtering, the common simplification, stated
     here as the contract); edges are undirected (both directions
     emitted before the grouped count).  PageRank is the shared
@@ -2481,7 +2468,7 @@ def textrank_keywords(
         ).alias("_t")
     )
     pairs = toks.select(
-        F.explode(bigrams_col(F.col("_t"))).alias("_bg")
+        F.explode(ngrams_col(F.col("_t"), 2)).alias("_bg")
     )
     parts = F.split("_bg", " ")
     directed = pairs.select(

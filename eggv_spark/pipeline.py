@@ -59,17 +59,6 @@ def _save_concurrently(jobs: list[tuple[DataFrame, str]], fmt: str = "tsv") -> N
             f.result()
 
 
-def _materialize(df: DataFrame) -> DataFrame:
-    """Force a persisted shared intermediate into the cache BEFORE
-    concurrent consumers launch.  Two jobs hitting a cold cache race
-    its population and each recompute the full lineage (Spark does
-    not synchronize cache fills across concurrent jobs) — one
-    ``count()`` barrier makes the expensive chain run exactly once.
-    """
-    df.count()
-    return df
-
-
 def _read_stage(spark: SparkSession, path: str, schema, fmt: str) -> DataFrame:
     """Re-read a pipeline intermediate in the configured interchange
     format.  TSV mirrors the reference (SRC-06); parquet is the
@@ -140,15 +129,16 @@ def run_gene_processing(
 ) -> dict[str, DataFrame]:
     """GTF -> transcript-level genes + gene-deduped copy
     (reference ``eggv/process.py:427-534``)."""
-    processed = _materialize(
-        G.process_gtf(readers.read_gtf(spark, layout.gene_gtf())).persist()
-    )
+    # eager: the chain runs once, before the two concurrent sink
+    # jobs launch and both read it
+    processed = G.process_gtf(
+        readers.read_gtf(spark, layout.gene_gtf())
+    ).transform(materialize)
     deduped = G.dedupe_genes(processed)
     _save_concurrently(
         [(processed, layout.gene_meta()), (deduped, layout.gene_dedup())],
         fmt,
     )
-    processed.unpersist()
     return {"genes": processed, "genes_dedup": deduped}
 
 

@@ -19,7 +19,6 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
-    TimestampType,
 )
 
 
@@ -141,14 +140,4 @@ MULTIMODAL_FEATURE_SCHEMA = _struct(
     ("n_bytes", LongType()),
     ("content_hash", StringType()),
     ("feature", ArrayType(DoubleType())),
-)
-
-#: Events stream shape (driver testdata).
-EVENTS_SCHEMA = _struct(
-    ("event_id", LongType()),
-    ("ts", TimestampType()),
-    ("user_id", LongType()),
-    ("event_type", StringType()),
-    ("value", FloatType()),
-    ("props", StringType()),
 )

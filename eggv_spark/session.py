@@ -35,6 +35,9 @@ _DEFAULT_CONFS: dict[str, str] = {
     "spark.sql.files.maxPartitionBytes": "134217728",
     "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
     "spark.sql.session.timeZone": "UTC",
+    # reliable-mode checkpoint files (materialize.py) are deleted once
+    # the checkpointed frame is garbage collected, not left on disk
+    "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
 }
 
 

@@ -19,6 +19,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructType
 
+from eggv_spark.materialize import materialize_lazy
 from eggv_spark.schemas import GTF_SCHEMA, GVF_SCHEMA
 
 
@@ -100,12 +101,13 @@ def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
 
     Spark refuses to filter on the internal corrupt-record column of
     a lazily-parsed CSV (CANNOT_QUERY_INTERNAL_CORRUPT_RECORD) — the
-    frame must be materialized first, so it is cached here; both
-    splits then share the one parse.
+    frame must be materialized first, so its lineage is cut here (a
+    checkpointed frame is no longer the CSV relation); both splits
+    then share the one parse.
     """
     from pyspark.sql import functions as F
 
-    df = df.cache()
+    df = df.transform(materialize_lazy)
     good = df.filter(F.col("_corrupt").isNull()).drop("_corrupt")
     bad = df.filter(F.col("_corrupt").isNotNull()).select("_corrupt")
     return good, bad

@@ -579,9 +579,9 @@ def streaming_index_dedupe(
     streaming verdict is needed.
 
     The static side of a stream-static join is re-evaluated EVERY
-    micro-batch: pass an index that is persisted (``.persist()``) or
-    already materialized on disk, or the whole corpus re-shingles
-    per batch.
+    micro-batch: pass an index that is materialized
+    (``eggv_spark.materialize``) or already written to disk, or the
+    whole corpus re-shingles per batch.
     """
     from eggv_spark.operators.dedupe import index_probe_matches
 

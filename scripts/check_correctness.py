@@ -19,12 +19,8 @@ import duckdb
 import pandas as pd
 
 import __spark_entry__ as entrymod
+from eggv_spark.catalog import TABLES
 from eggv_spark.session import get_session
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
 
 
 def _canonical(df: pd.DataFrame) -> pd.DataFrame:
@@ -64,7 +60,8 @@ def main() -> int:
 
     spark = get_session(
         "correctness", master="local[8]", shuffle_partitions=8,
-        extra_confs={"spark.ui.enabled": "false"},
+        extra_confs={"spark.ui.enabled": "false",
+                     "spark.ui.showConsoleProgress": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()

@@ -86,7 +86,7 @@ CONFIGS = (
 def _run_pass(label, master, parts, confs, names, sf_dir, qs):
     spark = get_session(
         f"determinism-{label}", master=master, shuffle_partitions=parts,
-        extra_confs=confs,
+        extra_confs={**confs, "spark.ui.showConsoleProgress": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")
     out: dict[str, tuple[str | None, int | None, str | None]] = {}

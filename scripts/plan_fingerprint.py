@@ -82,7 +82,8 @@ def main() -> int:
 
     spark = get_session(
         "plan-fingerprint", master="local[4]", shuffle_partitions=4,
-        extra_confs={"spark.ui.enabled": "false"},
+        extra_confs={"spark.ui.enabled": "false",
+                     "spark.ui.showConsoleProgress": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")
     import __spark_entry__ as entry
@@ -95,23 +96,24 @@ def main() -> int:
         return 1
     names = args or list(registry)
 
+    cache = spark._jsparkSession.sharedState().cacheManager()
     current: dict[str, dict] = {}
+    leaks: list[str] = []
     for name in names:
         try:
-            # fingerprints must be SESSION-STATE-INDEPENDENT: a query
-            # that persists frames (bpe train/apply, pagerank) leaves
-            # InMemoryRelations in the shared cache, and a LATER
-            # query whose subplans match prints the cached plan's
-            # full nested text — its token counts then depend on
-            # registry ORDER, not on the plan (observed: the round-8
-            # window reorder alone moved bpe_train_merges
-            # hash-exchange text count 126 -> 3642 with zero code
-            # change).  Clearing the cache pins every query's
-            # standalone shape.
-            spark.catalog.clearCache()
             plan = registry[name](spark, sf_dir)._jdf.queryExecution(
             ).executedPlan().toString()
             current[name] = fingerprint(plan)
+            # fingerprints must be SESSION-STATE-INDEPENDENT: a frame
+            # left in the shared cache makes a LATER query whose
+            # subplans match print the cached plan's nested text, so
+            # its counts would depend on registry ORDER.  Operators
+            # materialize only through eggv_spark.materialize, which
+            # registers nothing there — a leak is a defect, not noise.
+            if not cache.isEmpty():
+                leaks.append(name)
+                print(f"FAIL  {name}: left frames in the session cache")
+                spark.catalog.clearCache()
         except Exception as exc:
             # Only a genuinely streaming plan (no pre-start physical
             # plan) may be pinned as a skip; any other plan-time error
@@ -128,6 +130,10 @@ def main() -> int:
     if os.path.exists(BASELINE_PATH):
         with open(BASELINE_PATH) as fh:
             baseline = json.load(fh)
+
+    if leaks:
+        print(f"\n{len(leaks)} entries leak into the session cache")
+        return 1
 
     if update:
         baseline.update(current)

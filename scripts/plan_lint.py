@@ -6,9 +6,12 @@ Flags:
 - CartesianProduct           non-broadcast cross product (O(n*m) at scale)
 - BroadcastNestedLoopJoin    flagged UNLESS its build side is a
                              provably tiny (grouping-key-free, i.e.
-                             1-row) aggregate — the scalar-crossJoin
-                             pattern is fine, anything else is an
-                             O(n*m) bomb hiding behind a broadcast
+                             1-row) aggregate or a limit, or a
+                             checkpoint scan whose row bound was
+                             proven before the cut — the
+                             scalar-crossJoin pattern is fine,
+                             anything else is an O(n*m) bomb hiding
+                             behind a broadcast
 - Exchange rangepartitioning global sort shuffle (top-k should be
                              TakeOrderedAndProject; intended only for
                              explicitly-sorted sinks)
@@ -59,6 +62,27 @@ def _plan_root(df):
     return root
 
 
+#: Largest proven row count of a tiny checkpoint-leaf build side.
+CHECKPOINT_TINY_ROWS = 10_000
+
+
+def _tiny_checkpoint_build(build) -> bool:
+    """A build side that is ONE checkpoint scan, under projections
+    and filters only, whose row count Catalyst proved before the cut:
+    the LogicalRDD keeps the cut plan's statistics, whose rowCount is
+    set for a keys=[] aggregate (1) or a limit (n), never for a
+    data-sized frame."""
+    nodes = list(_walk(build))
+    names = [n.nodeName() for n in nodes]
+    if names[0] != "BroadcastExchange" or names[-1] != "Scan ExistingRDD" \
+            or set(names[1:-1]) - {"Project", "Filter"}:
+        return False
+    link = nodes[-1].logicalLink()
+    rows = link.get().stats().rowCount() if link.isDefined() else None
+    return bool(rows and rows.isDefined()) \
+        and int(str(rows.get())) <= CHECKPOINT_TINY_ROWS
+
+
 def unbounded_nested_loops(df) -> int:
     """Count BroadcastNestedLoopJoin nodes whose build side is NOT a
     provably tiny aggregate.  "Provably tiny" = the build subtree
@@ -88,7 +112,7 @@ def unbounded_nested_loops(df) -> int:
                         "ObjectHashAggregate")
             for kw in ("keys", "key")
         ) or "GlobalLimit" in sub or "TakeOrderedAndProject" in sub
-        if not tiny:
+        if not tiny and not _tiny_checkpoint_build(build):
             bad += 1
     return bad
 

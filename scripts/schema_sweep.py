@@ -87,7 +87,8 @@ def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", os.environ.get("SF_DIR", "/root/testdata/sf0.001"))
     spark = get_session(
         "schema-sweep", master="local[8]", shuffle_partitions=8,
-        extra_confs={"spark.ui.enabled": "false"},
+        extra_confs={"spark.ui.enabled": "false",
+                     "spark.ui.showConsoleProgress": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")
 

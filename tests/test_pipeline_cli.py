@@ -16,6 +16,7 @@ import pytest
 from click.testing import CliRunner
 
 from eggv_spark import pipeline, retrieve
+from eggv_spark import schemas as S
 from eggv_spark.cli import cli
 from eggv_spark.config import load_config, validate_config
 from eggv_spark.layout import DataLayout
@@ -79,13 +80,30 @@ def test_process_and_annotate_stages(spark, layout):
 
 
 def test_pipeline_parquet_format(spark, layout):
-    """Same stages with parquet interchange (the at-scale format)."""
+    """Same stages with parquet interchange (the at-scale format);
+    every sink read back carries the field names and types of its
+    declared schema."""
     pipeline.run_gene_processing(spark, layout, fmt="parquet")
     out = pipeline.run_variant_processing(spark, layout, fmt="parquet")
     assert out["effects"].count() == 5
     ann = pipeline.run_annotation(spark, layout, fmt="parquet")
     assert ann["intergenic"].count() == 1
     assert ann["intragenic"].count() == 4
+
+    def _fields(schema):
+        return [(f.name, f.dataType) for f in schema.fields]
+
+    sinks = [
+        (layout.gene_meta(), S.GENES_SCHEMA),
+        (layout.gene_dedup(), S.GENES_SCHEMA),
+        (layout.variant_effects(), S.VARIANT_EFFECTS_SCHEMA),
+        (layout.variant_meta(), S.VARIANT_METADATA_SCHEMA),
+        (layout.annotated_intergenic(), S.INTERGENIC_SCHEMA),
+        (layout.annotated_intragenic(), S.INTRAGENIC_SCHEMA),
+    ]
+    for path, schema in sinks:
+        got = _fields(spark.read.parquet(path).schema)
+        assert got == _fields(schema), path
 
 
 def test_config_precedence_and_validation(tmp_path):

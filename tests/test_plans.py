@@ -367,10 +367,12 @@ def test_pagerank_iterations_are_cache_bounded(spark):
     )
     ranks = G.pagerank(e, iterations=3)
     plan = _plan(ranks)
-    # each iteration reads the previous ranks through InMemoryRelation
-    # (cache boundary), so per-iteration work does not re-derive the
-    # full lineage prefix
-    assert "InMemoryTableScan" in plan
+    # each iteration reads the previous ranks through a checkpoint
+    # leaf (ExistingRDD lineage cut), so per-iteration work does not
+    # re-derive the full lineage prefix — and nothing is registered
+    # in the session-wide cache
+    assert "ExistingRDD" in plan
+    assert "InMemoryTableScan" not in plan
 
 
 def test_partition_pruning_reaches_scan(spark):

@@ -119,7 +119,12 @@ def test_index_dedup_exact_copy_verdict(spark):
 def test_materialize_local_is_localcheckpoint_and_reliable_checkpoints(
     spark, tmp_path
 ):
-    from eggv_spark.materialize import DIR_CONF, MODE_CONF, materialize
+    from eggv_spark.materialize import (
+        DIR_CONF,
+        MODE_CONF,
+        materialize,
+        materialize_lazy,
+    )
 
     df = spark.range(10).withColumn("x", F.col("id") * 2)
     local = materialize(df)
@@ -130,6 +135,8 @@ def test_materialize_local_is_localcheckpoint_and_reliable_checkpoints(
     spark.conf.set(MODE_CONF, "reliable")
     try:
         spark.conf.set(DIR_CONF, str(tmp_path / "ckpt"))
+        # frames other test modules cached must not mask a leak here
+        spark.catalog.clearCache()
         rel = materialize(df)
         assert sorted(map(tuple, rel.collect())) == sorted(
             map(tuple, df.collect())
@@ -138,6 +145,24 @@ def test_materialize_local_is_localcheckpoint_and_reliable_checkpoints(
         import glob
 
         assert glob.glob(str(tmp_path / "ckpt" / "**" / "*"), recursive=True)
+        # and the source persisted for the checkpoint write is gone:
+        # nothing is left in the session-wide CacheManager
+        cache = spark._jsparkSession.sharedState().cacheManager()
+        assert cache.isEmpty()
+        # the lazy cut takes the same eager path in reliable mode
+        lazy = materialize_lazy(df)
+        assert "ExistingRDD" in lazy._jdf.queryExecution().executedPlan().toString()
+        assert sorted(map(tuple, lazy.collect())) == sorted(
+            map(tuple, df.collect())
+        )
+        assert cache.isEmpty()
+        # a caller's own cache entry for the same plan survives the cut
+        df.cache()
+        try:
+            materialize(df)
+            assert df.is_cached and not cache.isEmpty()
+        finally:
+            df.unpersist()
     finally:
         spark.conf.unset(MODE_CONF)
         spark.conf.unset(DIR_CONF)
