@@ -63,10 +63,6 @@ def dot(a: Column | str, b: Column | str) -> Column:
     return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
 
 
-def l2_norm(a: Column | str) -> Column:
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
-
-
 def array_stats(a: Column | str) -> dict[str, Column]:
     """Per-row array statistics with higher-order functions."""
     c = F.col(a) if isinstance(a, str) else a

@@ -24,9 +24,7 @@ INTERGENIC_EFFECTS = (
 )
 
 
-def annotate_variants(
-    variants: DataFrame, genes: DataFrame, broadcast_genes: bool = True
-) -> DataFrame:
+def annotate_variants(variants: DataFrame, genes: DataFrame) -> DataFrame:
     """JOIN-01: variants ⟕ genes on transcript = transcript_id.
 
     Left (not inner) so unmapped variants survive for mapping
@@ -42,15 +40,15 @@ def annotate_variants(
     ``eggv/annotate.py:205-211``) the only ``chromosome`` column
     comes from the GENE side (null for unmapped variants).
     """
-    gene_side = genes.select(
-        F.col("chromosome").alias("_gene_chromosome"),
-        "transcript_id",
-        "gene_id",
-        "gene_name",
-        F.col("biotype").alias("gene_biotype"),
+    gene_side = F.broadcast(
+        genes.select(
+            F.col("chromosome").alias("_gene_chromosome"),
+            "transcript_id",
+            "gene_id",
+            "gene_name",
+            F.col("biotype").alias("gene_biotype"),
+        )
     )
-    if broadcast_genes:
-        gene_side = F.broadcast(gene_side)
 
     joined = variants.join(
         gene_side,

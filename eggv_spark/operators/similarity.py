@@ -78,26 +78,6 @@ def brute_force_topk(
     )
 
 
-def ivf_params(corpus_size: int) -> dict[str, int]:
-    """Rule-of-thumb IVF sizing for a given corpus size: keep cells
-    at a few thousand vectors each with ``n_centroids ~ sqrt(n)``
-    (the standard IVF heuristic — cells too big negate pruning,
-    too small hurt recall), probing ~1/8 of cells (min 4).
-
-    The bench/demo defaults (16 centroids, 4 probes) are sized for
-    the sf-test corpora; at 1 B vectors this returns ~31623 centroids
-    / 3953 probes — pass the result to :func:`ivf_index` /
-    :func:`ivf_topk` when building at scale.
-    """
-    import math
-
-    n_centroids = max(4, int(math.sqrt(max(corpus_size, 1))))
-    return {
-        "n_centroids": n_centroids,
-        "n_probe": max(4, n_centroids // 8),
-    }
-
-
 def _centroid_values(c: int, dim: int) -> list[float]:
     """Pseudo-random centroid c as plain floats, derived from md5 —
     fully deterministic, computed once on the driver (same formula as

@@ -81,21 +81,3 @@ def write_orc(df: DataFrame, path: str, partition_by: tuple[str, ...] = ()) -> N
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.orc(path)
-
-
-def write_clustered_parquet(
-    df: DataFrame, path: str, cluster_by: tuple[str, ...], n_files: int | None = None
-) -> None:
-    """Clustered parquet: repartition on the cluster keys then sort
-    WITHIN each partition before writing.  RANGE repartitioning (not
-    hash!) gives each output file a disjoint key range; parquet's
-    per-row-group min/max stats then let scans filtering on the
-    cluster keys skip whole files (the poor man's Z-order — the
-    single highest-leverage layout decision for a table with a
-    dominant filter column)."""
-    out = (
-        df.repartitionByRange(n_files, *cluster_by)
-        if n_files
-        else df.repartitionByRange(*cluster_by)
-    )
-    out.sortWithinPartitions(*cluster_by).write.mode("overwrite").parquet(path)

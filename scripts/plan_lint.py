@@ -177,61 +177,63 @@ def distinct_rewrite_buffer_aggs(df) -> int:
 
 #: BNLJ build sides that are BOUNDED by construction but not
 #: mechanically provable (no keys=[] aggregate / GlobalLimit in the
-#: build subtree).  Every entry carries its justification; anything
-#: NOT listed here with a non-tiny BNLJ build FAILS the gate.  This
+#: build subtree), as ``entry: (allowed_count, justification)``.  The
+#: count pins how many such joins the entry's plan has: one more
+#: unbounded BNLJ in an allowlisted entry FAILS the gate, as does any
+#: in an entry NOT listed here.  This
 #: list exists because the round-6 AQE fix made the node walk
 #: actually visit the tree (the gate was silently vacuous before) —
 #: these are the pre-existing, fingerprint-pinned plans re-reviewed
 #: at that point.
-BNLJ_ALLOWLIST: dict[str, str] = {
-    "join_cross": "the operator IS a cross join; build side is the "
-                  "5-row region dimension scan (documented small dim)",
-    "agg_median_test": "builds are the pooled median — exactly one "
-                       "row by construction (row_number = ceil(n/2) "
-                       "over a single global window)",
-    "evt_ab_test": "build is the per-variant aggregate filtered to "
-                   "one variant — ≤2 rows by the md5-split contract",
-    "join_fuzzy_name": "build is the documented probe batch (1-in-300 "
-                       "systematic sample); record-linkage contract "
-                       "is |probes| << |corpus|",
-    "sim_centroid_cosine": "build is the per-label centroid frame — "
-                           "bounded by |labels| (10); the operator "
-                           "is an O(labels²) comparison by design",
-    "sim_cosine_topk": "build is the query-vector batch (fixture: "
-                       "every 50th id); ANN contract is "
-                       "|queries| << |corpus|",
-    "sim_ndcg": "same query-batch broadcast as sim_cosine_topk, "
-                "twice (exact + graded run)",
-    "sim_pq_topk": "same query-batch broadcast as sim_cosine_topk",
-    "sim_recall_eval": "same query-batch broadcast as "
-                       "sim_cosine_topk (exact + IVF sides)",
-    "composite_ann_health": "same query-batch broadcast as "
-                            "sim_recall_eval (its recall stage IS "
-                            "that plan, folded to one row)",
-    "evt_qte": "build is the literal quantile spine (5 rows by "
-               "construction — a LocalTableScan of the requested "
-               "p values); the rn = ceil(p*n) position condition "
-               "is inherently non-equi",
-    "sim_rrf_fusion": "build is the lexical stage's query-token "
-                      "batch (every 50th doc, the sim_cosine_topk "
-                      "|queries| << corpus contract); the <> join "
-                      "condition makes it a BNLJ by necessity",
-    "prefix_dim_recall": "same query-batch broadcast as "
-                         "sim_cosine_topk (pushed-down vec_id < 20 "
-                         "predicate; exact + per-dims truncated + "
-                         "baseline passes), ANN contract "
-                         "|queries| << |corpus|",
-    "agg_kendall_tau": "the operator IS an all-pairs statistic; both "
-                       "sides are the same pre-aggregated grain "
-                       "(fixture: 125 (nation, segment) rows) — the "
-                       "documented pre-aggregated-grain contract, "
-                       "same bounded-by-construction class as "
-                       "sim_centroid_cosine",
-    "sim_maxsim_rerank": "build is the query-signature batch (every "
-                         "40th doc, one packed int per row) for the "
-                         "stage-1 hamming prune — the "
-                         "sim_cosine_topk posture; stage 2 is "
-                         "bounded at n_candidates per query",
+BNLJ_ALLOWLIST: dict[str, tuple[int, str]] = {
+    "join_cross": (1, "the operator IS a cross join; build side is the "
+                      "5-row region dimension scan (documented small dim)"),
+    "agg_median_test": (2, "builds are the pooled median — exactly one "
+                           "row by construction (row_number = ceil(n/2) "
+                           "over a single global window)"),
+    "evt_ab_test": (1, "build is the per-variant aggregate filtered to "
+                       "one variant — ≤2 rows by the md5-split contract"),
+    "join_fuzzy_name": (1, "build is the documented probe batch (1-in-300 "
+                           "systematic sample); record-linkage contract "
+                           "is |probes| << |corpus|"),
+    "sim_centroid_cosine": (1, "build is the per-label centroid frame — "
+                               "bounded by |labels| (10); the operator "
+                               "is an O(labels²) comparison by design"),
+    "sim_cosine_topk": (1, "build is the query-vector batch (fixture: "
+                           "every 50th id); ANN contract is "
+                           "|queries| << |corpus|"),
+    "sim_ndcg": (2, "same query-batch broadcast as sim_cosine_topk, "
+                    "twice (exact + graded run)"),
+    "sim_pq_topk": (1, "same query-batch broadcast as sim_cosine_topk"),
+    "sim_recall_eval": (1, "same query-batch broadcast as "
+                           "sim_cosine_topk (exact + IVF sides)"),
+    "composite_ann_health": (1, "same query-batch broadcast as "
+                                "sim_recall_eval (its recall stage IS "
+                                "that plan, folded to one row)"),
+    "evt_qte": (1, "build is the literal quantile spine (5 rows by "
+                   "construction — a LocalTableScan of the requested "
+                   "p values); the rn = ceil(p*n) position condition "
+                   "is inherently non-equi"),
+    "sim_rrf_fusion": (1, "build is the lexical stage's query-token "
+                          "batch (every 50th doc, the sim_cosine_topk "
+                          "|queries| << corpus contract); the <> join "
+                          "condition makes it a BNLJ by necessity"),
+    "prefix_dim_recall": (6, "same query-batch broadcast as "
+                             "sim_cosine_topk (pushed-down vec_id < 20 "
+                             "predicate; exact + per-dims truncated + "
+                             "baseline passes), ANN contract "
+                             "|queries| << |corpus|"),
+    "agg_kendall_tau": (1, "the operator IS an all-pairs statistic; both "
+                           "sides are the same pre-aggregated grain "
+                           "(fixture: 125 (nation, segment) rows) — the "
+                           "documented pre-aggregated-grain contract, "
+                           "same bounded-by-construction class as "
+                           "sim_centroid_cosine"),
+    "sim_maxsim_rerank": (1, "build is the query-signature batch (every "
+                             "40th doc, one packed int per row) for the "
+                             "stage-1 hamming prune — the "
+                             "sim_cosine_topk posture; stage 2 is "
+                             "bounded at n_candidates per query"),
 }
 
 
@@ -259,11 +261,12 @@ def main() -> int:
             flags.append("CARTESIAN")
         if "BroadcastNestedLoopJoin" in plan:
             n_bad = unbounded_nested_loops(df)
-            if n_bad and name in BNLJ_ALLOWLIST:
-                print(f"note  {name}: BNLJ allowed — "
-                      f"{BNLJ_ALLOWLIST[name]}", flush=True)
+            allowed, reason = BNLJ_ALLOWLIST.get(name, (0, ""))
+            if n_bad > allowed:
+                flags.append(f"UNBOUNDED-BNLJ({n_bad}>{allowed})")
             elif n_bad:
-                flags.append(f"UNBOUNDED-BNLJ({n_bad})")
+                print(f"note  {name}: {n_bad} BNLJ allowed — {reason}",
+                      flush=True)
         if "Exchange rangepartitioning" in plan:
             flags.append("GLOBAL-SORT")
         if "BatchEvalPython" in plan:

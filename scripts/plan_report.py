@@ -34,16 +34,6 @@ NOTES = {
         "streams, parallelism = |suppliers|); see the query docstring "
         "and SCALING.md."
     ),
-    "bpe_apply_merges": (
-        "the shuffle/broadcast counts above are TEXTUAL, not live: "
-        "the vocabulary-sized merge loop is already materialized in "
-        "per-step caches (one live copy), and Spark prints every "
-        "cached InMemoryRelation's full child lineage inline, so the "
-        "nested history multiplies the token counts.  The live job "
-        "is: token stream → ONE broadcast join against the cached "
-        "word→n_symbols map → ONE corpus shuffle into the per-doc "
-        "aggregation."
-    ),
 }
 
 

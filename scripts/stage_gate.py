@@ -1,10 +1,10 @@
-"""Pre-rotation staging gate: everything a queries() window must pass
-BEFORE it is rotated into the driver's verification slots.
+"""Window gate: everything a queries() window must pass, as one
+command.
 
 Chains the window audits in cheap-to-expensive order, failing fast:
 
 1. registry shape — window size is exactly 50, every entry has an
-   oracle (or is a documented rows-only exception), no duplicates;
+   oracle, no duplicates;
 2. output-schema sweep (schema_sweep) — no array/map/struct output
    columns anywhere in the window (the driver's pandas canonicalizer
    cannot sort them: the round-3 ``txt_hashed_features`` failure);
@@ -24,9 +24,9 @@ than per window (two full Spark passes — see SCALING.md for the
 round-5 results); run it separately.
 
 Usage: python scripts/stage_gate.py [n] [offset]   (default 50 0)
-``offset`` gates a STAGED block before its rotation round — e.g.
-``stage_gate.py 49 50`` gates the round-5 block sitting directly
-behind the current window.  Exit 0 = the block is safe to rotate.
+``offset`` gates the ``n`` entries that start at that registry
+position, e.g. ``stage_gate.py 49 50`` gates the block directly
+behind the driver's window.  Exit 0 = every check passed.
 """
 
 from __future__ import annotations
@@ -36,10 +36,6 @@ import subprocess
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-# Round 6: both sketch queries now emit exact-twin columns + tolerance
-# booleans and carry full value oracles — nothing is rows-only anymore.
-ROWS_ONLY_OK: set[str] = set()
 
 
 def main() -> int:
@@ -61,7 +57,7 @@ def main() -> int:
     if len(set(names)) != len(names):
         print("FAIL: duplicate names in window")
         return 1
-    missing = [n for n in names if n not in oracles and n not in ROWS_ONLY_OK]
+    missing = [n for n in names if n not in oracles]
     if missing:
         print(f"FAIL: window entries without an oracle: {missing}")
         return 1

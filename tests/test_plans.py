@@ -17,7 +17,7 @@ from eggv_spark.operators.annotate import annotate_variants
 from eggv_spark.operators.relational import dedupe, sort_limit
 from eggv_spark.sources.readers import read_table
 
-SF_DIR = "/root/testdata/sf0.001"
+from tests.conftest import SF_DIR
 
 
 def _plan(df) -> str:

@@ -1,12 +1,9 @@
-"""DuckDB oracle drafts for the round-6 staged operators, validated
-side-by-side against the Spark implementations on small fixtures.
-
-Round 7 registers these operators in ``__spark_entry__.py``; the SQL
-templates below are the pre-validated ``oracle_sql()`` bodies (table
-names/parameters adjusted to the registry fixtures).  Keeping them
-under pytest means the engine/oracle agreement is continuously
-checked between now and registration — including the two non-obvious
-encodings:
+"""Fixture-level oracle checks for the round-6 operators: each Spark
+operator runs on a small fixture and a DuckDB query runs on the same
+rows.  Where the registry has an oracle for the operator, the test
+calls the registry's generator in ``__spark_entry__.py``; the SQL kept
+here covers fixture shapes the registry tables do not have.  Two
+non-obvious encodings:
 
 - ``epoch_shuffle``: DuckDB's ``CAST('0x'||substr(md5(..),1,8) AS
   BIGINT)`` equals Spark's ``conv(substring(md5(..),1,8),16,10)``.
@@ -20,9 +17,9 @@ encodings:
 
 from __future__ import annotations
 
-import duckdb
 import pandas as pd
-import pytest
+
+import __spark_entry__ as E
 
 MULT_MEANS_SQL = """
 SELECT g, count(v) AS n,
@@ -164,63 +161,6 @@ FROM j
 """
 
 
-def _bpe_step_sql(i: int) -> str:
-    return f"""
-pairs{i} AS (
-  SELECT u.p[1] AS a, u.p[2] AS b, sum(w.f) AS cnt
-  FROM words{i - 1} w,
-       unnest(list_zip(w.syms[1:len(w.syms)-1], w.syms[2:len(w.syms)]))
-         AS u(p)
-  WHERE len(w.syms) >= 2
-  GROUP BY u.p[1], u.p[2]
-),
-best{i} AS (
-  SELECT a, b, cnt FROM pairs{i} ORDER BY cnt DESC, a, b LIMIT 1
-),
-words{i} AS (
-  SELECT list_transform(
-           string_split(
-             replace(w.seq, '|' || bb.a || '|  |' || bb.b || '|',
-                     '|' || bb.a || bb.b || '|'), '  '),
-           s -> trim(s, '|')) AS syms,
-         replace(w.seq, '|' || bb.a || '|  |' || bb.b || '|',
-                 '|' || bb.a || bb.b || '|') AS seq,
-         w.f AS f
-  FROM words{i - 1} w, best{i} bb
-)"""
-
-
-def bpe_oracle_sql(n_steps: int) -> str:
-    sql = r"""
-WITH toks AS (
-  SELECT unnest(list_filter(string_split_regex(lower(text), '\s+'),
-                            t -> t <> '')) AS w
-  FROM documents
-),
-words0 AS (
-  SELECT string_split(w, '') AS syms,
-         '|' || array_to_string(string_split(w, ''), '|  |') || '|'
-           AS seq,
-         count(*) AS f
-  FROM toks GROUP BY w
-)"""
-    for i in range(1, n_steps + 1):
-        sql += "," + _bpe_step_sql(i)
-    sql += "\nSELECT * FROM (" + " UNION ALL BY NAME ".join(
-        f"SELECT {i} AS step, a AS pair_a, b AS pair_b, a || b AS merged,"
-        f" cnt AS pair_count FROM best{i}"
-        for i in range(1, n_steps + 1)
-    ) + ") ORDER BY step"
-    return sql
-
-
-@pytest.fixture()
-def con():
-    c = duckdb.connect()
-    yield c
-    c.close()
-
-
 def test_mult_means_oracle_matches_spark(spark, con):
     from eggv_spark.operators.aggregates import multiplicative_means
 
@@ -343,7 +283,7 @@ def test_bpe_oracle_matches_spark(spark, con):
         bpe_train_merges(sdf, n_merges=6).orderBy("step").collect()
     ]
     con.register("documents", pd.DataFrame({"text": corpus}))
-    assert got == con.execute(bpe_oracle_sql(6)).fetchall()
+    assert got == con.execute(E._bpe_oracle_sql(6)).fetchall()
 
 
 LABEL_CHI2_SQL = r"""

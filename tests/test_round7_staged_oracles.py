@@ -1,8 +1,7 @@
-"""DuckDB oracle drafts for the round-7 staged operators, validated
-side-by-side against the Spark implementations on small fixtures —
-the same pre-registration discipline as
-tests/test_round6_staged_oracles.py (round 8 lifts these templates
-into ``oracle_sql()`` with the registry fixture tables substituted).
+"""Fixture-level oracle checks for the round-7 operators, in the
+form of tests/test_round6_staged_oracles.py: registry generators from
+``__spark_entry__.py`` where the registry has one, fixture SQL here
+otherwise.
 
 Non-obvious encodings proven here:
 
@@ -16,16 +15,9 @@ Non-obvious encodings proven here:
 
 from __future__ import annotations
 
-import duckdb
 import pandas as pd
-import pytest
 
-
-@pytest.fixture()
-def con():
-    c = duckdb.connect()
-    yield c
-    c.close()
+import __spark_entry__ as E
 
 
 CUPED_SQL = """
@@ -416,58 +408,6 @@ def test_perplexity_bins_oracle_matches_spark(spark, con):
     assert got == con.execute(PERPLEXITY_BINS_SQL).fetchall()
 
 
-def _bpe_apply_step_sql(i: int) -> str:
-    # training chain that ALSO carries the word string w, so the
-    # final per-word symbol count can join back to the doc stream
-    return f"""
-pairs{i} AS (
-  SELECT u.p[1] AS a, u.p[2] AS b, sum(w.f) AS cnt
-  FROM words{i - 1} w,
-       unnest(list_zip(w.syms[1:len(w.syms)-1], w.syms[2:len(w.syms)]))
-         AS u(p)
-  WHERE len(w.syms) >= 2
-  GROUP BY u.p[1], u.p[2]
-),
-best{i} AS (
-  SELECT a, b FROM pairs{i} ORDER BY cnt DESC, a, b LIMIT 1
-),
-words{i} AS (
-  SELECT w.w AS w,
-         list_transform(
-           string_split(
-             replace(w.seq, '|' || bb.a || '|  |' || bb.b || '|',
-                     '|' || bb.a || bb.b || '|'), '  '),
-           s -> trim(s, '|')) AS syms,
-         replace(w.seq, '|' || bb.a || '|  |' || bb.b || '|',
-                 '|' || bb.a || bb.b || '|') AS seq,
-         w.f AS f
-  FROM words{i - 1} w, best{i} bb
-)"""
-
-
-def bpe_apply_oracle_sql(n_steps: int) -> str:
-    sql = f"""
-WITH toks AS (
-  SELECT doc_id, unnest({_TOKS}) AS w FROM documents
-),
-words0 AS (
-  SELECT w, string_split(w, '') AS syms,
-         '|' || array_to_string(string_split(w, ''), '|  |') || '|'
-           AS seq,
-         count(*) AS f
-  FROM toks GROUP BY w
-)"""
-    for i in range(1, n_steps + 1):
-        sql += "," + _bpe_apply_step_sql(i)
-    sql += f"""
-SELECT doc_id, count(*) AS n_words,
-       CAST(sum(len(words{n_steps}.syms)) AS BIGINT) AS n_bpe_tokens
-FROM toks JOIN words{n_steps} USING (w)
-GROUP BY doc_id ORDER BY doc_id
-"""
-    return sql
-
-
 def test_bpe_apply_oracle_matches_spark(spark, con):
     from eggv_spark.operators.text_analysis import (
         bpe_apply_merges,
@@ -483,7 +423,7 @@ def test_bpe_apply_oracle_matches_spark(spark, con):
         tuple(r) for r in bpe_apply_merges(df, merges, 4).collect()
     )
     con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
-    assert got == con.execute(bpe_apply_oracle_sql(4)).fetchall()
+    assert got == sorted(con.execute(E._bpe_apply_oracle_sql(4)).fetchall())
 
 
 IMAGE_PATCHES_SQL = """

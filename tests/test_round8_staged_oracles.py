@@ -1,7 +1,7 @@
-"""DuckDB oracle drafts for the round-8-staged operators (the
-round-9 registration queue), validated side-by-side against the Spark
-implementations on small fixtures — the same pre-registration
-discipline as tests/test_round7_staged_oracles.py.
+"""Fixture-level oracle checks for the round-8 operators, in the
+form of tests/test_round6_staged_oracles.py: registry generators from
+``__spark_entry__.py`` where the registry has one, fixture SQL here
+otherwise.
 
 Non-obvious encodings proven here:
 
@@ -17,132 +17,9 @@ Non-obvious encodings proven here:
 
 from __future__ import annotations
 
-import duckdb
 import pandas as pd
-import pytest
 
-
-@pytest.fixture()
-def con():
-    c = duckdb.connect()
-    yield c
-    c.close()
-
-
-def _dims_sql(dim: int) -> str:
-    return f"(SELECT unnest(range(1, {dim + 1})) AS d) u"
-
-
-def _logistic_step_sql(i: int, dim: int, lr: float) -> str:
-    return f"""
-p{i} AS (
-  SELECT x, y,
-         1.0 / (1.0 + exp(-(list_dot_product(x, w{i - 1}.w) + w{i - 1}.b)))
-           AS p
-  FROM data, w{i - 1}
-),
-g{i} AS (
-  SELECT u.d AS d, avg((p - y) * x[u.d]) AS g
-  FROM p{i}, {_dims_sql(dim)} GROUP BY u.d
-),
-gl{i} AS (SELECT list(g ORDER BY d) AS gs FROM g{i}),
-gb{i} AS (SELECT avg(p - y) AS gb FROM p{i}),
-w{i} AS (
-  SELECT list_transform(list_zip(w{i - 1}.w, gl{i}.gs),
-                        z -> z[1] - {lr!r} * z[2]) AS w,
-         w{i - 1}.b - {lr!r} * gb{i}.gb AS b
-  FROM w{i - 1}, gl{i}, gb{i}
-)"""
-
-
-def logistic_oracle_sql(dim: int, n_steps: int, lr: float) -> str:
-    sql = f"""
-WITH data AS (
-  SELECT CAST(embedding AS DOUBLE[]) AS x, CAST(label AS DOUBLE) AS y
-  FROM emb
-),
-w0 AS (SELECT list_transform(range(1, {dim + 1}), d -> 0.0) AS w,
-              0.0 AS b)"""
-    for i in range(1, n_steps + 1):
-        sql += "," + _logistic_step_sql(i, dim, lr)
-    sql += f"""
-, final AS (
-  SELECT y,
-         1.0 / (1.0 + exp(-(list_dot_product(x, w{n_steps}.w)
-                            + w{n_steps}.b))) AS p,
-         w{n_steps}.w AS w, w{n_steps}.b AS b
-  FROM data, w{n_steps}
-)
-SELECT count(*) AS n,
-       round(avg(CASE WHEN (p >= 0.5) = (y = 1.0) THEN 1.0
-                      ELSE 0.0 END), 4) AS accuracy,
-       round(avg(-(y * ln(least(greatest(p, 1e-12), 1.0 - 1e-12))
-                   + (1.0 - y)
-                     * ln(1.0 - least(greatest(p, 1e-12),
-                                      1.0 - 1e-12)))), 6) AS logloss,
-       round(sqrt(list_dot_product(any_value(w), any_value(w))), 6)
-         AS w_norm,
-       round(any_value(b), 6) AS bias
-FROM final
-"""
-    return sql
-
-
-def _pca_step_sql(i: int, dim: int) -> str:
-    return f"""
-s{i} AS (
-  SELECT c, list_dot_product(c, v{i - 1}.v) AS s FROM cdata, v{i - 1}
-),
-uu{i} AS (
-  SELECT list(g ORDER BY d) AS u FROM (
-    SELECT u.d AS d, avg(s * c[u.d]) AS g
-    FROM s{i}, {_dims_sql(dim)} GROUP BY u.d
-  )
-),
-v{i} AS (
-  SELECT list_transform(u, x -> x / sqrt(list_dot_product(u, u))) AS v,
-         sqrt(list_dot_product(u, u)) AS lam
-  FROM uu{i}
-)"""
-
-
-def pca_oracle_sql(dim: int, n_steps: int) -> str:
-    sql = f"""
-WITH data AS (SELECT CAST(embedding AS DOUBLE[]) AS x FROM emb),
-mu AS (
-  SELECT list(m ORDER BY d) AS mu FROM (
-    SELECT u.d AS d, avg(x[u.d]) AS m FROM data, {_dims_sql(dim)}
-    GROUP BY u.d
-  )
-),
-cdata AS (
-  SELECT list_transform(list_zip(x, mu.mu), z -> z[1] - z[2]) AS c
-  FROM data, mu
-),
-v0 AS (SELECT list_transform(range(1, {dim + 1}),
-                             d -> 1.0 / sqrt({dim}.0)) AS v,
-              0.0 AS lam)"""
-    for i in range(1, n_steps + 1):
-        sql += "," + _pca_step_sql(i, dim)
-    sql += f"""
-, tv AS (
-  SELECT count(*) AS n,
-         sum(list_dot_product(c, c)) / count(*) AS total_var
-  FROM cdata
-),
-top AS (
-  SELECT CAST(d AS INT) AS top_loading_dim FROM (
-    SELECT u.d AS d, abs(v{n_steps}.v[u.d]) AS a
-    FROM v{n_steps}, {_dims_sql(dim)}
-  ) ORDER BY a DESC, d ASC LIMIT 1
-)
-SELECT tv.n AS n, round(v{n_steps}.lam, 6) AS top_eigenvalue,
-       round(tv.total_var, 6) AS total_variance,
-       round(v{n_steps}.lam / tv.total_var, 4) AS explained_share,
-       top.top_loading_dim - 1 AS top_loading_dim
-FROM tv, v{n_steps}, top
-"""
-    return sql
+import __spark_entry__ as E
 
 
 def _fixture_rows(n=90, dim=6):
@@ -156,19 +33,26 @@ def _fixture_rows(n=90, dim=6):
 
 
 def test_logistic_oracle_matches_spark(spark, con):
+    from pyspark.sql import functions as F
+
     from eggv_spark.operators.ml import logistic_regression_gd
 
-    rows = _fixture_rows()
+    # the registry oracle reads the 10-class embeddings label and
+    # binarizes it as label < 5, the same step its Spark builder runs
+    rows = [(x, 2 if y else 7) for x, y in _fixture_rows()]
     df = spark.createDataFrame(rows, "embedding array<double>, label int")
+    binary = df.select(
+        "embedding", (F.col("label") < 5).cast("int").alias("label")
+    )
     got = tuple(
         logistic_regression_gd(
-            df, "embedding", "label", n_steps=3, lr=0.4, dim=6
+            binary, "embedding", "label", n_steps=3, lr=0.4, dim=6
         ).collect()[0]
     )
     con.register(
-        "emb", pd.DataFrame(rows, columns=["embedding", "label"])
+        "embeddings", pd.DataFrame(rows, columns=["embedding", "label"])
     )
-    exp = con.execute(logistic_oracle_sql(6, 3, 0.4)).fetchall()[0]
+    exp = con.execute(E._logistic_oracle_sql(6, 3, 0.4)).fetchall()[0]
     assert got == exp
 
 
@@ -181,9 +65,9 @@ def test_pca_oracle_matches_spark(spark, con):
         pca_power_iteration(df, "embedding", n_steps=4, dim=6).collect()[0]
     )
     con.register(
-        "emb", pd.DataFrame(rows, columns=["embedding", "label"])
+        "embeddings", pd.DataFrame(rows, columns=["embedding", "label"])
     )
-    exp = con.execute(pca_oracle_sql(6, 4)).fetchall()[0]
+    exp = con.execute(E._pca_oracle_sql(6, 4)).fetchall()[0]
     assert got == exp
 
 
@@ -232,56 +116,6 @@ def test_readability_oracle_matches_spark(spark, con):
     assert got == sorted(con.execute(READABILITY_SQL).fetchall())
 
 
-def contamination_oracle_sql(sizes=(3, 5)) -> str:
-    toks = (
-        "list_filter(regexp_split_to_array(lower(text), '\\s+'),"
-        " t -> t <> '')"
-    )
-    blocks = []
-    for n in sizes:
-        blocks.append(f"""
-SELECT {n} AS ngram_size,
-  (SELECT count(DISTINCT g) FROM grams{n} WHERE is_eval) AS n_eval_ngrams,
-  (SELECT count(*) FROM
-     (SELECT DISTINCT g FROM grams{n} WHERE is_eval)
-     WHERE g IN (SELECT g FROM grams{n} WHERE NOT is_eval))
-    AS n_overlap,
-  round((SELECT count(*) FROM
-     (SELECT DISTINCT g FROM grams{n} WHERE is_eval)
-     WHERE g IN (SELECT g FROM grams{n} WHERE NOT is_eval))
-    / CAST((SELECT count(DISTINCT g) FROM grams{n} WHERE is_eval)
-      AS DOUBLE), 6) AS overlap_share,
-  (SELECT count(DISTINCT doc_id) FROM grams{n} WHERE is_eval)
-    AS n_eval_docs,
-  (SELECT count(DISTINCT doc_id) FROM grams{n}
-    WHERE is_eval
-      AND g IN (SELECT g FROM grams{n} WHERE NOT is_eval))
-    AS n_docs_hit,
-  round((SELECT count(DISTINCT doc_id) FROM grams{n}
-    WHERE is_eval
-      AND g IN (SELECT g FROM grams{n} WHERE NOT is_eval))
-    / CAST((SELECT count(DISTINCT doc_id) FROM grams{n} WHERE is_eval)
-      AS DOUBLE), 6) AS docs_hit_share""")
-    gram_ctes = ",".join(
-        f"""
-grams{n} AS MATERIALIZED (
-  SELECT DISTINCT doc_id, is_eval,
-         array_to_string(t[i:i + {n - 1}], ' ') AS g
-  FROM tk, unnest(range(1, greatest(len(t) - {n - 1}, 0) + 1)) AS s(i)
-)"""
-        for n in sizes
-    )
-    return (
-        f"WITH tk AS MATERIALIZED (SELECT doc_id,"
-        f" source = 'src1' AS is_eval, {toks} AS t FROM documents),"
-        + gram_ctes
-        + " ".join(
-            b if i == 0 else " UNION ALL " + b
-            for i, b in enumerate(blocks)
-        )
-    )
-
-
 def test_contamination_oracle_matches_spark(spark, con):
     from pyspark.sql import functions as F
 
@@ -304,47 +138,8 @@ def test_contamination_oracle_matches_spark(spark, con):
     con.register(
         "documents", pd.DataFrame(rows, columns=["doc_id", "text", "source"])
     )
-    exp = sorted(con.execute(contamination_oracle_sql((3, 5))).fetchall())
+    exp = sorted(con.execute(E._contamination_oracle_sql((3, 5))).fetchall())
     assert got == exp
-
-
-def dsir_oracle_sql(n_buckets: int, a: float) -> str:
-    toks = (
-        "list_filter(regexp_split_to_array(lower(text), '\\s+'),"
-        " t -> t <> '')"
-    )
-    return f"""
-WITH tk AS (
-  SELECT doc_id, source = 'src1' AS is_target, {toks} AS t
-  FROM documents
-),
-fb AS MATERIALIZED (
-  SELECT doc_id, is_target,
-         CAST(CAST(concat('0x',
-           substr(md5(array_to_string(t[i:i + 1], ' ')), 1, 8))
-           AS BIGINT) % {n_buckets} AS INT) AS b
-  FROM tk, unnest(range(1, greatest(len(t) - 1, 0) + 1)) AS s(i)
-),
-tgt AS (SELECT b, count(*) AS ct FROM fb WHERE is_target GROUP BY b),
-rawc AS (SELECT b, count(*) AS cr FROM fb WHERE NOT is_target GROUP BY b),
-tot AS (
-  SELECT (SELECT coalesce(sum(ct), 0) FROM tgt) AS nt,
-         (SELECT coalesce(sum(cr), 0) FROM rawc) AS nr
-),
-spine AS (SELECT CAST(unnest(range(0, {n_buckets})) AS INT) AS b),
-ratios AS (
-  SELECT spine.b AS b,
-         ln((coalesce(ct, 0) + {a!r}) / (nt + {a!r} * {n_buckets}))
-         - ln((coalesce(cr, 0) + {a!r}) / (nr + {a!r} * {n_buckets}))
-           AS lr
-  FROM spine LEFT JOIN tgt ON spine.b = tgt.b
-             LEFT JOIN rawc ON spine.b = rawc.b, tot
-)
-SELECT doc_id, count(*) AS n_features,
-       round(sum(lr), 4) AS dsir_logweight
-FROM fb JOIN ratios ON fb.b = ratios.b
-WHERE NOT is_target GROUP BY doc_id
-"""
 
 
 def test_dsir_oracle_matches_spark(spark, con):
@@ -369,7 +164,7 @@ def test_dsir_oracle_matches_spark(spark, con):
     con.register(
         "documents", pd.DataFrame(rows, columns=["doc_id", "text", "source"])
     )
-    exp = sorted(con.execute(dsir_oracle_sql(256, 1.0)).fetchall())
+    exp = sorted(con.execute(E._dsir_oracle_sql(256, 1.0)).fetchall())
     assert got == exp
     # the spammy raw doc must score LOWER than the prose-like raw docs
     w = {r[0]: r[2] for r in got}

@@ -1,7 +1,7 @@
-"""DuckDB oracle drafts for the round-9-staged operators, validated
-side-by-side against the Spark implementations on small fixtures —
-the same pre-registration discipline as
-tests/test_round8_staged_oracles.py.
+"""Fixture-level oracle checks for the round-9 operators, in the
+form of tests/test_round6_staged_oracles.py: registry generators from
+``__spark_entry__.py`` where the registry has one, fixture SQL here
+otherwise.
 
 Non-obvious encodings proven here:
 
@@ -19,19 +19,12 @@ Non-obvious encodings proven here:
 
 from __future__ import annotations
 
-import duckdb
 import pandas as pd
-import pytest
+
+import __spark_entry__ as E
 
 TOKS = "list_filter(regexp_split_to_array(lower(text), '\\s+'), t -> t <> '')"
 BH = "CAST(concat('0x', substr(md5({x}), 1, 8)) AS BIGINT)"
-
-
-@pytest.fixture()
-def con():
-    c = duckdb.connect()
-    yield c
-    c.close()
 
 
 DOCS = [
@@ -42,36 +35,6 @@ DOCS = [
     (4, "the cat and the dog met on the mat", "src1"),
     (5, "mat mat mat cat", "src0"),
 ]
-
-
-def bm25_oracle_sql(query_terms, k, k1=1.2, b=0.75) -> str:
-    terms = ", ".join(f"'{t}'" for t in query_terms)
-    return f"""
-WITH toks AS MATERIALIZED (
-  SELECT doc_id, len({TOKS}) AS dl,
-         list_filter({TOKS}, t -> t IN ({terms})) AS qt
-  FROM documents
-),
-corpus AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM toks),
-tf AS MATERIALIZED (
-  SELECT doc_id, dl, t.t AS term, count(*) AS tf
-  FROM toks, unnest(qt) AS t(t)
-  GROUP BY doc_id, dl, t.t
-),
-dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-scored AS (
-  SELECT doc_id, count(*) AS n_terms_hit,
-         round(sum(
-           ln(1 + (n_docs - df + 0.5) / (df + 0.5))
-           * (tf * ({k1} + 1.0))
-           / (tf + {k1} * (1.0 - {b} + {b} * dl / avgdl))
-         ), 4) AS bm25
-  FROM tf JOIN dfreq USING (term), corpus
-  GROUP BY doc_id
-)
-SELECT doc_id, CAST(n_terms_hit AS BIGINT) AS n_terms_hit, bm25
-FROM scored ORDER BY bm25 DESC, doc_id LIMIT {k}
-"""
 
 
 def test_bm25_oracle_matches_spark(spark, con):
@@ -85,39 +48,9 @@ def test_bm25_oracle_matches_spark(spark, con):
         "documents", pd.DataFrame(DOCS, columns=["doc_id", "text", "source"])
     )
     exp = sorted(
-        con.execute(bm25_oracle_sql(("cat", "mat", "dog"), 4)).fetchall()
+        con.execute(E._bm25_oracle_sql(("cat", "mat", "dog"), 4)).fetchall()
     )
     assert got == exp
-
-
-def kn_oracle_sql(d=0.75) -> str:
-    return f"""
-WITH toks AS (SELECT doc_id, {TOKS} AS t FROM documents),
-pairs AS MATERIALIZED (
-  SELECT doc_id, u.p[1] AS prev, u.p[2] AS cur
-  FROM toks,
-       unnest(list_zip(t[1:len(t)-1], t[2:len(t)])) AS u(p)
-  WHERE len(t) >= 2
-),
-big AS MATERIALIZED (
-  SELECT prev, cur, count(*) AS n_big FROM pairs GROUP BY prev, cur
-),
-ctx AS (
-  SELECT prev, sum(n_big) AS n_prev, count(*) AS n_types_after
-  FROM big GROUP BY prev
-),
-cont AS (SELECT cur, count(*) AS n_types_before FROM big GROUP BY cur),
-tot AS (SELECT count(*) AS n_bigram_types FROM big)
-SELECT doc_id, count(*) AS n_bigrams,
-       round(avg(ln(
-         (n_big - {d}) / n_prev
-         + {d} * n_types_after / n_prev
-           * (n_types_before / CAST(n_bigram_types AS DOUBLE))
-       )), 4) AS avg_kn_logprob
-FROM pairs JOIN big USING (prev, cur)
-     JOIN ctx USING (prev) JOIN cont USING (cur), tot
-GROUP BY doc_id
-"""
 
 
 def test_kn_oracle_matches_spark(spark, con):
@@ -128,51 +61,8 @@ def test_kn_oracle_matches_spark(spark, con):
     con.register(
         "documents", pd.DataFrame(DOCS, columns=["doc_id", "text", "source"])
     )
-    exp = sorted(con.execute(kn_oracle_sql()).fetchall())
+    exp = sorted(con.execute(E._kn_oracle_sql()).fetchall())
     assert got == exp
-
-
-def energy_oracle_sql(
-    group_col, val_cents_sql, group_a, group_b, table="events"
-) -> str:
-    return f"""
-WITH s AS (
-  SELECT CAST({val_cents_sql} AS BIGINT) AS v,
-         CAST({group_col} = '{group_a}' AS BIGINT) AS is_a
-  FROM {table} WHERE {group_col} IN ('{group_a}', '{group_b}')
-),
-per_v AS (SELECT v, sum(is_a) AS ca, count(*) - sum(is_a) AS cb
-          FROM s GROUP BY v),
-tot AS (SELECT sum(ca) AS na, sum(cb) AS nb FROM per_v),
-cum AS (
-  SELECT v, ca, cb, na, nb,
-         sum(ca) OVER w AS pa, sum(cb) OVER w AS pb,
-         sum(ca + cb) OVER w AS pall
-  FROM per_v, tot
-  WINDOW w AS (ORDER BY v
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-),
-folded AS (
-  SELECT na, nb,
-         sum(CAST(v AS HUGEINT) * ca * (2 * pa - ca - na)) AS ta,
-         sum(CAST(v AS HUGEINT) * cb * (2 * pb - cb - nb)) AS tb,
-         sum(CAST(v AS HUGEINT) * (ca + cb)
-             * (2 * pall - (ca + cb) - (na + nb))) AS tall
-  FROM cum GROUP BY na, nb
-)
-SELECT CAST(na AS BIGINT) AS n_a, CAST(nb AS BIGINT) AS n_b,
-       round(CAST(tall - ta - tb AS DOUBLE) / (na * nb), 6)
-         AS mean_cross_cents,
-       round(2.0 * CAST(ta AS DOUBLE) / (na * na), 6)
-         AS mean_within_a_cents,
-       round(2.0 * CAST(tb AS DOUBLE) / (nb * nb), 6)
-         AS mean_within_b_cents,
-       round(2.0 * CAST(tall - ta - tb AS DOUBLE) / (na * nb)
-             - 2.0 * CAST(ta AS DOUBLE) / (na * na)
-             - 2.0 * CAST(tb AS DOUBLE) / (nb * nb), 6)
-         AS energy_distance_cents
-FROM folded
-"""
 
 
 def test_energy_oracle_matches_spark(spark, con):
@@ -187,39 +77,9 @@ def test_energy_oracle_matches_spark(spark, con):
     got = tuple(energy_distance(df, "g", "cents", "a", "b").collect()[0])
     con.register("events", pd.DataFrame(rows, columns=["g", "cents"]))
     exp = con.execute(
-        energy_oracle_sql("g", "cents", "a", "b")
+        E._energy_oracle_sql("g", "cents", "a", "b")
     ).fetchall()[0]
     assert got == exp
-
-
-def image_hist_oracle_sql(width, height, n_bins) -> str:
-    """Formula-recomputed histogram for synthesize_ppm_images assets:
-    byte i of doc d is (d*7 + i*13) % 256, channel = i % 3."""
-    n_px = width * height
-    bin_w = 256 // n_bins
-    return f"""
-WITH px AS (
-  SELECT d.doc_id AS asset_id, ch.ch AS ch, p.p AS p,
-         (d.doc_id * 7 + (p.p * 3 + ch.ch) * 13) % 256 AS v
-  FROM documents d,
-       (SELECT unnest(range(0, 3)) AS ch) ch,
-       (SELECT unnest(range(0, {n_px})) AS p) p
-),
-grid AS (
-  SELECT d.doc_id AS asset_id, ch.ch AS ch, b.b AS b
-  FROM documents d,
-       (SELECT unnest(range(0, 3)) AS ch) ch,
-       (SELECT unnest(range(0, {n_bins})) AS b) b
-)
-SELECT g.asset_id,
-       CASE g.ch WHEN 0 THEN 'r' WHEN 1 THEN 'g' ELSE 'b' END AS channel,
-       CAST(g.b AS INT) AS bin,
-       CAST(coalesce(c.n, 0) AS BIGINT) AS n_px
-FROM grid g LEFT JOIN (
-  SELECT asset_id, ch, v // {bin_w} AS b, count(*) AS n
-  FROM px GROUP BY asset_id, ch, v // {bin_w}
-) c ON g.asset_id = c.asset_id AND g.ch = c.ch AND g.b = c.b
-"""
 
 
 def test_image_hist_oracle_matches_spark(spark, con):
@@ -239,34 +99,8 @@ def test_image_hist_oracle_matches_spark(spark, con):
     con.register(
         "documents", pd.DataFrame(rows, columns=["doc_id", "text", "source"])
     )
-    exp = sorted(con.execute(image_hist_oracle_sql(8, 8, 4)).fetchall())
+    exp = sorted(con.execute(E._image_hist_oracle_sql(8, 8, 4)).fetchall())
     assert got == exp
-
-
-def hashed_classifier_data_cte(dim: int) -> str:
-    """Feature CTE for the hashed-BoW → logistic composite: 1/len
-    -normalized md5-bucket counts as x, (source='src1') as y."""
-    bucket = BH.format(x="s")
-    return f"""
-data AS MATERIALIZED (
-  SELECT list_transform(generate_series(0, {dim - 1}), i ->
-           len(list_filter(t, s -> {bucket} % {dim} = i))
-           / CAST(greatest(len(t), 1) AS DOUBLE)) AS x,
-         CAST(CAST(is_t AS INT) AS DOUBLE) AS y
-  FROM (SELECT {TOKS} AS t, source = 'src1' AS is_t FROM documents)
-)"""
-
-
-def hashed_classifier_oracle_sql(dim: int, n_steps: int, lr: float) -> str:
-    import __spark_entry__ as entrymod
-
-    base = entrymod._logistic_oracle_sql(dim, n_steps, lr)
-    # swap the embeddings data CTE for the hashed-features CTE
-    head, tail = base.split("),\nw0 AS MATERIALIZED", 1)
-    return (
-        "\nWITH " + hashed_classifier_data_cte(dim).strip().rstrip()
-        + ",\nw0 AS MATERIALIZED" + tail
-    )
 
 
 def test_hashed_classifier_oracle_matches_spark(spark, con):
@@ -292,5 +126,6 @@ def test_hashed_classifier_oracle_matches_spark(spark, con):
     con.register(
         "documents", pd.DataFrame(DOCS, columns=["doc_id", "text", "source"])
     )
-    exp = con.execute(hashed_classifier_oracle_sql(16, 2, 0.5)).fetchall()[0]
+    sql = E._hashed_classifier_oracle_sql(16, 2, 0.5)
+    exp = con.execute(sql).fetchall()[0]
     assert got == exp

@@ -1,5 +1,6 @@
-"""DuckDB oracle drafts for the second round-9-staged wave, validated
-side-by-side against the Spark implementations on small fixtures.
+"""Fixture-level oracle checks for the second round-9 wave: each
+operator on a small fixture against its registry generator from
+``__spark_entry__.py``.
 
 Non-obvious encodings proven here:
 
@@ -17,18 +18,11 @@ Non-obvious encodings proven here:
 
 from __future__ import annotations
 
-import duckdb
 import pandas as pd
-import pytest
+
+import __spark_entry__ as E
 
 TOKS = "list_filter(regexp_split_to_array(lower(text), '\\s+'), t -> t <> '')"
-
-
-@pytest.fixture()
-def con():
-    c = duckdb.connect()
-    yield c
-    c.close()
 
 
 DOCS = [
@@ -41,76 +35,6 @@ DOCS = [
 ]
 
 
-def naive_bayes_oracle_sql(label_col="source") -> str:
-    return f"""
-WITH toks AS MATERIALIZED (
-  SELECT doc_id, {label_col} AS y, unnest({TOKS}) AS w FROM documents
-),
-doc_tf AS MATERIALIZED (
-  SELECT doc_id, y, w, count(*) AS tf FROM toks GROUP BY doc_id, y, w
-),
-class_term AS MATERIALIZED (
-  SELECT y AS c, w, sum(tf) AS ct FROM doc_tf GROUP BY y, w
-),
-vocab AS (SELECT count(DISTINCT w) AS v FROM class_term),
-class_tot AS (SELECT c, sum(ct) AS tot FROM class_term GROUP BY c),
-priors AS MATERIALIZED (
-  SELECT {label_col} AS c, count(*) AS nc FROM documents GROUP BY c
-),
-ntot AS (SELECT sum(nc) AS n FROM priors),
-classes AS MATERIALIZED (
-  SELECT ct2.c AS c, ct2.tot AS tot, vocab.v AS v, p.nc AS nc,
-         ln(1.0 / (ct2.tot + vocab.v)) AS floor_lp,
-         ln(p.nc / CAST(ntot.n AS DOUBLE)) AS lprior
-  FROM class_tot ct2 JOIN priors p ON ct2.c = p.c, vocab, ntot
-),
-doc_totals AS MATERIALIZED (
-  SELECT doc_id, sum(tf) AS doc_tf FROM doc_tf GROUP BY doc_id
-),
-matched AS MATERIALIZED (
-  SELECT d.doc_id AS doc_id, t.c AS c,
-         sum(d.tf * ln((t.ct + 1.0) / (cl.tot + cl.v))) AS m_sum,
-         sum(d.tf) AS m_tf
-  FROM doc_tf d JOIN class_term t ON d.w = t.w
-       JOIN classes cl ON t.c = cl.c
-  GROUP BY d.doc_id, t.c
-),
-scored AS MATERIALIZED (
-  SELECT dt.doc_id AS doc_id, cl.c AS c,
-         round(cl.lprior + coalesce(m.m_sum, 0.0)
-               + (dt.doc_tf - coalesce(m.m_tf, 0)) * cl.floor_lp,
-               6) AS score
-  FROM doc_totals dt CROSS JOIN classes cl
-  LEFT JOIN matched m ON dt.doc_id = m.doc_id AND cl.c = m.c
-),
-pred AS MATERIALIZED (
-  SELECT doc_id, c AS pred FROM (
-    SELECT doc_id, c,
-           row_number() OVER (PARTITION BY doc_id
-                              ORDER BY score DESC, c DESC) AS rn
-    FROM scored
-  ) WHERE rn = 1
-),
-truth AS MATERIALIZED (
-  SELECT d.{label_col} AS y, p.pred AS pred
-  FROM documents d JOIN pred p ON d.doc_id = p.doc_id
-),
-per_class AS (
-  SELECT y AS label, count(*) AS n_docs,
-         round(count(*) / CAST(ntot.n AS DOUBLE), 4) AS prior,
-         round(sum(CAST(pred = y AS INT)) / CAST(count(*) AS DOUBLE), 4)
-           AS recall
-  FROM truth, ntot GROUP BY y, ntot.n
-)
-SELECT label, CAST(n_docs AS BIGINT) AS n_docs, prior, recall
-FROM per_class
-UNION ALL
-SELECT '__ALL__', CAST(count(*) AS BIGINT), 1.0,
-       round(avg(CAST(pred = y AS INT)), 4)
-FROM truth
-"""
-
-
 def test_naive_bayes_oracle_matches_spark(spark, con):
     from eggv_spark.operators.ml import naive_bayes_fit
 
@@ -119,36 +43,8 @@ def test_naive_bayes_oracle_matches_spark(spark, con):
     con.register(
         "documents", pd.DataFrame(DOCS, columns=["doc_id", "text", "source"])
     )
-    exp = sorted(con.execute(naive_bayes_oracle_sql()).fetchall())
+    exp = sorted(con.execute(E._naive_bayes_oracle_sql()).fetchall())
     assert got == exp
-
-
-def wasserstein_oracle_sql(
-    group_col, val_cents_sql, group_a, group_b, table="events"
-) -> str:
-    return f"""
-WITH s AS (
-  SELECT CAST({val_cents_sql} AS BIGINT) AS v,
-         CAST({group_col} = '{group_a}' AS BIGINT) AS is_a
-  FROM {table} WHERE {group_col} IN ('{group_a}', '{group_b}')
-),
-per_v AS (SELECT v, sum(is_a) AS ca, count(*) - sum(is_a) AS cb
-          FROM s GROUP BY v),
-tot AS (SELECT sum(ca) AS na, sum(cb) AS nb FROM per_v),
-steps AS (
-  SELECT na, nb,
-         sum(ca) OVER cw AS pa, sum(cb) OVER cw AS pb,
-         lead(v) OVER (ORDER BY v) - v AS dv
-  FROM per_v, tot
-  WINDOW cw AS (ORDER BY v
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-)
-SELECT CAST(na AS BIGINT) AS n_a, CAST(nb AS BIGINT) AS n_b,
-       round(CAST(sum(abs(CAST(pa AS HUGEINT) * nb
-                          - CAST(pb AS HUGEINT) * na) * dv) AS DOUBLE)
-             / (na * nb), 6) AS wasserstein_cents
-FROM steps WHERE dv IS NOT NULL GROUP BY na, nb
-"""
 
 
 def test_wasserstein_oracle_matches_spark(spark, con):
@@ -163,7 +59,7 @@ def test_wasserstein_oracle_matches_spark(spark, con):
     got = tuple(wasserstein_1d(df, "g", "cents", "a", "b").collect()[0])
     con.register("events", pd.DataFrame(rows, columns=["g", "cents"]))
     exp = con.execute(
-        wasserstein_oracle_sql("g", "cents", "a", "b")
+        E._wasserstein_oracle_sql("g", "cents", "a", "b")
     ).fetchall()[0]
     assert got == exp
 
@@ -202,25 +98,6 @@ def test_token_entropy_oracle_matches_spark(spark, con):
     assert got == exp
 
 
-def ngram_diversity_oracle_sql(by_col, sizes) -> str:
-    blocks = []
-    for n in sizes:
-        blocks.append(f"""
-SELECT {by_col}, {n} AS ngram_size,
-       CAST(sum(c) AS BIGINT) AS total_ngrams,
-       CAST(count(*) AS BIGINT) AS distinct_ngrams,
-       round(count(*) / CAST(sum(c) AS DOUBLE), 6) AS diversity
-FROM (
-  SELECT {by_col}, g, count(*) AS c FROM (
-    SELECT {by_col},
-           array_to_string(t[i:i + {n - 1}], ' ') AS g
-    FROM (SELECT {by_col}, {TOKS} AS t FROM documents),
-         unnest(range(1, greatest(len(t) - {n - 1}, 0) + 1)) AS s(i)
-  ) GROUP BY {by_col}, g
-) GROUP BY {by_col}""")
-    return " UNION ALL ".join(blocks)
-
-
 def test_ngram_diversity_oracle_matches_spark(spark, con):
     from eggv_spark.operators.text_analysis import ngram_diversity
 
@@ -232,36 +109,9 @@ def test_ngram_diversity_oracle_matches_spark(spark, con):
     con.register(
         "documents", pd.DataFrame(DOCS, columns=["doc_id", "text", "source"])
     )
-    exp = sorted(
-        con.execute(ngram_diversity_oracle_sql("source", (1, 2, 3))).fetchall()
-    )
+    sql = E._ngram_diversity_oracle_sql("source", (1, 2, 3))
+    exp = sorted(con.execute(sql).fetchall())
     assert got == exp
-
-
-def audio_silence_oracle_sql(n_samples: int, threshold: int) -> str:
-    """Formula-recomputed silence report for synthesize_wav_audio
-    assets: sample i of doc d is ((d*31 + i*17) % 4096) - 2048."""
-    return f"""
-WITH samp AS (
-  SELECT d.doc_id AS asset_id, i.i AS i,
-         (d.doc_id * 31 + i.i * 17) % 4096 - 2048 AS v
-  FROM documents d, (SELECT unnest(range(0, {n_samples})) AS i) i
-),
-flags AS (
-  SELECT asset_id, i, CAST(abs(v) < {threshold} AS INT) AS silent
-  FROM samp
-)
-SELECT asset_id, CAST({n_samples} AS BIGINT) AS n_samples,
-       CAST(sum(silent) AS BIGINT) AS n_silent,
-       floor(sum(silent) / CAST({n_samples} AS DOUBLE) * 10000 + 0.5)
-         / 10000 AS silence_ratio,
-       CAST(coalesce(min(CASE WHEN silent = 0 THEN i END),
-                     {n_samples}) AS BIGINT) AS lead_silence,
-       CAST(coalesce({n_samples} - 1
-                     - max(CASE WHEN silent = 0 THEN i END),
-                     {n_samples}) AS BIGINT) AS trail_silence
-FROM flags GROUP BY asset_id
-"""
 
 
 def test_audio_silence_oracle_matches_spark(spark, con):
@@ -282,6 +132,6 @@ def test_audio_silence_oracle_matches_spark(spark, con):
         "documents", pd.DataFrame(rows, columns=["doc_id", "text", "source"])
     )
     exp = sorted(
-        con.execute(audio_silence_oracle_sql(64, 512)).fetchall()
+        con.execute(E._audio_silence_oracle_sql(64, 512)).fetchall()
     )
     assert got == exp

@@ -1,6 +1,6 @@
-"""DuckDB oracle drafts for the round-9c staged wave, validated
-side-by-side against the Spark implementations on small fixtures AND
-the sf0.001 parquet tables.
+"""Oracle checks for the round-9c wave: each operator, built through
+its library call on small fixtures and on the sf0.001 parquet tables,
+against its registry generator from ``__spark_entry__.py``.
 
 Non-obvious encodings proven here:
 
@@ -23,253 +23,19 @@ Non-obvious encodings proven here:
 
 from __future__ import annotations
 
-import duckdb
-import pandas as pd
-import pytest
-
-
-@pytest.fixture()
-def con():
-    c = duckdb.connect()
-    yield c
-    c.close()
-
-
-def kmeans_oracle_sql(k: int, n_steps: int, dim: int) -> str:
-    dist = (
-        "round(list_sum(list_transform(generate_series(1, {d}), "
-        "i -> (v[i] - cv[i]) * (v[i] - cv[i]))), 6)"
-    ).format(d=dim)
-    parts = [
-        f"""
-v AS MATERIALIZED (
-  SELECT vec_id,
-         list_transform(embedding[1:{dim}], x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
-),
-c0 AS MATERIALIZED (
-  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, v AS cv
-  FROM (SELECT vec_id, v FROM v ORDER BY vec_id LIMIT {k})
-)"""
-    ]
-    for s in range(n_steps):
-        parts.append(f"""
-d{s} AS MATERIALIZED (
-  SELECT vec_id, v, cid, {dist} AS sqd FROM v CROSS JOIN c{s}
-),
-a{s} AS MATERIALIZED (
-  SELECT vec_id, v, cid FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id
-                                 ORDER BY sqd, cid) AS rk
-    FROM d{s}) WHERE rk = 1
-),
-m{s} AS MATERIALIZED (
-  SELECT cid, i,
-         CAST(sum(CAST(v[i] AS DECIMAL(38,18))) AS DOUBLE) / count(*) AS m
-  FROM a{s}, generate_series(1, {dim}) t(i) GROUP BY cid, i
-),
-c{s + 1} AS MATERIALIZED (
-  SELECT p.cid AS cid, coalesce(n.cv, p.cv) AS cv
-  FROM c{s} p LEFT JOIN (
-    SELECT cid, list(m ORDER BY i) AS cv FROM m{s} GROUP BY cid
-  ) n ON p.cid = n.cid
-)""")
-    final = f"""
-df AS MATERIALIZED (
-  SELECT vec_id, cid, {dist} AS sqd FROM v CROSS JOIN c{n_steps}
-),
-af AS MATERIALIZED (
-  SELECT vec_id, cid, sqd FROM (
-    SELECT *, row_number() OVER (PARTITION BY vec_id
-                                 ORDER BY sqd, cid) AS rk
-    FROM df) WHERE rk = 1
-),
-mem AS (
-  SELECT cid, count(*) AS n_points, round(sum(sqd), 2) AS inertia
-  FROM af GROUP BY cid
-)
-SELECT CAST(c.cid AS INT) AS cluster_id,
-       CAST(coalesce(mem.n_points, 0) AS BIGINT) AS n_points,
-       coalesce(mem.inertia, 0.0) AS inertia,
-       round(sqrt(list_sum(list_transform(c.cv, x -> x * x))), 4)
-         AS centroid_norm
-FROM c{n_steps} c LEFT JOIN mem ON c.cid = mem.cid
-"""
-    return "WITH " + ",".join(parts) + "," + final
-
-
-def isotonic_oracle_sql(bin_sql: str, label_sql: str, table: str) -> str:
-    return f"""
-WITH bins AS MATERIALIZED (
-  SELECT CAST({bin_sql} AS BIGINT) AS b, count(*) AS n,
-         sum(CAST({label_sql} AS BIGINT)) AS pos
-  FROM {table} GROUP BY 1
-),
-pre AS MATERIALIZED (
-  SELECT b, n, pos, sum(n) OVER w AS cn, sum(pos) OVER w AS cp
-  FROM bins
-  WINDOW w AS (ORDER BY b
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-),
-ranges AS MATERIALIZED (
-  SELECT lo.b AS i, hi.b AS j,
-         (hi.cp - lo.cp + lo.pos)
-           / CAST(hi.cn - lo.cn + lo.n AS DOUBLE) AS a
-  FROM pre lo JOIN pre hi ON lo.b <= hi.b
-),
-iso AS (
-  SELECT b, max(mn) AS iso FROM (
-    SELECT p.b AS b, r.i AS i, min(r.a) AS mn
-    FROM ranges r JOIN pre p ON r.i <= p.b AND p.b <= r.j
-    GROUP BY p.b, r.i
-  ) GROUP BY b
-)
-SELECT pre.b AS bin, pre.n AS n,
-       round(pre.pos / CAST(pre.n AS DOUBLE), 6) AS pos_rate,
-       round(iso.iso, 6) AS iso_rate
-FROM pre JOIN iso ON pre.b = iso.b
-"""
-
-
-def acf_oracle_sql(n_lags: int, table: str = "events") -> str:
-    return f"""
-WITH daily AS MATERIALIZED (
-  SELECT CAST(ts AS DATE) AS day, count(*) AS c FROM {table} GROUP BY 1
-),
-span AS (SELECT min(day) AS d0, max(day) AS d1 FROM daily),
-spine AS MATERIALIZED (
-  SELECT CAST(unnest(generate_series(d0, d1, INTERVAL 1 DAY)) AS DATE)
-    AS day
-  FROM span
-),
-series AS MATERIALIZED (
-  SELECT spine.day AS day, coalesce(daily.c, 0) AS x
-  FROM spine LEFT JOIN daily ON spine.day = daily.day
-),
-mu AS (
-  SELECT sum(x) / CAST(count(*) AS DOUBLE) AS mu,
-         CAST(sum(x * x) AS DOUBLE)
-           - CAST(sum(x) AS DOUBLE) * sum(x) / count(*) AS den
-  FROM series
-),
-lags AS (SELECT unnest(range(1, {n_lags} + 1)) AS l),
-pairs AS MATERIALIZED (
-  SELECT lg.l AS l, a.x AS x, b.x AS xl
-  FROM series a JOIN lags lg ON TRUE
-       JOIN series b ON b.day = a.day + CAST(lg.l AS INTEGER)
-)
-SELECT CAST(l AS INT) AS lag, count(*) AS n_pairs,
-       CASE WHEN any_value(mu.den) = 0 THEN NULL
-            ELSE round(sum((x - mu.mu) * (xl - mu.mu))
-                       / any_value(mu.den), 6) END AS acf
-FROM pairs, mu GROUP BY l
-"""
-
-
-def image_entropy_oracle_sql(n_bytes: int) -> str:
-    """Formula-recomputed entropy report for synthesize_ppm_images
-    assets (pixel byte i of doc d is (d*7 + i*13) % 256); the fold
-    order is pinned to sorted intensity on both sides."""
-    return f"""
-WITH px AS MATERIALIZED (
-  SELECT d.doc_id AS asset_id, (d.doc_id * 7 + i.i * 13) % 256 AS v
-  FROM documents d, (SELECT unnest(range(0, {n_bytes})) AS i) i
-),
-hist AS MATERIALIZED (
-  SELECT asset_id, v, count(*) AS c FROM px GROUP BY asset_id, v
-),
-folded AS (
-  SELECT asset_id, list(c ORDER BY v) AS h, sum(c) AS n,
-         count(*) AS nd, max(c) AS mx
-  FROM hist GROUP BY asset_id
-)
-SELECT asset_id, CAST(n AS BIGINT) AS n_bytes,
-       CAST(nd AS BIGINT) AS n_distinct,
-       floor(-list_sum(list_transform(h, c ->
-           (c / CAST(n AS DOUBLE)) * ln(c / CAST(n AS DOUBLE))))
-           * 10000 + 0.5) / 10000 AS entropy,
-       floor(mx / CAST(n AS DOUBLE) * 10000 + 0.5) / 10000 AS max_share
-FROM folded
-"""
-
-
-def coherence_scored_cte(dim: int) -> str:
-    return f"""
-v AS MATERIALIZED (
-  SELECT vec_id, label,
-         list_transform(embedding[1:{dim}], x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
-),
-dims AS MATERIALIZED (
-  SELECT label, i,
-         CAST(sum(CAST(v[i] AS DECIMAL(38,18))) AS DOUBLE) / count(*) AS m
-  FROM v, generate_series(1, {dim}) t(i) GROUP BY label, i
-),
-cent AS MATERIALIZED (
-  SELECT label, list(m ORDER BY i) AS c FROM dims GROUP BY label
-),
-scored AS MATERIALIZED (
-  SELECT v.vec_id AS vec_id, v.label AS label,
-         list_sum(list_transform(generate_series(1, {dim}),
-                  i -> v.v[i] * cent.c[i]))
-         / (sqrt(list_sum(list_transform(v.v, x -> x * x)))
-            * sqrt(list_sum(list_transform(cent.c, x -> x * x)))) AS cos
-  FROM v JOIN cent ON v.label = cent.label
-)"""
-
-
-def coherence_oracle_sql(dim: int, thr: float) -> str:
-    return (
-        "WITH " + coherence_scored_cte(dim) + f"""
-SELECT label, count(*) AS n, round(avg(cos), 4) AS avg_cos,
-       round(min(cos), 4) AS min_cos,
-       CAST(sum(CAST(cos < {thr} AS BIGINT)) AS BIGINT) AS n_low
-FROM scored GROUP BY label
-"""
-    )
-
-
-def coherence_gate_oracle_sql(dim: int, thr: float) -> str:
-    return (
-        "WITH " + coherence_scored_cte(dim) + f"""
-SELECT label, count(*) AS n_total,
-       CAST(sum(CAST(cos >= {thr} AS BIGINT)) AS BIGINT) AS n_kept,
-       round(sum(CAST(cos >= {thr} AS BIGINT))
-             / CAST(count(*) AS DOUBLE), 4) AS kept_share,
-       round(avg(CASE WHEN cos >= {thr} THEN cos END), 4)
-         AS avg_cos_kept
-FROM scored GROUP BY label
-"""
-    )
-
-
-SF_DIR = "/root/testdata/sf0.001"
-
-
-def _register_sf(con, tables):
-    for t in tables:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-
-
-def _cmp(spark_df, con, sql):
-    got = sorted(tuple(r) for r in spark_df.collect())
-    exp = sorted(tuple(r) for r in con.execute(sql).fetchall())
-    assert got == exp, f"\ngot : {got[:6]}\nexp : {exp[:6]}"
+import __spark_entry__ as E
+from tests.conftest import SF_DIR, assert_matches_oracle
 
 
 def test_kmeans_oracle_matches_spark_sf0001(spark, con):
     from eggv_spark.operators.ml import kmeans_lloyd
     from eggv_spark.sources.readers import read_table
 
-    _register_sf(con, ["embeddings"])
     df = read_table(spark, SF_DIR, "embeddings")
-    _cmp(
+    assert_matches_oracle(
         kmeans_lloyd(df, k=4, n_steps=3, dim=16),
         con,
-        kmeans_oracle_sql(k=4, n_steps=3, dim=16),
+        E._kmeans_lloyd_oracle_sql(k=4, n_steps=3, dim=16),
     )
 
 
@@ -279,16 +45,15 @@ def test_isotonic_oracle_matches_spark_sf0001(spark, con):
     from eggv_spark.operators.ml import isotonic_calibration
     from eggv_spark.sources.readers import read_table
 
-    _register_sf(con, ["lineitem"])
     li = read_table(spark, SF_DIR, "lineitem")
-    _cmp(
+    assert_matches_oracle(
         isotonic_calibration(
             li,
             F.round(F.col("l_discount") * 100).cast("long"),
             (F.col("l_returnflag") == "R").cast("long"),
         ),
         con,
-        isotonic_oracle_sql(
+        E._isotonic_oracle_sql(
             "round(l_discount * 100)", "l_returnflag = 'R'", "lineitem"
         ),
     )
@@ -298,9 +63,10 @@ def test_acf_oracle_matches_spark_sf0001(spark, con):
     from eggv_spark.operators.events import acf_lags
     from eggv_spark.sources.readers import read_table
 
-    _register_sf(con, ["events"])
     ev = read_table(spark, SF_DIR, "events")
-    _cmp(acf_lags(ev, "ts", n_lags=7), con, acf_oracle_sql(7))
+    assert_matches_oracle(
+        acf_lags(ev, "ts", n_lags=7), con, E._acf_oracle_sql(7)
+    )
 
 
 def test_image_entropy_oracle_matches_spark_sf0001(spark, con):
@@ -310,12 +76,11 @@ def test_image_entropy_oracle_matches_spark_sf0001(spark, con):
     )
     from eggv_spark.sources.readers import read_table
 
-    _register_sf(con, ["documents"])
     docs = read_table(spark, SF_DIR, "documents")
-    _cmp(
+    assert_matches_oracle(
         image_entropy_report(synthesize_ppm_images(docs)),
         con,
-        image_entropy_oracle_sql(48),
+        E._image_entropy_oracle_sql(48),
     )
 
 
@@ -323,12 +88,11 @@ def test_coherence_oracle_matches_spark_sf0001(spark, con):
     from eggv_spark.operators.similarity import embedding_coherence
     from eggv_spark.sources.readers import read_table
 
-    _register_sf(con, ["embeddings"])
     df = read_table(spark, SF_DIR, "embeddings")
-    _cmp(
+    assert_matches_oracle(
         embedding_coherence(df, dim=16, low_threshold=0.5),
         con,
-        coherence_oracle_sql(16, 0.5),
+        E._coherence_oracle_sql(16, 0.5),
     )
 
 
@@ -338,7 +102,6 @@ def test_coherence_gate_oracle_matches_spark_sf0001(spark, con):
     from eggv_spark.operators.similarity import centroid_cosine
     from eggv_spark.sources.readers import read_table
 
-    _register_sf(con, ["embeddings"])
     df = read_table(spark, SF_DIR, "embeddings")
     thr = 0.5
     scored = centroid_cosine(df, dim=16)
@@ -354,4 +117,4 @@ def test_coherence_gate_oracle_matches_spark_sf0001(spark, con):
             F.avg(F.when(F.col("_cos") >= thr, F.col("_cos"))), 4
         ).alias("avg_cos_kept"),
     )
-    _cmp(gate, con, coherence_gate_oracle_sql(16, thr))
+    assert_matches_oracle(gate, con, E._coherence_gate_oracle_sql(16, thr))

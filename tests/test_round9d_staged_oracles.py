@@ -1,5 +1,6 @@
-"""DuckDB oracle drafts for the round-9d staged wave, validated
-side-by-side against the Spark implementations at sf0.001.
+"""Oracle checks for the round-9d wave: each operator, built through
+its library call at sf0.001, against its registry generator from
+``__spark_entry__.py``.
 
 Non-obvious encodings proven here:
 
@@ -20,213 +21,8 @@ Non-obvious encodings proven here:
 
 from __future__ import annotations
 
-import duckdb
-import pandas as pd
-import pytest
-
-
-@pytest.fixture()
-def con():
-    c = duckdb.connect()
-    yield c
-    c.close()
-
-
-SF_DIR = "/root/testdata/sf0.001"
-
-TOKS = "list_filter(regexp_split_to_array(lower(text), '\\s+'), t -> t <> '')"
-
-
-def _register_sf(con, tables):
-    for t in tables:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-
-
-def _cmp(spark_df, con, sql):
-    got = sorted(tuple(r) for r in spark_df.collect())
-    exp = sorted(tuple(r) for r in con.execute(sql).fetchall())
-    assert got == exp, f"\ngot : {got[:8]}\nexp : {exp[:8]}"
-
-
-def stump_oracle_sql(dim: int, thresholds: tuple) -> str:
-    vals = ", ".join(
-        f"({ti}, CAST({t!r} AS DOUBLE))" for ti, t in enumerate(thresholds)
-    )
-    return f"""
-WITH vv AS MATERIALIZED (
-  SELECT CAST(label >= 5 AS BIGINT) AS y,
-         list_transform(embedding[1:{dim}], x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
-),
-pts AS MATERIALIZED (
-  SELECT y, i AS d, v[i] AS x FROM vv, generate_series(1, {dim}) t(i)
-),
-thr(ti, t) AS (VALUES {vals}),
-cand AS MATERIALIZED (
-  SELECT d, ti, t, count(*) AS n,
-         sum(y * CAST(x <= t AS BIGINT)) AS lpos,
-         sum((1 - y) * CAST(x <= t AS BIGINT)) AS lneg,
-         sum(y) AS pos
-  FROM pts CROSS JOIN thr GROUP BY d, ti, t
-),
-scored AS (
-  SELECT d, ti, t, n,
-         least(lneg + (pos - lpos), lpos + (n - pos - lneg)) AS err,
-         CASE WHEN lneg + (pos - lpos) <= lpos + (n - pos - lneg)
-              THEN 'left_pos' ELSE 'right_pos' END AS pol
-  FROM cand
-)
-SELECT CAST(d AS INT) AS dim, t AS threshold, pol AS polarity,
-       CAST(n AS BIGINT) AS n, CAST(err AS BIGINT) AS n_errors,
-       round(err / CAST(n AS DOUBLE), 6) AS error_rate
-FROM scored ORDER BY err, d, ti LIMIT 1
-"""
-
-
-TRADE_EDGES_CTE = """
-e AS MATERIALIZED (
-  SELECT c.c_nationkey AS s, su.s_nationkey AS d,
-         CAST(count(*) AS HUGEINT) AS w
-  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-       JOIN customer c ON o.o_custkey = c.c_custkey
-       JOIN supplier su ON l.l_suppkey = su.s_suppkey
-  GROUP BY 1, 2
-),
-nodes AS MATERIALIZED (
-  SELECT DISTINCT v FROM (
-    SELECT s AS v FROM e UNION ALL SELECT d AS v FROM e
-  )
-)"""
-
-
-def hits_oracle_sql(n_rounds: int) -> str:
-    parts = [TRADE_EDGES_CTE + """,
-h0 AS (SELECT v, CAST(1 AS HUGEINT) AS h FROM nodes)"""]
-    for r in range(n_rounds):
-        parts.append(f"""
-a{r + 1} AS MATERIALIZED (
-  SELECT n.v AS v, coalesce(x.a, 0) AS a FROM nodes n LEFT JOIN (
-    SELECT e.d AS v, sum(e.w * h{r}.h) AS a
-    FROM e JOIN h{r} ON e.s = h{r}.v GROUP BY e.d
-  ) x ON n.v = x.v
-),
-h{r + 1} AS MATERIALIZED (
-  SELECT n.v AS v, coalesce(x.h, 0) AS h FROM nodes n LEFT JOIN (
-    SELECT e.s AS v, sum(e.w * a{r + 1}.a) AS h
-    FROM e JOIN a{r + 1} ON e.d = a{r + 1}.v GROUP BY e.s
-  ) x ON n.v = x.v
-)""")
-    last = n_rounds
-    final = f"""
-SELECT CAST(a{last}.v AS INT) AS node,
-       round(CAST(a{last}.a AS DOUBLE)
-             / CAST((SELECT max(a) FROM a{last}) AS DOUBLE), 6)
-         AS authority,
-       round(CAST(h{last}.h AS DOUBLE)
-             / CAST((SELECT max(h) FROM h{last}) AS DOUBLE), 6) AS hub
-FROM a{last} JOIN h{last} ON a{last}.v = h{last}.v
-"""
-    return "WITH " + ",".join(parts) + final
-
-
-_COS = (
-    "list_sum(list_transform(generate_series(1, {dim}),"
-    " i -> {a}[i] * {b}[i]))"
-    " / (sqrt(list_sum(list_transform({a}, x -> x * x)))"
-    " * sqrt(list_sum(list_transform({b}, x -> x * x))))"
-)
-
-
-def mmr_oracle_sql(
-    query_id: int, dim: int, n_candidates: int, k: int, lam: float
-) -> str:
-    lam_r = repr(float(lam))
-    pen_r = repr(1.0 - lam)
-    parts = [f"""
-v AS MATERIALIZED (
-  SELECT vec_id,
-         list_transform(embedding[1:{dim}], x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
-),
-q AS (SELECT v AS qv FROM v WHERE vec_id = {query_id}),
-cand AS MATERIALIZED (
-  SELECT vec_id, rel, v FROM (
-    SELECT vec_id, v,
-           round({_COS.format(dim=dim, a='v', b='qv')}, 6) AS rel
-    FROM v, q WHERE vec_id <> {query_id}
-  ) ORDER BY rel DESC, vec_id LIMIT {n_candidates}
-),
-pairs AS MATERIALIZED (
-  SELECT a.vec_id AS ia, b.vec_id AS ib,
-         round({_COS.format(dim=dim, a='a.v', b='b.v')}, 6) AS sim
-  FROM cand a JOIN cand b ON a.vec_id <> b.vec_id
-),
-s1 AS MATERIALIZED (
-  SELECT 1 AS "rank", vec_id AS id, rel AS relevance, rel AS mmr_score
-  FROM cand ORDER BY rel DESC, vec_id LIMIT 1
-),
-sel1 AS (SELECT id FROM s1)"""]
-    for step in range(2, k + 1):
-        parts.append(f"""
-p{step} AS MATERIALIZED (
-  SELECT c.vec_id AS id, c.rel AS rel,
-         round({lam_r} * c.rel - {pen_r} * (
-           SELECT max(p.sim) FROM pairs p
-           WHERE p.ia = c.vec_id
-             AND p.ib IN (SELECT id FROM sel{step - 1})
-         ), 6) AS score
-  FROM cand c
-  WHERE c.vec_id NOT IN (SELECT id FROM sel{step - 1})
-),
-s{step} AS MATERIALIZED (
-  SELECT {step} AS "rank", id, rel AS relevance, score AS mmr_score
-  FROM p{step} ORDER BY score DESC, id LIMIT 1
-),
-sel{step} AS (
-  SELECT id FROM sel{step - 1} UNION ALL SELECT id FROM s{step}
-)""")
-    union = " UNION ALL ".join(f"SELECT * FROM s{s}" for s in range(1, k + 1))
-    return "WITH " + ",".join(parts) + "\n" + union
-
-
-def rake_oracle_sql(top_k: int, stopwords: tuple) -> str:
-    stop_list = ", ".join(f"'{w}'" for w in stopwords)
-    return f"""
-WITH phr AS MATERIALIZED (
-  SELECT trim(p) AS phrase FROM (
-    SELECT unnest(string_split(array_to_string(
-      list_transform({TOKS},
-        t -> CASE WHEN t IN ({stop_list}) THEN '|' ELSE t END),
-      ' '), '|')) AS p
-    FROM documents
-  ) WHERE trim(p) <> ''
-),
-pw AS MATERIALIZED (
-  SELECT phrase, unnest(string_split(phrase, ' ')) AS w,
-         len(string_split(phrase, ' ')) AS plen
-  FROM phr
-),
-word_stats AS MATERIALIZED (
-  SELECT w, sum(plen) / CAST(count(*) AS DOUBLE) AS score
-  FROM pw GROUP BY w
-),
-phrase_scores AS MATERIALIZED (
-  SELECT pw.phrase AS phrase, sum(ws.score) AS raw
-  FROM pw JOIN word_stats ws ON pw.w = ws.w
-  GROUP BY pw.phrase
-),
-counts AS (
-  SELECT phrase, count(*) AS n_occurrences FROM phr GROUP BY phrase
-)
-SELECT ps.phrase AS phrase,
-       CAST(c.n_occurrences AS BIGINT) AS n_occurrences,
-       round(ps.raw / c.n_occurrences, 4) AS rake_score
-FROM phrase_scores ps JOIN counts c ON ps.phrase = c.phrase
-ORDER BY rake_score DESC, phrase LIMIT {top_k}
-"""
+import __spark_entry__ as E
+from tests.conftest import SF_DIR, assert_matches_oracle
 
 
 def test_stump_oracle_matches_spark_sf0001(spark, con):
@@ -235,39 +31,37 @@ def test_stump_oracle_matches_spark_sf0001(spark, con):
     from eggv_spark.operators.ml import decision_stump_fit
     from eggv_spark.sources.readers import read_table
 
-    _register_sf(con, ["embeddings"])
     emb = read_table(spark, SF_DIR, "embeddings").select(
         "embedding", (F.col("label") >= 5).cast("long").alias("label")
     )
     thresholds = (-0.3, -0.2, -0.1, 0.0, 0.1, 0.2, 0.3)
-    _cmp(
+    assert_matches_oracle(
         decision_stump_fit(emb, dim=16, thresholds=thresholds),
         con,
-        stump_oracle_sql(16, thresholds),
+        E._stump_oracle_sql(16, thresholds),
     )
 
 
 def test_hits_oracle_matches_spark_sf0001(spark, con):
-    import __spark_entry__ as entrymod
     from eggv_spark.operators.graph import hits_scores
 
-    _register_sf(con, ["lineitem", "orders", "customer", "supplier"])
-    edges = entrymod._trade_edges(spark, SF_DIR)
-    _cmp(hits_scores(edges, n_rounds=2), con, hits_oracle_sql(2))
+    edges = E._trade_edges(spark, SF_DIR)
+    assert_matches_oracle(
+        hits_scores(edges, n_rounds=2), con, E._hits_oracle_sql(2)
+    )
 
 
 def test_mmr_oracle_matches_spark_sf0001(spark, con):
     from eggv_spark.operators.similarity import mmr_diversify
     from eggv_spark.sources.readers import read_table
 
-    _register_sf(con, ["embeddings"])
     emb = read_table(spark, SF_DIR, "embeddings")
-    _cmp(
+    assert_matches_oracle(
         mmr_diversify(
             emb, query_id=0, dim=16, n_candidates=20, k=5, lam=0.7
         ),
         con,
-        mmr_oracle_sql(0, 16, 20, 5, 0.7),
+        E._mmr_oracle_sql(0, 16, 20, 5, 0.7),
     )
 
 
@@ -278,10 +72,9 @@ def test_rake_oracle_matches_spark_sf0001(spark, con):
     )
     from eggv_spark.sources.readers import read_table
 
-    _register_sf(con, ["documents"])
     docs = read_table(spark, SF_DIR, "documents")
-    _cmp(
+    assert_matches_oracle(
         rake_keywords(docs, top_k=15),
         con,
-        rake_oracle_sql(15, RAKE_STOPWORDS),
+        E._rake_oracle_sql(15, RAKE_STOPWORDS),
     )

@@ -1,6 +1,7 @@
 """Property + oracle tests for the round-9e staged wave: the JL
 sign-projection distortion audit and the RAG context-assembly
-composite.
+composite (its sf0.001 oracle check is in
+tests/test_registry_oracles.py).
 
 Staging lessons this wave encodes:
 
@@ -17,34 +18,11 @@ from __future__ import annotations
 
 import math
 
-import duckdb
-import pandas as pd
 import pytest
 
 from pyspark.sql import functions as F
 
-SF_DIR = "/root/testdata/sf0.001"
-
-
-@pytest.fixture()
-def con():
-    c = duckdb.connect()
-    yield c
-    c.close()
-
-
-def _register_sf(con, tables):
-    for t in tables:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-
-
-def _cmp(spark_df, con, sql):
-    got = sorted(tuple(r) for r in spark_df.collect())
-    exp = sorted(tuple(r) for r in con.execute(sql).fetchall())
-    assert got == exp, f"\ngot : {got[:8]}\nexp : {exp[:8]}"
+from tests.conftest import SF_DIR, assert_matches_oracle
 
 
 def test_jl_projection_matches_python(spark):
@@ -115,9 +93,8 @@ def test_jl_oracle_matches_spark_sf0001(spark, con):
     )
     from eggv_spark.sources.readers import read_table
 
-    _register_sf(con, ["embeddings"])
     emb = read_table(spark, SF_DIR, "embeddings")
-    _cmp(
+    assert_matches_oracle(
         random_projection_distortion(emb, in_dim=16, out_dim=8),
         con,
         entrymod._random_projection_oracle_sql(16, 8),
@@ -138,14 +115,3 @@ def test_rag_pipeline_budget_fill_semantics(spark):
         assert cum <= entrymod._RAG_BUDGET_TOKENS
     # ranks are a prefix of the MMR selection order
     assert [r["rank"] for r in rows] == list(range(1, len(rows) + 1))
-
-
-def test_rag_pipeline_oracle_matches_spark_sf0001(spark, con):
-    import __spark_entry__ as entrymod
-
-    _register_sf(con, ["embeddings", "documents"])
-    _cmp(
-        entrymod._composite_rag_pipeline(spark, SF_DIR),
-        con,
-        entrymod._rag_pipeline_oracle_sql(entrymod._RAG_BUDGET_TOKENS),
-    )

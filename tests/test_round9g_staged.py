@@ -1,6 +1,7 @@
-"""Property + oracle tests for the round-9g staged wave: the
+"""Property tests for the round-9g staged wave: the
 difference-in-differences estimator and the IVF-kNN classification
-eval composite.
+eval composite (their sf0.001 oracle checks are in
+tests/test_registry_oracles.py).
 
 Staging lessons this wave encodes:
 
@@ -18,34 +19,11 @@ from __future__ import annotations
 
 import math
 
-import duckdb
-import pandas as pd
 import pytest
 
 from pyspark.sql import functions as F
 
-SF_DIR = "/root/testdata/sf0.001"
-
-
-@pytest.fixture()
-def con():
-    c = duckdb.connect()
-    yield c
-    c.close()
-
-
-def _register_sf(con, tables):
-    for t in tables:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-
-
-def _cmp(spark_df, con, sql):
-    got = sorted(tuple(r) for r in spark_df.collect())
-    exp = sorted(tuple(r) for r in con.execute(sql).fetchall())
-    assert got == exp, f"\ngot : {got[:8]}\nexp : {exp[:8]}"
+from tests.conftest import SF_DIR
 
 
 # --- did_estimator ----------------------------------------------------------
@@ -107,17 +85,6 @@ def test_did_rejects_null_flags(spark):
         did_estimator(df).collect()
 
 
-def test_did_oracle_matches_spark_sf0001(spark, con):
-    import __spark_entry__ as entrymod
-
-    _register_sf(con, ["events"])
-    _cmp(
-        entrymod._did_estimator(spark, SF_DIR),
-        con,
-        entrymod._did_oracle_sql(),
-    )
-
-
 # --- composite_knn_eval -----------------------------------------------------
 
 
@@ -151,14 +118,3 @@ def test_knn_vote_tie_goes_to_smallest_label(spark):
         ).alias("_pred")
     )
     assert pred.collect()[0]["_pred"] == 1
-
-
-def test_knn_eval_oracle_matches_spark_sf0001(spark, con):
-    import __spark_entry__ as entrymod
-
-    _register_sf(con, ["embeddings"])
-    _cmp(
-        entrymod._composite_knn_eval(spark, SF_DIR),
-        con,
-        entrymod._knn_eval_oracle_sql(),
-    )

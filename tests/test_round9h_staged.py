@@ -12,18 +12,10 @@ from __future__ import annotations
 
 import math
 
-import duckdb
 import numpy as np
 import pytest
 
-SF_DIR = "/root/testdata/sf0.001"
-
-
-@pytest.fixture()
-def con():
-    c = duckdb.connect()
-    yield c
-    c.close()
+from tests.conftest import SF_DIR, assert_matches_oracle
 
 
 def test_pca2_recovers_planted_spectrum(spark):
@@ -57,22 +49,11 @@ def test_pca2_oracle_matches_spark_sf0001(spark, con):
     from eggv_spark.operators.ml import pca_top2_deflation
     from eggv_spark.sources.readers import read_table
 
-    con.execute(
-        "CREATE VIEW embeddings AS SELECT * FROM "
-        f"read_parquet('{SF_DIR}/embeddings.parquet')"
-    )
-    emb = read_table(spark, SF_DIR, "embeddings")
     import __spark_entry__ as entrymod
 
-    got = sorted(
-        tuple(r) for r in pca_top2_deflation(
-            emb, n_steps=4, dim=64
-        ).collect()
+    emb = read_table(spark, SF_DIR, "embeddings")
+    assert_matches_oracle(
+        pca_top2_deflation(emb, n_steps=4, dim=64),
+        con,
+        entrymod._pca2_oracle_sql(4, 64),
     )
-    exp = sorted(
-        tuple(r)
-        for r in con.execute(
-            entrymod._pca2_oracle_sql(4, 64)
-        ).fetchall()
-    )
-    assert got == exp, f"\ngot: {got}\nexp: {exp}"

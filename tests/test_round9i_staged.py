@@ -2,38 +2,16 @@
 leave-one-out target encoding, propensity-score matching ATT, Monroe
 weighted log-odds, and the two-stage MaxSim re-rank.
 
-Each operator gets (a) a numpy/hand replica on planted data and (b)
-its DuckDB oracle draft validated at sf0.001 — the same SQL that
-registers in ``oracle_sql()``.
+Each operator gets a numpy/hand replica on planted data; its
+sf0.001 oracle check is in tests/test_registry_oracles.py.
 """
 
 from __future__ import annotations
 
 import math
 
-import duckdb
 import numpy as np
 import pytest
-
-SF_DIR = "/root/testdata/sf0.001"
-
-
-@pytest.fixture()
-def con():
-    c = duckdb.connect()
-    for t in ("events", "orders", "documents"):
-        c.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    yield c
-    c.close()
-
-
-def _spark_vs_oracle(spark, con, build_df, sql):
-    got = sorted(tuple(r) for r in build_df.collect())
-    exp = sorted(tuple(r) for r in con.execute(sql).fetchall())
-    assert got == exp, f"\ngot: {got[:5]}\nexp: {exp[:5]}"
 
 
 # ---------------------------------------------------------------------------
@@ -97,16 +75,6 @@ def test_mann_whitney_excludes_nulls_and_degenerate(spark):
     assert got["z_stat"] is None
 
 
-def test_mann_whitney_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        spark, con,
-        E._agg_mann_whitney(spark, SF_DIR),
-        E._MANN_WHITNEY_SQL,
-    )
-
-
 # ---------------------------------------------------------------------------
 # target_encode_loo
 # ---------------------------------------------------------------------------
@@ -138,16 +106,6 @@ def test_target_encode_loo_formula(spark):
     # NULL target: inference-time posterior over cat 'a'
     assert out[6] == pytest.approx(round((60 + 2 * prior) / (3 + 2), 6))
     assert len(out) == 6  # nothing silently dropped
-
-
-def test_target_encoding_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        spark, con,
-        E._fe_target_encoding(spark, SF_DIR),
-        E._TARGET_ENCODING_SQL,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -189,14 +147,6 @@ def test_psm_att_raises_on_null_flag(spark):
     )
     with pytest.raises(Exception, match="psm_att"):
         psm_att(df, "u", "t", "y", ["x"]).collect()
-
-
-def test_psm_att_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        spark, con, E._psm_att(spark, SF_DIR), E._PSM_ATT_SQL
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -241,14 +191,6 @@ def test_log_odds_z_formula(spark):
     assert alpha_row["count_a"] == 3 and alpha_row["count_b"] == 0
 
 
-def test_log_odds_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        spark, con, E._txt_log_odds(spark, SF_DIR), E._LOG_ODDS_SQL
-    )
-
-
 # ---------------------------------------------------------------------------
 # maxsim_rerank
 # ---------------------------------------------------------------------------
@@ -290,13 +232,3 @@ def test_maxsim_drops_empty_docs(spark):
     # doc 4 is a query id but has no tokens -> absent entirely
     assert all(r["query_id"] != 4 for r in out)
     assert all(r["neighbor_id"] != 4 for r in out)
-
-
-def test_maxsim_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        spark, con,
-        E._sim_maxsim_rerank(spark, SF_DIR),
-        E._maxsim_oracle_sql(40, 20, 3, 8, 16),
-    )

@@ -2,37 +2,16 @@
 coreset, TextRank keywords, Bloom-filter sizing audit, Wald SPRT,
 and IPS/SNIPS off-policy evaluation.
 
-Numpy/hand replicas on planted data + the DuckDB oracle drafts
-validated at sf0.001 (the same SQL registered in ``oracle_sql()``).
+Numpy/hand replicas on planted data; the sf0.001 oracle checks are
+in tests/test_registry_oracles.py.
 """
 
 from __future__ import annotations
 
 import math
 
-import duckdb
 import numpy as np
 import pytest
-
-SF_DIR = "/root/testdata/sf0.001"
-
-
-@pytest.fixture()
-def con():
-    c = duckdb.connect()
-    for t in ("events", "orders", "customer", "documents", "embeddings"):
-        c.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    yield c
-    c.close()
-
-
-def _spark_vs_oracle(spark, con, df, sql):
-    got = sorted(tuple(r) for r in df.collect())
-    exp = sorted(tuple(r) for r in con.execute(sql).fetchall())
-    assert got == exp, f"\ngot: {got[:6]}\nexp: {exp[:6]}"
 
 
 # ---------------------------------------------------------------------------
@@ -62,16 +41,6 @@ def test_kcenter_greedy_replica(spark):
     assert radii[0] >= radii[1] >= radii[2]
     # after one center per cluster, radius ~ intra-cluster spread
     assert radii[2] < 5.0
-
-
-def test_kcenter_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        spark, con,
-        E._sim_kcenter_coreset(spark, SF_DIR),
-        E._kcenter_oracle_sql(5, 64),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -108,16 +77,6 @@ def test_textrank_drops_stopwords(spark):
     assert {"cat", "hat", "mat"} <= toks
 
 
-def test_textrank_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        spark, con,
-        E._txt_textrank(spark, SF_DIR),
-        E._textrank_oracle_sql(3, 20),
-    )
-
-
 # ---------------------------------------------------------------------------
 # bloom_filter_audit
 # ---------------------------------------------------------------------------
@@ -140,14 +99,6 @@ def test_bloom_no_false_negatives(spark):
     assert 0.0 <= got["fp_rate"] <= 0.05  # 150/4096 fill -> tiny fp
     assert got["expected_fp_rate"] == pytest.approx(
         round((got["bits_set"] / 4096.0) ** 3, 6)
-    )
-
-
-def test_bloom_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        spark, con, E._tbl_bloom_probe(spark, SF_DIR), E._BLOOM_SQL
     )
 
 
@@ -193,14 +144,6 @@ def test_sprt_continues_on_null_drift(spark):
     assert got["n_total"] == 20 and got["conversions"] == 4
 
 
-def test_sprt_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        spark, con, E._evt_sprt(spark, SF_DIR), E._SPRT_SQL
-    )
-
-
 # ---------------------------------------------------------------------------
 # ips_policy_value
 # ---------------------------------------------------------------------------
@@ -239,11 +182,3 @@ def test_ips_raises_on_bad_propensity(spark):
     )
     with pytest.raises(Exception, match="ips_policy_value"):
         ips_policy_value(df, "a", "r", "p", "tgt").collect()
-
-
-def test_ips_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        spark, con, E._evt_ips_value(spark, SF_DIR), E._IPS_SQL
-    )

@@ -2,36 +2,14 @@
 regression stumps, personalized PageRank, Deming regression,
 group-aware k-fold, and the image near-dup band join.
 
-Numpy/hand replicas on planted data + the DuckDB oracle drafts
-validated at sf0.001 (the same SQL registered in ``oracle_sql()``).
+Numpy/hand replicas on planted data; the sf0.001 oracle checks are
+in tests/test_registry_oracles.py.
 """
 
 from __future__ import annotations
 
-import duckdb
 import numpy as np
 import pytest
-
-SF_DIR = "/root/testdata/sf0.001"
-
-
-@pytest.fixture()
-def con():
-    c = duckdb.connect()
-    for t in ("events", "orders", "customer", "supplier", "lineitem",
-              "documents", "embeddings"):
-        c.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    yield c
-    c.close()
-
-
-def _spark_vs_oracle(spark, con, df, sql):
-    got = sorted(tuple(r) for r in df.collect())
-    exp = sorted(tuple(r) for r in con.execute(sql).fetchall())
-    assert got == exp, f"\ngot: {got[:6]}\nexp: {exp[:6]}"
 
 
 # ---------------------------------------------------------------------------
@@ -70,16 +48,6 @@ def test_gbrt_reduces_sse_and_finds_planted_split(spark):
     assert all(a >= b for a, b in zip(sses, sses[1:]))
 
 
-def test_gbrt_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        spark, con,
-        E._gbrt_stumps(spark, SF_DIR),
-        E._gbrt_oracle_sql(3, 16),
-    )
-
-
 # ---------------------------------------------------------------------------
 # personalized_pagerank
 # ---------------------------------------------------------------------------
@@ -111,14 +79,6 @@ def test_ppr_concentrates_on_seed_neighborhood(spark):
     assert abs(ranks[0] + ranks[1] - 1.0) < 1e-9
 
 
-def test_ppr_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        spark, con, E._graph_ppr(spark, SF_DIR), E._ppr_oracle_sql(3)
-    )
-
-
 # ---------------------------------------------------------------------------
 # deming_regression
 # ---------------------------------------------------------------------------
@@ -146,14 +106,6 @@ def test_deming_replica_and_symmetry(spark):
     # slope (the property OLS lacks — that is the point of the op)
     swapped = deming_regression(df, "y", "x").collect()[0]
     assert swapped["slope"] == pytest.approx(1.0 / beta, abs=1e-5)
-
-
-def test_deming_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        spark, con, E._agg_deming(spark, SF_DIR), E._DEMING_SQL
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -192,14 +144,6 @@ def test_group_kfold_raises_on_null(spark):
         group_kfold_assign(df, "g", k=3).collect()
 
 
-def test_group_kfold_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        spark, con, E._smp_group_kfold(spark, SF_DIR), E._GROUP_KFOLD_SQL
-    )
-
-
 # ---------------------------------------------------------------------------
 # image_neardup_pairs
 # ---------------------------------------------------------------------------
@@ -235,13 +179,3 @@ def test_image_neardup_pigeonhole_guard(spark):
     hashed = spark.createDataFrame([(1, 3)], ["asset_id", "ahash"])
     with pytest.raises(AssertionError, match="pigeonhole"):
         image_neardup_pairs(hashed, n_bands=2, max_hamming=3)
-
-
-def test_image_neardup_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        spark, con,
-        E._mm_image_neardup(spark, SF_DIR),
-        E._IMAGE_NEARDUP_SQL,
-    )

@@ -2,8 +2,8 @@
 effects, AR(1) half-life, audio fingerprint dedup, contrastive
 training triplets, and the zone-map skipping audit.
 
-Hand replicas on planted data + the DuckDB oracle drafts validated
-at sf0.001 (the same SQL registered in ``oracle_sql()``).
+Hand replicas on planted data; the sf0.001 oracle checks are in
+tests/test_registry_oracles.py.
 """
 
 from __future__ import annotations
@@ -11,28 +11,9 @@ from __future__ import annotations
 import datetime
 import math
 
-import duckdb
 import pytest
 
-SF_DIR = "/root/testdata/sf0.001"
-
-
-@pytest.fixture()
-def con():
-    c = duckdb.connect()
-    for t in ("events", "orders", "documents"):
-        c.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    yield c
-    c.close()
-
-
-def _spark_vs_oracle(spark, con, df, sql):
-    got = sorted(tuple(r) for r in df.collect())
-    exp = sorted(tuple(r) for r in con.execute(sql).fetchall())
-    assert got == exp, f"\ngot: {got[:6]}\nexp: {exp[:6]}"
+from tests.conftest import SF_DIR
 
 
 def _d(s):
@@ -84,16 +65,6 @@ def test_event_study_unmatched_days_drop_out(spark):
     assert out[0]["n_unmatched"] == 1 and out[0]["effect"] is None
 
 
-def test_event_study_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        spark, con,
-        E._evt_event_study(spark, SF_DIR),
-        E._EVENT_STUDY_SQL,
-    )
-
-
 # ---------------------------------------------------------------------------
 # ar1_halflife
 # ---------------------------------------------------------------------------
@@ -139,14 +110,6 @@ def test_ar1_halflife_null_outside_unit_interval(spark):
     assert got["halflife"] is None
 
 
-def test_ar1_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        spark, con, E._evt_ar1_halflife(spark, SF_DIR), E._AR1_SQL
-    )
-
-
 # ---------------------------------------------------------------------------
 # audio_fingerprint
 # ---------------------------------------------------------------------------
@@ -174,16 +137,6 @@ def test_audio_fingerprint_matches_formula(spark):
         assert fps[d] == fp
 
 
-def test_audio_fp_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        spark, con,
-        E._mm_audio_fingerprint(spark, SF_DIR),
-        E._AUDIO_FP_SQL,
-    )
-
-
 # ---------------------------------------------------------------------------
 # composite_contrastive_pairs
 # ---------------------------------------------------------------------------
@@ -204,16 +157,6 @@ def test_contrastive_triplets_well_formed_sf0001(spark):
     # wholesale loss — the drop rule only removes rare collisions)
     pos = E._ddp_minhash_neardup(spark, SF_DIR).collect()
     assert len(rows) >= len(pos) * 0.8
-
-
-def test_contrastive_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        spark, con,
-        E._composite_contrastive_pairs(spark, SF_DIR),
-        E._contrastive_oracle_sql(),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -238,11 +181,3 @@ def test_zonemap_skip_logic(spark):
     assert got["rows_skipped"] == 400
     assert got["skip_ratio"] == pytest.approx(0.5)
     assert got["row_skip_ratio"] == pytest.approx(0.4)
-
-
-def test_zonemap_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        spark, con, E._tbl_zonemap_skip(spark, SF_DIR), E._ZONEMAP_SQL
-    )

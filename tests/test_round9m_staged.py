@@ -5,28 +5,9 @@ scorer.
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
-SF_DIR = "/root/testdata/sf0.001"
-
-
-@pytest.fixture()
-def con():
-    c = duckdb.connect()
-    for t in ("customer", "documents"):
-        c.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    yield c
-    c.close()
-
-
-def _spark_vs_oracle(spark, con, df, sql):
-    got = sorted(tuple(r) for r in df.collect())
-    exp = sorted(tuple(r) for r in con.execute(sql).fetchall())
-    assert got == exp, f"\ngot: {got[:6]}\nexp: {exp[:6]}"
+from tests.conftest import SF_DIR
 
 
 # ---------------------------------------------------------------------------
@@ -43,16 +24,6 @@ def test_minhash_eval_full_recall_on_exact_plants(spark):
     assert got["n_recovered"] == got["n_truth"] > 0
     assert got["n_extra"] >= 0
     assert got["n_pred"] == got["n_recovered"] + got["n_extra"]
-
-
-def test_minhash_eval_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        spark, con,
-        E._ddp_minhash_eval(spark, SF_DIR),
-        E._minhash_eval_oracle_sql(),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -102,16 +73,6 @@ def test_raking_raises_on_missing_target(spark):
         ).collect()
 
 
-def test_raking_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        spark, con,
-        E._smp_raking_weights(spark, SF_DIR),
-        E._raking_oracle_sql(3),
-    )
-
-
 # ---------------------------------------------------------------------------
 # instruction_score
 # ---------------------------------------------------------------------------
@@ -136,13 +97,3 @@ def test_instruction_score_flags(spark):
     assert out[3]["has_enumeration"] and out[3]["instruction_score"] == 0.2
     assert out[4]["has_request"] and out[4]["instruction_score"] == 0.1
     assert out[5]["instruction_score"] == 0.0
-
-
-def test_instruction_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        spark, con,
-        E._txt_instruction_score(spark, SF_DIR),
-        E._INSTRUCTION_SQL,
-    )

@@ -1,35 +1,12 @@
 """Staging tests for the fifteenth round-8 wave: integer-exact batch
 perceptron, Kendall tau-b, CUSUM drift chart, hop-limited harmonic
-centrality, and the vacuum-planning audit — each operator's registry
-fixture validated against its DuckDB oracle draft before
-registration (the round-7 staging recipe).
+centrality, and the vacuum-planning audit (their sf0.001 oracle
+checks are in tests/test_registry_oracles.py).
 """
 
 from __future__ import annotations
 
-import duckdb
 import pytest
-
-SF_DIR = "/root/testdata/sf0.001"
-
-
-@pytest.fixture()
-def con():
-    c = duckdb.connect()
-    for t in ("customer", "orders", "lineitem", "supplier",
-              "events", "embeddings"):
-        c.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    yield c
-    c.close()
-
-
-def _spark_vs_oracle(con, df, sql):
-    got = sorted(tuple(r) for r in df.collect())
-    exp = sorted(tuple(r) for r in con.execute(sql).fetchall())
-    assert got == exp, f"\ngot: {got[:6]}\nexp: {exp[:6]}"
 
 
 # ---------------------------------------------------------------------------
@@ -72,16 +49,6 @@ def test_perceptron_rejects_bad_labels(spark):
         perceptron_fit(df, "x", "y", n_epochs=1, dim=1).collect()
 
 
-def test_perceptron_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        con,
-        E._perceptron_fit(spark, SF_DIR),
-        E._perceptron_oracle_sql(3, 8),
-    )
-
-
 # ---------------------------------------------------------------------------
 # agg_kendall_tau
 # ---------------------------------------------------------------------------
@@ -121,14 +88,6 @@ def test_kendall_tau_ties_and_nulls(spark):
     assert r["concordant"] == 2 and r["discordant"] == 0
 
 
-def test_kendall_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        con, E._agg_kendall_tau(spark, SF_DIR), E._KENDALL_SQL
-    )
-
-
 # ---------------------------------------------------------------------------
 # evt_cusum
 # ---------------------------------------------------------------------------
@@ -161,12 +120,6 @@ def test_cusum_prefix_identity_matches_recursion(spark):
     assert [r["s_pos"] for r in out] == [100, 200, 0, 0, 300]
     assert [r["s_neg"] for r in out] == [0, 0, 400, 200, 0]
     assert [r["alarm"] for r in out] == [False, True, True, True, True]
-
-
-def test_cusum_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(con, E._evt_cusum(spark, SF_DIR), E._CUSUM_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -204,16 +157,6 @@ def test_harmonic_dedups_multi_path(spark):
     assert out[1] == (3, 2.5)
 
 
-def test_harmonic_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        con,
-        E._graph_harmonic(spark, SF_DIR),
-        E._harmonic_oracle_sql(3),
-    )
-
-
 # ---------------------------------------------------------------------------
 # tbl_vacuum_plan
 # ---------------------------------------------------------------------------
@@ -242,11 +185,3 @@ def test_vacuum_audit_classes(spark):
     assert out["live"] == (1, 10)
     assert out["orphan_retained"] == (1, 20)
     assert out["orphan_delete"] == (1, 30)
-
-
-def test_vacuum_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        con, E._tbl_vacuum_plan(spark, SF_DIR), E._VACUUM_SQL
-    )

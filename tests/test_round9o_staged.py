@@ -5,29 +5,7 @@ test, file clustering-depth sweep, and metadata-filtered IVF ANN.
 
 from __future__ import annotations
 
-import duckdb
-import pytest
-
-SF_DIR = "/root/testdata/sf0.001"
-
-
-@pytest.fixture()
-def con():
-    c = duckdb.connect()
-    for t in ("customer", "orders", "lineitem", "supplier",
-              "events", "embeddings"):
-        c.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    yield c
-    c.close()
-
-
-def _spark_vs_oracle(con, df, sql):
-    got = sorted(tuple(r) for r in df.collect())
-    exp = sorted(tuple(r) for r in con.execute(sql).fetchall())
-    assert got == exp, f"\ngot: {got[:6]}\nexp: {exp[:6]}"
+from tests.conftest import SF_DIR
 
 
 # ---------------------------------------------------------------------------
@@ -71,14 +49,6 @@ def test_km_and_na_share_risk_table(spark):
     assert k == n and len(k) > 0
 
 
-def test_nelson_aalen_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        con, E._evt_nelson_aalen(spark, SF_DIR), E._NELSON_AALEN_SQL
-    )
-
-
 # ---------------------------------------------------------------------------
 # graph_assortativity
 # ---------------------------------------------------------------------------
@@ -109,14 +79,6 @@ def test_assortativity_degenerate_is_null(spark):
     assert r["r"] is None
 
 
-def test_assortativity_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        con, E._graph_assortativity(spark, SF_DIR), E._ASSORTATIVITY_SQL
-    )
-
-
 # ---------------------------------------------------------------------------
 # agg_cochran_armitage
 # ---------------------------------------------------------------------------
@@ -144,16 +106,6 @@ def test_cochran_armitage_no_trend_is_zero(spark):
     assert r["t_stat"] == 0.0 and r["z"] == 0.0
 
 
-def test_cochran_armitage_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        con,
-        E._agg_cochran_armitage(spark, SF_DIR),
-        E._COCHRAN_ARMITAGE_SQL,
-    )
-
-
 # ---------------------------------------------------------------------------
 # tbl_file_overlap_depth
 # ---------------------------------------------------------------------------
@@ -175,16 +127,6 @@ def test_overlap_depth_hand_layout(spark):
     assert out == {0: 1, 5: 2, 11: 1, 16: 0, 20: 1, 26: 0}
 
 
-def test_overlap_depth_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        con,
-        E._tbl_file_overlap_depth(spark, SF_DIR),
-        E._OVERLAP_DEPTH_SQL,
-    )
-
-
 # ---------------------------------------------------------------------------
 # sim_filtered_ivf_topk
 # ---------------------------------------------------------------------------
@@ -202,13 +144,3 @@ def test_filtered_ivf_respects_predicate(spark):
     )
     assert bad.count() == 0
     assert neigh.count() > 0
-
-
-def test_filtered_ivf_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        con,
-        E._sim_filtered_ivf_topk(spark, SF_DIR),
-        E._filtered_ivf_oracle(),
-    )

@@ -5,28 +5,9 @@ and Fleiss' kappa.
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
-SF_DIR = "/root/testdata/sf0.001"
-
-
-@pytest.fixture()
-def con():
-    c = duckdb.connect()
-    for t in ("events", "documents", "embeddings"):
-        c.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    yield c
-    c.close()
-
-
-def _spark_vs_oracle(con, df, sql):
-    got = sorted(tuple(r) for r in df.collect())
-    exp = sorted(tuple(r) for r in con.execute(sql).fetchall())
-    assert got == exp, f"\ngot: {got[:6]}\nexp: {exp[:6]}"
+from tests.conftest import SF_DIR
 
 
 # ---------------------------------------------------------------------------
@@ -77,12 +58,6 @@ def test_logrank_foreign_variant_raises(spark):
         logrank_test(df).collect()
 
 
-def test_logrank_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(con, E._evt_logrank(spark, SF_DIR), E._LOGRANK_SQL)
-
-
 # ---------------------------------------------------------------------------
 # composite_dedup_funnel
 # ---------------------------------------------------------------------------
@@ -108,16 +83,6 @@ def test_dedup_funnel_accounting(spark):
     assert out["n_docs_in_pairs"] <= 2 * out["n_neardup_pairs"]
 
 
-def test_dedup_funnel_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        con,
-        E._composite_dedup_funnel(spark, SF_DIR),
-        E._dedup_funnel_oracle_sql(),
-    )
-
-
 # ---------------------------------------------------------------------------
 # sim_ivf_cell_stats
 # ---------------------------------------------------------------------------
@@ -133,16 +98,6 @@ def test_ivf_cell_stats_accounting(spark):
     assert total == n_emb
     imb = {r["imbalance_factor"] for r in rows}
     assert len(imb) == 1 and imb.pop() >= 1.0
-
-
-def test_ivf_cell_stats_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        con,
-        E._sim_ivf_cell_stats(spark, SF_DIR),
-        E._ivf_cell_stats_oracle(),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -169,11 +124,3 @@ def test_fleiss_ragged_panel_raises(spark):
     )
     with pytest.raises(Exception, match="same total vote count"):
         fleiss_kappa(df, ["c_yes", "c_no"]).collect()
-
-
-def test_fleiss_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        con, E._agg_fleiss_kappa(spark, SF_DIR), E._FLEISS_SQL
-    )

@@ -5,29 +5,9 @@ distortion audit, and the Qini uplift curve.
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
-SF_DIR = "/root/testdata/sf0.001"
-
-
-@pytest.fixture()
-def con():
-    c = duckdb.connect()
-    for t in ("customer", "orders", "lineitem", "supplier",
-              "events", "embeddings"):
-        c.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    yield c
-    c.close()
-
-
-def _spark_vs_oracle(con, df, sql):
-    got = sorted(tuple(r) for r in df.collect())
-    exp = sorted(tuple(r) for r in con.execute(sql).fetchall())
-    assert got == exp, f"\ngot: {got[:6]}\nexp: {exp[:6]}"
+from tests.conftest import SF_DIR
 
 
 # ---------------------------------------------------------------------------
@@ -71,12 +51,6 @@ def test_cmh_confounded_marginal_clean_stratified(spark):
     assert r["chi2"] == 0.0
 
 
-def test_cmh_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(con, E._agg_cmh_test(spark, SF_DIR), E._CMH_SQL)
-
-
 # ---------------------------------------------------------------------------
 # graph_reciprocity
 # ---------------------------------------------------------------------------
@@ -93,14 +67,6 @@ def test_reciprocity_hand_graph(spark):
     assert r["n_edges"] == 3
     assert r["n_reciprocated"] == 2
     assert r["reciprocity"] == round(2 / 3, 6)
-
-
-def test_reciprocity_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        con, E._graph_reciprocity(spark, SF_DIR), E._RECIPROCITY_SQL
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -152,16 +118,6 @@ def test_local_clustering_consistent_with_census(spark):
     assert total_credits == 3 * census["n_triangles"]
 
 
-def test_local_clustering_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        con,
-        E._graph_local_clustering(spark, SF_DIR),
-        E._LOCAL_CLUSTERING_SQL,
-    )
-
-
 # ---------------------------------------------------------------------------
 # sim_pq_distortion
 # ---------------------------------------------------------------------------
@@ -175,16 +131,6 @@ def test_pq_distortion_shape_and_bounds(spark):
     for r in rows:
         assert r["mean_sqdist"] >= 0
         assert r["max_sqdist"] >= r["mean_sqdist"] - 1e-3
-
-
-def test_pq_distortion_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        con,
-        E._sim_pq_distortion(spark, SF_DIR),
-        E._pq_distortion_oracle(),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -220,9 +166,3 @@ def test_qini_bad_bucket_raises(spark):
     )
     with pytest.raises(Exception, match="bucket must be in"):
         qini_curve(df, n_buckets=10).collect()
-
-
-def test_qini_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(con, E._evt_qini_curve(spark, SF_DIR), E._QINI_SQL)

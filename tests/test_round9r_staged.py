@@ -4,28 +4,9 @@ G-test, SMD balance, Wilson CI, seasonal-naive backtest.
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
-SF_DIR = "/root/testdata/sf0.001"
-
-
-@pytest.fixture()
-def con():
-    c = duckdb.connect()
-    for t in ("orders", "events", "documents"):
-        c.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    yield c
-    c.close()
-
-
-def _spark_vs_oracle(con, df, sql):
-    got = sorted(tuple(r) for r in df.collect())
-    exp = sorted(tuple(r) for r in con.execute(sql).fetchall())
-    assert got == exp, f"\ngot: {got[:6]}\nexp: {exp[:6]}"
+from tests.conftest import SF_DIR
 
 
 # ---------------------------------------------------------------------------
@@ -51,16 +32,6 @@ def test_band_stats_pair_load_matches_candidates(spark):
     # every planted verbatim copy shares every bucket with its
     # original: max bucket >= 2 on every band
     assert all(r["max_bucket_size"] >= 2 for r in stats)
-
-
-def test_band_stats_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        con,
-        E._ddp_lsh_band_stats(spark, SF_DIR),
-        E._lsh_band_stats_oracle(),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -90,12 +61,6 @@ def test_g_test_perfect_dependence(spark):
     assert out["g_stat"] == pytest.approx(2 * 20 * math.log(2), abs=1e-4)
 
 
-def test_g_test_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(con, E._agg_g_test(spark, SF_DIR), E._G_TEST_SQL)
-
-
 # ---------------------------------------------------------------------------
 # agg_smd_balance
 # ---------------------------------------------------------------------------
@@ -117,12 +82,6 @@ def test_smd_detects_imbalance(spark):
     assert out["u"]["n_treated"] == 50 and out["u"]["n_control"] == 50
 
 
-def test_smd_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(con, E._agg_smd_balance(spark, SF_DIR), E._SMD_SQL)
-
-
 # ---------------------------------------------------------------------------
 # agg_wilson_ci
 # ---------------------------------------------------------------------------
@@ -140,12 +99,6 @@ def test_wilson_boundary_behavior(spark):
     assert out["all"]["ci_low"] < 1.0
     assert out["none"]["ci_high"] > 0.0
     assert 0.0 <= out["none"]["ci_low"] <= out["none"]["ci_high"] <= 1.0
-
-
-def test_wilson_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(con, E._agg_wilson_ci(spark, SF_DIR), E._WILSON_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -170,13 +123,3 @@ def test_seasonal_naive_hand_series(spark):
     # errors: |700-0|, |800-100|, |900-200| = 700 cents each
     assert out["total_abs_err_cents"] == 2100
     assert out["mae"] == 7.0
-
-
-def test_seasonal_naive_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        con,
-        E._evt_seasonal_naive_error(spark, SF_DIR),
-        E._SEASONAL_NAIVE_SQL,
-    )

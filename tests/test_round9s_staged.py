@@ -4,29 +4,6 @@ Mantel-Haenszel common odds ratio, WOE encoding, streaming CUSUM.
 
 from __future__ import annotations
 
-import duckdb
-import pytest
-
-SF_DIR = "/root/testdata/sf0.001"
-
-
-@pytest.fixture()
-def con():
-    c = duckdb.connect()
-    for t in ("customer", "orders", "lineitem", "supplier", "events"):
-        c.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    yield c
-    c.close()
-
-
-def _spark_vs_oracle(con, df, sql):
-    got = sorted(tuple(r) for r in df.collect())
-    exp = sorted(tuple(r) for r in con.execute(sql).fetchall())
-    assert got == exp, f"\ngot: {got[:6]}\nexp: {exp[:6]}"
-
 
 # ---------------------------------------------------------------------------
 # graph_scc
@@ -57,14 +34,6 @@ def test_scc_two_cycles_one_bridge(spark):
            for r in scc(edges, max_hops=4).collect()}
     assert out[1] == out[2] == 1
     assert out[3] == out[4] == 3
-
-
-def test_scc_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        con, E._graph_scc(spark, SF_DIR), E._scc_oracle_sql(4)
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -99,14 +68,6 @@ def test_mh_or_single_stratum_equals_plain_or(spark):
     assert r["or_mh"] == 6.0
 
 
-def test_mh_or_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        con, E._agg_mh_odds_ratio(spark, SF_DIR), E._MH_OR_SQL
-    )
-
-
 # ---------------------------------------------------------------------------
 # fe_woe_encoding
 # ---------------------------------------------------------------------------
@@ -137,21 +98,3 @@ def test_woe_pure_category_is_finite(spark):
     out = {r["category"]: r for r in woe_encoding(df, "c", "y").collect()}
     assert math.isfinite(out["pure"]["woe"])
 
-
-def test_woe_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(con, E._fe_woe_encoding(spark, SF_DIR), E._WOE_SQL)
-
-
-# ---------------------------------------------------------------------------
-# stream_cusum
-# ---------------------------------------------------------------------------
-
-
-def test_stream_cusum_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        con, E._stream_cusum(spark, SF_DIR), E._STREAM_CUSUM_SQL
-    )

@@ -4,28 +4,7 @@ audit, partial correlation, peak detection, ANN health gate.
 
 from __future__ import annotations
 
-import duckdb
-import pytest
-
-SF_DIR = "/root/testdata/sf0.001"
-
-
-@pytest.fixture()
-def con():
-    c = duckdb.connect()
-    for t in ("orders", "events", "documents", "embeddings"):
-        c.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    yield c
-    c.close()
-
-
-def _spark_vs_oracle(con, df, sql):
-    got = sorted(tuple(r) for r in df.collect())
-    exp = sorted(tuple(r) for r in con.execute(sql).fetchall())
-    assert got == exp, f"\ngot: {got[:6]}\nexp: {exp[:6]}"
+from tests.conftest import SF_DIR
 
 
 # ---------------------------------------------------------------------------
@@ -73,16 +52,6 @@ def test_dup_sentence_plants_detected(spark):
     assert bad == 0 and plants.count() > 0
 
 
-def test_dup_sentence_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        con,
-        E._txt_dup_sentence_filter(spark, SF_DIR),
-        E._dup_sentence_oracle_sql(),
-    )
-
-
 # ---------------------------------------------------------------------------
 # agg_partial_corr
 # ---------------------------------------------------------------------------
@@ -110,14 +79,6 @@ def test_partial_corr_nulls_dropped(spark):
     df = spark.createDataFrame(rows, "x bigint, y bigint, z bigint")
     r = partial_corr(df, "x", "y", "z").collect()[0]
     assert r["n"] == 3 and r["r_xy"] == 1.0
-
-
-def test_partial_corr_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        con, E._agg_partial_corr(spark, SF_DIR), E._PARTIAL_CORR_SQL
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -149,12 +110,6 @@ def test_peaks_hand_series(spark):
     assert out["2024-01-06"]["is_peak"] is False  # edge
 
 
-def test_peaks_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(con, E._evt_peaks(spark, SF_DIR), E._PEAKS_SQL)
-
-
 # ---------------------------------------------------------------------------
 # composite_ann_health
 # ---------------------------------------------------------------------------
@@ -171,14 +126,4 @@ def test_ann_health_gate_shape(spark):
     assert row["mean_pq_sqdist"] > 0
     assert row["healthy"] == (
         row["mean_recall_at_5"] >= 0.5 and row["imbalance_factor"] <= 4.0
-    )
-
-
-def test_ann_health_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        con,
-        E._composite_ann_health(spark, SF_DIR),
-        E._ann_health_oracle_sql(),
     )

@@ -4,29 +4,7 @@ census, dedup savings report, growth accounting.
 
 from __future__ import annotations
 
-import duckdb
-import pytest
-
-SF_DIR = "/root/testdata/sf0.001"
-
-
-@pytest.fixture()
-def con():
-    c = duckdb.connect()
-    for t in ("customer", "orders", "lineitem", "supplier",
-              "events", "documents"):
-        c.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    yield c
-    c.close()
-
-
-def _spark_vs_oracle(con, df, sql):
-    got = sorted(tuple(r) for r in df.collect())
-    exp = sorted(tuple(r) for r in con.execute(sql).fetchall())
-    assert got == exp, f"\ngot: {got[:6]}\nexp: {exp[:6]}"
+from tests.conftest import SF_DIR
 
 
 # ---------------------------------------------------------------------------
@@ -60,14 +38,6 @@ def test_path_stats_hop_bound_truncates(spark):
     assert r["n_pairs_reachable"] == 3 and r["diameter"] == 1
 
 
-def test_path_stats_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        con, E._graph_path_stats(spark, SF_DIR), E._path_stats_oracle_sql(4)
-    )
-
-
 # ---------------------------------------------------------------------------
 # ddp_dedup_savings
 # ---------------------------------------------------------------------------
@@ -82,16 +52,6 @@ def test_dedup_savings_accounting(spark):
     assert 0 < r["saved_frac"] < 1
     # plants are ~10% verbatim copies: savings should be near that
     assert 0.05 < r["saved_frac"] < 0.15
-
-
-def test_dedup_savings_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        con,
-        E._ddp_dedup_savings(spark, SF_DIR),
-        E._dedup_savings_oracle_sql(),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -132,11 +92,3 @@ def test_growth_states_sum_to_active(spark):
             r["n_new"] + r["n_retained"] + r["n_resurrected"]
             == r["n_active"]
         )
-
-
-def test_growth_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        con, E._evt_growth_accounting(spark, SF_DIR), E._GROWTH_SQL
-    )

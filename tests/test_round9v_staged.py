@@ -5,28 +5,7 @@ collision audit.
 
 from __future__ import annotations
 
-import duckdb
-import pytest
-
-SF_DIR = "/root/testdata/sf0.001"
-
-
-@pytest.fixture()
-def con():
-    c = duckdb.connect()
-    for t in ("events", "documents", "embeddings"):
-        c.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    yield c
-    c.close()
-
-
-def _spark_vs_oracle(con, df, sql):
-    got = sorted(tuple(r) for r in df.collect())
-    exp = sorted(tuple(r) for r in con.execute(sql).fetchall())
-    assert got == exp, f"\ngot: {got[:6]}\nexp: {exp[:6]}"
+from tests.conftest import SF_DIR
 
 
 # ---------------------------------------------------------------------------
@@ -64,14 +43,6 @@ def test_rrf_fixture_covers_both_systems(spark):
         assert sorted(ranks) == list(range(1, len(ranks) + 1))
 
 
-def test_rrf_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        con, E._sim_rrf_fusion(spark, SF_DIR), E._rrf_fusion_oracle_sql()
-    )
-
-
 # ---------------------------------------------------------------------------
 # evt_dow_anomaly
 # ---------------------------------------------------------------------------
@@ -104,14 +75,6 @@ def test_dow_anomaly_conditions_on_weekday(spark):
     assert flagged == ["2024-01-15"]
 
 
-def test_dow_anomaly_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        con, E._evt_dow_anomaly(spark, SF_DIR), E._DOW_ANOMALY_SQL
-    )
-
-
 # ---------------------------------------------------------------------------
 # txt_hash_collision_audit
 # ---------------------------------------------------------------------------
@@ -138,13 +101,3 @@ def test_collision_audit_tiny_dim_collides_everything(spark):
     assert r["n_buckets_used"] == 1
     assert r["collision_frac"] == 1.0
     assert r["max_bucket_terms"] == r["n_terms"] == 6
-
-
-def test_collision_audit_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        con,
-        E._txt_hash_collision_audit(spark, SF_DIR),
-        E._HASH_COLLISION_SQL,
-    )

@@ -4,21 +4,7 @@ growth-accounting states.
 
 from __future__ import annotations
 
-import duckdb
-import pytest
-
-SF_DIR = "/root/testdata/sf0.001"
-
-
-@pytest.fixture()
-def con():
-    c = duckdb.connect()
-    c.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        f"read_parquet('{SF_DIR}/events.parquet')"
-    )
-    yield c
-    c.close()
+from tests.conftest import SF_DIR, assert_matches_oracle
 
 
 def test_stream_growth_matches_batch_decomposition(spark):
@@ -52,10 +38,6 @@ def test_stream_growth_matches_batch_decomposition(spark):
 def test_stream_growth_oracle_sf0001(spark, con):
     import __spark_entry__ as E
 
-    got = sorted(
-        tuple(r) for r in E._stream_growth_states(spark, SF_DIR).collect()
+    assert_matches_oracle(
+        E._stream_growth_states(spark, SF_DIR), con, E._STREAM_GROWTH_SQL
     )
-    exp = sorted(
-        tuple(r) for r in con.execute(E._STREAM_GROWTH_SQL).fetchall()
-    )
-    assert got == exp, f"\ngot: {got[:5]}\nexp: {exp[:5]}"

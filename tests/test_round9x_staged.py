@@ -4,28 +4,7 @@ treatment effects and the quality-vs-duplication cross-audit.
 
 from __future__ import annotations
 
-import duckdb
-import pytest
-
-SF_DIR = "/root/testdata/sf0.001"
-
-
-@pytest.fixture()
-def con():
-    c = duckdb.connect()
-    for t in ("events", "documents"):
-        c.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    yield c
-    c.close()
-
-
-def _spark_vs_oracle(con, df, sql):
-    got = sorted(tuple(r) for r in df.collect())
-    exp = sorted(tuple(r) for r in con.execute(sql).fetchall())
-    assert got == exp, f"\ngot: {got[:6]}\nexp: {exp[:6]}"
+from tests.conftest import SF_DIR
 
 
 # ---------------------------------------------------------------------------
@@ -74,12 +53,6 @@ def test_qte_top_only_lift(spark):
     assert out95[0.95]["qte"] == 1000
 
 
-def test_qte_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(con, E._evt_qte(spark, SF_DIR), E._QTE_SQL)
-
-
 # ---------------------------------------------------------------------------
 # composite_quality_vs_dup
 # ---------------------------------------------------------------------------
@@ -103,13 +76,3 @@ def test_quality_vs_dup_accounting(spark):
     # every plant + its original is a dup member: 2 * n_plants rows
     assert r["n_keep_dup"] + r["n_drop_dup"] == 2 * n_plants
     assert r["uniq_quality_odds_ratio"] > 0
-
-
-def test_quality_vs_dup_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        con,
-        E._composite_quality_vs_dup(spark, SF_DIR),
-        E._QUALITY_VS_DUP_SQL,
-    )

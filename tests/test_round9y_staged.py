@@ -4,28 +4,9 @@ quality gate and rare-category collapse.
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
-SF_DIR = "/root/testdata/sf0.001"
-
-
-@pytest.fixture()
-def con():
-    c = duckdb.connect()
-    for t in ("part", "embeddings"):
-        c.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    yield c
-    c.close()
-
-
-def _spark_vs_oracle(con, df, sql):
-    got = sorted(tuple(r) for r in df.collect())
-    exp = sorted(tuple(r) for r in con.execute(sql).fetchall())
-    assert got == exp, f"\ngot: {got[:6]}\nexp: {exp[:6]}"
+from tests.conftest import SF_DIR
 
 
 # ---------------------------------------------------------------------------
@@ -61,16 +42,6 @@ def test_vector_audit_clean_corpus(spark):
     assert 0 < r["min_norm"] <= r["max_norm"]
 
 
-def test_vector_audit_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        con,
-        E._sim_vector_quality_audit(spark, SF_DIR),
-        E._VECTOR_QUALITY_SQL,
-    )
-
-
 # ---------------------------------------------------------------------------
 # fe_rare_category_collapse
 # ---------------------------------------------------------------------------
@@ -98,13 +69,3 @@ def test_rare_collapse_sentinel_conflict_raises(spark):
     df = spark.createDataFrame([("__OTHER__",)], "c string")
     with pytest.raises(Exception, match="sentinel"):
         rare_category_collapse(df, "c", min_count=1).collect()
-
-
-def test_rare_collapse_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
-
-    _spark_vs_oracle(
-        con,
-        E._fe_rare_category_collapse(spark, SF_DIR),
-        E._RARE_CATEGORY_SQL,
-    )

@@ -78,37 +78,6 @@ def test_incremental_append_is_idempotent(spark, tmp_path):
     assert spark.read.parquet(sink).count() == 3
 
 
-def test_clustered_write_narrows_row_groups(spark, tmp_path):
-    from eggv_spark.sources.writers import write_clustered_parquet
-
-    path = str(tmp_path / "clustered")
-    df = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-    write_clustered_parquet(df, path, ("o_custkey",), n_files=4)
-    # each output file covers a disjoint-ish custkey range: the max
-    # spread per file must be far below the global spread
-    import pyarrow.parquet as pq
-    import glob as g
-
-    spans = []
-    for f in g.glob(path + "/*.parquet"):
-        md = pq.ParquetFile(f).metadata
-        for rg in range(md.num_row_groups):
-            col = next(
-                md.row_group(rg).column(i)
-                for i in range(md.row_group(rg).num_columns)
-                if md.row_group(rg).column(i).path_in_schema == "o_custkey"
-            )
-            spans.append((col.statistics.min, col.statistics.max))
-    # range-partitioned + sorted: row-group key ranges must be
-    # pairwise disjoint, so a filter on o_custkey prunes all but one
-    spans.sort()
-    for (_, hi), (lo, _) in zip(spans, spans[1:]):
-        assert hi <= lo
-    total_span = spans[-1][1] - spans[0][0]
-    mean_span = sum(hi - lo for lo, hi in spans) / len(spans)
-    assert mean_span < total_span / 2
-
-
 def test_scd2_merge_versions_changed_keys(spark):
     from eggv_spark.operators.tableops import scd2_merge
 

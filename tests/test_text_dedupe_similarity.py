@@ -225,14 +225,6 @@ def test_connected_components_warns_without_convergence(spark):
     assert set(labels.values()) == {1}
 
 
-def test_ivf_params_scale_with_corpus():
-    small, big = S.ivf_params(1000), S.ivf_params(1_000_000_000)
-    assert small["n_centroids"] < big["n_centroids"]
-    assert big["n_centroids"] == 31622
-    assert big["n_probe"] == 31622 // 8
-    assert S.ivf_params(0)["n_centroids"] >= 4
-
-
 def test_pq_topk_identical_vector_attains_min_distance(vectors):
     out = S.pq_topk(vectors, vectors.filter("vec_id = 1"), k_neighbors=4,
                     m=2, k=4, dim=4)

@@ -22,7 +22,7 @@ from eggv_spark.operators.aggregates import entropy_agg
 from eggv_spark.operators.relational import domain_mix_sample
 from eggv_spark.sources.readers import read_table
 
-SF_DIR = "/root/testdata/sf0.001"
+from tests.conftest import SF_DIR
 
 
 def test_repetition_stats_hand_computed(spark):
