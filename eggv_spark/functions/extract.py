@@ -34,7 +34,7 @@ def regexp_extract_null(col: Column | str, pattern: str, group: int = 1) -> Colu
     12x slower on a 1 GB scan).  There, stage the raw
     ``F.regexp_extract`` in its own projection and apply
     ``F.nullif(col, '')`` to the materialized slot in the next — see
-    ``operators/variants.py::_extract_typed``.
+    ``operators/variants.py::extract_variant_fields``.
     """
     return F.nullif(F.regexp_extract(col, pattern, group), F.lit(""))
 

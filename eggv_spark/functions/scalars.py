@@ -162,42 +162,3 @@ regexp_replace(regexp_replace(regexp_replace(regexp_replace(regexp_replace(
  '(utm_[a-z]+|fbclid|gclid|ref)=[^&#]*&?', '', 'g'),
  '[?&]+$', ''),
  '/$', '')"""
-
-
-# ---- Python UDTF (table function) -----------------------------------------
-
-def variant_effects_udtf():
-    """Python UDTF (Spark 3.5+ ``CREATE FUNCTION``-style table
-    function): explode a GVF ``Variant_effect`` attribute value into
-    (effect, idx, feature_type, transcript) rows — the UDTF
-    formulation of the reference's effect-explosion chain
-    (``eggv/process.py:158-171``), registered so SQL users can
-    ``SELECT ... FROM tbl, LATERAL explode_effects(attr)``.
-
-    The DataFrame-native path (operators.variants.process_gvf) stays
-    the hot path — this is the SQL-extensibility surface, not a
-    replacement (per-row Python; use over small/medium extracts).
-    """
-    from pyspark.sql.functions import udtf
-
-    @udtf(returnType="effect string, idx int, feature_type string, transcript string")
-    class ExplodeEffects:
-        def eval(self, attr: str):
-            import re
-
-            if attr is None:
-                return
-            m = re.search(r"Variant_effect=(.+?);", attr)
-            if not m:
-                return
-            for clause in m.group(1).split(","):
-                toks = clause.strip().split(" ")
-                if len(toks) >= 4:
-                    yield (toks[0], int(toks[1]), toks[2], toks[3])
-
-    return ExplodeEffects
-
-
-def register_udtfs(spark) -> None:
-    """Register SQL-callable table functions on a session."""
-    spark.udtf.register("explode_effects", variant_effects_udtf())

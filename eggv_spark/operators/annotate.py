@@ -28,8 +28,9 @@ def annotate_variants(variants: DataFrame, genes: DataFrame) -> DataFrame:
     """JOIN-01: variants ⟕ genes on transcript = transcript_id.
 
     Left (not inner) so unmapped variants survive for mapping
-    statistics (reference ``eggv/annotate.py:55-94``).  Output
-    columns follow ANNOTATED_SCHEMA.
+    statistics (reference ``eggv/annotate.py:55-94``).  Output: the
+    variant columns plus chromosome, gene_id, gene_name and
+    gene_biotype (``eggv/annotate.py:86-94`` shape).
 
     Chromosome provenance matches the reference's pandas suffix
     semantics exactly: when the variant side carries ``chromosome``

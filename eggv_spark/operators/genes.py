@@ -35,8 +35,8 @@ def process_gtf(df: DataFrame) -> DataFrame:
     df = df.filter(F.col("feature") == "transcript")
 
     # Raw extracts staged in their own projection (single regex eval
-    # per field; see variants.process_gvf for the measured rationale),
-    # null semantics applied on the slots in the next.
+    # per field; see variants.extract_variant_fields for the measured
+    # rationale), null semantics applied on the slots in the next.
     df = df.select(
         F.concat(F.lit("chr"), F.col("seqname").cast("string")).alias("chromosome"),
         F.col("start").cast("long").alias("start"),

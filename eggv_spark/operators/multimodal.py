@@ -1,7 +1,7 @@
 """Multimodal column operators (extension, SURVEY §7.4).
 
 Data model: image/audio/video are opaque ``binary`` payload columns
-with typed metadata (MULTIMODAL_ASSET_SCHEMA) — parquet-native, so
+with typed metadata columns — parquet-native, so
 100 TB of assets shard/prune like any other table and the binary
 column is only read when projected.
 

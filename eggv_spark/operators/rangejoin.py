@@ -74,38 +74,6 @@ def range_join(
     return out.drop(iv["_bin"]).drop(pt["_bin"]).drop(*[iv[k] for k in keys])
 
 
-def interval_annotate(
-    variants: DataFrame,
-    genes: DataFrame,
-    bin_width: int = 2_000_000,
-) -> DataFrame:
-    """Genomic flavor: variants (chromosome, start) located inside
-    gene spans (chromosome, [start, end]) — the overlap-based
-    annotation the reference never implements (it joins on transcript
-    ID instead; this operator adds the positional semantics).
-
-    2 Mb default bin covers the longest human genes (~2.3 Mb RBFOX1
-    would need a larger width — callers pass max(gene length)).
-    """
-    gene_side = genes.select(
-        F.col("chromosome"),
-        F.col("start").alias("gene_start"),
-        F.col("end").alias("gene_end"),
-        "gene_id",
-        "gene_name",
-    )
-    point_side = variants.select("chromosome", "rsid", F.col("start").alias("pos"))
-    return range_join(
-        point_side,
-        gene_side,
-        point_col="pos",
-        lo_col="gene_start",
-        hi_col="gene_end",
-        bin_width=bin_width,
-        partition_keys=["chromosome"],
-    )
-
-
 def asof_join(
     left: DataFrame,
     right: DataFrame,

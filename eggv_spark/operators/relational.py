@@ -116,42 +116,6 @@ def dedupe(df: DataFrame, keys: Optional[Sequence[str]] = None) -> DataFrame:
     return df.dropDuplicates(list(keys)) if keys else df.dropDuplicates()
 
 
-def dedupe_partition_local(
-    df: DataFrame, keys: Optional[Sequence[str]] = None
-) -> DataFrame:
-    """DDP-01's EXACT semantics: dedup within each partition only —
-    zero shuffle (the reference's deliberate optimization,
-    ``eggv/process.py:289-294``: "duplicates only arise within a
-    partition").  Arrow-batched ``mapInPandas``, no wide exchange.
-
-    Use only when the duplicate-locality invariant genuinely holds
-    (e.g. duplicates come from the same input file); otherwise
-    :func:`dedupe` gives global uniqueness at one shuffle, with
-    map-side partial dedup capturing most of this benefit anyway.
-    """
-    subset = list(keys) if keys else None
-    schema = df.schema
-
-    def drop_dupes(batches):
-        import pandas as pd
-
-        seen: set = set()  # across batches of ONE partition
-        cols = subset or [f.name for f in schema.fields]
-        for pdf in batches:
-            key_tuples = list(map(tuple, pdf[cols].itertuples(index=False)))
-            mask = []
-            for t in key_tuples:
-                fresh = t not in seen
-                mask.append(fresh)
-                if fresh:
-                    seen.add(t)
-            out = pdf[pd.Series(mask, index=pdf.index)]
-            if len(out):
-                yield out
-
-    return df.mapInPandas(drop_dupes, schema)
-
-
 def dedupe_first_by_key(
     df: DataFrame, keys: Sequence[str], order_by: Sequence[Column | str]
 ) -> DataFrame:

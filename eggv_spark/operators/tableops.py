@@ -126,46 +126,6 @@ def key_distribution(
     )
 
 
-def compact_files(
-    spark, path: str, target_file_mb: int = 128, fmt: str = "parquet"
-) -> int:
-    """Small-file compaction: rewrite a table directory into files of
-    ~``target_file_mb`` each.  The small-files problem is the classic
-    silent killer at scale — a 100 TB table written by 10k tasks ×
-    1k partitions drowns the driver in file listings and the scan in
-    per-file open costs.  Returns the new file count.
-
-    Sizing is measured (input bytes), not guessed; AQE coalescing
-    handles the write-side partition merge.
-
-    All filesystem metadata work (sizing, the swap renames, the
-    backup delete) goes through the Hadoop FileSystem API resolved
-    from the path's scheme, so the same code runs against ``file:``,
-    ``hdfs://``, or ``s3a://`` tables.  Caveat: on object stores a
-    "rename" is a copy, so the swap is not atomic there — prefer a
-    manifest/table format for S3-resident tables."""
-    import math
-
-    df = spark.read.format(fmt).load(path)
-    n_bytes = _dir_bytes(path, spark)
-    n_files = max(1, math.ceil(n_bytes / (target_file_mb * 1024 * 1024)))
-    tmp = path.rstrip("/") + "__compacting"
-    df.repartition(n_files).write.mode("overwrite").format(fmt).save(tmp)
-    # Crash-safe swap: rename the live dir ASIDE first, then promote
-    # the new one, then delete the old.  A crash mid-sequence leaves
-    # either the original table (steps 0-1) or the compacted one
-    # (step 2+) at a recoverable path — never NO table at ``path``
-    # (the rmtree-then-move ordering had exactly that window).
-    fs, jpath, hpath = _hadoop_fs(spark, path)
-    old = hpath(path.rstrip("/") + "__replaced")
-    if fs.exists(old):
-        fs.delete(old, True)
-    _fs_rename(fs, jpath, old)
-    _fs_rename(fs, hpath(tmp), jpath)
-    fs.delete(old, True)
-    return n_files
-
-
 def _hadoop_fs(spark, path: str):
     """Resolve ``path``'s Hadoop FileSystem (file:/hdfs://s3a:...).
     Returns (fs, jpath, mkpath) where ``mkpath`` builds further
@@ -181,29 +141,6 @@ def _fs_rename(fs, src, dst) -> None:
     # exception — surface it, a silent no-op here corrupts the swap.
     if not fs.rename(src, dst):
         raise IOError(f"rename failed: {src} -> {dst}")
-
-
-def _dir_bytes(path: str, spark=None) -> int:
-    """Total data-file bytes under ``path`` (Spark metadata —
-    ``_SUCCESS``, hidden/CRC files — excluded).  With a session the
-    listing goes through the Hadoop FileSystem API so remote stores
-    (hdfs://, s3a://) answer the same call; without one it falls back
-    to a driver-local walk."""
-    if spark is not None:
-        fs, jpath, _ = _hadoop_fs(spark, path)
-        files = fs.listFiles(jpath, True)
-        total = 0
-        while files.hasNext():
-            status = files.next()
-            if not status.getPath().getName().startswith(("_", ".")):
-                total += status.getLen()
-        return total
-    total = 0
-    for root, _, files in os.walk(path):
-        for f in files:
-            if not f.startswith(("_", ".")):
-                total += os.path.getsize(os.path.join(root, f))
-    return total
 
 
 def incremental_append(
@@ -386,8 +323,7 @@ def zorder_key(x: Column, y: Column, bits: int = 31) -> Column:
     participate — values >= 2**bits alias onto the same key and
     clustering locality silently degrades.  The default (31, the max
     that fits two keys in a signed 64-bit result) covers keys to
-    ~2.1B; :func:`zorder_cluster` asserts the inputs fit so oversized
-    keys fail loudly instead.
+    ~2.1B; a caller whose keys can exceed 2**bits must raise ``bits``.
 
     The interleave is the O(log bits) parallel bit-spread (5
     shift/or/mask steps per coordinate — constant ~30 integer ops
@@ -419,35 +355,6 @@ def zorder_key_sql(x: str, y: str, bits: int = 31) -> str:
         return expr
 
     return f"({spread(x)} | ({spread(y)} << 1))"
-
-
-def zorder_cluster(
-    df: DataFrame, x: str, y: str, n_partitions: int, bits: int = 31
-) -> DataFrame:
-    """Physically cluster a table on the Z-order key of two columns:
-    compute the key, range-repartition on it (sampled range exchange
-    — one shuffle), and sort within partitions so parquet writes get
-    tight per-file (x, y) min/max tiles for two-column skipping.
-
-    Inputs are asserted < 2**bits in-plan (``assert_true`` rides the
-    key expression): a key that would alias (see the truncation
-    caveat on :func:`zorder_key`) kills the job loudly rather than
-    quietly degrading the clustering.
-    """
-    limit = F.lit(2**bits).cast("long")
-    fits = (F.col(x).cast("long") < limit) & (F.col(y).cast("long") < limit)
-    guard = F.assert_true(
-        fits, f"zorder_cluster: {x} or {y} >= 2**{bits}; raise bits"
-    )
-    # assert_true yields NULL when it passes — fold it into the key
-    # expression so column pruning can never drop the check.
-    zkey = F.when(guard.isNull(), zorder_key(F.col(x), F.col(y), bits))
-    keyed = df.withColumn("_zkey", zkey)
-    return (
-        keyed.repartitionByRange(n_partitions, "_zkey")
-        .sortWithinPartitions("_zkey")
-        .drop("_zkey")
-    )
 
 
 def snapshot_diff(
@@ -525,11 +432,11 @@ def observed_write_metrics(
 def vacuum_orphans(base_dir: str, spark=None) -> dict[str, list[str]]:
     """Remove orphaned work directories left by crashed swap
     rewrites (the ``__compacting`` / ``__upserting`` staging dirs and
-    ``__replaced`` backups of :func:`compact_files` and
-    ``stream_upsert_sink``) — the retention/vacuum complement of the
-    crash-safe swap discipline: a crash leaves the table recoverable
-    AND leaves debris; this reclaims the debris once the table is
-    confirmed healthy.
+    ``__replaced`` backups; the streaming sinks' swap write is
+    ``streaming.events_stream._swap_write``) — the retention/vacuum
+    complement of the crash-safe swap discipline: a crash leaves the
+    table recoverable AND leaves debris; this reclaims the debris once
+    the table is confirmed healthy.
 
     Safety valve: a ``__replaced`` backup whose live table path does
     NOT exist is the only surviving copy of the table (the swap
@@ -645,7 +552,8 @@ def incremental_agg_merge(
     current aggregate, coalescing each side to 0.  Broadcast the delta
     side when it is batch-sized.  Non-algebraic aggregates (exact
     distinct, median) need sketch columns instead — see
-    ``aggregates.approx_aggregates`` for the mergeable versions."""
+    ``aggregates.approx_aggregates_graded`` for the mergeable
+    sketches."""
     sum_cols = dict(sum_cols or {})
     # Delta-side measures carry a prefix: a USING full-outer join with
     # SAME-named measure columns on both sides makes `df[col]`

@@ -34,7 +34,7 @@ agnostic, only the one atomic primitive changes).
 Conflict semantics on a lost race:
 
 * ``append`` — auto-retries with the next version: appends commute.
-* ``overwrite``/``merge``/``delete_rows`` — raise
+* ``overwrite``/``merge`` — raise
   :class:`ConcurrentWriteError`: these read the snapshot they replace,
   so a lost race means the snapshot is stale and the CALLER must
   re-derive (retrying blindly would silently drop the winner's rows —
@@ -59,10 +59,8 @@ Conflict semantics on a lost race:
   a wrong answer); MERGE rewrites only
   the directories whose recorded [min, max] zone-map stats intersect
   the updates' key range (zonemap_skip_audit's skip rule composed
-  into the commit protocol — round-9 verdict item 4), and DELETE
-  WHERE rewrites only the directories an exact predicate-pushed
-  probe shows to contain matches; everything else stays live,
-  byte-identical on disk, across the commit.
+  into the commit protocol — round-9 verdict item 4); everything
+  else stays live, byte-identical on disk, across the commit.
 
 Scale caveat (documented, same class as SNK-02): ``os.link``
 atomicity holds on POSIX filesystems; object stores need the
@@ -377,7 +375,7 @@ def _maybe_stats(
 def create(df: DataFrame, table: str, stats_cols=None) -> int:
     """Create a txn table at ``table`` with ``df`` as version 1.
     ``stats_cols`` records per-directory [min, max] zone-map stats in
-    the commit entry, enabling file-level MERGE/DELETE pruning."""
+    the commit entry, enabling file-level MERGE pruning."""
     if _list_versions(table):
         raise FileExistsError(f"txn table already exists: {table}")
     rel = _stage_data(df, table, 1)
@@ -432,8 +430,8 @@ def _replace_commit(
     ``remove_rels`` (default: the FULL prior snapshot), valid only if
     ``based_on`` is still the head (otherwise the derivation is
     stale and retrying would drop the winner's changes).  Directories
-    NOT in ``remove_rels`` stay live — this is what lets MERGE/DELETE
-    rewrite only the files they logically touch."""
+    NOT in ``remove_rels`` stay live — this is what lets MERGE rewrite
+    only the files it logically touches."""
     versions = _list_versions(table)
     head = versions[-1]
     if head != based_on:
@@ -541,70 +539,6 @@ def merge_upsert(
     return _replace_commit(
         merged, table, "merge", head,
         remove_rels=sorted(overlap), stats_cols=list(key_cols),
-    )
-
-
-def delete_rows(
-    spark: SparkSession, table: str, condition: str
-) -> int:
-    """Transactional DELETE WHERE: survivors become the new snapshot.
-
-    File-level pruning (round-9 verdict item 4): one probe pass —
-    predicate-pushed, reading only the condition's columns — maps
-    matching rows to their data directories via input_file_name();
-    only directories that actually contain matches are rewritten, the
-    rest stay live untouched.  (The probe is exact where MERGE's
-    zone-map test is conservative, because an arbitrary SQL condition
-    has no precomputable key range; the collect is bounded by the
-    number of live directories, i.e. O(#versions), not rows.)  A
-    delete that matches nothing commits an explicit no-op entry, so
-    the operation is still journaled."""
-    from pyspark.sql import functions as F
-
-    versions = _list_versions(table)
-    head = versions[-1]
-    stats = snapshot_stats(table, head)
-    live = list(stats.keys())
-    if live:
-        current = _read_rels(spark, table, live)
-        hit_rows = (
-            current.filter(condition)
-            .select(
-                F.regexp_extract(
-                    F.input_file_name(), r"(data/v\d+-[0-9a-f]+)/", 1
-                ).alias("d")
-            )
-            .distinct()
-            .collect()
-        )
-        hit = sorted(r["d"] for r in hit_rows)
-    else:
-        hit = []
-    if not hit:
-        v = head + 1
-        entry = _base_entry("delete", None) | {
-            "version": v, "add": [], "remove": [], "based_on": head,
-            "schema": _read_entry(table, head).get("schema"),
-        }
-        if not _try_commit(table, v, entry):
-            raise ConcurrentWriteError(
-                f"delete on {table} lost the race for v{v}: re-derive"
-            )
-        _maybe_checkpoint(table, v)
-        return v
-    # SQL DELETE semantics: only rows where the predicate is TRUE are
-    # removed — a NULL predicate keeps the row.  A bare NOT(cond)
-    # would also drop NULL-predicate rows, and after pruning that
-    # loss would be DATA-DEPENDENT (only rows sharing a directory
-    # with a real match would die) — the worst kind of wrong.
-    survivors = _read_rels(spark, table, hit).filter(
-        f"NOT coalesce(({condition}), false)"
-    )
-    # carry forward the stats columns the rewritten dirs were tracking
-    carried_cols = sorted({c for r in hit for c in stats.get(r, {})})
-    return _replace_commit(
-        survivors, table, "delete", head,
-        remove_rels=hit, stats_cols=carried_cols or None,
     )
 
 

@@ -40,18 +40,14 @@ def extract_variant_fields(
     df: DataFrame, repartition_to: int | None = None
 ) -> DataFrame:
     """Raw GVF rows -> typed per-VARIANT frame (chromosome, start,
-    end, rsid, observed, maf, effect-list) — everything in
-    :func:`process_gvf` EXCEPT the per-effect explode.  Shared by the
-    effect path (explodes next) and the metadata path (which must NOT
-    pay the explode: metadata is constant across a variant's effects,
-    so deduping post-explode rows is pure inflation)."""
-    return _extract_typed(df, repartition_to)
+    end, rsid, observed, maf, effect-list): projection + staged regex
+    extraction + null/cast handling, everything in the reference chain
+    EXCEPT the per-effect explode (:func:`explode_effects`).  Shared by
+    the effect path (explodes next) and the metadata path (which must
+    NOT pay the explode: metadata is constant across a variant's
+    effects, so deduping post-explode rows is pure inflation).
 
-
-def process_gvf(df: DataFrame, repartition_to: int | None = None) -> DataFrame:
-    """Raw GVF rows -> processed variants (one row per effect).
-
-    Ops: PRJ-01/02, STR-01..06, NUL-01/02, CST-01, EXP-01
+    Ops: PRJ-01/02, STR-01..04, NUL-01/02, CST-01
     (reference chain ``eggv/process.py:100-180``).
 
     ``repartition_to``: gzip text is NOT splittable, so a scan of N
@@ -63,41 +59,7 @@ def process_gvf(df: DataFrame, repartition_to: int | None = None) -> DataFrame:
     BEFORE the regex extraction, trading one narrow shuffle for
     full-width parallelism.  Leave None for splittable inputs
     (parquet, plain text).
-
-    Output schema: PROCESSED_VARIANTS_SCHEMA — (chromosome, rsid,
-    start, end, observed, maf, effect, transcript).
     """
-    return explode_effects(_extract_typed(df, repartition_to))
-
-
-def explode_effects(df: DataFrame) -> DataFrame:
-    """Typed per-variant frame (:func:`extract_variant_fields`) ->
-    processed variants (one row per effect) — the back half of
-    :func:`process_gvf`, split out so a caller that already holds the
-    typed frame (e.g. a materialized shared scan) can explode without
-    re-extracting."""
-    # EXP-01: one row per effect.  The column was just coalesced to a
-    # non-null non-empty string, so plain explode never drops rows;
-    # explode_outer is used anyway as a defensive invariant
-    # (SURVEY §7.5.3).
-    df = df.withColumn("effect", F.explode_outer(F.split("effect", ",")))
-
-    # STR-05/06: effect grammar 'name idx feature_type transcript'.
-    # F.get is null-on-out-of-bounds (ANSI-safe): short/malformed
-    # entries yield null transcript -> '' (parity with pandas
-    # str.get(3).fillna('')).
-    tokens = F.split(F.coalesce(F.col("effect"), F.lit("intergenic")), " ")
-    df = df.withColumn("transcript", F.coalesce(F.get(tokens, 3), F.lit("")))
-    df = df.withColumn("effect", F.get(tokens, 0))
-
-    return df.select(
-        "chromosome", "rsid", "start", "end", "observed", "maf", "effect", "transcript"
-    )
-
-
-def _extract_typed(df: DataFrame, repartition_to: int | None = None) -> DataFrame:
-    """Projection + staged regex extraction + null/cast handling —
-    the pre-explode front of :func:`process_gvf`."""
     # PRJ-01 projection + PRJ-02 rename + STR-01 'chr' prefix.
     # Catalyst prunes the scan to these 4 columns automatically.
     df = df.select(
@@ -182,6 +144,32 @@ def _extract_typed(df: DataFrame, repartition_to: int | None = None) -> DataFram
         ),
     )
     return df
+
+
+def explode_effects(df: DataFrame) -> DataFrame:
+    """Typed per-variant frame (:func:`extract_variant_fields`) ->
+    processed variants (one row per effect): (chromosome, rsid, start,
+    end, observed, maf, effect, transcript).  Op EXP-01 plus the
+    STR-05/06 effect-token split.  Taking the typed frame lets a caller
+    that already holds it (the pipeline's materialized scan) explode
+    without re-extracting."""
+    # EXP-01: one row per effect.  The column was just coalesced to a
+    # non-null non-empty string, so plain explode never drops rows;
+    # explode_outer is used anyway as a defensive invariant
+    # (SURVEY §7.5.3).
+    df = df.withColumn("effect", F.explode_outer(F.split("effect", ",")))
+
+    # STR-05/06: effect grammar 'name idx feature_type transcript'.
+    # F.get is null-on-out-of-bounds (ANSI-safe): short/malformed
+    # entries yield null transcript -> '' (parity with pandas
+    # str.get(3).fillna('')).
+    tokens = F.split(F.coalesce(F.col("effect"), F.lit("intergenic")), " ")
+    df = df.withColumn("transcript", F.coalesce(F.get(tokens, 3), F.lit("")))
+    df = df.withColumn("effect", F.get(tokens, 0))
+
+    return df.select(
+        "chromosome", "rsid", "start", "end", "observed", "maf", "effect", "transcript"
+    )
 
 
 def isolate_variant_effects(df: DataFrame) -> DataFrame:

@@ -7,8 +7,7 @@ forced, per-chromosome fan-out).  Two deliberate differences:
 
 * **No gunzip step** (reference SRC-02, ``eggv/retrieve.py:49-75``):
   Spark's CSV/text readers decompress ``.gz`` transparently, so the
-  compressed file IS the input.  ``gunzip`` is kept only as an
-  explicit export utility.
+  compressed file IS the input.
 * Fan-out uses a driver ``ThreadPoolExecutor`` (downloads are
   IO-bound); at cluster scale you'd point the pipeline at data
   already on the object store and skip this module entirely.
@@ -19,7 +18,6 @@ full retrieval path without a network.
 
 from __future__ import annotations
 
-import gzip
 import os
 import shutil
 import urllib.request
@@ -45,16 +43,6 @@ def fetch(url: str, output: str, force: bool = False) -> str:
     if os.path.exists(output) and not force:
         return output
     return download(url, output)
-
-
-def gunzip(path: str, output: str | None = None, force: bool = False) -> str:
-    """SRC-02 (export utility only — Spark reads .gz natively)."""
-    output = output or path.removesuffix(".gz")
-    if os.path.exists(output) and not force:
-        return output
-    with gzip.open(path, "rb") as src, open(output, "wb") as dst:
-        shutil.copyfileobj(src, dst, length=CHUNK_BYTES)
-    return output
 
 
 def retrieve_genes(layout: DataLayout, force: bool = False, url: str | None = None) -> str:

@@ -11,11 +11,9 @@ from __future__ import annotations
 
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     DoubleType,
     FloatType,
     LongType,
-    MapType,
     StringType,
     StructField,
     StructType,
@@ -53,17 +51,6 @@ GTF_SCHEMA = _struct(
     ("attr", StringType()),
 )
 
-#: Processed variants (intermediate; eggv/process.py:178-180 shape).
-PROCESSED_VARIANTS_SCHEMA = _struct(
-    ("chromosome", StringType()),
-    ("rsid", LongType()),
-    ("start", LongType()),
-    ("end", LongType()),
-    ("observed", StringType()),
-    ("maf", FloatType()),
-    ("effect", StringType()),
-    ("transcript", StringType()),
-)
 
 #: Variant effects (eggv/process.py:291-294 shape).
 VARIANT_EFFECTS_SCHEMA = _struct(
@@ -93,16 +80,6 @@ GENES_SCHEMA = _struct(
     ("biotype", StringType()),
 )
 
-#: Annotated variants (eggv/annotate.py:86-94 shape).
-ANNOTATED_SCHEMA = _struct(
-    ("chromosome", StringType()),
-    ("rsid", LongType()),
-    ("variant_effect", StringType()),
-    ("transcript", StringType()),
-    ("gene_id", StringType()),
-    ("gene_name", StringType()),
-    ("gene_biotype", StringType()),
-)
 
 #: Intergenic split (eggv/annotate.py:109).
 INTERGENIC_SCHEMA = _struct(
@@ -119,15 +96,6 @@ INTRAGENIC_SCHEMA = _struct(
     ("gene_biotype", StringType()),
 )
 
-#: Multimodal asset table (extension, SURVEY §7.4): opaque binary
-#: payload + typed metadata; parquet-native.
-MULTIMODAL_ASSET_SCHEMA = _struct(
-    ("asset_id", LongType()),
-    ("modality", StringType()),  # image | audio | video
-    ("payload", BinaryType()),
-    ("mime_type", StringType()),
-    ("meta", MapType(StringType(), StringType())),
-)
 
 #: Extracted multimodal features (extension).  ``feature`` is DOUBLE:
 #: real decoders emit exact stats (raster means, PCM rms) that the

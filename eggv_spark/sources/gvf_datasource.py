@@ -24,9 +24,12 @@ Malformed-row policy mirrors the CSV reader's mode names:
   rows, for salvage reads of known-dirty feeds.
 
 When to use which reader:
-- ``read_gvf`` (CSV reader, JVM-side) is the FAST path — whole-stage
-  codegen parsing, splittable plain-text files, PERMISSIVE corrupt
-  capture.  Use it for bulk processing.
+- ``read_gvf_split`` (one ``split`` per line of ``spark.read.text``,
+  JVM-side) is the FAST path — whole-stage codegen, splittable
+  plain-text files.  The pipeline reads trusted GVF drops through it.
+- ``read_gvf`` (CSV reader, JVM-side) is the QUARANTINE path for
+  untrusted drops — PERMISSIVE corrupt capture
+  (``capture_corrupt=True``, split with ``split_corrupt``).
 - ``format("gvf")`` is the INTEGRATION path — the format string
   travels through SQL (``CREATE TABLE ... USING gvf``), catalogs,
   and any tooling that only speaks formats.

@@ -20,13 +20,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source streaming scan of the events parquet (in
@@ -206,33 +200,6 @@ def run_available_now(
     return streaming_df.sparkSession.table(name)
 
 
-def streaming_variant_processing(
-    spark: SparkSession, gvf_dir: str, max_files_per_trigger: int = 4
-) -> DataFrame:
-    """Streaming twin of the GVF processing chain: the SAME
-    stateless operator (``operators.variants.process_gvf``) applied
-    to a file-source stream — new chromosome files entering
-    ``gvf_dir`` are processed incrementally as they land (the
-    streaming version of the reference's as_completed per-chromosome
-    loop, ``eggv/pipeline.py:177``).
-
-    Works because the whole §2.2 chain is stateless row-wise
-    expression work: batch and streaming share one code path, so
-    parity tests on the batch operator cover the streaming plan.
-    """
-    from eggv_spark.operators.variants import process_gvf
-    from eggv_spark.schemas import GVF_SCHEMA
-
-    raw = (
-        spark.readStream.schema(GVF_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .option("sep", "\t")
-        .option("comment", "#")
-        .csv(gvf_dir)
-    )
-    return process_gvf(raw)
-
-
 def streaming_exact_dedupe(
     events: DataFrame,
     keys: tuple[str, ...] = ("user_id", "event_type"),
@@ -246,9 +213,7 @@ def streaming_exact_dedupe(
     is part of the ``dropDuplicates`` subset — Spark evicts
     dropDuplicates state strictly by the event-time values stored in
     the subset, so a subset WITHOUT the event-time column grows
-    without bound on an unbounded stream.  For first-per-key
-    semantics regardless of timestamp, use
-    :func:`streaming_dedupe_within_watermark` instead.
+    without bound on an unbounded stream.
 
     Deterministic output (the exact distinct key+time set), so the
     batch oracle is a plain ``SELECT DISTINCT``.
@@ -257,26 +222,6 @@ def streaming_exact_dedupe(
         events.withWatermark(event_time, watermark)
         .dropDuplicates([*keys, event_time])
         .select(*keys, event_time)
-    )
-
-
-def streaming_dedupe_within_watermark(
-    events: DataFrame,
-    keys: tuple[str, ...] = ("user_id", "event_type"),
-    watermark: str = "2 hours",
-    event_time: str = "ts",
-) -> DataFrame:
-    """First arrival per key, state bounded by the watermark via
-    ``dropDuplicatesWithinWatermark`` (Spark 3.5+): a duplicate
-    arriving within the watermark delay of the first occurrence is
-    dropped; one arriving later re-emits the key.  That re-emission
-    is the price of bounded state — WHICH rows appear depends on
-    micro-batch boundaries, so this variant is pytest-covered rather
-    than value-oracled."""
-    return (
-        events.withWatermark(event_time, watermark)
-        .dropDuplicatesWithinWatermark(list(keys))
-        .select(*keys)
     )
 
 
@@ -373,6 +318,28 @@ def streaming_running_zscore(events: DataFrame) -> DataFrame:
     )
 
 
+def _swap_write(merged: DataFrame, path: str) -> None:
+    """Replace the parquet table at ``path`` with ``merged``, which
+    may read it: write a ``__upserting`` side directory, move the live
+    table aside to ``__replaced``, promote the side directory, then
+    drop the old copy.  A crash leaves either the live table or its
+    ``__replaced`` backup (``tableops.vacuum_orphans`` reports and
+    reclaims such debris)."""
+    import os
+    import shutil
+
+    tmp = path.rstrip("/") + "__upserting"
+    merged.write.mode("overwrite").parquet(tmp)
+    old = path.rstrip("/") + "__replaced"
+    if os.path.exists(old):
+        shutil.rmtree(old)
+    if os.path.exists(path):
+        os.rename(path, old)
+    os.rename(tmp, path)
+    if os.path.exists(old):
+        shutil.rmtree(old)
+
+
 def stream_cdc_sink(
     stream_changes: DataFrame,
     path: str,
@@ -395,12 +362,11 @@ def stream_cdc_sink(
     operator's contract.
 
     Exactly-once to the table: checkpointed batch replay + idempotent
-    per-key merge + side-directory swap write (never an in-place
-    overwrite of a directory the merge is reading).  Runs with
-    Trigger.AvailableNow and BLOCKS until input drains.
+    per-key merge + side-directory swap write (:func:`_swap_write`:
+    never an in-place overwrite of a directory the merge is reading).
+    Runs with Trigger.AvailableNow and BLOCKS until input drains.
     """
     import os
-    import shutil
 
     from eggv_spark.operators.tableops import cdc_apply
 
@@ -410,74 +376,10 @@ def stream_cdc_sink(
             current = spark.read.parquet(path)
         else:
             current = batch_df.drop(op_col, seq_col).limit(0)
-        merged = cdc_apply(current, batch_df, keys, seq_col, op_col)
-        tmp = path.rstrip("/") + "__upserting"
-        merged.write.mode("overwrite").parquet(tmp)
-        old = path.rstrip("/") + "__replaced"
-        if os.path.exists(old):
-            shutil.rmtree(old)
-        if os.path.exists(path):
-            os.rename(path, old)
-        os.rename(tmp, path)
-        if os.path.exists(old):
-            shutil.rmtree(old)
+        _swap_write(cdc_apply(current, batch_df, keys, seq_col, op_col), path)
 
     (
         stream_changes.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-
-def stream_upsert_sink(
-    stream_df: DataFrame,
-    path: str,
-    keys: "list[str]",
-    checkpoint: str,
-) -> None:
-    """Streaming → maintained-table sink: every micro-batch MERGES
-    into a parquet table by key via ``foreachBatch`` + the batch
-    ``merge_upsert`` operator — the plain-parquet stand-in for
-    MERGE INTO against a table format, and the standard pattern for
-    keeping a serving table current from a stream.
-
-    Exactly-once to the table: the checkpoint makes batch replay
-    idempotent AT THE BATCH LEVEL, and the upsert makes replaying a
-    batch a no-op at the ROW level (same keys overwrite the same
-    rows), so crash-restart never duplicates.  The merged result is
-    written to a side directory and swapped in (rename-rename-delete,
-    the compact_files discipline) — never an in-place overwrite of a
-    directory that the merge itself is still reading.
-
-    Runs with Trigger.AvailableNow and BLOCKS until input drains.
-    """
-    import os
-    import shutil
-
-    from eggv_spark.operators.tableops import merge_upsert
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if os.path.exists(path):
-            current = spark.read.parquet(path)
-            merged = merge_upsert(current, batch_df, keys)
-        else:
-            merged = batch_df
-        tmp = path.rstrip("/") + "__upserting"
-        merged.write.mode("overwrite").parquet(tmp)
-        old = path.rstrip("/") + "__replaced"
-        if os.path.exists(old):
-            shutil.rmtree(old)
-        if os.path.exists(path):
-            os.rename(path, old)
-        os.rename(tmp, path)
-        if os.path.exists(old):
-            shutil.rmtree(old)
-
-    (
-        stream_df.writeStream.foreachBatch(_apply)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
@@ -500,14 +402,13 @@ def stream_incremental_agg_sink(
     the standard way to keep a 100 TB-scale rollup fresh without
     nightly recomputes.
 
-    Exactly-once to the table: checkpointed replay + swap-write (the
-    merge never overwrites a directory it is reading).  Counts/sums
-    are algebraic so replay of a completed batch after a crash is the
-    only duplication risk — foreachBatch's batch-id checkpointing is
-    precisely the guard.  Runs with Trigger.AvailableNow and BLOCKS
-    until input drains."""
+    Exactly-once to the table: checkpointed replay + swap-write
+    (:func:`_swap_write`: the merge never overwrites a directory it is
+    reading).  Counts/sums are algebraic so replay of a completed batch
+    after a crash is the only duplication risk — foreachBatch's
+    batch-id checkpointing is precisely the guard.  Runs with
+    Trigger.AvailableNow and BLOCKS until input drains."""
     import os
-    import shutil
 
     from eggv_spark.operators.tableops import incremental_agg_merge
 
@@ -526,14 +427,7 @@ def stream_incremental_agg_sink(
         merged = incremental_agg_merge(
             current, batch_df, keys, count_col=count_col, sum_cols=sum_cols
         )
-        tmp = path.rstrip("/") + "__upserting"
-        merged.write.mode("overwrite").parquet(tmp)
-        old = path.rstrip("/") + "__replaced"
-        if os.path.exists(old):
-            shutil.rmtree(old)
-        if os.path.exists(path):
-            os.rename(path, old)
-        os.rename(tmp, path)
+        _swap_write(merged, path)
 
     (
         stream.writeStream.foreachBatch(_apply)
@@ -586,75 +480,6 @@ def streaming_index_dedupe(
     from eggv_spark.operators.dedupe import index_probe_matches
 
     return index_probe_matches(docs_stream, index, id_col=id_col)
-
-
-def streaming_user_profile_tws(events: DataFrame) -> DataFrame:
-    """Per-user running profile via ``transformWithStateInPandas`` —
-    Spark 4's arbitrary-stateful-processing API (the successor to
-    ``applyInPandasWithState``: named state variables with explicit
-    lifecycle instead of one packed tuple, plus timers/TTL when
-    needed).  State per user is three scalars (count, value sum,
-    value max) in a ValueState; each micro-batch emits the user's
-    UPDATED totals, so the latest row per user equals the batch
-    aggregate.  Bounded by key cardinality, not stream length.
-
-    Environment note: transformWithState needs (a) the RocksDB state
-    store provider (set ``spark.sql.streaming.stateStore.
-    providerClass``) and (b) a working ``google.protobuf`` for its
-    Python driver-worker channel.  This container ships a broken
-    protobuf, so the operator is exercised by a skip-gated test
-    rather than a registry entry; ``streaming_running_zscore``
-    (applyInPandasWithState) covers the stateful-streaming contract
-    in the oracle-checked registry."""
-    import pandas as pd
-    from pyspark.sql.streaming import StatefulProcessor
-
-    class _Profile(StatefulProcessor):
-        def init(self, handle):
-            self._stats = handle.getValueState(
-                "stats", "n long, s double, mx double"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._stats.exists():
-                n, s, mx = self._stats.get()
-                if mx is not None and mx != mx:
-                    # NaN is the stored no-max-yet sentinel (the state
-                    # schema needs a double); normalize it back to
-                    # None so a later real value wins the comparison
-                    # instead of `m > nan` = False pinning NaN forever
-                    mx = None
-            else:
-                n, s, mx = 0, 0.0, None
-            for pdf in rows:
-                vals = pdf["value"].dropna()
-                n += len(pdf)
-                s += float(vals.sum())
-                if len(vals):
-                    m = float(vals.max())
-                    mx = m if mx is None or m > mx else mx
-            self._stats.update((n, s, mx if mx is not None else float("nan")))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "sum_value": [round(s, 4)],
-                    "max_value": [mx],
-                }
-            )
-
-        def close(self):
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_Profile(),
-        outputStructType=(
-            "user_id long, n_events long, sum_value double,"
-            " max_value double"
-        ),
-        outputMode="Update",
-        timeMode="None",
-    )
 
 
 def streaming_cusum(

@@ -14,7 +14,7 @@ in the row id, shaped like the reference's mm10 inputs
 - 0-3 ``Variant_effect`` entries (comma-separated
   ``effect idx feature_type ENSMUST...`` terms) — 25% of rows have
   none (intergenic), ~5% lack an rsid (must be dropped by
-  process_gvf)
+  extract_variant_fields)
 - transcript ids drawn from the same id space the GTF emits, so the
   annotation join has realistic hit rates
 
@@ -67,7 +67,7 @@ def generate_gvf(
     chrom = _pick(i, [str(c) for c in range(1, 20)] + ["X", "Y"])
     pos = (i * 37 % 100_000_000 + 1).cast("string")
     rsid = F.concat(F.lit("Dbxref=dbSNP_150:rs"), i.cast("string"), F.lit(";"))
-    # ~5% of rows lack the dbSNP xref -> process_gvf must drop them
+    # ~5% of rows lack the dbSNP xref -> extract_variant_fields must drop them
     dbxref = F.when(i % 20 == 19, F.lit("")).otherwise(rsid)
 
     def effect_term(k):

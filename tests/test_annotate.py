@@ -12,15 +12,17 @@ from eggv_spark.operators.annotate import (
     run_annotation,
 )
 from eggv_spark.operators.genes import process_gtf
-from eggv_spark.operators.variants import process_gvf
-from eggv_spark.sources.readers import read_gtf, read_gvf
+from eggv_spark.operators.variants import explode_effects, extract_variant_fields
+from eggv_spark.sources.readers import read_gtf, read_gvf_split
 from tests.fixtures import GTF_TEXT, GVF_TEXT, write_fixture
 
 
 @pytest.fixture(scope="module")
 def annotated(spark, tmp_path_factory):
     tmp = tmp_path_factory.mktemp("annot")
-    variants = process_gvf(read_gvf(spark, write_fixture(tmp, "s.gvf", GVF_TEXT)))
+    variants = explode_effects(extract_variant_fields(
+        read_gvf_split(spark, write_fixture(tmp, "s.gvf", GVF_TEXT))
+    ))
     genes = process_gtf(read_gtf(spark, write_fixture(tmp, "s.gtf", GTF_TEXT)))
     return annotate_variants(variants, genes).cache()
 
@@ -76,7 +78,9 @@ def test_intragenic_split_dedupes_composite_key(annotated):
 
 def test_run_annotation_end_to_end(annotated, spark, tmp_path_factory):
     tmp = tmp_path_factory.mktemp("e2e")
-    variants = process_gvf(read_gvf(spark, write_fixture(tmp, "s.gvf", GVF_TEXT)))
+    variants = explode_effects(extract_variant_fields(
+        read_gvf_split(spark, write_fixture(tmp, "s.gvf", GVF_TEXT))
+    ))
     genes = process_gtf(read_gtf(spark, write_fixture(tmp, "s.gtf", GTF_TEXT)))
     out = run_annotation(variants, genes)
     assert out["intergenic"].count() == 1

@@ -553,6 +553,8 @@ def test_stream_incremental_agg_sink_equals_batch(spark, tmp_path):
     for k in want:
         assert got[k]["n"] == want[k]["n"]
         assert got[k]["s"] == pytest.approx(want[k]["s"])
+    # the swap write leaves no staging dir or old copy behind
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["ck", "src", "tbl"]
 
 
 def test_hll_rollup_estimates_close_to_exact(spark):

@@ -49,9 +49,6 @@ def test_retrieve_file_urls(tmp_path):
     mtime = os.path.getmtime(out)
     assert retrieve.retrieve_genes(lay, url=f"file://{src}") == out
     assert os.path.getmtime(out) == mtime
-    # gunzip export utility round-trips.
-    plain = retrieve.gunzip(out)
-    assert open(plain).read() == GTF_TEXT
 
 
 def test_process_and_annotate_stages(spark, layout):
@@ -165,31 +162,6 @@ def test_cli_help_lists_subcommands():
     assert result.exit_code == 0
     for cmd in ("retrieve", "process", "annotate", "complete"):
         assert cmd in result.output
-
-
-def test_catalog_register_and_sql(spark):
-    from eggv_spark.catalog import register_tables
-
-    from eggv_spark.sources.readers import read_table
-
-    views = register_tables(spark, "/root/testdata/sf0.001")
-    assert "lineitem" in views and "documents" in views
-    # SQL users see the same (timestamp-normalized) schema as operators
-    for v in views:
-        assert spark.table(v).schema == read_table(
-            spark, "/root/testdata/sf0.001", v
-        ).schema, v
-    n = spark.sql(
-        "SELECT count(*) AS n FROM lineitem WHERE l_quantity > 25"
-    ).collect()[0]["n"]
-    assert n > 0
-    # the UDTF is registered for SQL users
-    rows = spark.sql(
-        "SELECT * FROM explode_effects("
-        "'Variant_effect=intron_variant 0 primary_transcript ENST1,"
-        "missense_variant 0 mRNA ENST2;')"
-    ).collect()
-    assert len(rows) == 2
 
 
 def test_cli_query_subcommand(tmp_path):

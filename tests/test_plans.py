@@ -10,7 +10,6 @@ and no global-sort shuffle for top-k.
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from eggv_spark.operators.annotate import annotate_variants
@@ -206,8 +205,8 @@ def test_corr_cov_agg_is_partial(spark):
 
 
 def test_gvf_regex_extracts_are_staged_single_eval(spark):
-    from eggv_spark.operators.variants import process_gvf
-    from eggv_spark.sources.readers import read_gvf
+    from eggv_spark.operators.variants import explode_effects, extract_variant_fields
+    from eggv_spark.sources.readers import read_gvf_split
     from tests.fixtures import GVF_TEXT
 
     import tempfile, os
@@ -215,7 +214,7 @@ def test_gvf_regex_extracts_are_staged_single_eval(spark):
     path = os.path.join(tmp, "v.gvf")
     with open(path, "w") as f:
         f.write(GVF_TEXT)
-    plan = _plan(process_gvf(read_gvf(spark, path)))
+    plan = _plan(explode_effects(extract_variant_fields(read_gvf_split(spark, path))))
     # One regexp_extract per expensive attr grammar — the staged
     # two-projection form.  The nullif single-expression form
     # duplicates each regex into the conditional's branches.  (The
@@ -840,3 +839,20 @@ def test_rake_topk_is_takeordered_and_word_join_broadcasts(spark):
     assert "TakeOrderedAndProject" in plan
     assert "Exchange rangepartitioning" not in plan
     assert "EvalPython" not in plan
+
+
+def test_bnlj_lint_proves_build_side_tiny_at_its_root(spark):
+    """scripts/plan_lint.py: a 1-row aggregate at the broadcast root is
+    a tiny build side; the same aggregate under an explode is not, and
+    neither is a keyed aggregate."""
+    from scripts.plan_lint import unbounded_nested_loops
+
+    big = spark.range(1000)
+    total = big.agg(F.sum("id").alias("t"))
+    spread = total.select(
+        "t", F.explode(F.array(*[F.lit(i) for i in range(4)])).alias("x")
+    )
+    keyed = big.groupBy((F.col("id") % 7).alias("g")).count()
+    assert unbounded_nested_loops(big.crossJoin(F.broadcast(total))) == 0
+    assert unbounded_nested_loops(big.crossJoin(F.broadcast(spread))) == 1
+    assert unbounded_nested_loops(big.crossJoin(F.broadcast(keyed))) == 1

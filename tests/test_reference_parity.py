@@ -22,12 +22,18 @@ from eggv_spark.operators.annotate import (
 )
 from eggv_spark.operators.genes import dedupe_genes, process_gtf
 from eggv_spark.operators.variants import (
+    explode_effects,
+    extract_variant_fields,
     isolate_variant_effects,
     isolate_variant_metadata,
-    process_gvf,
 )
 from eggv_spark.schemas import GENES_SCHEMA, VARIANT_EFFECTS_SCHEMA
-from eggv_spark.sources.readers import read_gtf, read_gvf, read_processed_tsv
+from eggv_spark.sources.readers import (
+    read_gtf,
+    read_gvf,
+    read_gvf_split,
+    read_processed_tsv,
+)
 
 DATA = "/root/reference/tests/data"
 GVF = f"{DATA}/sample-hg38-chromosome-10.gvf"
@@ -56,7 +62,9 @@ def test_gvf_scan_parity(spark):
 
 def test_process_gvf_parity(spark):
     # reference tests/test_process.py:60-76 — exact golden values.
-    rows = process_gvf(read_gvf(spark, GVF)).collect()
+    rows = explode_effects(
+        extract_variant_fields(read_gvf_split(spark, GVF))
+    ).collect()
     assert len(rows) == 5
     assert all(r.chromosome == "chr10" for r in rows)
     assert all(r.maf == 0.0 for r in rows)
@@ -74,7 +82,7 @@ def test_process_gvf_parity(spark):
 
 def test_isolate_effects_metadata_parity(spark):
     # reference tests/test_process.py:92-117.
-    processed = process_gvf(read_gvf(spark, GVF))
+    processed = explode_effects(extract_variant_fields(read_gvf_split(spark, GVF)))
     effects = isolate_variant_effects(processed).collect()
     assert len(effects) == 5
     intergenic = [r for r in effects if r.rsid == 1308274876]

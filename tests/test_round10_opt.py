@@ -150,15 +150,19 @@ def test_split_parser_identical_on_spec_conformant_gvf(spark, tmp_path):
 
 def test_split_parser_pipeline_output_identical_through_process_gvf(spark, tmp_path):
     """Even on dirty rows (short / uncastable) the two parsers agree
-    AFTER process_gvf: both leave rsid null on those rows, and the
-    na.drop(rsid) removes them either way."""
-    from eggv_spark.operators.variants import process_gvf
+    AFTER the extract + explode chain: both leave rsid null on those
+    rows, and the rsid drop removes them either way."""
+    from eggv_spark.operators.variants import explode_effects, extract_variant_fields
     from eggv_spark.sources.readers import read_gvf, read_gvf_split
+
+    def chain(raw):
+        out = explode_effects(extract_variant_fields(raw))
+        return sorted(map(tuple, out.collect()))
 
     p = tmp_path / "dirty.gvf"
     p.write_text(_DIRTY_GVF)
-    a = sorted(map(tuple, process_gvf(read_gvf(spark, str(p))).collect()))
-    b = sorted(map(tuple, process_gvf(read_gvf_split(spark, str(p))).collect()))
+    a = chain(read_gvf(spark, str(p)))
+    b = chain(read_gvf_split(spark, str(p)))
     assert a == b and len(a) == 1
 
 
@@ -228,8 +232,9 @@ _SHARE_GVF = (
 def test_variant_stage_matches_reference_composition(spark, tmp_path):
     """run_variant_processing — one materialized typed frame feeding
     both sinks — writes exactly what the reference composition
-    isolate_variant_{effects,metadata}(process_gvf(read_gvf(..)))
-    yields, including the duplicate-rsid dedup and the no-rsid drop."""
+    isolate_variant_{effects,metadata}(explode_effects(
+    extract_variant_fields(read_gvf(..)))) yields, including the
+    duplicate-rsid dedup and the no-rsid drop."""
     import gzip
 
     from eggv_spark import pipeline as P
@@ -245,7 +250,9 @@ def test_variant_stage_matches_reference_composition(spark, tmp_path):
     eff = sorted(map(tuple, spark.read.parquet(lay.variant_effects()).collect()))
     meta = sorted(map(tuple, spark.read.parquet(lay.variant_meta()).collect()))
 
-    processed = V.process_gvf(read_gvf(spark, lay.variant_gvf_glob()))
+    processed = V.explode_effects(
+        V.extract_variant_fields(read_gvf(spark, lay.variant_gvf_glob()))
+    )
     ref_eff = V.isolate_variant_effects(processed)
     ref_meta = V.isolate_variant_metadata(processed)
     assert eff == sorted(map(tuple, ref_eff.collect()))

@@ -1,6 +1,6 @@
 """Round-11 equivalence pins.
 
-- the five-regex attr extraction (variants._extract_typed) must match
+- the five-regex attr extraction (variants.extract_variant_fields) must match
   a Python-re replica of the reference's full-attr regexes on every
   edge shape, including the weird lazy-regex captures (a one-pass
   locate/substring parse was built against these cases, measured
@@ -26,7 +26,7 @@ from eggv_spark.operators.variants import (
     _REF_ALLELE_PATTERN,
     _RSID_PATTERN,
     _VAR_ALLELE_PATTERN,
-    _extract_typed,
+    extract_variant_fields,
 )
 
 #: Edge shapes the extraction must reproduce (the reference's
@@ -85,7 +85,7 @@ def test_one_pass_attr_parse_matches_reference_regexes(spark):
     )
     got = sorted(
         (r.rsid, r.observed, r.maf, r.effect)
-        for r in _extract_typed(df).collect()
+        for r in extract_variant_fields(df).collect()
     )
     want = _reference_rows(ATTR_EDGE_CASES)
     assert [g[:2] + (pytest.approx(g[2]),) + g[3:] for g in got] == [

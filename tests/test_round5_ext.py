@@ -894,43 +894,6 @@ def test_gvf_datasource_gzip_member(spark, tmp_path):
     assert df.count() == 1
 
 
-def test_transform_with_state_profile_or_env_skip(spark):
-    """transformWithStateInPandas needs RocksDB + a working protobuf;
-    this container ships a broken protobuf, so the run is attempted
-    and skipped on the known environment failure (the operator's
-    plan still builds)."""
-    from eggv_spark.streaming import events_stream as ES
-
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        out = ES.run_available_now(
-            ES.streaming_user_profile_tws(
-                ES.read_events_stream(spark, "/root/testdata/sf0.001")
-            ),
-            output_mode="update",
-        )
-        got = {r["user_id"]: r for r in out.collect()}
-        from eggv_spark.sources.readers import read_table
-
-        batch = (
-            read_table(spark, "/root/testdata/sf0.001", "events")
-            .groupBy("user_id")
-            .agg(F.count("*").alias("n"), F.round(F.sum("value"), 4).alias("s"))
-        )
-        for r in batch.collect():
-            assert got[r["user_id"]]["n_events"] == r["n"]
-            assert got[r["user_id"]]["sum_value"] == r["s"]
-    except Exception as exc:  # noqa: BLE001
-        if "protobuf" in str(exc) or "STREAMING_PYTHON_RUNNER" in str(exc) \
-                or "crashed" in str(exc):
-            pytest.skip(f"transformWithState unavailable in env: {exc}")
-        raise
-
-
 # ---------------------------------------------------------------------------
 # review-fix regressions (round-5 second review pass)
 # ---------------------------------------------------------------------------

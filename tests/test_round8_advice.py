@@ -17,7 +17,6 @@ from __future__ import annotations
 import datetime as dt
 
 import pytest
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
     LongType,

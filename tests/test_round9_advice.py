@@ -24,7 +24,6 @@ import math
 from fractions import Fraction
 
 import pytest
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     LongType,
     StructField,

@@ -24,8 +24,6 @@ import math
 
 import pytest
 
-from pyspark.sql import functions as F
-
 
 # --- decision_stump_fit ----------------------------------------------------
 

@@ -20,8 +20,6 @@ import math
 
 import pytest
 
-from pyspark.sql import functions as F
-
 from tests.conftest import SF_DIR, assert_matches_oracle
 
 

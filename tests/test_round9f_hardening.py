@@ -7,8 +7,6 @@ from __future__ import annotations
 
 import pytest
 
-from pyspark.sql import functions as F
-
 
 def test_kmeans_rejects_null_vector(spark):
     from eggv_spark.operators.ml import kmeans_lloyd

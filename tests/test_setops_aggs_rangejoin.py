@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from eggv_spark.operators import aggregates as AG
 from eggv_spark.operators import relational as R
-from eggv_spark.operators.rangejoin import asof_join, interval_annotate, range_join
+from eggv_spark.operators.rangejoin import asof_join, range_join
 
 
 def test_set_ops(spark):
@@ -105,20 +105,6 @@ def test_distinct_counts(spark):
     assert out == {"a": 2, "b": 1}
 
 
-def test_dedupe_partition_local_no_shuffle(spark):
-    df = spark.createDataFrame(
-        [(1, "a"), (1, "a"), (2, "b")], ["k", "v"]
-    ).coalesce(1)
-    out = R.dedupe_partition_local(df)
-    assert sorted((r.k, r.v) for r in out.collect()) == [(1, "a"), (2, "b")]
-    # Key-subset mode keeps the first row per key within a partition.
-    out2 = R.dedupe_partition_local(df, keys=["k"])
-    assert out2.count() == 2
-    # Zero-shuffle contract: no Exchange anywhere in the plan.
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-
-
 def test_range_join_bucketing_exact(spark):
     # Intervals deliberately spanning bin boundaries (width 10).
     intervals = spark.createDataFrame(
@@ -137,20 +123,6 @@ def test_range_join_bucketing_exact(spark):
     assert pairs == {("p1", "iv1"), ("p2", "iv1"), ("p4", "iv2"), ("p5", "iv3")}
     # No duplicate pairs from the bin explosion.
     assert out.count() == len(pairs)
-
-
-def test_interval_annotate_genomic(spark):
-    genes = spark.createDataFrame(
-        [("chr7", 90000, 95000, "G1", "AAAX"), ("chr7", 96000, 97000, "G2", "BBBY")],
-        ["chromosome", "start", "end", "gene_id", "gene_name"],
-    )
-    variants = spark.createDataFrame(
-        [("chr7", 111, 5150), ("chr7", 222, 91000), ("chr7", 333, 96000)],
-        ["chromosome", "rsid", "start"],
-    )
-    out = interval_annotate(variants, genes, bin_width=100000)
-    hits = {(r.rsid, r.gene_id) for r in out.collect()}
-    assert hits == {(222, "G1"), (333, "G2")}
 
 
 def test_gini_udaf(spark):

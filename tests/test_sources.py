@@ -61,30 +61,6 @@ def test_corrupt_record_capture(spark, tmp_path):
     assert read_gvf(spark, str(gvf)).count() == 3
 
 
-def test_streaming_variant_processing_matches_batch(spark, tmp_path):
-    from eggv_spark.operators.variants import process_gvf
-    from eggv_spark.sources.readers import read_gvf
-    from eggv_spark.streaming.events_stream import (
-        run_available_now,
-        streaming_variant_processing,
-    )
-    from tests.fixtures import GVF_TEXT
-
-    gvf_dir = tmp_path / "stream_gvf"
-    gvf_dir.mkdir()
-    (gvf_dir / "chr7a.gvf").write_text(GVF_TEXT)
-    (gvf_dir / "chr7b.gvf").write_text(GVF_TEXT.replace("rs111", "rs333"))
-
-    out = run_available_now(
-        streaming_variant_processing(spark, str(gvf_dir), max_files_per_trigger=1),
-        output_mode="append",
-    )
-    batch = process_gvf(read_gvf(spark, str(gvf_dir)))
-    # Same operator, same rows — streaming == batch on the same files.
-    assert out.count() == batch.count() == 10
-    assert out.exceptAll(batch).count() == 0
-
-
 def test_json_round_trip(spark, tmp_path):
     df = spark.createDataFrame(
         [(1, "intron_variant", "T1"), (2, None, "T2")],
@@ -136,25 +112,6 @@ def test_custom_gvf_datasource(spark, tmp_path):
     (tmp_path / "bad.gvf").write_text("not\ta\tgvf\trow\n")
     with pytest.raises(Exception, match="bad.gvf"):
         spark.read.format("gvf").load(str(tmp_path / "bad.gvf")).count()
-
-
-def test_udtf_explode_effects(spark):
-    from eggv_spark.functions.scalars import register_udtfs
-
-    register_udtfs(spark)
-    df = spark.createDataFrame(
-        [(1, "ID=x;Variant_effect=missense_variant 0 mRNA NM_1,intron_variant 1 mRNA NM_2;Other=y")],
-        ["rsid", "attr"],
-    )
-    df.createOrReplaceTempView("v_udtf_attrs")
-    out = spark.sql(
-        "SELECT rsid, e.effect, e.idx, e.transcript"
-        " FROM v_udtf_attrs, LATERAL explode_effects(attr) e"
-    ).collect()
-    assert [(r["effect"], r["idx"], r["transcript"]) for r in out] == [
-        ("missense_variant", 0, "NM_1"),
-        ("intron_variant", 1, "NM_2"),
-    ]
 
 
 def test_date_spine_attributes(spark):

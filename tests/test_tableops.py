@@ -47,23 +47,6 @@ def test_key_distribution(spark):
     assert (rows[1].k, rows[1].n_rows, rows[1].share) == (2, 2, 0.2)
 
 
-def test_compact_files_reduces_file_count(spark, tmp_path):
-    from eggv_spark.operators.tableops import compact_files
-
-    path = str(tmp_path / "fragmented")
-    df = spark.range(0, 10000).withColumn("v", F.col("id") * 2)
-    df.repartition(64).write.parquet(path)  # 64 tiny files
-    import glob as g
-
-    assert len(g.glob(path + "/*.parquet")) == 64
-    n = compact_files(spark, path, target_file_mb=128)
-    assert n == 1
-    assert len(g.glob(path + "/*.parquet")) == 1
-    back = spark.read.parquet(path)
-    assert back.count() == 10000
-    assert back.agg(F.sum("v")).first()[0] == 2 * sum(range(10000))
-
-
 def test_incremental_append_is_idempotent(spark, tmp_path):
     from eggv_spark.operators.tableops import incremental_append
 
@@ -153,55 +136,6 @@ def test_zorder_key_interleaves_bits(spark):
     # x bits -> even positions, y bits -> odd:
     # x=1010, y=0110 => z = 0b01101100 (x3=1@b6, y2=1@b5, y1=1@b3, x1=1@b2)
     assert got == 0b01101100
-
-
-def test_zorder_cluster_skips_more_partitions_on_2d_box_query(spark):
-    """The point of Z-order: a small (x, y) box query intersects
-    FEWER per-partition min/max bounding boxes than a lexicographic
-    layout (whose stripes all span the full y range)."""
-    from eggv_spark.operators.tableops import zorder_cluster
-
-    import pyspark.sql.functions as F
-
-    n = 1024
-    df = spark.range(n).select(
-        (F.col("id") % 32).alias("x"),
-        F.floor(F.col("id") / 32).alias("y"),
-    )
-
-    def partitions_hit_by_box(frame, hi=8):
-        # min/max footer stats per partition (what parquet row-group
-        # skipping consults), probed with the box x<hi AND y<hi
-        parts = frame.withColumn(
-            "p", F.spark_partition_id()
-        ).groupBy("p").agg(
-            F.min("x").alias("x0"), F.min("y").alias("y0")
-        ).collect()
-        return sum(1 for r in parts if r.x0 < hi and r.y0 < hi)
-
-    z = partitions_hit_by_box(
-        zorder_cluster(df, "x", "y", n_partitions=16, bits=5)
-    )
-    lex = partitions_hit_by_box(
-        df.repartitionByRange(16, "x", "y").sortWithinPartitions("x", "y")
-    )
-    # z-order: the 8x8 box is ~1 tile; lexicographic: every 2-wide x
-    # stripe with x0 < 8 spans all y, so ~4 stripes match
-    assert z < lex
-
-
-def test_zorder_cluster_rejects_oversized_keys_loudly(spark):
-    """Keys >= 2**bits would silently alias in the Morton interleave —
-    zorder_cluster must fail the job instead of degrading quietly."""
-    import pytest
-
-    from eggv_spark.operators.tableops import zorder_cluster
-
-    ok = spark.createDataFrame([(3, 5)], "x long, y long")
-    assert zorder_cluster(ok, "x", "y", n_partitions=2, bits=3).count() == 1
-    bad = spark.createDataFrame([(3, 9)], "x long, y long")  # 9 >= 2**3
-    with pytest.raises(Exception, match="zorder_cluster|ASSERT"):
-        zorder_cluster(bad, "x", "y", n_partitions=2, bits=3).count()
 
 
 def test_cdc_apply_last_op_wins(spark):

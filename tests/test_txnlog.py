@@ -157,12 +157,6 @@ def test_merge_upsert_updates_win_survivors_carry(spark, tmp_path):
         (1, "a"), (2, "b"), (3, "c")]
 
 
-def test_delete_rows(spark, tmp_path):
-    table = _mk(spark, tmp_path, [(1, "a"), (2, "b"), (3, "c")])
-    T.delete_rows(spark, table, "k = 2")
-    assert _rows(spark, T.read(spark, table)) == [(1, "a"), (3, "c")]
-
-
 def test_merge_is_idempotent_under_rerun(spark, tmp_path):
     """Re-running the same MERGE (the backfill re-run case) converges:
     same final rows, one more version."""
@@ -309,39 +303,6 @@ def test_merge_stat_type_drift_rewrites_conservatively(
     assert got == [("a", 1), ("b", 2), ("zzz", 9)]
 
 
-def test_delete_probe_prunes_unmatched_directories(spark, tmp_path):
-    """DELETE WHERE rewrites only directories the predicate-pushed
-    probe finds matches in; a delete matching nothing journals an
-    explicit no-op version."""
-    table = str(tmp_path / "t")
-    T.create(spark.createDataFrame([(i, "low") for i in range(1, 4)],
-                                   "k long, v string"),
-             table, stats_cols=["k"])
-    T.append(spark.createDataFrame([(i, "high") for i in range(100, 104)],
-                                   "k long, v string"),
-             table, stats_cols=["k"])
-    stats = T.snapshot_stats(table)
-    low_rel = next(r for r, s in stats.items() if s["k"][0] == 1)
-    high_rel = next(r for r, s in stats.items() if s["k"][0] == 100)
-    before = _file_state(table, low_rel)
-    v = T.delete_rows(spark, table, "k = 101")
-    assert v == 3
-    e = T.history(table)[-1]
-    assert e["remove"] == [high_rel]
-    assert _file_state(table, low_rel) == before
-    assert _rows(spark, T.read(spark, table)) == (
-        [(i, "low") for i in range(1, 4)]
-        + [(i, "high") for i in (100, 102, 103)]
-    )
-    # rewritten directory keeps tracking the same stats column
-    assert T.snapshot_stats(table)[e["add"][0]]["k"] == [100, 103]
-    # no-op delete: nothing matches -> journaled empty commit
-    v2 = T.delete_rows(spark, table, "k = 424242")
-    e2 = T.history(table)[-1]
-    assert v2 == 4 and e2["add"] == [] and e2["remove"] == []
-    assert len(_rows(spark, T.read(spark, table))) == 6
-
-
 # ---------------------------------------------------------------------------
 # vacuum vs concurrent writers (round-9 advice fix)
 # ---------------------------------------------------------------------------
@@ -399,33 +360,6 @@ def test_vacuum_relists_log_before_deleting(spark, tmp_path, monkeypatch):
     assert rel in out["retained"]
     monkeypatch.undo()
     assert _rows(spark, T.read(spark, table)) == [(1, "a"), (2, "rival")]
-
-
-def test_delete_null_predicate_rows_survive_everywhere(spark, tmp_path):
-    """SQL DELETE semantics: a NULL predicate keeps the row.  With
-    file-level pruning this must hold in BOTH directory classes — a
-    NULL-key row sharing a directory with a real match (rewritten)
-    and one in a pruned directory — or the loss becomes
-    data-dependent, the worst kind of wrong."""
-    table = str(tmp_path / "t")
-    # dir A: contains the match (k=7) AND a NULL-k row
-    T.create(
-        spark.createDataFrame([(7, "hit"), (None, "null_a"), (1, "keep")],
-                              "k long, v string"),
-        table, stats_cols=["k"],
-    )
-    # dir B: no match, plus its own NULL-k row
-    T.append(
-        spark.createDataFrame([(100, "far"), (None, "null_b")],
-                              "k long, v string"),
-        table, stats_cols=["k"],
-    )
-    T.delete_rows(spark, table, "k % 7 = 0")
-    got = {(r["k"], r["v"]) for r in T.read(spark, table).collect()}
-    assert (7, "hit") not in got
-    assert (None, "null_a") in got  # survived the rewritten directory
-    assert (None, "null_b") in got  # survived the pruned directory
-    assert (1, "keep") in got and (100, "far") in got
 
 
 # ---------------------------------------------------------------------------
@@ -529,8 +463,9 @@ def test_log_entries_are_valid_sorted_json(spark, tmp_path):
 
 
 def test_empty_snapshot_after_full_delete_keeps_schema(spark, tmp_path):
+    # deleting every row = overwriting the snapshot with an empty frame
     table = _mk(spark, tmp_path, [(1, "a")])
-    T.delete_rows(spark, table, "k = 1")
+    T.overwrite(spark.createDataFrame([], "k long, v string"), table, based_on=1)
     df = T.read(spark, table)
     assert df.count() == 0
     assert [f.name for f in df.schema.fields] == ["k", "v"]

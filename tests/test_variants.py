@@ -7,23 +7,31 @@ from __future__ import annotations
 import pytest
 
 from eggv_spark.operators.variants import (
+    explode_effects,
+    extract_variant_fields,
     isolate_variant_effects,
     isolate_variant_metadata,
-    process_gvf,
 )
-from eggv_spark.sources.readers import read_gvf
+from eggv_spark.sources.readers import read_gvf, read_gvf_split
 from tests.fixtures import GVF_TEXT, write_fixture
 
 
 @pytest.fixture(scope="module")
-def gvf_df(spark, tmp_path_factory):
-    path = write_fixture(tmp_path_factory.mktemp("gvf"), "sample.gvf", GVF_TEXT)
-    return read_gvf(spark, path)
+def gvf_path(tmp_path_factory):
+    return write_fixture(tmp_path_factory.mktemp("gvf"), "sample.gvf", GVF_TEXT)
 
 
 @pytest.fixture(scope="module")
-def processed(gvf_df):
-    return process_gvf(gvf_df).cache()
+def gvf_df(spark, gvf_path):
+    return read_gvf(spark, gvf_path)
+
+
+@pytest.fixture(scope="module")
+def processed(spark, gvf_path):
+    # the pipeline's variant chain: spec reader -> extract -> explode
+    return explode_effects(
+        extract_variant_fields(read_gvf_split(spark, gvf_path))
+    ).cache()
 
 
 def test_gvf_scan_skips_comments_and_keeps_nine_columns(gvf_df):
@@ -99,7 +107,7 @@ def test_effect_grammar_requires_trailing_semicolon(spark):
         "seqid string, source string, type string, start string, end string,"
         " score string, strand string, phase string, attr string",
     )
-    [row] = process_gvf(df).collect()
+    [row] = explode_effects(extract_variant_fields(df)).collect()
     assert row.effect == "intergenic"
     assert row.transcript == ""
 
@@ -112,6 +120,6 @@ def test_malformed_effect_token_yields_empty_transcript(spark):
         "seqid string, source string, type string, start string, end string,"
         " score string, strand string, phase string, attr string",
     )
-    [row] = process_gvf(df).collect()
+    [row] = explode_effects(extract_variant_fields(df)).collect()
     assert row.effect == "weird_effect"
     assert row.transcript == ""
