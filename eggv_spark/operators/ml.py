@@ -757,12 +757,15 @@ def decision_stump_fit(
             guarded_vec(vec_col, dim, "decision_stump_fit")
         ).alias("_d0", "_x"),
     )
-    spark = df.sparkSession
-    thr = spark.range(1).select(
-        F.posexplode(
-            F.array(*[F.lit(float(t)) for t in thresholds])
-        ).alias("_ti", "_t")
-    ).limit(len(thresholds))
+    # The grid is a VALUES relation (a LocalTableScan): no Limit, whose
+    # generated code names its counter by a per-build id and so is
+    # compiled anew on every call, and no ExistingRDD scan, which
+    # plan_lint cannot prove tiny.
+    grid = ", ".join(
+        f"({ti}, CAST({float(t)!r} AS DOUBLE))"
+        for ti, t in enumerate(thresholds)
+    )
+    thr = df.sparkSession.sql(f"SELECT * FROM VALUES {grid} AS t(_ti, _t)")
     cand = (
         pts.crossJoin(F.broadcast(thr))
         .groupBy((F.col("_d0") + 1).alias("_d"), "_ti", "_t")

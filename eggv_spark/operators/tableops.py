@@ -431,8 +431,8 @@ def observed_write_metrics(
 
 def vacuum_orphans(base_dir: str, spark=None) -> dict[str, list[str]]:
     """Remove orphaned work directories left by crashed swap
-    rewrites (the ``__compacting`` / ``__upserting`` staging dirs and
-    ``__replaced`` backups; the streaming sinks' swap write is
+    rewrites (the ``__upserting`` staging dirs and ``__replaced``
+    backups; the streaming sinks' swap write is
     ``streaming.events_stream._swap_write``) — the retention/vacuum
     complement of the crash-safe swap discipline: a crash leaves the
     table recoverable AND leaves debris; this reclaims the debris once
@@ -450,7 +450,7 @@ def vacuum_orphans(base_dir: str, spark=None) -> dict[str, list[str]]:
     (hdfs://, s3a://, file:); without one it is a driver-local
     ``os.walk``.
     """
-    suffixes = ("__compacting", "__upserting", "__replaced")
+    suffixes = ("__upserting", "__replaced")
 
     def is_unsafe(full: str, exists) -> bool:
         if not full.endswith("__replaced"):

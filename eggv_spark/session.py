@@ -38,6 +38,15 @@ _DEFAULT_CONFS: dict[str, str] = {
     # reliable-mode checkpoint files (materialize.py) are deleted once
     # the checkpointed frame is garbage collected, not left on disk
     "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
+    # Static conf: the codegen class cache is LRU and Spark's default
+    # holds 100 classes, so a session that repeats a working set of more
+    # than 100 recompiles every class on each repeat.  Measured distinct
+    # classes (local[4]): gvf_annotate pipeline 68, the registry_mix
+    # benchmark's six entries 171 (at 100, 166-167 of them recompiled
+    # every warm pass), the first 50 registry entries at sf0.001 443.
+    # A full registry sweep needs 5,873 (at most 79 per entry), so a
+    # sweep still cycles this cache; only per-entry repeats hit it.
+    "spark.sql.codegen.cache.maxEntries": "1024",
 }
 
 

@@ -798,6 +798,11 @@ def test_stump_single_corpus_pass_broadcast_grid(spark):
     assert "CartesianProduct" not in plan
     assert "EvalPython" not in plan
     assert "Exchange rangepartitioning" not in plan
+    # the grid is a literal relation: a Limit's generated code is new
+    # source on every build, so the stump would never hit codegen's cache
+    assert not any(
+        op in plan for op in ("GlobalLimit", "LocalLimit", "CollectLimit")
+    )
 
 
 def test_hits_rounds_shuffle_edges_not_floats(spark):
@@ -856,3 +861,34 @@ def test_bnlj_lint_proves_build_side_tiny_at_its_root(spark):
     assert unbounded_nested_loops(big.crossJoin(F.broadcast(total))) == 0
     assert unbounded_nested_loops(big.crossJoin(F.broadcast(spread))) == 1
     assert unbounded_nested_loops(big.crossJoin(F.broadcast(keyed))) == 1
+
+
+def test_repeated_registry_mix_compiles_no_new_classes(spark):
+    """A session that repeats a working set compiles each generated
+    class once: the second cycle of the registry_mix benchmark's six
+    entries hits Spark's codegen cache for every class (the cache is
+    sized to hold them, and no entry emits new source per build)."""
+    import __spark_entry__ as E
+
+    registry = E.queries()
+    entries = (
+        "ddp_minhash_neardup", "ddp_containment", "txt_repetition",
+        "decision_stump", "graph_kcore", "sim_kcenter_coreset",
+    )
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME()
+
+    def cycle() -> int:
+        before = compiles.getCount()
+        for q in entries:
+            registry[q](spark, SF_DIR).write.format("noop") \
+                .mode("overwrite").save()
+        return compiles.getCount() - before
+
+    cycle()
+    # PySpark names lambda variables from a JVM-global counter; when a
+    # name gains a digit (x_99 -> x_100) the longer expression text can
+    # change how codegen splits methods, and that one cycle recompiles.
+    # An undersized cache or new source on every build recompiles in
+    # every cycle, so neither passes two cycles in a row.
+    assert min(cycle(), cycle()) == 0

@@ -208,18 +208,18 @@ def test_vacuum_orphans_removes_only_work_dirs(spark, tmp_path):
 
     table = tmp_path / "t"
     spark.range(3).write.parquet(str(table))
-    for orphan in ("t__compacting", "t__replaced", "nested/x__upserting"):
+    for orphan in ("t__replaced", "nested/x__upserting"):
         os.makedirs(tmp_path / orphan, exist_ok=True)
         (tmp_path / orphan / "junk").write_text("x")
     out = vacuum_orphans(str(tmp_path))
-    assert len(out["removed"]) == 3 and out["needs_recovery"] == []
+    assert len(out["removed"]) == 2 and out["needs_recovery"] == []
     # the live table is untouched
     assert spark.read.parquet(str(table)).count() == 3
     assert vacuum_orphans(str(tmp_path)) == {
         "removed": [], "needs_recovery": []
     }
     # Hadoop-FS walk (file: scheme) agrees with the local walk.
-    for orphan in ("t__compacting", "nested/y__upserting"):
+    for orphan in ("t__replaced", "nested/y__upserting"):
         os.makedirs(tmp_path / orphan, exist_ok=True)
         (tmp_path / orphan / "junk").write_text("x")
     out = vacuum_orphans(str(tmp_path), spark)
