@@ -57,6 +57,18 @@ def guarded_vec(vec_col: str, dim: int, op: str) -> Column:
     )
 
 
+def _threshold_grid(spark, thresholds) -> DataFrame:
+    """The stump threshold grid ``(_ti, _t)`` as a VALUES relation (a
+    LocalTableScan): no Limit, whose generated code names its counter
+    by a per-build id and so is compiled anew on every build, and no
+    ExistingRDD scan, which plan_lint cannot prove tiny."""
+    grid = ", ".join(
+        f"({ti}, CAST({float(t)!r} AS DOUBLE))"
+        for ti, t in enumerate(thresholds)
+    )
+    return spark.sql(f"SELECT * FROM VALUES {grid} AS t(_ti, _t)")
+
+
 def logistic_regression_gd(
     df: DataFrame,
     features_col: str = "embedding",
@@ -757,15 +769,7 @@ def decision_stump_fit(
             guarded_vec(vec_col, dim, "decision_stump_fit")
         ).alias("_d0", "_x"),
     )
-    # The grid is a VALUES relation (a LocalTableScan): no Limit, whose
-    # generated code names its counter by a per-build id and so is
-    # compiled anew on every call, and no ExistingRDD scan, which
-    # plan_lint cannot prove tiny.
-    grid = ", ".join(
-        f"({ti}, CAST({float(t)!r} AS DOUBLE))"
-        for ti, t in enumerate(thresholds)
-    )
-    thr = df.sparkSession.sql(f"SELECT * FROM VALUES {grid} AS t(_ti, _t)")
+    thr = _threshold_grid(df.sparkSession, thresholds)
     cand = (
         pts.crossJoin(F.broadcast(thr))
         .groupBy((F.col("_d0") + 1).alias("_d"), "_ti", "_t")
@@ -1265,12 +1269,7 @@ def gbrt_stumps(
             "train_sse",
         )
     ]
-    spark = df.sparkSession
-    thr = spark.range(1).select(
-        F.posexplode(
-            F.array(*[F.lit(float(t)) for t in thresholds])
-        ).alias("_ti", "_t")
-    ).limit(len(thresholds))
+    thr = _threshold_grid(df.sparkSession, thresholds)
     for rnd in range(1, n_rounds + 1):
         pts = state.select(
             "_r", F.posexplode("_x").alias("_d", "_v")

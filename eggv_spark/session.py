@@ -47,6 +47,24 @@ _DEFAULT_CONFS: dict[str, str] = {
     # A full registry sweep needs 5,873 (at most 79 per entry), so a
     # sweep still cycles this cache; only per-entry repeats hit it.
     "spark.sql.codegen.cache.maxEntries": "1024",
+    # PySpark's DataFrame call-site capture wraps every Column and
+    # DataFrame function: each call reads two confs, sets and clears the
+    # JVM's PySparkCurrentOrigin over py4j, walks the Python stack and
+    # retries a failing `import IPython`.  Turning it off halves the
+    # py4j round trips of a warm benchmark pass (local[4], seed 2):
+    # registry_mix 11,178-11,325 -> 5,500-5,746, gvf_annotate
+    # 2,272-2,286 -> 1,214-1,320.  What an error loses: a runtime error
+    # (e.g. an ANSI divide by zero) still raises with the same class and
+    # message, and its `== DataFrame ==` block still names the operation
+    # (by its JVM name: "divide", not "__truediv__"), but its "called
+    # from" line is a JVM frame instead of the eggv_spark file:line.
+    # Analysis errors are unchanged (classic PySpark analyzes eagerly, so
+    # the traceback already points at the line).  Turn it back on with
+    # extra_confs={"spark.python.sql.dataFrameDebugging.enabled": "true"}.
+    # PySpark reads this conf once per process, at the first wrapped
+    # call, from the then-active session, and caches False if no
+    # session is active then.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

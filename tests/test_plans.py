@@ -892,3 +892,26 @@ def test_repeated_registry_mix_compiles_no_new_classes(spark):
     # An undersized cache or new source on every build recompiles in
     # every cycle, so neither passes two cycles in a row.
     assert min(cycle(), cycle()) == 0
+
+
+def test_query_build_captures_no_call_sites(spark, monkeypatch):
+    """Sessions turn off PySpark's DataFrame call-site capture, which
+    costs several py4j round trips on every Column and DataFrame call:
+    building a registry entry captures no call site."""
+    import pyspark.errors.utils as pyspark_errors
+    import __spark_entry__ as E
+
+    # PySpark caches the conf per process; None makes it re-read the
+    # active session's value
+    monkeypatch.setattr(pyspark_errors, "_enable_debugging_cache", None)
+    captured = []
+    capture = pyspark_errors._capture_call_site
+
+    def counting(depth):
+        captured.append(depth)
+        return capture(depth)
+
+    monkeypatch.setattr(pyspark_errors, "_capture_call_site", counting)
+    E.queries()["ddp_minhash_neardup"](spark, SF_DIR).write.format("noop") \
+        .mode("overwrite").save()
+    assert len(captured) == 0

@@ -28,12 +28,14 @@ def test_gbrt_reduces_sse_and_finds_planted_split(spark):
         y = 1.0 if i % 2 == 0 else 5.0
         rows.append((i, x, y))
     df = spark.createDataFrame(rows, ["id", "embedding", "label"])
-    out = {
-        r["round"]: r
-        for r in gbrt_stumps(
-            df, target_col="label", n_rounds=2, dim=4
-        ).collect()
-    }
+    fit = gbrt_stumps(df, target_col="label", n_rounds=2, dim=4)
+    # the grid is a literal relation: a Limit's generated code is new
+    # source on every build, so the fit would never hit codegen's cache
+    plan = fit._jdf.queryExecution().executedPlan().toString()
+    assert not any(
+        op in plan for op in ("GlobalLimit", "LocalLimit", "CollectLimit")
+    )
+    out = {r["round"]: r for r in fit.collect()}
     assert out[0]["left_value"] == pytest.approx(3.0)  # base = mean
     assert out[1]["dim"] == 3
     # x3 takes only {-0.25, 0.25}, so every threshold in [-0.2, 0.2]
