@@ -1,10 +1,9 @@
 """The named-query library and the test-data table list.
 
 ``TABLES`` names the ten test-data tables.  ``run_named_query``
-resolves a query from the driver registry
-(``__spark_entry__.queries()``) by name — the registry doubles as the
-engine's named-query library, and the CLI's ``query`` subcommand is a
-thin shell over this module.
+resolves a query from the registry (``eggv_spark.registry``) by name —
+the registry doubles as the engine's named-query library, and the
+CLI's ``query`` subcommand is a thin shell over this module.
 """
 
 from __future__ import annotations
@@ -19,18 +18,11 @@ TABLES = (
 
 def query_registry() -> dict:
     """The named-query library: every registered analytics query,
-    ``name -> (spark, sf_dir) -> DataFrame``.  Lazily imports the
-    driver-contract module (which lives at the repo root, beside this
-    package)."""
-    import importlib
-    import os
-    import sys
+    ``name -> (spark, sf_dir) -> DataFrame``.  Imports the registry
+    lazily: it declares several hundred entries."""
+    from eggv_spark.registry import BUILDERS
 
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    if root not in sys.path:
-        sys.path.insert(0, root)
-    entry = importlib.import_module("__spark_entry__")
-    return entry.queries()
+    return dict(BUILDERS)
 
 
 def run_named_query(

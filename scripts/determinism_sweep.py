@@ -22,19 +22,15 @@ value hashes between the two Spark runs:
   3-slot default parallelism.
 
 Any query whose hash differs between A and B would be at the mercy
-of the driver's session config; the sweep fails loudly on it.
-
-Exception: ``MERGE_ORDER_SENSITIVE`` entries are held to a
-row-count-only cross-run bar.  The set is EMPTY since round 6.
-History worth keeping: the raw ``hll_union_agg`` estimate measured
-497 under config A vs 501 under config B on the same 500-value set —
-the datasketches union gadget's promotion path depends on merge
-order at small cardinality, so a raw sketch ESTIMATE is not a
-deterministic function of the value set (per-source estimates ARE
-invariant; HLL register updates are max-commutative).  The gradeable
-round-6 form of ``agg_hll_rollup`` therefore outputs the exact
-count_distinct twin plus a 5%-tolerance boolean — which this sweep
-measured hash-identical across configs, restoring the full bar.
+of the driver's session config; the sweep fails loudly on it.  Every
+entry is held to that full-hash bar.  A raw sketch ESTIMATE would not
+meet it: the raw ``hll_union_agg`` estimate measured 497 under config
+A vs 501 under config B on the same 500-value set, because the
+datasketches union gadget's promotion path depends on merge order at
+small cardinality (per-source estimates ARE invariant; HLL register
+updates are max-commutative).  So ``agg_hll_rollup`` outputs the exact
+count_distinct twin plus a 5%-tolerance boolean, which this sweep
+measured hash-identical across configs.
 
 Usage: python scripts/determinism_sweep.py [n | name ...]
   no args  — sweep the full registry
@@ -52,14 +48,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entrymod
 from check_correctness import _hash
 from eggv_spark.session import get_session
-
-#: Documented merge-order-sensitive results: cross-run row-count
-#: check only (see module docstring for the measured evidence).
-#: Round 6: EMPTY — agg_hll_rollup's gradeable form outputs the exact
-#: count_distinct twin plus a 5%-tolerance boolean instead of the raw
-#: union estimate, and the sweep measured its hashes identical across
-#: configs, so it is held to the full-hash bar again.
-MERGE_ORDER_SENSITIVE: set[str] = set()
 
 #: (label, master, shuffle_partitions, extra confs)
 CONFIGS = (
@@ -132,9 +120,6 @@ def main() -> int:
         elif ra != rb:
             failures.append(name)
             print(f"FAIL  {name}: row count A={ra} B={rb}")
-        elif name in MERGE_ORDER_SENSITIVE:
-            print(f"rows  {name} ({ra} rows; merge-order-sensitive estimate, "
-                  f"hash exempt{' — hashes agreed anyway' if ha == hb else ''})")
         elif ha != hb:
             failures.append(name)
             print(f"FAIL  {name}: value hash differs across configs "

@@ -809,10 +809,10 @@ def test_hits_rounds_shuffle_edges_not_floats(spark):
     """Every HITS round is two edge-keyed aggregations (the pagerank
     posture); scores stay DECIMAL until the single final
     normalization — no Python, no cartesian, no global sort."""
-    import __spark_entry__ as entrymod
+    from eggv_spark.registry.graph import _trade_edges
     from eggv_spark.operators.graph import hits_scores
 
-    edges = entrymod._trade_edges(spark, SF_DIR)
+    edges = _trade_edges(spark, SF_DIR)
     plan = _plan(hits_scores(edges, n_rounds=1))
     assert "CartesianProduct" not in plan
     assert "EvalPython" not in plan

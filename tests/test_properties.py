@@ -2063,7 +2063,7 @@ def test_rolling_corr_kernel_equals_naive(spark, vals):
     per-frame Pearson correlation on arbitrary integer streams."""
     import math
 
-    import __spark_entry__ as E
+    from eggv_spark.registry import relational
 
     rows = [
         (i, 1, "A", f"1995-01-{(i % 28) + 1:02d}", float(q), c / 100.0)
@@ -2079,13 +2079,14 @@ def test_rolling_corr_kernel_equals_naive(spark, vals):
 
     def _t(spark_, sf_dir_, name_):
         return df
-    orig = E._t
-    E._t = _t
+    orig = relational._t
+    relational._t = _t
     try:
         out = {r["l_orderkey"]: r["rolling_corr"] for r in
-               E._rolling_corr_kernel(spark, "x", "l_returnflag").collect()}
+               relational._rolling_corr_kernel(
+                   spark, "x", "l_returnflag").collect()}
     finally:
-        E._t = orig
+        relational._t = orig
 
     ordered = sorted(
         rows, key=lambda r: (r[3], r[0], r[1], r[4], round(r[5] * 100)),

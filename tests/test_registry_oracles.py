@@ -5,7 +5,9 @@ Each item builds ``queries()[name]`` and compares its rows with
 comparator: the builder and the SQL that ``scripts/check_correctness.py``
 hash-checks at sf0.01, here at the scale tier-1 can afford.  ``NAMES``
 lists the entries tier-1 checks this way; the sweep over every entry
-stays with ``check_correctness.py``.
+stays with ``check_correctness.py``.  The last tests check the
+registry's shape: the driver's window leads ``queries()``, every entry
+has exactly one oracle, and a name cannot be declared twice.
 """
 
 from __future__ import annotations
@@ -93,3 +95,21 @@ ORACLES = E.oracle_sql()
 @pytest.mark.parametrize("name", NAMES)
 def test_entry_matches_its_oracle_sf0001(spark, con, name):
     assert_matches_oracle(QUERIES[name](spark, SF_DIR), con, ORACLES[name])
+
+
+def test_window_leads_queries():
+    assert list(QUERIES)[:50] == E.WINDOW
+
+
+def test_every_entry_has_exactly_one_oracle():
+    assert len(QUERIES) == 445
+    assert set(QUERIES) == set(ORACLES)
+
+
+def test_declaring_a_name_twice_raises():
+    from eggv_spark.registry import BUILDERS, ORACLES as DECLARED, register
+
+    before = (dict(BUILDERS), dict(DECLARED))
+    with pytest.raises(ValueError, match="'src_scan' is already declared"):
+        register("src_scan", "SELECT 1")
+    assert (dict(BUILDERS), dict(DECLARED)) == before

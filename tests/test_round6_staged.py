@@ -622,7 +622,7 @@ def test_graded_sketch_aggs_keep_null_key_groups(spark):
 
 
 def test_hll_rollup_registry_handles_null_source(spark, tmp_path):
-    import __spark_entry__ as E
+    from eggv_spark.registry.aggregates import _agg_hll_rollup
 
     docs = spark.createDataFrame(
         [(1, "alpha", "a"), (2, "beta", "a"), (3, "gamma", None),
@@ -631,7 +631,7 @@ def test_hll_rollup_registry_handles_null_source(spark, tmp_path):
     )
     docs.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
     out = {r["source"]: r for r in
-           E._agg_hll_rollup(spark, str(tmp_path)).collect()}
+           _agg_hll_rollup(spark, str(tmp_path)).collect()}
     assert out[None]["n_distinct_exact"] == 2  # NULL group retained
     assert out["__ALL__"]["n_distinct_exact"] == 4
     assert all(r["est_ok"] for r in out.values())
@@ -647,18 +647,19 @@ def test_containment_cap_is_output_neutral_and_live(spark):
     carries the block-count semi-join the uncapped plan lacks — and
     (b) it is output-neutral at sf0.01 (the largest observed block is
     8 members there, 26 at sf0.1, both far under 64)."""
-    import __spark_entry__ as E
+    from eggv_spark.registry._shared import _t
+    from eggv_spark.registry.dedupe import _ddp_containment
     from pyspark.sql import functions as F
     from eggv_spark.operators import dedupe as D, text_analysis as T
 
     sf = "/root/testdata/sf0.01"
-    capped = E._ddp_containment(spark, sf)
+    capped = _ddp_containment(spark, sf)
     # (a) live: the frequent-bucket ceiling adds a count-per-block
     # aggregate + semi-join before candidate generation
     plan = capped._jdf.queryExecution().optimizedPlan().toString()
     assert "LeftSemi" in plan
 
-    docs = E._t(spark, sf, "documents").select("doc_id", "text")
+    docs = _t(spark, sf, "documents").select("doc_id", "text")
     toks = T.tokens_col("text")
     half = F.greatest(F.floor(F.size(toks) / 2).cast("int"), F.lit(1))
     truncated = (

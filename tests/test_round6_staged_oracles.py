@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import pandas as pd
 
-import __spark_entry__ as E
+from eggv_spark.registry.text import _bpe_oracle_sql
 
 MULT_MEANS_SQL = """
 SELECT g, count(v) AS n,
@@ -283,7 +283,7 @@ def test_bpe_oracle_matches_spark(spark, con):
         bpe_train_merges(sdf, n_merges=6).orderBy("step").collect()
     ]
     con.register("documents", pd.DataFrame({"text": corpus}))
-    assert got == con.execute(E._bpe_oracle_sql(6)).fetchall()
+    assert got == con.execute(_bpe_oracle_sql(6)).fetchall()
 
 
 LABEL_CHI2_SQL = r"""

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import pandas as pd
 
-import __spark_entry__ as E
+from eggv_spark.registry.text import _bpe_apply_oracle_sql
 
 
 CUPED_SQL = """
@@ -423,7 +423,7 @@ def test_bpe_apply_oracle_matches_spark(spark, con):
         tuple(r) for r in bpe_apply_merges(df, merges, 4).collect()
     )
     con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
-    assert got == sorted(con.execute(E._bpe_apply_oracle_sql(4)).fetchall())
+    assert got == sorted(con.execute(_bpe_apply_oracle_sql(4)).fetchall())
 
 
 IMAGE_PATCHES_SQL = """

@@ -104,9 +104,9 @@ def test_importance_mixture_composite(spark):
     ratio table joined as a broadcast (never a corpus shuffle)."""
     from collections import Counter
 
-    import __spark_entry__ as entrymod
+    from eggv_spark.registry.composite import _composite_importance_mixture
 
-    out = entrymod._composite_importance_mixture(
+    out = _composite_importance_mixture(
         spark, "/root/testdata/sf0.001"
     )
     plan = out._jdf.queryExecution().executedPlan().toString()

@@ -19,7 +19,11 @@ from __future__ import annotations
 
 import pandas as pd
 
-import __spark_entry__ as E
+from eggv_spark.registry.ml import _logistic_oracle_sql, _pca_oracle_sql
+from eggv_spark.registry.text import (
+    _contamination_oracle_sql,
+    _dsir_oracle_sql,
+)
 
 
 def _fixture_rows(n=90, dim=6):
@@ -52,7 +56,7 @@ def test_logistic_oracle_matches_spark(spark, con):
     con.register(
         "embeddings", pd.DataFrame(rows, columns=["embedding", "label"])
     )
-    exp = con.execute(E._logistic_oracle_sql(6, 3, 0.4)).fetchall()[0]
+    exp = con.execute(_logistic_oracle_sql(6, 3, 0.4)).fetchall()[0]
     assert got == exp
 
 
@@ -67,7 +71,7 @@ def test_pca_oracle_matches_spark(spark, con):
     con.register(
         "embeddings", pd.DataFrame(rows, columns=["embedding", "label"])
     )
-    exp = con.execute(E._pca_oracle_sql(6, 4)).fetchall()[0]
+    exp = con.execute(_pca_oracle_sql(6, 4)).fetchall()[0]
     assert got == exp
 
 
@@ -138,7 +142,7 @@ def test_contamination_oracle_matches_spark(spark, con):
     con.register(
         "documents", pd.DataFrame(rows, columns=["doc_id", "text", "source"])
     )
-    exp = sorted(con.execute(E._contamination_oracle_sql((3, 5))).fetchall())
+    exp = sorted(con.execute(_contamination_oracle_sql((3, 5))).fetchall())
     assert got == exp
 
 
@@ -164,7 +168,7 @@ def test_dsir_oracle_matches_spark(spark, con):
     con.register(
         "documents", pd.DataFrame(rows, columns=["doc_id", "text", "source"])
     )
-    exp = sorted(con.execute(E._dsir_oracle_sql(256, 1.0)).fetchall())
+    exp = sorted(con.execute(_dsir_oracle_sql(256, 1.0)).fetchall())
     assert got == exp
     # the spammy raw doc must score LOWER than the prose-like raw docs
     w = {r[0]: r[2] for r in got}

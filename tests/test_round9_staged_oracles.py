@@ -21,7 +21,10 @@ from __future__ import annotations
 
 import pandas as pd
 
-import __spark_entry__ as E
+from eggv_spark.registry.aggregates import _energy_oracle_sql
+from eggv_spark.registry.composite import _hashed_classifier_oracle_sql
+from eggv_spark.registry.multimodal import _image_hist_oracle_sql
+from eggv_spark.registry.text import _bm25_oracle_sql, _kn_oracle_sql
 
 TOKS = "list_filter(regexp_split_to_array(lower(text), '\\s+'), t -> t <> '')"
 BH = "CAST(concat('0x', substr(md5({x}), 1, 8)) AS BIGINT)"
@@ -48,7 +51,7 @@ def test_bm25_oracle_matches_spark(spark, con):
         "documents", pd.DataFrame(DOCS, columns=["doc_id", "text", "source"])
     )
     exp = sorted(
-        con.execute(E._bm25_oracle_sql(("cat", "mat", "dog"), 4)).fetchall()
+        con.execute(_bm25_oracle_sql(("cat", "mat", "dog"), 4)).fetchall()
     )
     assert got == exp
 
@@ -61,7 +64,7 @@ def test_kn_oracle_matches_spark(spark, con):
     con.register(
         "documents", pd.DataFrame(DOCS, columns=["doc_id", "text", "source"])
     )
-    exp = sorted(con.execute(E._kn_oracle_sql()).fetchall())
+    exp = sorted(con.execute(_kn_oracle_sql()).fetchall())
     assert got == exp
 
 
@@ -77,7 +80,7 @@ def test_energy_oracle_matches_spark(spark, con):
     got = tuple(energy_distance(df, "g", "cents", "a", "b").collect()[0])
     con.register("events", pd.DataFrame(rows, columns=["g", "cents"]))
     exp = con.execute(
-        E._energy_oracle_sql("g", "cents", "a", "b")
+        _energy_oracle_sql("g", "cents", "a", "b")
     ).fetchall()[0]
     assert got == exp
 
@@ -99,7 +102,7 @@ def test_image_hist_oracle_matches_spark(spark, con):
     con.register(
         "documents", pd.DataFrame(rows, columns=["doc_id", "text", "source"])
     )
-    exp = sorted(con.execute(E._image_hist_oracle_sql(8, 8, 4)).fetchall())
+    exp = sorted(con.execute(_image_hist_oracle_sql(8, 8, 4)).fetchall())
     assert got == exp
 
 
@@ -126,6 +129,6 @@ def test_hashed_classifier_oracle_matches_spark(spark, con):
     con.register(
         "documents", pd.DataFrame(DOCS, columns=["doc_id", "text", "source"])
     )
-    sql = E._hashed_classifier_oracle_sql(16, 2, 0.5)
+    sql = _hashed_classifier_oracle_sql(16, 2, 0.5)
     exp = con.execute(sql).fetchall()[0]
     assert got == exp

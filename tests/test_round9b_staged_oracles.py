@@ -20,7 +20,10 @@ from __future__ import annotations
 
 import pandas as pd
 
-import __spark_entry__ as E
+from eggv_spark.registry.aggregates import _wasserstein_oracle_sql
+from eggv_spark.registry.ml import _naive_bayes_oracle_sql
+from eggv_spark.registry.multimodal import _audio_silence_oracle_sql
+from eggv_spark.registry.text import _ngram_diversity_oracle_sql
 
 TOKS = "list_filter(regexp_split_to_array(lower(text), '\\s+'), t -> t <> '')"
 
@@ -43,7 +46,7 @@ def test_naive_bayes_oracle_matches_spark(spark, con):
     con.register(
         "documents", pd.DataFrame(DOCS, columns=["doc_id", "text", "source"])
     )
-    exp = sorted(con.execute(E._naive_bayes_oracle_sql()).fetchall())
+    exp = sorted(con.execute(_naive_bayes_oracle_sql()).fetchall())
     assert got == exp
 
 
@@ -59,7 +62,7 @@ def test_wasserstein_oracle_matches_spark(spark, con):
     got = tuple(wasserstein_1d(df, "g", "cents", "a", "b").collect()[0])
     con.register("events", pd.DataFrame(rows, columns=["g", "cents"]))
     exp = con.execute(
-        E._wasserstein_oracle_sql("g", "cents", "a", "b")
+        _wasserstein_oracle_sql("g", "cents", "a", "b")
     ).fetchall()[0]
     assert got == exp
 
@@ -109,7 +112,7 @@ def test_ngram_diversity_oracle_matches_spark(spark, con):
     con.register(
         "documents", pd.DataFrame(DOCS, columns=["doc_id", "text", "source"])
     )
-    sql = E._ngram_diversity_oracle_sql("source", (1, 2, 3))
+    sql = _ngram_diversity_oracle_sql("source", (1, 2, 3))
     exp = sorted(con.execute(sql).fetchall())
     assert got == exp
 
@@ -132,6 +135,6 @@ def test_audio_silence_oracle_matches_spark(spark, con):
         "documents", pd.DataFrame(rows, columns=["doc_id", "text", "source"])
     )
     exp = sorted(
-        con.execute(E._audio_silence_oracle_sql(64, 512)).fetchall()
+        con.execute(_audio_silence_oracle_sql(64, 512)).fetchall()
     )
     assert got == exp

@@ -23,7 +23,14 @@ Non-obvious encodings proven here:
 
 from __future__ import annotations
 
-import __spark_entry__ as E
+from eggv_spark.registry.composite import _coherence_gate_oracle_sql
+from eggv_spark.registry.events import _acf_oracle_sql
+from eggv_spark.registry.ml import (
+    _isotonic_oracle_sql,
+    _kmeans_lloyd_oracle_sql,
+)
+from eggv_spark.registry.multimodal import _image_entropy_oracle_sql
+from eggv_spark.registry.similarity import _coherence_oracle_sql
 from tests.conftest import SF_DIR, assert_matches_oracle
 
 
@@ -35,7 +42,7 @@ def test_kmeans_oracle_matches_spark_sf0001(spark, con):
     assert_matches_oracle(
         kmeans_lloyd(df, k=4, n_steps=3, dim=16),
         con,
-        E._kmeans_lloyd_oracle_sql(k=4, n_steps=3, dim=16),
+        _kmeans_lloyd_oracle_sql(k=4, n_steps=3, dim=16),
     )
 
 
@@ -53,7 +60,7 @@ def test_isotonic_oracle_matches_spark_sf0001(spark, con):
             (F.col("l_returnflag") == "R").cast("long"),
         ),
         con,
-        E._isotonic_oracle_sql(
+        _isotonic_oracle_sql(
             "round(l_discount * 100)", "l_returnflag = 'R'", "lineitem"
         ),
     )
@@ -65,7 +72,7 @@ def test_acf_oracle_matches_spark_sf0001(spark, con):
 
     ev = read_table(spark, SF_DIR, "events")
     assert_matches_oracle(
-        acf_lags(ev, "ts", n_lags=7), con, E._acf_oracle_sql(7)
+        acf_lags(ev, "ts", n_lags=7), con, _acf_oracle_sql(7)
     )
 
 
@@ -80,7 +87,7 @@ def test_image_entropy_oracle_matches_spark_sf0001(spark, con):
     assert_matches_oracle(
         image_entropy_report(synthesize_ppm_images(docs)),
         con,
-        E._image_entropy_oracle_sql(48),
+        _image_entropy_oracle_sql(48),
     )
 
 
@@ -92,7 +99,7 @@ def test_coherence_oracle_matches_spark_sf0001(spark, con):
     assert_matches_oracle(
         embedding_coherence(df, dim=16, low_threshold=0.5),
         con,
-        E._coherence_oracle_sql(16, 0.5),
+        _coherence_oracle_sql(16, 0.5),
     )
 
 
@@ -117,4 +124,4 @@ def test_coherence_gate_oracle_matches_spark_sf0001(spark, con):
             F.avg(F.when(F.col("_cos") >= thr, F.col("_cos"))), 4
         ).alias("avg_cos_kept"),
     )
-    assert_matches_oracle(gate, con, E._coherence_gate_oracle_sql(16, thr))
+    assert_matches_oracle(gate, con, _coherence_gate_oracle_sql(16, thr))

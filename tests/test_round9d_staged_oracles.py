@@ -21,7 +21,10 @@ Non-obvious encodings proven here:
 
 from __future__ import annotations
 
-import __spark_entry__ as E
+from eggv_spark.registry.graph import _hits_oracle_sql, _trade_edges
+from eggv_spark.registry.ml import _stump_oracle_sql
+from eggv_spark.registry.similarity import _mmr_oracle_sql
+from eggv_spark.registry.text import _rake_oracle_sql
 from tests.conftest import SF_DIR, assert_matches_oracle
 
 
@@ -38,16 +41,16 @@ def test_stump_oracle_matches_spark_sf0001(spark, con):
     assert_matches_oracle(
         decision_stump_fit(emb, dim=16, thresholds=thresholds),
         con,
-        E._stump_oracle_sql(16, thresholds),
+        _stump_oracle_sql(16, thresholds),
     )
 
 
 def test_hits_oracle_matches_spark_sf0001(spark, con):
     from eggv_spark.operators.graph import hits_scores
 
-    edges = E._trade_edges(spark, SF_DIR)
+    edges = _trade_edges(spark, SF_DIR)
     assert_matches_oracle(
-        hits_scores(edges, n_rounds=2), con, E._hits_oracle_sql(2)
+        hits_scores(edges, n_rounds=2), con, _hits_oracle_sql(2)
     )
 
 
@@ -61,7 +64,7 @@ def test_mmr_oracle_matches_spark_sf0001(spark, con):
             emb, query_id=0, dim=16, n_candidates=20, k=5, lam=0.7
         ),
         con,
-        E._mmr_oracle_sql(0, 16, 20, 5, 0.7),
+        _mmr_oracle_sql(0, 16, 20, 5, 0.7),
     )
 
 
@@ -76,5 +79,5 @@ def test_rake_oracle_matches_spark_sf0001(spark, con):
     assert_matches_oracle(
         rake_keywords(docs, top_k=15),
         con,
-        E._rake_oracle_sql(15, RAKE_STOPWORDS),
+        _rake_oracle_sql(15, RAKE_STOPWORDS),
     )

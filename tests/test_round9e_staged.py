@@ -85,7 +85,7 @@ def test_jl_identical_vectors_pair_excluded(spark):
 
 
 def test_jl_oracle_matches_spark_sf0001(spark, con):
-    import __spark_entry__ as entrymod
+    from eggv_spark.registry.similarity import _random_projection_oracle_sql
     from eggv_spark.operators.similarity import (
         random_projection_distortion,
     )
@@ -95,14 +95,17 @@ def test_jl_oracle_matches_spark_sf0001(spark, con):
     assert_matches_oracle(
         random_projection_distortion(emb, in_dim=16, out_dim=8),
         con,
-        entrymod._random_projection_oracle_sql(16, 8),
+        _random_projection_oracle_sql(16, 8),
     )
 
 
 def test_rag_pipeline_budget_fill_semantics(spark):
-    import __spark_entry__ as entrymod
+    from eggv_spark.registry.composite import (
+        _composite_rag_pipeline,
+        _RAG_BUDGET_TOKENS,
+    )
 
-    rows = entrymod._composite_rag_pipeline(spark, SF_DIR).orderBy(
+    rows = _composite_rag_pipeline(spark, SF_DIR).orderBy(
         "rank"
     ).collect()
     assert rows, "budget must admit at least the first pick"
@@ -110,6 +113,6 @@ def test_rag_pipeline_budget_fill_semantics(spark):
     for r in rows:
         cum += r["n_tokens"]
         assert r["cum_tokens"] == cum
-        assert cum <= entrymod._RAG_BUDGET_TOKENS
+        assert cum <= _RAG_BUDGET_TOKENS
     # ranks are a prefix of the MMR selection order
     assert [r["rank"] for r in rows] == list(range(1, len(rows) + 1))

@@ -89,9 +89,9 @@ def test_did_rejects_null_flags(spark):
 
 
 def test_knn_eval_output_shape_and_bounds(spark):
-    import __spark_entry__ as entrymod
+    from eggv_spark.registry.composite import _composite_knn_eval
 
-    rows = entrymod._composite_knn_eval(spark, SF_DIR).collect()
+    rows = _composite_knn_eval(spark, SF_DIR).collect()
     by_label = {r["label"]: r for r in rows}
     assert -1 in by_label  # the overall row
     overall = by_label[-1]

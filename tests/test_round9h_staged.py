@@ -49,11 +49,11 @@ def test_pca2_oracle_matches_spark_sf0001(spark, con):
     from eggv_spark.operators.ml import pca_top2_deflation
     from eggv_spark.sources.readers import read_table
 
-    import __spark_entry__ as entrymod
+    from eggv_spark.registry.ml import _pca2_oracle_sql
 
     emb = read_table(spark, SF_DIR, "embeddings")
     assert_matches_oracle(
         pca_top2_deflation(emb, n_steps=4, dim=64),
         con,
-        entrymod._pca2_oracle_sql(4, 64),
+        _pca2_oracle_sql(4, 64),
     )

@@ -143,9 +143,10 @@ def test_audio_fingerprint_matches_formula(spark):
 
 
 def test_contrastive_triplets_well_formed_sf0001(spark):
-    import __spark_entry__ as E
+    from eggv_spark.registry.composite import _composite_contrastive_pairs
+    from eggv_spark.registry.dedupe import _ddp_minhash_neardup
 
-    rows = E._composite_contrastive_pairs(spark, SF_DIR).collect()
+    rows = _composite_contrastive_pairs(spark, SF_DIR).collect()
     assert len(rows) > 0
     for r in rows:
         # negative differs from both sides of the positive pair
@@ -155,7 +156,7 @@ def test_contrastive_triplets_well_formed_sf0001(spark):
         assert r["jaccard"] >= 0.7
     # every dup-injected anchor should yield a triplet (no silent
     # wholesale loss — the drop rule only removes rare collisions)
-    pos = E._ddp_minhash_neardup(spark, SF_DIR).collect()
+    pos = _ddp_minhash_neardup(spark, SF_DIR).collect()
     assert len(rows) >= len(pos) * 0.8
 
 

@@ -16,9 +16,9 @@ from tests.conftest import SF_DIR
 
 
 def test_minhash_eval_full_recall_on_exact_plants(spark):
-    import __spark_entry__ as E
+    from eggv_spark.registry.dedupe import _ddp_minhash_eval
 
-    got = E._ddp_minhash_eval(spark, SF_DIR).collect()[0]
+    got = _ddp_minhash_eval(spark, SF_DIR).collect()[0]
     # plants are verbatim copies -> jaccard 1.0 -> LSH cannot miss
     assert got["recall"] == pytest.approx(1.0)
     assert got["n_recovered"] == got["n_truth"] > 0

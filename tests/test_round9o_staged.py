@@ -41,9 +41,10 @@ def test_nelson_aalen_hand_series(spark):
 
 def test_km_and_na_share_risk_table(spark):
     import __spark_entry__ as E
+    from eggv_spark.registry.events import _evt_nelson_aalen
 
     km = E.queries()["evt_survival_km"](spark, SF_DIR)
-    na = E._evt_nelson_aalen(spark, SF_DIR)
+    na = _evt_nelson_aalen(spark, SF_DIR)
     k = {(r["day"], r["d_events"], r["n_at_risk"]) for r in km.collect()}
     n = {(r["day"], r["d_events"], r["n_at_risk"]) for r in na.collect()}
     assert k == n and len(k) > 0
@@ -133,9 +134,9 @@ def test_overlap_depth_hand_layout(spark):
 
 
 def test_filtered_ivf_respects_predicate(spark):
-    import __spark_entry__ as E
+    from eggv_spark.registry.similarity import _sim_filtered_ivf_topk
 
-    neigh = E._sim_filtered_ivf_topk(spark, SF_DIR)
+    neigh = _sim_filtered_ivf_topk(spark, SF_DIR)
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     bad = neigh.join(
         emb.filter("label > 4").select("vec_id"),

@@ -64,9 +64,9 @@ def test_logrank_foreign_variant_raises(spark):
 
 
 def test_dedup_funnel_accounting(spark):
-    import __spark_entry__ as E
+    from eggv_spark.registry.composite import _composite_dedup_funnel
 
-    out = E._composite_dedup_funnel(spark, SF_DIR).collect()[0]
+    out = _composite_dedup_funnel(spark, SF_DIR).collect()[0]
     # plants are verbatim copies: every planted doc is removed by the
     # exact stage, so n_exact_removed >= the plant count
     n_docs = (
@@ -89,9 +89,9 @@ def test_dedup_funnel_accounting(spark):
 
 
 def test_ivf_cell_stats_accounting(spark):
-    import __spark_entry__ as E
+    from eggv_spark.registry.similarity import _sim_ivf_cell_stats
 
-    rows = E._sim_ivf_cell_stats(spark, SF_DIR).collect()
+    rows = _sim_ivf_cell_stats(spark, SF_DIR).collect()
     assert len(rows) == 16  # full spine, empty cells included
     total = sum(r["n_vectors"] for r in rows)
     n_emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").count()

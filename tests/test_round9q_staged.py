@@ -92,10 +92,10 @@ def test_local_clustering_triangle_plus_tail(spark):
 
 
 def test_local_clustering_consistent_with_census(spark):
-    import __spark_entry__ as E
+    from eggv_spark.registry.graph import _graph_local_clustering, _trade_edges
     from eggv_spark.operators.graph import triangle_count
 
-    lcc = E._graph_local_clustering(spark, SF_DIR)
+    lcc = _graph_local_clustering(spark, SF_DIR)
     total_credits = sum(r["triangles"] for r in lcc.collect())
     edges = lcc.sparkSession.createDataFrame([], "src int, dst int")
     # per-corner credits sum to 3x the census triangle count
@@ -103,7 +103,7 @@ def test_local_clustering_consistent_with_census(spark):
     from pyspark.sql import Window, functions as F
 
     ed = (
-        E._trade_edges(lcc.sparkSession, SF_DIR)
+        _trade_edges(lcc.sparkSession, SF_DIR)
         .filter(F.col("src") != F.col("dst"))
         .withColumn(
             "_rn",
@@ -124,9 +124,9 @@ def test_local_clustering_consistent_with_census(spark):
 
 
 def test_pq_distortion_shape_and_bounds(spark):
-    import __spark_entry__ as E
+    from eggv_spark.registry.similarity import _sim_pq_distortion
 
-    rows = E._sim_pq_distortion(spark, SF_DIR).collect()
+    rows = _sim_pq_distortion(spark, SF_DIR).collect()
     assert len(rows) == 8
     for r in rows:
         assert r["mean_sqdist"] >= 0

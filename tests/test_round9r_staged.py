@@ -17,14 +17,15 @@ from tests.conftest import SF_DIR
 def test_band_stats_pair_load_matches_candidates(spark):
     from pyspark.sql import functions as F
 
-    import __spark_entry__ as E
+    from eggv_spark.registry._shared import _docs_with_dups
+    from eggv_spark.registry.dedupe import _ddp_lsh_band_stats
     from eggv_spark.operators import dedupe as D
 
-    stats = E._ddp_lsh_band_stats(spark, SF_DIR).collect()
+    stats = _ddp_lsh_band_stats(spark, SF_DIR).collect()
     assert len(stats) == len(D.MINHASH_A) // D.MINHASH_ROWS
     # the arithmetic pair load must upper-bound the DISTINCT
     # candidate pairs the join actually produces
-    docs = E._docs_with_dups(spark, SF_DIR)
+    docs = _docs_with_dups(spark, SF_DIR)
     signed = D.with_minhash_signature(D.with_shingle_hashes(docs))
     n_pairs = D.lsh_candidate_pairs(signed).count()
     load = sum(r["candidate_pairs"] for r in stats)

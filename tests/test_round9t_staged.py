@@ -42,9 +42,9 @@ def test_dup_sentence_own_repeat_not_corpus_dup(spark):
 
 
 def test_dup_sentence_plants_detected(spark):
-    import __spark_entry__ as E
+    from eggv_spark.registry.text import _txt_dup_sentence_filter
 
-    out = E._txt_dup_sentence_filter(spark, SF_DIR)
+    out = _txt_dup_sentence_filter(spark, SF_DIR)
     # every planted doc (id >= 1,000,000) is a verbatim copy: its
     # sentences all occur in >= 2 docs
     plants = out.filter("doc_id >= 1000000")
@@ -116,9 +116,9 @@ def test_peaks_hand_series(spark):
 
 
 def test_ann_health_gate_shape(spark):
-    import __spark_entry__ as E
+    from eggv_spark.registry.composite import _composite_ann_health
 
-    r = E._composite_ann_health(spark, SF_DIR).collect()
+    r = _composite_ann_health(spark, SF_DIR).collect()
     assert len(r) == 1
     row = r[0]
     assert 0.0 <= row["mean_recall_at_5"] <= 1.0

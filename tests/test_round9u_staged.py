@@ -44,9 +44,9 @@ def test_path_stats_hop_bound_truncates(spark):
 
 
 def test_dedup_savings_accounting(spark):
-    import __spark_entry__ as E
+    from eggv_spark.registry.dedupe import _ddp_dedup_savings
 
-    r = E._ddp_dedup_savings(spark, SF_DIR).collect()[0]
+    r = _ddp_dedup_savings(spark, SF_DIR).collect()[0]
     assert r["n_docs"] > r["n_docs_kept"] > 0
     assert r["tokens_total"] == r["tokens_kept"] + r["tokens_saved"]
     assert 0 < r["saved_frac"] < 1
@@ -83,9 +83,9 @@ def test_growth_accounting_hand_series(spark):
 
 
 def test_growth_states_sum_to_active(spark):
-    import __spark_entry__ as E
+    from eggv_spark.registry.events import _evt_growth_accounting
 
-    rows = E._evt_growth_accounting(spark, SF_DIR).collect()
+    rows = _evt_growth_accounting(spark, SF_DIR).collect()
     assert len(rows) > 0
     for r in rows:
         assert (

@@ -31,9 +31,9 @@ def test_rrf_hand_fusion(spark):
 
 
 def test_rrf_fixture_covers_both_systems(spark):
-    import __spark_entry__ as E
+    from eggv_spark.registry.similarity import _sim_rrf_fusion
 
-    fused = E._sim_rrf_fusion(spark, SF_DIR)
+    fused = _sim_rrf_fusion(spark, SF_DIR)
     rows = fused.collect()
     assert len(rows) > 0
     per_q = {}
@@ -81,9 +81,9 @@ def test_dow_anomaly_conditions_on_weekday(spark):
 
 
 def test_collision_audit_accounting(spark):
-    import __spark_entry__ as E
+    from eggv_spark.registry.text import _txt_hash_collision_audit
 
-    r = E._txt_hash_collision_audit(spark, SF_DIR).collect()[0]
+    r = _txt_hash_collision_audit(spark, SF_DIR).collect()[0]
     assert r["n_buckets_used"] <= 1024
     assert r["n_colliding_terms"] <= r["n_terms"]
     assert 0.0 <= r["collision_frac"] <= 1.0

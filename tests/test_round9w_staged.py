@@ -10,10 +10,10 @@ from tests.conftest import SF_DIR, assert_matches_oracle
 def test_stream_growth_matches_batch_decomposition(spark):
     from pyspark.sql import functions as F
 
-    import __spark_entry__ as E
+    from eggv_spark.registry.streaming import _stream_growth_states
     from eggv_spark.operators.events import growth_accounting
 
-    states = E._stream_growth_states(spark, SF_DIR)
+    states = _stream_growth_states(spark, SF_DIR)
     per_day = (
         states.groupBy("day_epoch")
         .pivot("state", ["new", "retained", "resurrected"])
@@ -36,8 +36,11 @@ def test_stream_growth_matches_batch_decomposition(spark):
 
 
 def test_stream_growth_oracle_sf0001(spark, con):
-    import __spark_entry__ as E
+    from eggv_spark.registry.streaming import (
+        _STREAM_GROWTH_SQL,
+        _stream_growth_states,
+    )
 
     assert_matches_oracle(
-        E._stream_growth_states(spark, SF_DIR), con, E._STREAM_GROWTH_SQL
+        _stream_growth_states(spark, SF_DIR), con, _STREAM_GROWTH_SQL
     )

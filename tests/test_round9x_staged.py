@@ -59,9 +59,9 @@ def test_qte_top_only_lift(spark):
 
 
 def test_quality_vs_dup_accounting(spark):
-    import __spark_entry__ as E
+    from eggv_spark.registry.composite import _composite_quality_vs_dup
 
-    r = E._composite_quality_vs_dup(spark, SF_DIR).collect()[0]
+    r = _composite_quality_vs_dup(spark, SF_DIR).collect()[0]
     n_docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").count()
     n_plants = (
         spark.read.parquet(f"{SF_DIR}/documents.parquet")

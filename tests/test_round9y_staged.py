@@ -34,9 +34,9 @@ def test_vector_audit_catches_bad_rows(spark):
 
 
 def test_vector_audit_clean_corpus(spark):
-    import __spark_entry__ as E
+    from eggv_spark.registry.similarity import _sim_vector_quality_audit
 
-    r = E._sim_vector_quality_audit(spark, SF_DIR).collect()[0]
+    r = _sim_vector_quality_audit(spark, SF_DIR).collect()[0]
     assert r["n_null"] == 0 and r["n_wrong_width"] == 0
     assert r["n_zero_norm"] == 0
     assert 0 < r["min_norm"] <= r["max_norm"]
